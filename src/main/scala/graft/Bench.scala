@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   private def j(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
@@ -172,19 +171,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus)
     // ambient load BEFORE the bench adds its own: this is the number
     // that says whether the run was quiet (the end figure mostly
     // reflects the bench itself)
     val loadStart = loadAvg1m()
     val tsMs = System.currentTimeMillis()
-    val loadThresh = cpus.toInt / 2.0
+    val loadThresh = cpus / 2.0
     if (!loadStart.isNaN && loadStart > loadThresh)
       System.err.println(f"[bench] AMBIENT LOAD $loadStart%.2f > $loadThresh%.2f " +
         "at start — wall totals from this run are contended; trust bytes, not seconds")
@@ -304,7 +298,7 @@ object Bench {
     val outPath = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_LAST.json"))
       .toAbsolutePath
-    val prov = provenanceFields(loadStart, loadAvg1m(), cpus.toInt,
+    val prov = provenanceFields(loadStart, loadAvg1m(), cpus,
       tsMs, loadThresh)
     try {
       val fw = new java.io.PrintWriter(outPath.toFile)

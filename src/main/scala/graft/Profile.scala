@@ -1,9 +1,8 @@
 package graft
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
-/** Local iteration aid (like [[MiniBench]] / [[Explain]]): run the
+/** Local iteration aid (like [[Explain]]): run the
   * named queries once each after a warmup and print a per-JOB wall
   * breakdown (start-relative, duration, stage count, task count,
   * shuffle bytes) so the expensive step inside a multi-job operator
@@ -19,13 +18,8 @@ object Profile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = mutable.LinkedHashMap[Int, JobRow]()
     val stageToJob = mutable.HashMap[Int, Int]()

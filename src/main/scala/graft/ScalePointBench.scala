@@ -313,13 +313,8 @@ object ScalePointBench {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val dst = sys.env.getOrElse("SPARK_GRAFT_SYNTH_DIR", "/tmp/graft_sfhalf")
     val replicas = sys.env.getOrElse("SPARK_GRAFT_REPLICAS", "5").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     // per-query shuffle accounting (same listener discipline as Bench):
     // bytes are deterministic per plan, so byte EXPONENTS across scale

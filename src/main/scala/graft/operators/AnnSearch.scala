@@ -61,6 +61,13 @@ object AnnSearch {
   private[operators] def dot(x: Column, y: Column): Column =
     call_function("vec_dot", x, y)
 
+  /** Squared L2 distance expanded to dot products (a·a − 2 a·b + b·b,
+    * evaluated left to right by the native `vec_dot`) and rounded to 6
+    * decimals, so every argmin and rank on it agrees with the oracle.
+    */
+  private def sqDist6(a: Column, b: Column): Column =
+    round(dot(a, a) - lit(2) * dot(a, b) + dot(b, b), 6)
+
   /** Cosine similarity of two array<double> columns — native codegen'd
     * expression work, no UDF.
     */
@@ -173,10 +180,14 @@ object AnnSearch {
       when(dot(v, typedLit(planes(p))) > 0, "1").otherwise("0")
     }: _*)
 
-  /** All `NumTables` (table, bucket) keys of a vector, for explode. */
-  private def tableKeys(v: Column): Column =
-    array((0 until NumTables).map(t =>
-      struct(lit(t).as("t"), tableBucket(v, t).as("b"))): _*)
+  /** The multi-table LSH key relation (vec_id, t, b): all `NumTables`
+    * (table, bucket) keys of every vector of a (vec_id, v) relation —
+    * one body for the in-query keys and the `lsh_keys` artifact build.
+    */
+  private def lshKeys(vs: DataFrame): DataFrame =
+    vs.select(col("vec_id"), explode(array((0 until NumTables).map(t =>
+        struct(lit(t).as("t"), tableBucket(col("v"), t).as("b"))): _*)).as("tb"))
+      .select(col("vec_id"), col("tb.t").as("t"), col("tb.b").as("b"))
 
   /** Vectors with norm + sign-LSH bucket — shared by `annLshTopk` and
     * `Dedup.dedupEmbeddingLsh`.
@@ -315,9 +326,7 @@ object AnnSearch {
     */
   def annLshTopk(spark: SparkSession, dir: String): DataFrame = {
     val all = vecs(spark, dir)
-    val keyed = all
-      .select(col("vec_id"), explode(tableKeys(col("v"))).as("tb"))
-      .select(col("vec_id"), col("tb.t").as("t"), col("tb.b").as("b"))
+    val keyed = lshKeys(all)
     val qKeys = keyed.filter(expr(QueryFilter))
       .select(col("vec_id").as("q_id"), col("t"), col("b"))
     val pairs = keyed.join(broadcast(qKeys), Seq("t", "b"))
@@ -360,9 +369,7 @@ object AnnSearch {
       .agg(transform(array_sort(collect_list(struct(col("d"), col("c")))),
         s => s.getField("c")).as("cv"))
       .select(col("label").as("c_label"), col("cv"))
-    val q = e.filter(expr(QueryFilter))
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-      .withColumn("qnrm", sqrt(dot(col("qv"), col("qv"))))
+    val q = queryVecs(e).withColumn("qnrm", sqrt(dot(col("qv"), col("qv"))))
     // probe: nearest centroid per query (tiny cross join: |q| × #labels)
     val wProbe = Window.partitionBy(col("q_id"))
       .orderBy(col("c_cos").desc, col("c_label"))
@@ -402,9 +409,7 @@ object AnnSearch {
   private def kmAssign(e: DataFrame, cent: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("vec_id")).orderBy(col("dist2"), col("cl"))
     e.crossJoin(broadcast(cent))
-      .withColumn("dist2", round(
-        dot(col("v"), col("v")) - lit(2) * dot(col("v"), col("cv"))
-          + dot(col("cv"), col("cv")), 6))
+      .withColumn("dist2", sqDist6(col("v"), col("cv")))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("vec_id"), col("cl"), col("dist2"), col("v"))
@@ -512,19 +517,14 @@ object AnnSearch {
   def annPqTopk(spark: SparkSession, dir: String): DataFrame = {
     val (codes, cb) = pqModel(spark, dir)
     val dt = pqDistanceTable(spark, dir, cb)
-    val w = Window.partitionBy(col("q_id")).orderBy(col("adist2"), col("vec_id"))
     // array-at-a-time ADC: each candidate row scores via ONE codegen'd
     // adc_dist6 call against the query's broadcast flattened table —
     // a pure map (the FAISS scan shape), replacing the M×-per-vector
     // exploded (m, code) join + (q, vec) re-aggregation
-    foldedCodes(codes).join(broadcast(foldedTables(dt, Seq("q_id"))),
+    adistTopk(foldedCodes(codes).join(broadcast(foldedTables(dt, Seq("q_id"))),
         col("vec_id") =!= col("q_id"))
       .withColumn("adist2", round(
-        call_function("adc_dist6", col("codes"), col("dtab")) / 1000000.0, 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("adist2"), col("rank"))
-      .orderBy(col("q_id"), col("rank"))
+        call_function("adc_dist6", col("codes"), col("dtab")) / 1000000.0, 6)))
   }
 
   /** Corpus codes folded to one m-ordered array<int> per vector — the
@@ -551,9 +551,14 @@ object AnnSearch {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("raw"))
       .withColumn("nrm", sqrt(dot(col("raw"), col("raw"))))
       .select(col("vec_id"), expr("transform(raw, x -> x / nrm)").as("v"))
-      .select(col("vec_id"), posexplode(expr(
-        s"transform(sequence(0, ${PqM - 1}), m -> slice(v, m * $PqSub + 1, $PqSub))"))
-        .as(Seq("m", "sv")))
+      .select(col("vec_id"), subvectors("v").as(Seq("m", "sv")))
+
+  /** The (m, subvector) explode of a 64-d array column into its `PqM`
+    * slices of `PqSub` dims.
+    */
+  private def subvectors(arr: String): Column =
+    posexplode(expr(
+      s"transform(sequence(0, ${PqM - 1}), m -> slice($arr, m * $PqSub + 1, $PqSub))"))
 
   /** The trained PQ model: corpus codes (vec_id, m, code) and the final
     * codebook (m, code, cv) — shared by `ann_pq_topk` (full ADC scan)
@@ -622,10 +627,57 @@ object AnnSearch {
     pqSubvectors(spark, dir).filter(expr(QueryFilter))
       .select(col("vec_id").as("q_id"), col("m"), col("sv").as("qs"))
       .join(broadcast(cb), "m")
-      .withColumn("dsub", round(
-        dot(col("qs"), col("qs")) - lit(2) * dot(col("qs"), col("cv"))
-          + dot(col("cv"), col("cv")), 6))
+      .withColumn("dsub", sqDist6(col("qs"), col("cv")))
       .select(col("q_id"), col("m"), col("code"), col("dsub"))
+
+  /** The query side of every probe: the `QueryFilter` vectors of a
+    * (vec_id, v) relation as (q_id, qv).
+    */
+  private def queryVecs(nv: DataFrame): DataFrame =
+    nv.filter(expr(QueryFilter))
+      .select(col("vec_id").as("q_id"), col("v").as("qv"))
+
+  /** The IVF probe relation (q_id, cl, qv): each query's `NProbe`
+    * nearest list centroids by the same rounded-L2 argmin as list
+    * assignment. One body for every IVF-pruned scan, built or served.
+    */
+  private def ivfProbes(q: DataFrame, cent: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("q_id")).orderBy(col("cdist2"), col("cl"))
+    q.crossJoin(broadcast(cent))
+      .withColumn("cdist2", sqDist6(col("qv"), col("cv")))
+      .withColumn("pr", row_number().over(w))
+      .filter(col("pr") <= NProbe)
+      .select(col("q_id"), col("cl"), col("qv"))
+  }
+
+  /** The pruned ADC scan (q_id, vec_id, adist2): probed lists pick the
+    * candidates, the folded code array rides the vec_id join, the
+    * folded query table rides the `keys` join — scoring is one
+    * map-side adc_dist6 per candidate. Equi-joins only.
+    */
+  private def adcScan(lists: DataFrame, probes: DataFrame, codes: DataFrame,
+      tables: DataFrame, keys: Seq[String]): DataFrame =
+    lists
+      .join(broadcast(probes), "cl")
+      .filter(col("vec_id") =!= col("q_id"))
+      .join(codes, "vec_id")
+      .join(broadcast(tables), keys)
+      .withColumn("adist2", round(
+        call_function("adc_dist6", col("codes"), col("dtab")) / 1000000.0, 6))
+      .select(col("q_id"), col("vec_id"), col("adist2"))
+
+  /** The top-`TopK` cut of any (q_id, vec_id, adist2) scored relation —
+    * shared by every quantized ANN form, so rank tie-breaks and output
+    * columns cannot drift between them.
+    */
+  private def adistTopk(scored: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("q_id")).orderBy(col("adist2"), col("vec_id"))
+    scored
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= TopK)
+      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("adist2"), col("rank"))
+      .orderBy(col("q_id"), col("rank"))
+  }
 
   /** IVFADC — the composed production ANN shape (the second half of
     * the Jégou et al. paper): the IVF coarse quantizer
@@ -646,46 +698,29 @@ object AnnSearch {
     * oracle recomputes identically). One corpus shuffle joins codes to
     * list ids on vec_id; probes and the ADC table are broadcast.
     */
-  def annIvfadcTopk(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("q_id")).orderBy(col("adist2"), col("vec_id"))
-    ivfadcAdcScores(spark, dir)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("adist2"), col("rank"))
-      .orderBy(col("q_id"), col("rank"))
-  }
+  def annIvfadcTopk(spark: SparkSession, dir: String): DataFrame =
+    adistTopk(ivfadcAdcScores(spark, dir))
 
   /** The ADC-scored candidate relation (q_id, vec_id, adist2) within
-    * probed IVF lists — shared by the plain top-k cut and the
-    * exact-re-ranked variant.
+    * probed IVF lists, index built in the query — shared by the plain
+    * top-k cut and the exact-re-ranked variant.
     */
   private def ivfadcAdcScores(spark: SparkSession, dir: String): DataFrame = {
     val (codes, cb) = pqModel(spark, dir)
-    val nv = normVecs(spark, dir)
-    val lists = kmeansAssignmentsOver(nv)
+    val lists = kmeansAssignmentsOver(normVecs(spark, dir))
     val cent = kmCentroids(lists.select(col("cl"), col("v")))
-    val q = nv.filter(expr(QueryFilter))
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val wProbe = Window.partitionBy(col("q_id")).orderBy(col("cdist2"), col("cl"))
-    val probes = q.crossJoin(broadcast(cent))
-      .withColumn("cdist2", round(
-        dot(col("qv"), col("qv")) - lit(2) * dot(col("qv"), col("cv"))
-          + dot(col("cv"), col("cv")), 6))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= NProbe)
-      .select(col("q_id"), col("cl"))
+    ivfadcScoresOver(spark, dir, lists.select(col("vec_id"), col("cl")), cent,
+      foldedCodes(codes), cb)
+  }
+
+  /** The IVFADC probe over (lists, centroids, folded codes, codebook) —
+    * one body for the built and the served index.
+    */
+  private def ivfadcScoresOver(spark: SparkSession, dir: String, lists: DataFrame,
+      cent: DataFrame, codes: DataFrame, cb: DataFrame): DataFrame = {
+    val probes = ivfProbes(queryVecs(normVecs(spark, dir)), cent).select("q_id", "cl")
     val dt = pqDistanceTable(spark, dir, cb)
-    // equi-joins only: probed lists pick candidates, the folded code
-    // array rides the vec_id join, the query's flattened table rides
-    // the q_id join — scoring is one map-side adc_dist6 per candidate
-    lists.select(col("vec_id"), col("cl"))
-      .join(broadcast(probes), "cl")
-      .filter(col("vec_id") =!= col("q_id"))
-      .join(foldedCodes(codes), "vec_id")
-      .join(broadcast(foldedTables(dt, Seq("q_id"))), "q_id")
-      .withColumn("adist2", round(
-        call_function("adc_dist6", col("codes"), col("dtab")) / 1000000.0, 6))
-      .select(col("q_id"), col("vec_id"), col("adist2"))
+    adcScan(lists, probes, codes, foldedTables(dt, Seq("q_id")), Seq("q_id"))
   }
 
   /** ADC shortlist depth for the exact re-ranking stage. */
@@ -703,25 +738,36 @@ object AnnSearch {
     * refinement affordable at 100 TB where the full vectors live on
     * cold storage and only the codes stay hot).
     */
-  def annIvfadcRerank(spark: SparkSession, dir: String): DataFrame = {
+  def annIvfadcRerank(spark: SparkSession, dir: String): DataFrame =
+    adcRerank(ivfadcAdcScores(spark, dir), normVecs(spark, dir))
+
+  /** The ADC shortlist (`RerankR` per query) of a scored relation,
+    * exactly re-ranked.
+    */
+  private def adcRerank(scores: DataFrame, nv: DataFrame): DataFrame = {
     val wAdc = Window.partitionBy(col("q_id")).orderBy(col("adist2"), col("vec_id"))
-    val shortlist = ivfadcAdcScores(spark, dir)
+    exactRerank(scores
       .withColumn("adc_rank", row_number().over(wAdc))
-      .filter(col("adc_rank") <= RerankR)
-    val nv = normVecs(spark, dir)
-    val q = nv.filter(expr(QueryFilter))
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
+      .filter(col("adc_rank") <= RerankR), nv, "adist2")
+  }
+
+  /** The exact stage of every two-stage form: the shortlist's rows
+    * fetch their full vectors from `nv`, re-score with exact L2, and
+    * keep the top `TopK`; `score` names the first-stage column carried
+    * into the output.
+    */
+  private def exactRerank(shortlist: DataFrame, nv: DataFrame, score: String): DataFrame = {
     val wExact = Window.partitionBy(col("q_id")).orderBy(col("dist2"), col("vec_id"))
     shortlist
       .join(nv, "vec_id")
-      .join(broadcast(q), "q_id")
+      .join(broadcast(queryVecs(nv)), "q_id")
       .withColumn("dist2", round(
         dot(col("v"), col("v")) - lit(2) * dot(col("qv"), col("v"))
           + dot(col("qv"), col("qv")), 6))
       .withColumn("rank", row_number().over(wExact))
       .filter(col("rank") <= TopK)
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        col("adist2"), col("dist2"), col("rank"))
+        col(score), col("dist2"), col("rank"))
       .orderBy(col("q_id"), col("rank"))
   }
 
@@ -775,64 +821,53 @@ object AnnSearch {
   private def ivfadcAdcScoresServed(spark: SparkSession, dir: String): DataFrame = {
     val (codes, cb) = servedPqArtifacts(spark, dir)
     val (lists, cent) = servedIvfArtifacts(spark, dir)
-    val q = normVecs(spark, dir).filter(expr(QueryFilter))
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val wProbe = Window.partitionBy(col("q_id")).orderBy(col("cdist2"), col("cl"))
-    val probes = q.crossJoin(broadcast(cent))
-      .withColumn("cdist2", round(
-        dot(col("qv"), col("qv")) - lit(2) * dot(col("qv"), col("cv"))
-          + dot(col("cv"), col("cv")), 6))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= NProbe)
-      .select(col("q_id"), col("cl"))
-    val dt = pqDistanceTable(spark, dir, cb)
-    lists
-      .join(broadcast(probes), "cl")
-      .filter(col("vec_id") =!= col("q_id"))
-      .join(codes, "vec_id")
-      .join(broadcast(foldedTables(dt, Seq("q_id"))), "q_id")
-      .withColumn("adist2", round(
-        call_function("adc_dist6", col("codes"), col("dtab")) / 1000000.0, 6))
-      .select(col("q_id"), col("vec_id"), col("adist2"))
+    ivfadcScoresOver(spark, dir, lists, cent, codes, cb)
   }
 
   /** [[annIvfadcTopk]] served from the artifact tier — same output,
     * probe-side cost only.
     */
-  def annIvfadcServed(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("q_id")).orderBy(col("adist2"), col("vec_id"))
-    ivfadcAdcScoresServed(spark, dir)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("adist2"), col("rank"))
-      .orderBy(col("q_id"), col("rank"))
-  }
+  def annIvfadcServed(spark: SparkSession, dir: String): DataFrame =
+    adistTopk(ivfadcAdcScoresServed(spark, dir))
 
   /** [[annIvfadcRerank]] served from the artifact tier: ADC shortlist
     * from the stored codes, exact re-score fetching only the ≤ R
     * shortlisted vectors — the full two-stage FAISS serving path with
     * zero training in the query.
     */
-  def annIvfadcRerankServed(spark: SparkSession, dir: String): DataFrame = {
-    val wAdc = Window.partitionBy(col("q_id")).orderBy(col("adist2"), col("vec_id"))
-    val shortlist = ivfadcAdcScoresServed(spark, dir)
-      .withColumn("adc_rank", row_number().over(wAdc))
-      .filter(col("adc_rank") <= RerankR)
-    val nv = normVecs(spark, dir)
-    val q = nv.filter(expr(QueryFilter))
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val wExact = Window.partitionBy(col("q_id")).orderBy(col("dist2"), col("vec_id"))
-    shortlist
-      .join(nv, "vec_id")
-      .join(broadcast(q), "q_id")
-      .withColumn("dist2", round(
-        dot(col("v"), col("v")) - lit(2) * dot(col("qv"), col("v"))
-          + dot(col("qv"), col("qv")), 6))
-      .withColumn("rank", row_number().over(wExact))
-      .filter(col("rank") <= TopK)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        col("adist2"), col("dist2"), col("rank"))
-      .orderBy(col("q_id"), col("rank"))
+  def annIvfadcRerankServed(spark: SparkSession, dir: String): DataFrame =
+    adcRerank(ivfadcAdcScoresServed(spark, dir), normVecs(spark, dir))
+
+  /** Corpus residuals r(x) = x − q1(x) of an assignment (vec_id, cl, v)
+    * against its centroids, split into PQ training subvectors
+    * (vec_id, m, sv) — one broadcast-join subtraction, map-side.
+    */
+  private def residualSubvectors(assigned: DataFrame, cent: DataFrame): DataFrame =
+    assigned.select(col("vec_id"), col("cl"), col("v"))
+      .join(broadcast(cent.select(col("cl"), col("cv"))), "cl")
+      .select(col("vec_id"), expr("zip_with(v, cv, (a, b) -> a - b)").as("rv"))
+      .select(col("vec_id"), subvectors("rv").as(Seq("m", "sv")))
+
+  /** The residual-PQ probe over (lists, centroids, folded residual
+    * codes, residual codebook): the per-(query, probed list) residual
+    * ADC tables — the query residual differs per list, so the table is
+    * #queries × nprobe × M × Ks rows, still broadcast — folded to one
+    * flattened array each, then the pruned ADC scan and top-k.
+    */
+  private def residualTopkOver(q: DataFrame, lists: DataFrame, cent: DataFrame,
+      codes: DataFrame, cb: DataFrame): DataFrame = {
+    val probes = ivfProbes(q, cent)
+    val qrsub = probes
+      .join(broadcast(cent.select(col("cl"), col("cv"))), "cl")
+      .select(col("q_id"), col("cl"),
+        expr("zip_with(qv, cv, (a, b) -> a - b)").as("rq"))
+      .select(col("q_id"), col("cl"), subvectors("rq").as(Seq("m", "qs")))
+    val dt = qrsub.join(broadcast(cb), "m")
+      .withColumn("dsub", sqDist6(col("qs"), col("cv")))
+      .select(col("q_id"), col("cl"), col("m"), col("code"), col("dsub"))
+    val keys = Seq("q_id", "cl")
+    adistTopk(adcScan(lists, probes.select("q_id", "cl"), codes,
+      foldedTables(dt, keys), keys))
   }
 
   /** The RESIDUAL-PQ serving group — all FOUR relations the serving
@@ -857,14 +892,7 @@ object AnnSearch {
       val lists = trained.select(col("vec_id"), col("cl"))
       val cent = kmCentroids(trained.select(col("cl"), col("v")))
         .localCheckpoint() // read by the residual subtraction AND persisted
-      val rsub = trained.select(col("vec_id"), col("cl"), col("v"))
-        .join(broadcast(cent.select(col("cl"), col("cv"))), "cl")
-        .select(col("vec_id"),
-          expr("zip_with(v, cv, (a, b) -> a - b)").as("rv"))
-        .select(col("vec_id"), posexplode(expr(
-          s"transform(sequence(0, ${PqM - 1}), m -> slice(rv, m * $PqSub + 1, $PqSub))"))
-          .as(Seq("m", "sv")))
-      val (codes, cb) = pqModelOverSub(rsub)
+      val (codes, cb) = pqModelOverSub(residualSubvectors(trained, cent))
       Map("pq_res_lists" -> lists, "pq_res_centroids" -> cent,
         "pq_res_codes" -> foldedCodes(codes), "pq_res_codebook" -> cb)
     }
@@ -882,40 +910,7 @@ object AnnSearch {
     */
   def annIvfpqResidualServed(spark: SparkSession, dir: String): DataFrame = {
     val (lists, cent, codes, cb) = servedResidualPqArtifacts(spark, dir)
-    val q = normVecs(spark, dir).filter(expr(QueryFilter))
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val wProbe = Window.partitionBy(col("q_id")).orderBy(col("cdist2"), col("cl"))
-    val probes = q.crossJoin(broadcast(cent))
-      .withColumn("cdist2", round(
-        dot(col("qv"), col("qv")) - lit(2) * dot(col("qv"), col("cv"))
-          + dot(col("cv"), col("cv")), 6))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= NProbe)
-      .select(col("q_id"), col("cl"), col("qv"))
-    val qrsub = probes
-      .join(broadcast(cent.select(col("cl"), col("cv"))), "cl")
-      .select(col("q_id"), col("cl"),
-        expr("zip_with(qv, cv, (a, b) -> a - b)").as("rq"))
-      .select(col("q_id"), col("cl"), posexplode(expr(
-        s"transform(sequence(0, ${PqM - 1}), m -> slice(rq, m * $PqSub + 1, $PqSub))"))
-        .as(Seq("m", "qs")))
-    val dt = qrsub.join(broadcast(cb), "m")
-      .withColumn("dsub", round(
-        dot(col("qs"), col("qs")) - lit(2) * dot(col("qs"), col("cv"))
-          + dot(col("cv"), col("cv")), 6))
-      .select(col("q_id"), col("cl"), col("m"), col("code"), col("dsub"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("adist2"), col("vec_id"))
-    lists
-      .join(broadcast(probes.select("q_id", "cl")), "cl")
-      .filter(col("vec_id") =!= col("q_id"))
-      .join(codes, "vec_id")
-      .join(broadcast(foldedTables(dt, Seq("q_id", "cl"))), Seq("q_id", "cl"))
-      .withColumn("adist2", round(
-        call_function("adc_dist6", col("codes"), col("dtab")) / 1000000.0, 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("adist2"), col("rank"))
-      .orderBy(col("q_id"), col("rank"))
+    residualTopkOver(queryVecs(normVecs(spark, dir)), lists, cent, codes, cb)
   }
 
   /** IVFPQ with RESIDUAL encoding — the EXACT published IVFADC recipe
@@ -940,53 +935,32 @@ object AnnSearch {
     // centroids read by the corpus residuals, the probes AND the query
     // residuals: one materialization (K rows)
     val cent = kmCentroids(lists.select(col("cl"), col("v"))).localCheckpoint()
-    // corpus residuals → PQ training subvectors
-    val rsub = lists.select(col("vec_id"), col("cl"), col("v"))
-      .join(broadcast(cent.select(col("cl"), col("cv"))), "cl")
-      .select(col("vec_id"), col("cl"),
-        expr("zip_with(v, cv, (a, b) -> a - b)").as("rv"))
-      .select(col("vec_id"), col("cl"), posexplode(expr(
-        s"transform(sequence(0, ${PqM - 1}), m -> slice(rv, m * $PqSub + 1, $PqSub))"))
-        .as(Seq("m", "sv")))
-    val (codes, cb) = pqModelOverSub(rsub.select("vec_id", "m", "sv"))
-    // probes: same rounded-L2 argmin as the ivfadc chain
-    val q = nv.filter(expr(QueryFilter))
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val wProbe = Window.partitionBy(col("q_id")).orderBy(col("cdist2"), col("cl"))
-    val probes = q.crossJoin(broadcast(cent))
-      .withColumn("cdist2", round(
-        dot(col("qv"), col("qv")) - lit(2) * dot(col("qv"), col("cv"))
-          + dot(col("cv"), col("cv")), 6))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= NProbe)
-      .select(col("q_id"), col("cl"), col("qv"))
-    // per-(query, probed list) residual ADC table
-    val qrsub = probes
-      .join(broadcast(cent.select(col("cl"), col("cv"))), "cl")
-      .select(col("q_id"), col("cl"),
-        expr("zip_with(qv, cv, (a, b) -> a - b)").as("rq"))
-      .select(col("q_id"), col("cl"), posexplode(expr(
-        s"transform(sequence(0, ${PqM - 1}), m -> slice(rq, m * $PqSub + 1, $PqSub))"))
-        .as(Seq("m", "qs")))
-    val dt = qrsub.join(broadcast(cb), "m")
-      .withColumn("dsub", round(
-        dot(col("qs"), col("qs")) - lit(2) * dot(col("qs"), col("cv"))
-          + dot(col("cv"), col("cv")), 6))
-      .select(col("q_id"), col("cl"), col("m"), col("code"), col("dsub"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("adist2"), col("vec_id"))
-    // per-(query, probed list) residual tables fold to one flattened
-    // array each; scoring is the same map-side adc_dist6 scan
-    lists.select(col("vec_id"), col("cl"))
-      .join(broadcast(probes.select("q_id", "cl")), "cl")
-      .filter(col("vec_id") =!= col("q_id"))
-      .join(foldedCodes(codes), "vec_id")
-      .join(broadcast(foldedTables(dt, Seq("q_id", "cl"))), Seq("q_id", "cl"))
-      .withColumn("adist2", round(
-        call_function("adc_dist6", col("codes"), col("dtab")) / 1000000.0, 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("adist2"), col("rank"))
-      .orderBy(col("q_id"), col("rank"))
+    val (codes, cb) = pqModelOverSub(residualSubvectors(lists, cent))
+    residualTopkOver(queryVecs(nv), lists.select(col("vec_id"), col("cl")), cent,
+      foldedCodes(codes), cb)
+  }
+
+  /** The SQ8 index over a (vec_id, v) relation: the 64-row range model
+    * (the "training" of a scalar quantizer), folded to ONE row of
+    * d-ordered (lo, hi) arrays so it broadcasts to every scan task as a
+    * single row — array_sort on the (d, …) structs is the deterministic
+    * ordering, collect_list order is not — and the corpus encoded ONCE,
+    * array-at-a-time: 64 doubles → array<int> per vector through the
+    * native codegen'd sq8_enc (constant dims → 0). The codes are the
+    * stored index; the exploded form would be 64 rows/vector.
+    */
+  private def sq8Index(nv: DataFrame): (DataFrame, DataFrame) = {
+    val mm = nv.select(posexplode(col("v")).as(Seq("d", "x")))
+      .groupBy(col("d"))
+      .agg(round(min(col("x")), 6).as("lo"), round(max(col("x")), 6).as("hi"))
+    val model = mm.agg(
+      expr("transform(array_sort(collect_list(struct(d, lo))), s -> s.lo)").as("lo_arr"),
+      expr("transform(array_sort(collect_list(struct(d, hi))), s -> s.hi)").as("hi_arr"))
+      .localCheckpoint() // read by encode AND scan; 1 row, one subtree
+    val codes = nv.crossJoin(broadcast(model))
+      .select(col("vec_id"),
+        call_function("sq8_enc", col("v"), col("lo_arr"), col("hi_arr")).as("codes"))
+    (model, codes)
   }
 
   /** SQ8 — SCALAR quantization ANN (FAISS `IndexScalarQuantizer`, the
@@ -1006,39 +980,16 @@ object AnnSearch {
     */
   def annSq8Topk(spark: SparkSession, dir: String): DataFrame = {
     val nv = normVecs(spark, dir)
-    // 64-row range model (the "training" of a scalar quantizer),
-    // folded to ONE row of d-ordered (lo, hi) arrays so it broadcasts
-    // to every scan task as a single row — array_sort on the (d, …)
-    // structs is the deterministic ordering, collect_list order is not
-    val mm = nv.select(posexplode(col("v")).as(Seq("d", "x")))
-      .groupBy(col("d"))
-      .agg(round(min(col("x")), 6).as("lo"), round(max(col("x")), 6).as("hi"))
-    val model = mm.agg(
-      expr("transform(array_sort(collect_list(struct(d, lo))), s -> s.lo)").as("lo_arr"),
-      expr("transform(array_sort(collect_list(struct(d, hi))), s -> s.hi)").as("hi_arr"))
-      .localCheckpoint() // read by encode AND scan; 1 row, one subtree
-    // encode ONCE, array-at-a-time: 64 doubles → array<int> per vector
-    // through the native codegen'd sq8_enc (constant dims → 0). This is
-    // the stored index; the exploded form would be 64 rows/vector.
-    val codes = nv.crossJoin(broadcast(model))
-      .select(col("vec_id"),
-        call_function("sq8_enc", col("v"), col("lo_arr"), col("hi_arr")).as("codes"))
-    val q = nv.filter(expr(QueryFilter))
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("adist2"), col("vec_id"))
+    val (model, codes) = sq8Index(nv)
     // the scan: pure map over (corpus × queries) — query-exact vs
     // dequantized codes, the whole 64-term integer-scaled sum inside
     // one codegen'd expression; NO explode, NO re-aggregation
-    codes.crossJoin(broadcast(model))
-      .join(broadcast(q), col("vec_id") =!= col("q_id"))
+    adistTopk(codes.crossJoin(broadcast(model))
+      .join(broadcast(queryVecs(nv)), col("vec_id") =!= col("q_id"))
       .withColumn("t6",
         call_function("sq8_dist", col("qv"), col("codes"),
           col("lo_arr"), col("hi_arr")))
-      .withColumn("adist2", round(col("t6") / 1000000.0, 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("adist2"), col("rank"))
-      .orderBy(col("q_id"), col("rank"))
+      .withColumn("adist2", round(col("t6") / 1000000.0, 6)))
   }
 
   /** IVF + SQ8 — the list-pruned scalar-quantized tier (FAISS
@@ -1062,40 +1013,38 @@ object AnnSearch {
     // SQ8 range model + codes over the SAME normalized space the
     // coarse quantizer partitions (one metric space end to end, the
     // IVFADC discipline)
-    val mm = nv.select(posexplode(col("v")).as(Seq("d", "x")))
-      .groupBy(col("d"))
-      .agg(round(min(col("x")), 6).as("lo"), round(max(col("x")), 6).as("hi"))
-    val model = mm.agg(
-      expr("transform(array_sort(collect_list(struct(d, lo))), s -> s.lo)").as("lo_arr"),
-      expr("transform(array_sort(collect_list(struct(d, hi))), s -> s.hi)").as("hi_arr"))
-      .localCheckpoint()
-    val codes = nv.crossJoin(broadcast(model))
-      .select(col("vec_id"),
-        call_function("sq8_enc", col("v"), col("lo_arr"), col("hi_arr")).as("codes"))
-    val q = nv.filter(expr(QueryFilter))
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val wProbe = Window.partitionBy(col("q_id")).orderBy(col("cdist2"), col("cl"))
-    val probes = q.crossJoin(broadcast(cent))
-      .withColumn("cdist2", round(
-        dot(col("qv"), col("qv")) - lit(2) * dot(col("qv"), col("cv"))
-          + dot(col("cv"), col("cv")), 6))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= NProbe)
-      .select(col("q_id"), col("cl"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("adist2"), col("vec_id"))
-    lists.select(col("vec_id"), col("cl"))
-      .join(broadcast(probes), "cl")
+    val (model, codes) = sq8Index(nv)
+    val q = queryVecs(nv)
+    adistTopk(lists.select(col("vec_id"), col("cl"))
+      .join(broadcast(ivfProbes(q, cent).select("q_id", "cl")), "cl")
       .filter(col("vec_id") =!= col("q_id"))
       .join(codes, "vec_id")
       .join(broadcast(q), "q_id")
       .crossJoin(broadcast(model))
       .withColumn("adist2", round(
         call_function("sq8_dist", col("qv"), col("codes"),
-          col("lo_arr"), col("hi_arr")) / 1000000.0, 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("adist2"), col("rank"))
-      .orderBy(col("q_id"), col("rank"))
+          col("lo_arr"), col("hi_arr")) / 1000000.0, 6)))
+  }
+
+  /** The BQ sign-code scan: each normalized vector's 64 sign bits
+    * packed into two 32-bit halves (lo, hi), every query code
+    * broadcast against the corpus codes and scored by
+    * `bit_count(xor)` per half → (q_id, vec_id, hamming, …).
+    */
+  private def bqScan(spark: SparkSession, dir: String): DataFrame = {
+    val bits = normVecs(spark, dir)
+      .select(col("vec_id"), posexplode(col("v")).as(Seq("d", "x")))
+      .withColumn("b", col("x") > 0)
+    val codes = bits.groupBy(col("vec_id")).agg(
+      sum(when(col("d") < 32 && col("b"), expr("shiftleft(CAST(1 AS BIGINT), d)"))
+        .otherwise(0L)).as("lo"),
+      sum(when(col("d") >= 32 && col("b"), expr("shiftleft(CAST(1 AS BIGINT), d - 32)"))
+        .otherwise(0L)).as("hi"))
+    val q = codes.filter(expr(QueryFilter))
+      .select(col("vec_id").as("q_id"), col("lo").as("qlo"), col("hi").as("qhi"))
+    codes.join(broadcast(q), col("vec_id") =!= col("q_id"))
+      .withColumn("hamming",
+        (expr("bit_count(lo ^ qlo)") + expr("bit_count(hi ^ qhi)")).cast("long"))
   }
 
   /** BINARY quantization ANN — the 1-bit tier that completes the
@@ -1113,20 +1062,8 @@ object AnnSearch {
     * compressed linear scan, like ADC.
     */
   def annBqTopk(spark: SparkSession, dir: String): DataFrame = {
-    val bits = normVecs(spark, dir)
-      .select(col("vec_id"), posexplode(col("v")).as(Seq("d", "x")))
-      .withColumn("b", col("x") > 0)
-    val codes = bits.groupBy(col("vec_id")).agg(
-      sum(when(col("d") < 32 && col("b"), expr("shiftleft(CAST(1 AS BIGINT), d)"))
-        .otherwise(0L)).as("lo"),
-      sum(when(col("d") >= 32 && col("b"), expr("shiftleft(CAST(1 AS BIGINT), d - 32)"))
-        .otherwise(0L)).as("hi"))
-    val q = codes.filter(expr(QueryFilter))
-      .select(col("vec_id").as("q_id"), col("lo").as("qlo"), col("hi").as("qhi"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("hamming"), col("vec_id"))
-    codes.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .withColumn("hamming",
-        (expr("bit_count(lo ^ qlo)") + expr("bit_count(hi ^ qhi)")).cast("long"))
+    bqScan(spark, dir)
       .withColumn("est_cosine",
         round(cos(col("hamming") * math.Pi / Dims), 6))
       .withColumn("rank", row_number().over(w))
@@ -1150,37 +1087,11 @@ object AnnSearch {
     */
   def annBqRerank(spark: SparkSession, dir: String): DataFrame = {
     val wBq = Window.partitionBy(col("q_id")).orderBy(col("hamming"), col("vec_id"))
-    val bits = normVecs(spark, dir)
-      .select(col("vec_id"), posexplode(col("v")).as(Seq("d", "x")))
-      .withColumn("b", col("x") > 0)
-    val codes = bits.groupBy(col("vec_id")).agg(
-      sum(when(col("d") < 32 && col("b"), expr("shiftleft(CAST(1 AS BIGINT), d)"))
-        .otherwise(0L)).as("lo"),
-      sum(when(col("d") >= 32 && col("b"), expr("shiftleft(CAST(1 AS BIGINT), d - 32)"))
-        .otherwise(0L)).as("hi"))
-    val qc = codes.filter(expr(QueryFilter))
-      .select(col("vec_id").as("q_id"), col("lo").as("qlo"), col("hi").as("qhi"))
-    val shortlist = codes.join(broadcast(qc), col("vec_id") =!= col("q_id"))
-      .withColumn("hamming",
-        (expr("bit_count(lo ^ qlo)") + expr("bit_count(hi ^ qhi)")).cast("long"))
+    val shortlist = bqScan(spark, dir)
       .withColumn("bq_rank", row_number().over(wBq))
       .filter(col("bq_rank") <= RerankR)
       .select(col("q_id"), col("vec_id"), col("hamming"))
-    val nv = normVecs(spark, dir)
-    val q = nv.filter(expr(QueryFilter))
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val wExact = Window.partitionBy(col("q_id")).orderBy(col("dist2"), col("vec_id"))
-    shortlist
-      .join(nv, "vec_id")
-      .join(broadcast(q), "q_id")
-      .withColumn("dist2", round(
-        dot(col("v"), col("v")) - lit(2) * dot(col("qv"), col("v"))
-          + dot(col("qv"), col("qv")), 6))
-      .withColumn("rank", row_number().over(wExact))
-      .filter(col("rank") <= TopK)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        col("hamming"), col("dist2"), col("rank"))
-      .orderBy(col("q_id"), col("rank"))
+    exactRerank(shortlist, normVecs(spark, dir), "hamming")
   }
 
   /** RRF constant (the published default) and per-leg candidate depth. */
@@ -1262,9 +1173,7 @@ object AnnSearch {
     */
   private[operators] def servedLshKeys(spark: SparkSession, dir: String): DataFrame =
     graft.sources.ArtifactStore.ensure(spark, dir, "lsh_keys", "vec_id", 8)(
-      vecs(spark, dir)
-        .select(col("vec_id"), explode(tableKeys(col("v"))).as("tb"))
-        .select(col("vec_id"), col("tb.t").as("t"), col("tb.b").as("b")))
+      lshKeys(vecs(spark, dir)))
 
   /** The vector leg of the RRF fusion, self-contained: multi-table LSH
     * bucket candidates (the bucket keys checkpointed so the 16
@@ -1274,10 +1183,7 @@ object AnnSearch {
     */
   private[graft] def rrfVecRanked(spark: SparkSession, dir: String): DataFrame = {
     val all = vecs(spark, dir)
-    val keyed = all
-      .select(col("vec_id"), explode(tableKeys(col("v"))).as("tb"))
-      .select(col("vec_id"), col("tb.t").as("t"), col("tb.b").as("b"))
-      .localCheckpoint()
+    val keyed = lshKeys(all).localCheckpoint()
     rrfVecRankedOver(all, keyed)
   }
 
@@ -1368,12 +1274,19 @@ object AnnSearch {
     * artifact the aggregation rides the bucketing; the only exchange
     * left is the per-query rank window.
     */
-  private def bm25LexRankedFromW(w: DataFrame, qTerms: DataFrame): DataFrame = {
+  private def bm25LexRankedFromW(w: DataFrame, qTerms: DataFrame): DataFrame =
+    lexRankTail(w
+      .join(broadcast(qTerms), "term")
+      .filter(col("doc_id") =!= col("q_id")))
+
+  /** The lexical rank tail over any (q_id, doc_id, w6) per-term score
+    * relation: integer sum per (query, doc), top-`RrfCand` per query —
+    * one body for the full and the capped leg.
+    */
+  private def lexRankTail(termScores: DataFrame): DataFrame = {
     val wLex = Window.partitionBy(col("q_id"))
       .orderBy(col("bm25").desc, col("doc_id"))
-    w
-      .join(broadcast(qTerms), "term")
-      .filter(col("doc_id") =!= col("q_id"))
+    termScores
       .groupBy(col("q_id"), col("doc_id"))
       .agg(sum(col("w6")).as("s6"))
       .withColumn("bm25", round(col("s6") / 1000000.0, 6))
@@ -1573,17 +1486,9 @@ object AnnSearch {
       .filter(col("doc_id") =!= col("q_id"))
       .select("q_id", "doc_id")
     val proposed = proposedPost.union(proposedChamp).distinct()
-    val wLex = Window.partitionBy(col("q_id"))
-      .orderBy(col("bm25").desc, col("doc_id"))
-    proposed
+    lexRankTail(proposed
       .join(wFull, "doc_id")
-      .join(broadcast(qTerms), Seq("q_id", "term"))
-      .groupBy(col("q_id"), col("doc_id"))
-      .agg(sum(col("w6")).as("s6"))
-      .withColumn("bm25", round(col("s6") / 1000000.0, 6))
-      .withColumn("lex_rank", row_number().over(wLex))
-      .filter(col("lex_rank") <= RrfCand)
-      .select(col("q_id"), col("doc_id").as("id"), col("lex_rank"))
+      .join(broadcast(qTerms), Seq("q_id", "term")))
   }
 
   /** [[annRrfFusionServed]] with BOUNDED per-query cost — the form a

@@ -843,7 +843,8 @@ object CorpusOps {
         round(lit(wv(3)) + lit(LrEta) * sum(t6(xs(3))) / 1000000.0 / count(lit(1)), 6).as("w3"),
         round(lit(wv(4)) + lit(LrEta) * sum(t6(xs(4))) / 1000000.0 / count(lit(1)), 6).as("w4"))
         .head()
-      wv = Array.tabulate(5)(row.getDouble)
+      // over an empty corpus the sums are null: keep the current weights
+      wv = Array.tabulate(5)(j => if (row.isNullAt(j)) wv(j) else row.getDouble(j))
     }
     val w = spark.range(1).select(
       lit(wv(0)).as("w0"), lit(wv(1)).as("w1"), lit(wv(2)).as("w2"),

@@ -109,9 +109,52 @@ object Dedup {
     * ([[graft.streaming.StreamOps.nearDupAdmissionStream]]).
     */
   private[graft] def bandKeysOf(docs: DataFrame): DataFrame =
-    minhashFromShingles(shinglesOf(docs))
-      .select(col("doc_id"), posexplode(
+    bandKeys(minhashFromShingles(shinglesOf(docs)))
+
+  /** The band-key unpivot of a signature relation: its `band*` columns
+    * to (doc_id, band_idx, bk) rows, one per band.
+    */
+  private def bandKeys(sig: DataFrame): DataFrame =
+    sig.select(col("doc_id"), posexplode(
         array((0 until NumBands).map(b => col(s"band$b")): _*)).as(Seq("band_idx", "bk")))
+
+  /** Candidate pairs (doc_a < doc_b) of a band-key relation: ONE
+    * self-equi-join on the composite bucket key.
+    */
+  private def bandSelfJoin(keys: DataFrame): DataFrame =
+    keys.select(col("doc_id").as("doc_a"), col("band_idx"), col("bk"))
+      .join(keys.select(col("doc_id").as("doc_b"), col("band_idx"), col("bk")),
+        Seq("band_idx", "bk"))
+      .filter(col("doc_a") < col("doc_b"))
+      .select("doc_a", "doc_b")
+
+  /** Exact shingle-set verification counts of an (a, b) pair relation
+    * over a (doc_id, gram) shingle relation: the intersection count
+    * n_inter plus both set sizes (na, nb). Every Jaccard and
+    * containment verdict reads these three counts.
+    */
+  private def interSizes(pairs: DataFrame, sh: DataFrame, a: String, b: String): DataFrame = {
+    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
+    pairs
+      .join(sh.select(col("doc_id").as(a), col("gram")), a)
+      .join(sh.select(col("doc_id").as(b), col("gram")), Seq(b, "gram"))
+      .groupBy(a, b).agg(count(lit(1)).as("n_inter"))
+      .join(sizes.select(col("doc_id").as(a), col("n_grams").as("na")), a)
+      .join(sizes.select(col("doc_id").as(b), col("n_grams").as("nb")), b)
+  }
+
+  /** Exact Jaccard from the [[interSizes]] counts, 6-dp rounded. */
+  private def jaccardOf: Column =
+    round(col("n_inter") / (col("na") + col("nb") - col("n_inter")), 6)
+
+  /** The verified pair relation (doc_a, doc_b, n_inter, jaccard):
+    * candidates whose exact Jaccard reaches [[JaccardThreshold]].
+    */
+  private def verifiedPairs(pairs: DataFrame, sh: DataFrame): DataFrame =
+    interSizes(pairs, sh, "doc_a", "doc_b")
+      .withColumn("jaccard", jaccardOf)
+      .filter(col("jaccard") >= JaccardThreshold)
+      .select("doc_a", "doc_b", "n_inter", "jaccard")
 
   private def minhashCteOver(rel: String): String = {
     val mins = (0 until NumHashes)
@@ -169,10 +212,7 @@ object Dedup {
     // at 32 cores when the self-join was pinned to bucket-hash
     // partitions (hot buckets serialize); the doc-hashed checkpoint +
     // AQE's broadcast of the tiny other side spreads the fan-out evenly
-    val sigLong = minhashFromShingles(sh)
-      .select(col("doc_id"), posexplode(
-        array((0 until NumBands).map(b => col(s"band$b")): _*)).as(Seq("band_idx", "bk")))
-      .localCheckpoint()
+    val sigLong = bandKeys(minhashFromShingles(sh)).localCheckpoint()
     // the candidate set is materialized so the verify join's build side
     // is chosen from its EXACT size, not from the band-join fan-out
     // estimate: with the estimate the planner broadcast the (larger)
@@ -182,26 +222,9 @@ object Dedup {
     // relation is the build side and the probe runs over the gram
     // checkpoint's partitions; at scale the exact size correctly
     // forbids the broadcast and the join degrades to the shuffled form.
-    val pairs0 = sigLong.select(col("doc_id").as("doc_a"), col("band_idx"), col("bk"))
-      .join(sigLong.select(col("doc_id").as("doc_b"), col("band_idx"), col("bk")),
-        Seq("band_idx", "bk"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
+    val pairs0 = bandSelfJoin(sigLong).distinct()
     val pairs = if (widen) pairs0.localCheckpoint() else pairs0
-
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
-    val inter = pairs
-      .join(sh.select(col("doc_id").as("doc_a"), col("gram")), "doc_a")
-      .join(sh.select(col("doc_id").as("doc_b"), col("gram")), Seq("doc_b", "gram"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_inter"))
-    inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n_grams").as("na")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n_grams").as("nb")), "doc_b")
-      .withColumn("jaccard",
-        round(col("n_inter") / (col("na") + col("nb") - col("n_inter")), 6))
-      .filter(col("jaccard") >= JaccardThreshold)
-      .select("doc_a", "doc_b", "n_inter", "jaccard")
-      .orderBy("doc_a", "doc_b")
+    verifiedPairs(pairs, sh).orderBy("doc_a", "doc_b")
   }
 
   /** Only the NEW near-dup pairs an ingest batch introduces: candidates
@@ -221,9 +244,7 @@ object Dedup {
       .union(batchDocs.select("doc_id", "text"))
     val sh = shinglesOf(
       if (widen) Tables.widened(all, "doc_id") else all).localCheckpoint()
-    val sig = minhashFromShingles(sh)
-      .select(col("doc_id"), posexplode(
-        array((0 until NumBands).map(b => col(s"band$b")): _*)).as(Seq("band_idx", "bk")))
+    val sig = bandKeys(minhashFromShingles(sh))
       .join(batchDocs.select(col("doc_id").as("nid")),
         col("doc_id") === col("nid"), "left")
       .withColumn("is_new", col("nid").isNotNull)
@@ -239,19 +260,7 @@ object Dedup {
       .select(least(col("new_id"), col("cand_id")).as("doc_a"),
         greatest(col("new_id"), col("cand_id")).as("doc_b"))
       .distinct()
-    val pairs1 = if (widen) pairs.localCheckpoint() else pairs
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
-    val inter = pairs1
-      .join(sh.select(col("doc_id").as("doc_a"), col("gram")), "doc_a")
-      .join(sh.select(col("doc_id").as("doc_b"), col("gram")), Seq("doc_b", "gram"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_inter"))
-    inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n_grams").as("na")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n_grams").as("nb")), "doc_b")
-      .withColumn("jaccard",
-        round(col("n_inter") / (col("na") + col("nb") - col("n_inter")), 6))
-      .filter(col("jaccard") >= JaccardThreshold)
-      .select("doc_a", "doc_b", "n_inter", "jaccard")
+    verifiedPairs(if (widen) pairs.localCheckpoint() else pairs, sh)
   }
 
   /** Span width for the prefix-filter pass. Prefix filtering REQUIRES
@@ -309,19 +318,7 @@ object Dedup {
       .join(prefix.select(col("doc_id").as("doc_b"), col("gram")), "gram")
       .filter(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b").distinct()
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
-    val inter = pairs
-      .join(sh.select(col("doc_id").as("doc_a"), col("gram")), "doc_a")
-      .join(sh.select(col("doc_id").as("doc_b"), col("gram")), Seq("doc_b", "gram"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_inter"))
-    inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n_grams").as("na")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n_grams").as("nb")), "doc_b")
-      .withColumn("jaccard",
-        round(col("n_inter") / (col("na") + col("nb") - col("n_inter")), 6))
-      .filter(col("jaccard") >= JaccardThreshold)
-      .select("doc_a", "doc_b", "n_inter", "jaccard")
-      .orderBy("doc_a", "doc_b")
+    verifiedPairs(pairs, sh).orderBy("doc_a", "doc_b")
   }
 
   /** Signature-ESTIMATED Jaccard for the LSH candidate pairs: the
@@ -346,14 +343,7 @@ object Dedup {
     */
   private def candMatchCounts(spark: SparkSession, dir: String): DataFrame = {
     val sig = minhashFromShingles(shingles(spark, dir)).localCheckpoint()
-    val sigLong = sig
-      .select(col("doc_id"), posexplode(
-        array((0 until NumBands).map(b => col(s"band$b")): _*)).as(Seq("band_idx", "bk")))
-    val pairs = sigLong.select(col("doc_id").as("doc_a"), col("band_idx"), col("bk"))
-      .join(sigLong.select(col("doc_id").as("doc_b"), col("band_idx"), col("bk")),
-        Seq("band_idx", "bk"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
+    val pairs = bandSelfJoin(bandKeys(sig)).distinct()
     val a = sig.select(col("doc_id").as("doc_a") +:
       (0 until NumHashes).map(j => col(s"m$j").as(s"a$j")): _*)
     val b = sig.select(col("doc_id").as("doc_b") +:
@@ -695,28 +685,13 @@ object Dedup {
       .localCheckpoint()
     // banded signatures checkpointed like the Jaccard twin: the self-
     // join reads this relation twice
-    val sigLong = minhashFromShingles(sh)
-      .select(col("doc_id"), posexplode(
-        array((0 until NumBands).map(b => col(s"band$b")): _*)).as(Seq("band_idx", "bk")))
-      .localCheckpoint()
-    val pairs = sigLong.select(col("doc_id").as("doc_a"), col("band_idx"), col("bk"))
-      .join(sigLong.select(col("doc_id").as("doc_b"), col("band_idx"), col("bk")),
-        Seq("band_idx", "bk"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
+    val sigLong = bandKeys(minhashFromShingles(sh)).localCheckpoint()
+    val pairs = bandSelfJoin(sigLong).distinct()
       .localCheckpoint() // exact-size build side for the verify join (see ngramJaccardOf)
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
-    val inter = pairs
-      .join(sh.select(col("doc_id").as("doc_a"), col("gram")), "doc_a")
-      .join(sh.select(col("doc_id").as("doc_b"), col("gram")), Seq("doc_b", "gram"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_inter"))
-    inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n_grams").as("na")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n_grams").as("nb")), "doc_b")
+    interSizes(pairs, sh, "doc_a", "doc_b")
       .withColumn("containment",
         round(col("n_inter") / least(col("na"), col("nb")), 6))
-      .withColumn("jaccard",
-        round(col("n_inter") / (col("na") + col("nb") - col("n_inter")), 6))
+      .withColumn("jaccard", jaccardOf)
       .filter(col("containment") >= ContainmentThreshold)
       .withColumn("is_asymmetric", col("jaccard") < JaccardThreshold)
       .select("doc_a", "doc_b", "n_inter", "containment", "jaccard", "is_asymmetric")
@@ -856,6 +831,14 @@ object Dedup {
     // an edge-free graph never enters the loop: strip the seed-only
     // deg column so the output schema is loop-count-independent
     if (first) labels = labels.drop("deg")
+    withComponentSize(labels)
+  }
+
+  /** A (doc_id, component) labelling with each component's member
+    * count attached, in doc_id order — the output shape of every
+    * components form, built or served.
+    */
+  private def withComponentSize(labels: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("component"))
     labels
       .withColumn("component_size", count(lit(1)).over(w))
@@ -963,10 +946,7 @@ object Dedup {
         .join(edges.select(col("u")).distinct(),
           col("v") === col("u"), "left_anti")
         .select(col("v").as("doc_id"), col("v").as("component")))
-    val w = Window.partitionBy(col("component"))
-    labels
-      .withColumn("component_size", count(lit(1)).over(w))
-      .orderBy(col("doc_id"))
+    withComponentSize(labels)
   }
 
   /** Per-cluster statistics over the near-dup component graph — the
@@ -982,7 +962,14 @@ object Dedup {
   def dedupClusterStats(spark: SparkSession, dir: String): DataFrame = {
     val pairs = dedupNgramJaccard(spark, dir)
       .select("doc_a", "doc_b").localCheckpoint()
-    val labels = connectedComponents(pairs).select("doc_id", "component")
+    clusterStatsOver(pairs, connectedComponents(pairs).select("doc_id", "component"))
+  }
+
+  /** The cluster statistics over a (doc_a, doc_b) pair relation and its
+    * (doc_id, component) labelling — one body for the built and the
+    * served form.
+    */
+  private def clusterStatsOver(pairs: DataFrame, labels: DataFrame): DataFrame = {
     val edgeCounts = pairs
       .join(labels.withColumnRenamed("doc_id", "doc_a"), "doc_a")
       .groupBy(col("component")).agg(count(lit(1)).as("n_edges"))
@@ -1063,27 +1050,15 @@ object Dedup {
   /** [[dedupComponents]] served: label artifact + the size window —
     * no pair search, no fixpoint in the query.
     */
-  def dedupComponentsServed(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("component"))
-    servedLabels(spark, dir)
-      .withColumn("component_size", count(lit(1)).over(w))
-      .orderBy(col("doc_id"))
-  }
+  def dedupComponentsServed(spark: SparkSession, dir: String): DataFrame =
+    withComponentSize(servedLabels(spark, dir))
 
   /** [[dedupClusterStats]] served: two keyed aggregations over the
     * pair/label artifacts.
     */
   def dedupClusterStatsServed(spark: SparkSession, dir: String): DataFrame = {
     val pairs = servedPairs(spark, dir).select("doc_a", "doc_b")
-    val labels = servedLabels(spark, dir)
-    val edgeCounts = pairs
-      .join(labels.withColumnRenamed("doc_id", "doc_a"), "doc_a")
-      .groupBy(col("component")).agg(count(lit(1)).as("n_edges"))
-    labels.groupBy(col("component"))
-      .agg(count(lit(1)).as("n_docs"), max(col("doc_id")).as("max_doc"))
-      .join(edgeCounts, Seq("component"))
-      .select("component", "n_docs", "max_doc", "n_edges")
-      .orderBy(col("component"))
+    clusterStatsOver(pairs, servedLabels(spark, dir))
   }
 
   /** [[dedupKeepBest]] served: labels from the artifact; the quality
@@ -1161,30 +1136,16 @@ object Dedup {
     // one corpus explode feeding signatures AND verification, the
     // ngramJaccardOf sharing discipline (widened: see there)
     val sh = shinglesOf(Tables.widened(docs, "doc_id")).localCheckpoint()
-    val sigLong = minhashFromShingles(sh)
-      .select(col("doc_id"), posexplode(
-        array((0 until NumBands).map(b => col(s"band$b")): _*)).as(Seq("band_idx", "bk")))
+    val sigLong = bandKeys(minhashFromShingles(sh))
       .localCheckpoint() // read twice: occupancy aggregation + member join
     // lever 1 — occupancy-gated candidates: small buckets emit the
     // full clique (lossless ≤ BucketCliqueCap); dense buckets emit
     // sorted-window edges (each member × its next BucketWindow
     // successors in doc_id order) — a dense near-dup cluster
     // contributes O(occupancy · w) candidates, not O(occupancy²)
-    val occ = sigLong.groupBy(col("band_idx"), col("bk"))
-      .agg(count(lit(1)).as("occ"))
-    val marked = sigLong.join(occ, Seq("band_idx", "bk"))
-      .localCheckpoint(false) // clique + both window sides read it
-    val small = marked.filter(col("occ") <= BucketCliqueCap)
-    val clique = small
-      .select(col("doc_id").as("doc_a"), col("band_idx"), col("bk"))
-      .join(small.select(col("doc_id").as("doc_b"), col("band_idx"), col("bk")),
-        Seq("band_idx", "bk"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-    val wRank = Window.partitionBy(col("band_idx"), col("bk"))
-      .orderBy(col("doc_id"))
-    val denseRanked = marked.filter(col("occ") > BucketCliqueCap)
-      .withColumn("r", row_number().over(wRank))
+    val marked = occupancyMarked(sigLong) // clique + both window sides read it
+    val clique = bandSelfJoin(marked.filter(col("occ") <= BucketCliqueCap))
+    val denseRanked = rankedDense(marked)
       .select(col("doc_id"), col("band_idx"), col("bk"), col("r"))
       .localCheckpoint(false) // both window self-join sides
     val windowed = denseRanked
@@ -1198,18 +1159,7 @@ object Dedup {
     // 3.2 → 5.4 s at 32 cores — its candidate build already sits behind
     // three checkpoints and the extra serial materialization costs more
     // than the verify join's build-side switch buys)
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
-    val inter = pairs
-      .join(sh.select(col("doc_id").as("doc_a"), col("gram")), "doc_a")
-      .join(sh.select(col("doc_id").as("doc_b"), col("gram")), Seq("doc_b", "gram"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_inter"))
-    val vpairs = inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n_grams").as("na")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n_grams").as("nb")), "doc_b")
-      .withColumn("jaccard",
-        round(col("n_inter") / (col("na") + col("nb") - col("n_inter")), 6))
-      .filter(col("jaccard") >= JaccardThreshold)
-      .select("doc_a", "doc_b", "n_inter", "jaccard")
+    val vpairs = verifiedPairs(pairs, sh)
       .localCheckpoint() // read three times: both cap directions + the final join
     // lever 2 — per-doc degree cap, union semantics
     val dirs = vpairs.select(col("doc_a").as("d"), col("doc_b").as("o"), col("jaccard"))
@@ -1222,6 +1172,27 @@ object Dedup {
         greatest(col("d"), col("o")).as("doc_b"))
       .distinct()
     vpairs.join(keep, Seq("doc_a", "doc_b"))
+  }
+
+  /** A band-key relation with each bucket's occupancy `occ` attached,
+    * lazily materialized: the clique side and the dense ranking of the
+    * capped forms both read it.
+    */
+  private def occupancyMarked(keys: DataFrame): DataFrame = {
+    val occ = keys.groupBy(col("band_idx"), col("bk"))
+      .agg(count(lit(1)).as("occ"))
+    keys.join(occ, Seq("band_idx", "bk")).localCheckpoint(false)
+  }
+
+  /** The DENSE buckets (> [[BucketCliqueCap]] members) of an
+    * [[occupancyMarked]] relation, members ranked `r` by doc_id within
+    * their bucket — the sorted-window input of both capped forms.
+    */
+  private def rankedDense(marked: DataFrame): DataFrame = {
+    val wRank = Window.partitionBy(col("band_idx"), col("bk"))
+      .orderBy(col("doc_id"))
+    marked.filter(col("occ") > BucketCliqueCap)
+      .withColumn("r", row_number().over(wRank))
   }
 
   /** The capped pair relation over the corpus — `dedup_ngram_jaccard`'s
@@ -1294,12 +1265,8 @@ object Dedup {
   /** [[dedupComponentsCapped]] served: label artifact + the size
     * window — no pair search, no fixpoint in the query.
     */
-  def dedupComponentsCappedServed(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("component"))
-    servedLabelsCapped(spark, dir)
-      .withColumn("component_size", count(lit(1)).over(w))
-      .orderBy(col("doc_id"))
-  }
+  def dedupComponentsCappedServed(spark: SparkSession, dir: String): DataFrame =
+    withComponentSize(servedLabelsCapped(spark, dir))
 
   /** [[dedupKeepBestCapped]] served: capped labels from the artifact;
     * the quality scan is the query's own map-side work.
@@ -1401,45 +1368,52 @@ object Dedup {
     */
   private[graft] def dedupIncrementalServedOver(sigTable: DataFrame,
       docs: DataFrame, isNew: Column): DataFrame = {
-    val sig = sigTable.withColumn("is_new", isNew)
-    val newKeys = sig.filter(col("is_new"))
-      .select(col("doc_id").as("new_id"), col("band_idx"), col("bk"))
-    val candidates = newKeys
-      .join(sig.select(col("doc_id").as("cand_id"), col("band_idx"),
-        col("bk"), col("is_new").as("cand_new")), Seq("band_idx", "bk"))
-      .filter(!col("cand_new") || col("cand_id") < col("new_id"))
-      .select("new_id", "cand_id").distinct()
+    val candidates = bandProbe(sigTable.withColumn("is_new", isNew)).distinct()
       // LAZY checkpoint, unlike the base form's eager one: with the
       // signature index served from a table the candidate subtree is
       // cheap to plan, and the eager variant serializes the whole
       // query behind one blocking materialization job
       .localCheckpoint(false)
-    admissionVerdictOver(candidates, docs, isNew)
+    admissionVerdictOver(candidates, touchedShingles(candidates, docs), docs, isNew)
+  }
+
+  /** The new-versus-candidate band probe over a (doc_id, band_idx, bk,
+    * is_new) key relation: each batch doc's keys against every member
+    * of its buckets, keeping admitted docs and EARLIER arrivals only —
+    * old-vs-old pairs are never formed → (new_id, cand_id).
+    */
+  private def bandProbe(sig: DataFrame): DataFrame =
+    sig.filter(col("is_new"))
+      .select(col("doc_id").as("new_id"), col("band_idx"), col("bk"))
+      .join(sig.select(col("doc_id").as("cand_id"), col("band_idx"),
+        col("bk"), col("is_new").as("cand_new")), Seq("band_idx", "bk"))
+      .filter(!col("cand_new") || col("cand_id") < col("new_id"))
+      .select("new_id", "cand_id")
+
+  /** The shingles of ONLY the documents a candidate pair touches (new
+    * docs + their candidates) — the served and capped probes verify
+    * over this sliver, so their work is ∝ candidates, never ∝ corpus.
+    */
+  private def touchedShingles(candidates: DataFrame, docs: DataFrame): DataFrame = {
+    val touched = candidates.select(col("new_id").as("doc_id"))
+      .union(candidates.select(col("cand_id").as("doc_id"))).distinct()
+    shinglesOf(docs.join(touched, Seq("doc_id"), "left_semi"))
+      .localCheckpoint()
   }
 
   /** The shared admission tail — exact-Jaccard verification of a
-    * (new_id, cand_id) candidate relation over ONLY the touched
-    * documents' shingles, then one best-match verdict per batch doc.
-    * Shared by the served and capped probes; work ∝ candidates, never
-    * ∝ corpus.
+    * (new_id, cand_id) candidate relation over the shingle relation
+    * `sh` (the full corpus for the base form, [[touchedShingles]] for
+    * the served and capped probes), then one best-match verdict per
+    * batch doc.
     */
-  private def admissionVerdictOver(candidates: DataFrame, docs: DataFrame,
-      isNew: Column): DataFrame = {
-    val touched = candidates.select(col("new_id").as("doc_id"))
-      .union(candidates.select(col("cand_id").as("doc_id"))).distinct()
-    val sh = shinglesOf(docs.join(touched, Seq("doc_id"), "left_semi"))
-      .localCheckpoint()
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
-    val inter = candidates
-      .join(sh.select(col("doc_id").as("new_id"), col("gram")), "new_id")
-      .join(sh.select(col("doc_id").as("cand_id"), col("gram")), Seq("cand_id", "gram"))
-      .groupBy("new_id", "cand_id").agg(count(lit(1)).as("n_inter"))
-    val jac = inter
-      .join(sizes.select(col("doc_id").as("new_id"), col("n_grams").as("na")), "new_id")
-      .join(sizes.select(col("doc_id").as("cand_id"), col("n_grams").as("nb")), "cand_id")
-      .withColumn("jaccard",
-        round(col("n_inter") / (col("na") + col("nb") - col("n_inter")), 6))
+  private def admissionVerdictOver(candidates: DataFrame, sh: DataFrame,
+      docs: DataFrame, isNew: Column): DataFrame = {
+    val jac = interSizes(candidates, sh, "new_id", "cand_id")
+      .withColumn("jaccard", jaccardOf)
       .filter(col("jaccard") >= JaccardThreshold)
+    // windows only the matched relation (tiny), same discipline as
+    // dedupKeepBest — never the whole batch
     val w = Window.partitionBy(col("new_id"))
       .orderBy(col("jaccard").desc, col("cand_id"))
     val best = jac.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
@@ -1482,22 +1456,9 @@ object Dedup {
     */
   private[graft] def dedupIncrementalCappedOver(sigTable: DataFrame,
       docs: DataFrame, isNew: Column): DataFrame = {
-    val sig = sigTable.withColumn("is_new", isNew)
-    val occ = sig.groupBy(col("band_idx"), col("bk"))
-      .agg(count(lit(1)).as("occ"))
-    val marked = sig.join(occ, Seq("band_idx", "bk"))
-      .localCheckpoint(false) // clique probe + dense ranking read it
-    val small = marked.filter(col("occ") <= BucketCliqueCap)
-    val smallCand = small.filter(col("is_new"))
-      .select(col("doc_id").as("new_id"), col("band_idx"), col("bk"))
-      .join(small.select(col("doc_id").as("cand_id"), col("band_idx"),
-        col("bk"), col("is_new").as("cand_new")), Seq("band_idx", "bk"))
-      .filter(!col("cand_new") || col("cand_id") < col("new_id"))
-      .select("new_id", "cand_id")
-    val wRank = Window.partitionBy(col("band_idx"), col("bk"))
-      .orderBy(col("doc_id"))
-    val denseRanked = marked.filter(col("occ") > BucketCliqueCap)
-      .withColumn("r", row_number().over(wRank))
+    val marked = occupancyMarked(sigTable.withColumn("is_new", isNew))
+    val smallCand = bandProbe(marked.filter(col("occ") <= BucketCliqueCap))
+    val denseRanked = rankedDense(marked)
       .select(col("doc_id"), col("band_idx"), col("bk"), col("r"),
         col("is_new"))
       .localCheckpoint(false) // probe-target explode + member side
@@ -1517,7 +1478,7 @@ object Dedup {
       .select("new_id", "cand_id")
     val candidates = smallCand.union(denseCand).distinct()
       .localCheckpoint(false)
-    admissionVerdictOver(candidates, docs, isNew)
+    admissionVerdictOver(candidates, touchedShingles(candidates, docs), docs, isNew)
   }
 
   /** Fraction of documents treated as the incoming batch: doc_id % 4
@@ -1553,43 +1514,10 @@ object Dedup {
   private[graft] def dedupIncrementalOver(docs: DataFrame,
       isNew: Column): DataFrame = {
     val sh = shinglesOf(docs).localCheckpoint()
-    val sigLong = minhashFromShingles(sh)
-      .select(col("doc_id"), posexplode(
-        array((0 until NumBands).map(b => col(s"band$b")): _*)).as(Seq("band_idx", "bk")))
+    val sigLong = bandKeys(minhashFromShingles(sh))
       .withColumn("is_new", isNew)
       .localCheckpoint() // read twice: probe side + index side
-    val newKeys = sigLong.filter(col("is_new"))
-      .select(col("doc_id").as("new_id"), col("band_idx"), col("bk"))
-    val candidates = newKeys
-      .join(sigLong.select(col("doc_id").as("cand_id"), col("band_idx"),
-        col("bk"), col("is_new").as("cand_new")), Seq("band_idx", "bk"))
-      .filter(!col("cand_new") || col("cand_id") < col("new_id"))
-      .select("new_id", "cand_id").distinct()
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
-    val inter = candidates
-      .join(sh.select(col("doc_id").as("new_id"), col("gram")), "new_id")
-      .join(sh.select(col("doc_id").as("cand_id"), col("gram")), Seq("cand_id", "gram"))
-      .groupBy("new_id", "cand_id").agg(count(lit(1)).as("n_inter"))
-    val jac = inter
-      .join(sizes.select(col("doc_id").as("new_id"), col("n_grams").as("na")), "new_id")
-      .join(sizes.select(col("doc_id").as("cand_id"), col("n_grams").as("nb")), "cand_id")
-      .withColumn("jaccard",
-        round(col("n_inter") / (col("na") + col("nb") - col("n_inter")), 6))
-      .filter(col("jaccard") >= JaccardThreshold)
-    // windows only the matched relation (tiny), same discipline as
-    // dedupKeepBest — never the whole batch
-    val w = Window.partitionBy(col("new_id"))
-      .orderBy(col("jaccard").desc, col("cand_id"))
-    val best = jac.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
-      .select(col("new_id"), col("cand_id").as("match_id"),
-        col("jaccard").as("match_jaccard"))
-    docs.select(col("doc_id"))
-      .filter(isNew)
-      .join(best, col("doc_id") === col("new_id"), "left")
-      .select(col("doc_id"), col("match_id"), col("match_jaccard"),
-        when(col("match_id").isNotNull, lit("drop")).otherwise(lit("admit"))
-          .as("action"))
-      .orderBy(col("doc_id"))
+    admissionVerdictOver(bandProbe(sigLong).distinct(), sh, docs, isNew)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

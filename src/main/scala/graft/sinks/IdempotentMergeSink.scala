@@ -121,15 +121,26 @@ object IdempotentMergeSink {
         }
       })
 
-  /** Run the thunks as concurrent Spark jobs; propagate the first
-    * failure after all complete (matching sequential error surfacing).
+  /** Run the thunks as concurrent Spark jobs, each under the caller's
+    * SparkContext local properties (a reused pool thread would
+    * otherwise label the jobs with the properties of the caller that
+    * created it). Every task is awaited before anything is thrown, so
+    * no job of this call still runs when the caller sees a failure;
+    * the first failure in task order is rethrown with the later ones
+    * attached as suppressed.
     */
   private[graft] def inParallel[A](tasks: Seq[() => A]): Seq[A] = {
-    val futs = tasks.map(t => jobPool.submit(
-      new java.util.concurrent.Callable[A] { def call(): A = t() }))
-    futs.map(f =>
-      try f.get()
-      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause })
+    val futs = tasks.map(org.apache.spark.graft.LocalProperties.propagating(_))
+      .map(t => jobPool.submit(new java.util.concurrent.Callable[A] { def call(): A = t() }))
+    val outcomes = futs.map(f =>
+      try Right(f.get())
+      catch { case e: java.util.concurrent.ExecutionException => Left(e.getCause) })
+    outcomes.collect { case Left(e) => e } match {
+      case first +: rest =>
+        rest.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+      case _ => outcomes.collect { case Right(a) => a }
+    }
   }
 
   /** How a committed version stores its content. */

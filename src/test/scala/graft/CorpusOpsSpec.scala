@@ -502,6 +502,18 @@ class CorpusOpsSpec extends SparkTestBase {
     out.unpersist()
   }
 
+  test("quality logreg and calibration over an empty corpus: zero rows, normal schema") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_empty_corpus").toFile
+    dir.deleteOnExit()
+    Tables.documents(spark, sfDir).limit(0)
+      .write.parquet(s"${dir.getAbsolutePath}/documents.parquet")
+    Seq(CorpusOps.corpusQualityLogreg _, CorpusOps.corpusQualityCalibration _).foreach { fn =>
+      val empty = fn(spark, dir.getAbsolutePath)
+      assert(empty.schema == fn(spark, sfDir).schema)
+      assert(empty.count() == 0)
+    }
+  }
+
   test("quality calibration: buckets tile the corpus, per-bucket stats re-derive from the scores") {
     val cal = CorpusOps.corpusQualityCalibration(spark, sfDir).cache()
     assert(cal.filter(col("bucket") < 0 || col("bucket") > 9).count() == 0)

@@ -573,6 +573,55 @@ class IdempotentMergeSinkSpec extends SparkTestBase {
     assert(e.getMessage.contains("absent or unmarked"))
   }
 
+  test("inParallel awaits every task, then rethrows the first failure in task order") {
+    val finished = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val first = new IllegalStateException("task 0")
+    val thrown = intercept[IllegalStateException] {
+      IdempotentMergeSink.inParallel(Seq(
+        () => throw first,
+        () => { Thread.sleep(500); finished.set(true) }))
+    }
+    assert(thrown eq first)
+    assert(finished.get(), "inParallel threw while task 1 was still running")
+
+    val later = new IllegalArgumentException("task 1")
+    val both = intercept[IllegalStateException] {
+      IdempotentMergeSink.inParallel(Seq(
+        () => { Thread.sleep(200); throw first },
+        () => throw later))
+    }
+    assert((both eq first) && both.getSuppressed.contains(later))
+  }
+
+  test("inParallel runs each caller's jobs under that caller's job description") {
+    val prefix = "inParallel-spec-"
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .filter(_.startsWith(prefix)).foreach(seen.add)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // two callers one after the other: the second reuses the pool
+      // thread the first one's task ran on
+      Seq("a", "b").foreach { caller =>
+        val t = new Thread(() => {
+          spark.sparkContext.setJobDescription(prefix + caller)
+          IdempotentMergeSink.inParallel(Seq(() => spark.range(0, 10, 1, 1).count()))
+        })
+        t.start()
+        t.join()
+        Thread.sleep(100)
+      }
+      val want = Set(prefix + "a", prefix + "b")
+      val deadline = System.currentTimeMillis() + 10000
+      while (seen.size < 2 && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      import scala.jdk.CollectionConverters._
+      assert(seen.asScala.toSet == want)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("merge state matches etl_cdc_apply replayed through the sink") {
     import spark.implicits._
     val root = freshRoot()
