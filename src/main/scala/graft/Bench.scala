@@ -1,7 +1,7 @@
 package graft
-object Bench {
+import Harness.j
 
-  private def j(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+object Bench {
 
   /** The fixed headline subset printed on the summary line. */
   val headline: Seq[String] = Seq(
@@ -170,9 +170,16 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.local(cpus)
+    val sfDir = GraftSession.sfDir
+    // ERROR, not WARN: the collector parses the bench JSON from the LAST
+    // ~2000 chars of combined output, and r4's line was drowned by
+    // WindowExec partition warnings flushed after the summary
+    // (BENCH_r04.json: "parsed": null, tail all WARN lines). The two
+    // remaining unpartitioned windows in the fleet are the guarded
+    // above-an-aggregate offset rollups (PlanGuardSpec), so the warning
+    // carries no signal here.
+    val spark = GraftSession.fromEnv(4)
+    val cpus = spark.sparkContext.defaultParallelism
     // ambient load BEFORE the bench adds its own: this is the number
     // that says whether the run was quiet (the end figure mostly
     // reflects the bench itself)
@@ -182,94 +189,27 @@ object Bench {
     if (!loadStart.isNaN && loadStart > loadThresh)
       System.err.println(f"[bench] AMBIENT LOAD $loadStart%.2f > $loadThresh%.2f " +
         "at start — wall totals from this run are contended; trust bytes, not seconds")
-    // ERROR, not WARN: the driver parses the bench JSON from the LAST
-    // ~2000 chars of combined output, and r4's line was drowned by
-    // WindowExec partition warnings flushed after the summary
-    // (BENCH_r04.json: "parsed": null, tail all WARN lines). The two
-    // remaining unpartitioned windows in the fleet are the guarded
-    // above-an-aggregate offset rollups (PlanGuardSpec), so the warning
-    // carries no signal here.
-    spark.sparkContext.setLogLevel("ERROR")
-    // untimed warmup at the smallest SF: JIT + codegen for the shared
-    // operator paths (scan/agg/join/window/exchange), so the first timed
-    // query isn't charged for session spin-up
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
-    // per-query shuffle accounting: stage-level read/write byte counters
-    // drained through a listener; each query's delta is taken around its
-    // LAST run (so a served query's one-time artifact build never
-    // pollutes its steady-state bytes)
-    val shuffleRead = new java.util.concurrent.atomic.AtomicLong(0)
-    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          done: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val m = done.stageInfo.taskMetrics
-        if (m != null) {
-          shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-    })
-    // listener events are async: read the counters once they've been
-    // stable for a couple of polls (bounded at ~1s) — bench detail, not
-    // a correctness surface
-    def settledCounters(): (Long, Long) = {
-      var prev = (shuffleRead.get(), shuffleWrite.get())
-      var stable = 0
-      var polls = 0
-      while (stable < 2 && polls < 30) {
-        Thread.sleep(30)
-        val cur = (shuffleRead.get(), shuffleWrite.get())
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-        polls += 1
-      }
-      prev
-    }
+    // per-query shuffle accounting: each query's byte delta is taken
+    // around its LAST run (so a served query's one-time artifact build
+    // never pollutes its steady-state bytes)
+    val bytes = Harness.listen(spark)
+    // local iteration aid: regex over query names (unset in collected runs)
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.r)
+    // the fixpoint warm-up is skipped under BENCH_ONLY scoping (local
+    // iteration wants speed and knows what it's measuring)
+    Harness.warmUp(spark, sfDir, fixpoint = only.isEmpty)
     // median-of-3 inside one JVM: round-1 showed single-shot timings
     // swinging 3-20× with machine contention (28.4s vs a 1.4s quiet
     // re-run for the same plan); the median makes round-over-round
-    // comparisons mean something. Plan construction is timed along with
-    // execution on every run (eager steps like localCheckpoint belong
-    // to the query's cost).
-    val runs = 3
-    // local iteration aid: regex over query names (driver never sets it)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.r)
-    // fixed warmup prelude for the checkpointed-fixpoint class
-    // (dedup_components/cluster_stats/incremental and kin): these
-    // queries JIT a code path nothing else exercises and historically
-    // swing ±60% between a cold and a warm JVM with code unchanged —
-    // two rounds of re-measure forensics (PLANS.md r8/r9). Running
-    // three representatives untimed makes every recorded median a
-    // warm-JVM number. Skipped under BENCH_ONLY scoping (local
-    // iteration wants speed and knows what it's measuring).
-    if (only.isEmpty) {
-      Seq("dedup_components", "dedup_cluster_stats", "dedup_incremental")
-        .foreach { n =>
-          SparkEntry.queries.get(n).foreach { fn =>
-            try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            catch { case e: Throwable => System.err.println(s"[bench] warmup $n: $e") }
-          }
-        }
-    }
+    // comparisons mean something. A query that throws is reported on
+    // stderr only; its runs still count toward its median.
     val measured = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.findFirstIn(name).isDefined) }
       .map { case (name, fn) =>
-      def timeOnce(): Double = {
-        val t0 = System.nanoTime()
-        // noop sink: materializes EVERY output column (count() would let
-        // Catalyst prune the projections and under-measure the query)
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[bench] $name: $e") }
-        (System.nanoTime() - t0) / 1e9
+        val (runs, shuffle) =
+          Harness.measure(spark, name, 3, bytes)(Harness.sink(fn(spark, sfDir)))
+        name -> (Harness.median(runs.all.map(_.sec)), shuffle)
       }
-      val earlier = (1 until runs).map(_ => timeOnce())
-      val before = settledCounters()
-      val last = timeOnce()
-      val after = settledCounters()
-      val times = (earlier :+ last).sorted
-      name -> (times(runs / 2), (after._1 - before._1, after._2 - before._2))
-    }
     val results = measured.map { case (n, (t, _)) => n -> t }
     val shuffle = measured.map { case (n, (_, s)) => n -> s }
     // bytes-first regression gate against the committed quiet baseline:

@@ -5,10 +5,8 @@ package graft
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = GraftSession.local(cpus)
-    spark.sparkContext.setLogLevel("ERROR")
+    val sfDir = GraftSession.sfDir
+    val spark = GraftSession.fromEnv(8)
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>
       println(s"\n===== $name =====")

@@ -8,9 +8,7 @@ object Verify {
     // optional third arg: only dump queries whose name matches the regex
     // (local iteration aid; the driver always passes exactly two args)
     val nameFilter = args.lift(2).map(_.r)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.local(cpus)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv(4, "WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => nameFilter.forall(_.findFirstIn(name).isDefined) }

@@ -1405,7 +1405,8 @@ object AnnSearch {
     * bounded.
     *
     * The flat-idf sensitivity is MEASURED, not just asserted (r15
-    * `SPARK_GRAFT_SCALE_ONLY=zipf`, PLANS.md): with the same corpus
+    * `SPARK_GRAFT_SCALE_ONLY=zipf`, the `zipf/vocab_stats` and
+    * `recall/zipf` rows, PLANS.md): with the same corpus
     * regenerated over a 20,000-type Zipfian vocabulary (12,765
     * realized types at ×10, median df/n < 0.001 — real idf spread;
     * same crossover duplicates, same embeddings), capped-vs-uncapped

@@ -1352,7 +1352,7 @@ object Dedup {
     * bucket occupancy — byte exp 1.57 (3 MB → 114 MB) on the
     * duplicate-heavy corpus, the same occupancy disease
     * [[cappedPairsOf]] gates. A real ingest holds the batch FIXED
-    * while the corpus grows (CrossoverBench's regime), so the
+    * while the corpus grows (ScalePointBench's `crossover` regime), so the
     * production exponent is occupancy's alone; a bounded admission
     * twin (the occupancy-gated candidate lever applied to the probe)
     * is the named follow-up.
@@ -1364,7 +1364,8 @@ object Dedup {
   /** The served-form admission math over an arbitrary signature table
     * (doc_id, band_idx, bk), corpus, and batch predicate — probe work
     * ∝ batch + candidates, the corpus text read only through the
-    * candidate semi-join. Exposed for [[graft.CrossoverBench]].
+    * candidate semi-join. Exposed for the `crossover` section of
+    * [[graft.ScalePointBench]].
     */
   private[graft] def dedupIncrementalServedOver(sigTable: DataFrame,
       docs: DataFrame, isNew: Column): DataFrame = {
@@ -1452,7 +1453,8 @@ object Dedup {
       Tables.documents(spark, dir), col("doc_id") % NewMod === 0)
 
   /** The capped admission math over an arbitrary signature table —
-    * exposed for [[graft.CrossoverBench]]'s fixed-batch regime.
+    * exposed for the fixed-batch `crossover` section of
+    * [[graft.ScalePointBench]].
     */
   private[graft] def dedupIncrementalCappedOver(sigTable: DataFrame,
       docs: DataFrame, isNew: Column): DataFrame = {
@@ -1507,9 +1509,9 @@ object Dedup {
   /** The base-form admission math over an arbitrary (doc_id, text)
     * corpus and batch predicate — full shingle explode + minhash over
     * EVERYTHING (work ∝ corpus), then the band-key probe. Exposed so
-    * [[graft.CrossoverBench]] can hold the batch fixed while the
-    * corpus grows — the regime comparison against
-    * [[dedupIncrementalServedOver]].
+    * the `crossover` section of [[graft.ScalePointBench]] can hold
+    * the batch fixed while the corpus grows — the regime comparison
+    * against [[dedupIncrementalServedOver]].
     */
   private[graft] def dedupIncrementalOver(docs: DataFrame,
       isNew: Column): DataFrame = {

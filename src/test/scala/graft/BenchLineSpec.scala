@@ -134,4 +134,22 @@ class BenchLineSpec extends AnyFunSuite {
       assert(none == ("none", Map.empty))
     } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
+
+  test("a throwing body is counted as a failure and its time never reaches the median") {
+    val spark = SparkTestBase.session
+    var n = 0
+    val runs = Harness.repeat(spark, "planted_failure", 3) {
+      n += 1
+      // the failed run is the slowest: its time would BE the median of
+      // the three if it were kept
+      if (n == 2) { Thread.sleep(200); throw new RuntimeException("planted") }
+    }
+    assert(runs.all.map(_.failed) == Seq(false, true, false))
+    assert(runs.errors == 1)
+    assert(runs.median.isEmpty && runs.json == "null")
+    assert(runs.all(1).json == "null")
+    // the same body without the throw has a median
+    val ok = Harness.repeat(spark, "no_failure", 3)(())
+    assert(ok.errors == 0 && ok.median.exists(_ < 0.2))
+  }
 }

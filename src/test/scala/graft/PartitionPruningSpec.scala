@@ -1,6 +1,5 @@
 package graft
 
-import graft.sinks.PartitionedParquet
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -8,16 +7,15 @@ class PartitionPruningSpec extends SparkTestBase {
 
   test("partitioned layout prunes non-matching partitions at the scan") {
     val out = Files.createTempDirectory("graft-part").toString + "/events_by_type"
-    PartitionedParquet.write(
-      Tables.events(spark, sfDir).select("event_id", "user_id", "value", "event_type"),
-      out, "event_type")
+    Tables.events(spark, sfDir).select("event_id", "user_id", "value", "event_type")
+      .write.mode("overwrite").partitionBy("event_type").parquet(out)
 
     // one directory per event type on disk
     val dirs = new java.io.File(out).listFiles()
       .filter(_.isDirectory).map(_.getName).sorted
     assert(dirs.length == 5 && dirs.forall(_.startsWith("event_type=")))
 
-    val q = PartitionedParquet.read(spark, out)
+    val q = spark.read.parquet(out)
       .filter(col("event_type") === "purchase")
     // the filter must land in PartitionFilters (pruned before I/O),
     // not as a post-scan data filter
