@@ -90,15 +90,19 @@ object Harness {
         .foreach(n => timed(spark, s"warmup $n")(sink(SparkEntry.queries(n)(spark, dir))))
   }
 
-  /** One Spark job as the listener saw it; times are epoch ms. */
-  final case class JobRow(id: Int, t0: Long, desc: String, stageIds: Seq[Int],
+  /** One Spark job as the listener saw it; times are epoch ms. `site`
+    * is the first `graft.` frame of the call site that launched it
+    * (blank when none), which names the line behind a job no label
+    * covers, such as a read's schema inference.
+    */
+  final case class JobRow(id: Int, t0: Long, desc: String, site: String, stageIds: Seq[Int],
       var t1: Long = 0L, var stages: Int = 0, var tasks: Int = 0,
       var shufRead: Long = 0L, var shufWrite: Long = 0L)
 
   /** Stage-level shuffle read/write bytes, in total and per job, with
-    * each job's `spark.job.description`. Bytes are deterministic per
-    * plan where wall time is not, so a byte delta names a plan change
-    * that contention can hide.
+    * each job's `spark.job.description` and call site. Bytes are
+    * deterministic per plan where wall time is not, so a byte delta
+    * names a plan change that contention can hide.
     */
   final class ByteListener extends SparkListener {
     private var read, write, events = 0L
@@ -111,7 +115,10 @@ object Harness {
         .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
       // bounded: a full bench run launches tens of thousands of jobs
       if (jobs.size >= 10000) jobs.remove(jobs.head._1)
-      jobs(e.jobId) = JobRow(e.jobId, e.time, desc, e.stageIds)
+      // the job's own (result) stage carries the job's call site
+      val site = e.stageInfos.maxByOption(_.stageId).iterator
+        .flatMap(_.details.linesIterator).find(_.startsWith("graft.")).getOrElse("")
+      jobs(e.jobId) = JobRow(e.jobId, e.time, desc, site, e.stageIds)
       e.stageIds.foreach(stageToJob(_) = e.jobId)
     }
 

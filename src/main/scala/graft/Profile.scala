@@ -3,7 +3,8 @@ package graft
 /** Local iteration aid (like [[Explain]]): run the
   * named queries once each after a warmup and print a per-JOB wall
   * breakdown (start-relative, duration, stage count, task count,
-  * shuffle bytes) so the expensive step inside a multi-job operator
+  * shuffle bytes, label, and the `site`: the `graft.` line that
+  * launched it) so the expensive step inside a multi-job operator
   * chain (checkpoint, fixpoint iteration, artifact build, commit) is
   * visible without the UI. Usage:
   * `sbt "runMain graft.Profile maint_knn_time_travel"`.
@@ -25,12 +26,12 @@ object Profile {
       val rows = bytes.takeJobs()
       val base = rows.headOption.map(_.t0).getOrElse(0L)
       println(f"\nPROFILE $name wall=$wall%.2fs jobs=${rows.size}")
-      println("  job   rel_s   dur_s  stages  tasks  shufR(MB) shufW(MB)  desc")
+      println(f"  job   rel_s   dur_s  stages  tasks  shufR(MB) shufW(MB)  ${"desc"}%-40s  site")
       var accounted = 0.0
       rows.foreach { r =>
         val dur = (r.t1 - r.t0) / 1e3
         accounted += dur
-        println(f"  ${r.id}%4d ${(r.t0 - base) / 1e3}%7.2f ${dur}%7.2f  ${r.stages}%5d ${r.tasks}%6d ${r.shufRead / 1e6}%9.2f ${r.shufWrite / 1e6}%9.2f  ${r.desc.take(60)}")
+        println(f"  ${r.id}%4d ${(r.t0 - base) / 1e3}%7.2f ${dur}%7.2f  ${r.stages}%5d ${r.tasks}%6d ${r.shufRead / 1e6}%9.2f ${r.shufWrite / 1e6}%9.2f  ${r.desc.take(40)}%-40s  ${r.site}")
       }
       println(f"  sum(job dur)=$accounted%.2fs  gap(driver/planning)=${wall - accounted}%.2fs")
     }

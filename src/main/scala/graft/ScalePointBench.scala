@@ -102,7 +102,7 @@ object ScalePointBench {
           s"transform(split(text, '\\\\s+'), w -> substr(md5(concat(w, '#$i')), 1, 8))")))
     }.reduce(_ unionByName _)
       .coalesce(4).write.mode("overwrite").parquet(s"$dst/documents.parquet")
-    val emb = spark.read.parquet(s"$src/embeddings.parquet")
+    val emb = Tables.load(spark, src, "embeddings")
     (0 until replicas).map { i =>
       if (i == 0) emb
       else emb.withColumn("vec_id", col("vec_id") + lit(i * 100000L))
@@ -122,7 +122,7 @@ object ScalePointBench {
     // shifted to stay unique — per-partkey version/window structure
     // replicates exactly, so the scd2/temporal targets grow linearly
     // by construction
-    val li = spark.read.parquet(s"$src/lineitem.parquet")
+    val li = Tables.load(spark, src, "lineitem")
     (0 until replicas).map { i =>
       if (i == 0) li
       else li.withColumn("l_partkey", col("l_partkey") + lit(i * 1000000L))
@@ -133,7 +133,7 @@ object ScalePointBench {
     // them, but Tables resolution must not 404)
     Seq("region", "nation", "customer", "supplier", "orders",
       "events").foreach { t =>
-      spark.read.parquet(s"$src/$t.parquet")
+      Tables.load(spark, src, t)
         .coalesce(4).write.mode("overwrite").parquet(s"$dst/$t.parquet")
     }
     new java.io.File(fs, SynthMarker).createNewFile()
@@ -197,13 +197,13 @@ object ScalePointBench {
     // carry the FULL source schemas: a crossover keeps its a-side
     // lang/source (and recomputes n_chars), a mixture keeps its a-side
     // label — downstream accessors and oracles read these columns
-    val docsRaw = spark.read.parquet(s"$src/documents.parquet")
+    val docsRaw = Tables.load(spark, src, "documents")
     val docs = (if (zipfVocab > 0) zipfRewrite(docsRaw, zipfVocab)
       else docsRaw).localCheckpoint()
     val maxDoc = docs.agg(max(col("doc_id"))).head().getLong(0)
     val maxPart = Tables.part(spark, src)
       .agg(max(col("p_partkey"))).head().getLong(0)
-    val maxVecGuard = spark.read.parquet(s"$src/embeddings.parquet")
+    val maxVecGuard = Tables.load(spark, src, "embeddings")
       .agg(max(col("vec_id"))).head().getLong(0)
     // all THREE strided id spaces must fit under their strides —
     // assert rather than silently alias replicas on a bigger source
@@ -237,7 +237,7 @@ object ScalePointBench {
     ((docs: DataFrame) +: (1 until factor).map(crossed))
       .reduce(_ unionByName _)
       .coalesce(8).write.mode("overwrite").parquet(s"$dst/documents.parquet")
-    val emb = spark.read.parquet(s"$src/embeddings.parquet").localCheckpoint()
+    val emb = Tables.load(spark, src, "embeddings").localCheckpoint()
     val maxVec = emb.agg(max(col("vec_id"))).head().getLong(0)
     def mixed(i: Int): DataFrame = {
       val partner = pmod(col("a.vec_id") * lit(6151L) + lit(i * 93911L),
@@ -268,7 +268,7 @@ object ScalePointBench {
       .coalesce(8).write.mode("overwrite").parquet(s"$dst/part.parquet")
     Seq("region", "nation", "customer", "supplier", "orders",
       "events", "lineitem").foreach { t =>
-      spark.read.parquet(s"$src/$t.parquet")
+      Tables.load(spark, src, t)
         .coalesce(4).write.mode("overwrite").parquet(s"$dst/$t.parquet")
     }
     new java.io.File(fs, marker).createNewFile()
@@ -461,7 +461,7 @@ object ScalePointBench {
     if (optIn("zipf/vocab_stats")) {
       // the property under test, stated as data: type count and median
       // df/n at the big point (the flat corpus: ~31, ~0.8)
-      val docs = spark.read.parquet(s"${zipf._2}/documents.parquet")
+      val docs = Tables.load(spark, zipf._2, "documents")
       val df = docs
         .select(col("doc_id"), explode(split(col("text"), "\\s+")).as("term"))
         .filter(col("term") =!= "").distinct()
@@ -611,7 +611,7 @@ object ScalePointBench {
       def measure(srcDir: String, tag: String): (Harness.Runs, Harness.Runs) = {
         val root = s"$dst/delta_chain_scale_$tag"
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-        val base = spark.read.parquet(s"$srcDir/lineitem.parquet")
+        val base = Tables.load(spark, srcDir, "lineitem")
           .select((col("l_orderkey") * 10 + col("l_linenumber")).as("key"),
             col("l_partkey"), col("l_quantity"), col("l_extendedprice"))
         IdempotentMergeSink.merge(spark, root, base, "key", "chain-base")

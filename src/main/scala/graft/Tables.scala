@@ -1,7 +1,17 @@
 package graft
 
+import java.io.FileNotFoundException
+
+import scala.util.Try
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated TPC-H-ish parquet tables.
   *
@@ -14,7 +24,46 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** Every graft parquet read. A schema-less `spark.read.parquet`
+    * launches a one-task Spark job that only reads one footer; this
+    * reads that same footer on the driver and hands Spark the schema,
+    * so no read launches a job and the plan is unchanged. The file is
+    * the one Spark's inference picks: the path itself, or the first
+    * visible file of a directory (names starting with `_` or `.` are
+    * markers and checksums). The footer converts with the two calls
+    * Spark's inference runs, under the session's SQL conf as it is NOW
+    * (so a flag such as `nanosAsLong` set just before still applies).
+    * Whenever Spark would read more than one footer (schema merging, a
+    * summary file, partition subdirectories) or the footer cannot be
+    * resolved (no data file, a corrupt file, an unreadable type), this
+    * is the plain read, so the result and any error stay Spark's own.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+
+  private[graft] def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    val hadoop = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val listed: Seq[FileStatus] =
+      try p.getFileSystem(hadoop).listStatus(p).toSeq
+      catch { case _: FileNotFoundException => Nil }
+    val (hidden, data) = listed.partition { s =>
+      val n = s.getPath.getName
+      n.startsWith("_") || n.startsWith(".")
+    }
+    val oneFooter = !conf.isParquetSchemaMergingEnabled && !data.exists(_.isDirectory) &&
+      !hidden.exists(s => Set("_metadata", "_common_metadata")(s.getPath.getName))
+    data.sortBy(_.getPath.toString).headOption.filter(_ => oneFooter).flatMap { f =>
+      Try(ParquetFileFormat.readSchemaFromFooter(
+        new Footer(f.getPath, ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, hadoop), ParquetMetadataConverter.SKIP_ROW_GROUPS)),
+        new ParquetToSparkSchemaConverter(conf))).toOption
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -788,7 +789,17 @@ object Dedup {
         .select(col("doc_id").as("hub_id")).localCheckpoint()
     else null
     val (cold, hot) = if (hubs == null) (edges, null)
-      else hubSplit(edges, hubs, parallelism)
+      else {
+        val split = hubSplit(edges, hubs, parallelism)
+        // cold ∪ hot now hold every edge and the loop never reads the
+        // seed again: release its blocks instead of carrying the edge
+        // set twice on exactly the duplicate-heavy corpora in this regime
+        edges.queryExecution.logical match {
+          case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+          case _ =>
+        }
+        split
+      }
     var first = true
     var iter = 0
     while (!converged && iter < 32) {

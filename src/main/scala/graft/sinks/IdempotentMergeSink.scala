@@ -1,5 +1,6 @@
 package graft.sinks
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import java.io.File
@@ -213,20 +214,20 @@ object IdempotentMergeSink {
         if k == rk => (wk :: run) :: rest
       case (acc, wk) => List(wk) :: acc
     }.map(_.reverse).reverse
-    runs.foldLeft(spark.read.parquet(s"$root/v=$b")) { (df, run) =>
+    runs.foldLeft(Tables.parquet(spark, s"$root/v=$b")) { (df, run) =>
       run.head._2 match {
         case UpsertDelta(_) =>
           run.foldLeft(df) { case (d, (w, UpsertDelta(key))) =>
             // a delta's change set is one batch — broadcast it so the
             // chain fold stays map-side over the single base scan
-            d.join(broadcast(spark.read.parquet(s"$root/v=$w/removes")),
+            d.join(broadcast(Tables.parquet(spark, s"$root/v=$w/removes")),
                 Seq(key), "left_anti")
-              .unionByName(spark.read.parquet(s"$root/v=$w/upserts"))
+              .unionByName(Tables.parquet(spark, s"$root/v=$w/upserts"))
             case (d, _) => d // unreachable: run is kind-homogeneous
           }
         case AdditiveDelta(key) =>
           sumByKey(run.map { case (w, _) =>
-            spark.read.parquet(s"$root/v=$w/increments")
+            Tables.parquet(spark, s"$root/v=$w/increments")
           }.foldLeft(df)(_ unionByName _), key)
         case Base => df // unreachable: b is the newest base ≤ v
       }

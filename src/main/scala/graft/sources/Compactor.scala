@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Storage hygiene for long-lived datasets.
@@ -25,7 +26,7 @@ object Compactor {
       new java.net.URI(inPath), spark.sparkContext.hadoopConfiguration)
     val size = fs.getContentSummary(new org.apache.hadoop.fs.Path(inPath)).getLength
     val nFiles = math.max(1, math.ceil(size.toDouble / targetBytes).toInt)
-    spark.read.parquet(inPath)
+    Tables.parquet(spark, inPath)
       .repartition(nFiles)
       .write.mode(SaveMode.Overwrite).parquet(outPath)
   }

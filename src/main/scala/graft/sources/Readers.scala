@@ -8,9 +8,13 @@ import org.apache.spark.sql.types._
   * (`repository/ops/extraction.py`: CSV via pandas.read_csv, JSON-blob
   * via json.loads, MDB via mdb-export → CSV). All readers take explicit
   * schemas — at 100 TB, schema inference is a full extra pass over the
-  * data, so it is never used here. Malformed rows are captured in a
-  * `_corrupt` column instead of failing the job (PERMISSIVE), matching
-  * the reference's row-level error tolerance.
+  * data, so it is never used here. Parquet follows the same rule:
+  * [[graft.Tables.parquet]] hands Spark the schema it reads from one
+  * footer on the driver, so no parquet read runs an inference job
+  * (only `Compactor.readEvolved` merges footers, on purpose).
+  * Malformed rows are captured in a `_corrupt` column instead of
+  * failing the job (PERMISSIVE), matching the reference's row-level
+  * error tolerance.
   */
 object Readers {
 

@@ -255,7 +255,7 @@ object StreamOps {
         val delta = graft.operators.Incremental.aggState(batch)
         val merged = prev match {
           case Some(v) => graft.operators.Incremental
-            .mergeAggState(sp.read.parquet(s"$stateDir/v=$v"), delta)
+            .mergeAggState(graft.Tables.parquet(sp, s"$stateDir/v=$v"), delta)
             .drop("had_history", "had_delta")
           case None => delta
         }

@@ -17,6 +17,11 @@ class HarnessSpec extends SparkTestBase {
       bytes.settled()
       val during = bytes.takeJobs().filter(_.desc == label)
       assert(during.nonEmpty, "no job carried the run's name")
+      // the action's job names the graft line that launched it; an AQE
+      // map-stage job has no graft frame and stays blank
+      val sites = during.map(_.site).filter(_.nonEmpty)
+      assert(sites.nonEmpty && sites.forall(_.startsWith("graft.Harness$.sink(Harness.scala:")),
+        during.map(_.site))
       // the grouped run shuffles, and the listener charges it to the job
       assert(during.map(_.shufWrite).sum > 0)
       assert(spark.sparkContext.getLocalProperty("spark.job.description") == before)

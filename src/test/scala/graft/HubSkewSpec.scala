@@ -57,6 +57,22 @@ class HubSkewSpec extends SparkTestBase {
     assert(guarded.filter(_._2 == 500L).map(_._1) == Set(500L, 501L, 502L))
   }
 
+  test("the hub regime releases the seed edge checkpoint once the split holds every edge") {
+    val sc = spark.sparkContext
+    val jp = star(120).union(Seq((500L, 501L), (501L, 502L)).toDF("doc_a", "doc_b"))
+    val floor = sc.getPersistentRDDs.keys.foldLeft(-1)(math.max)
+    val guarded = Dedup.connectedComponentsAt(jp, hubCap = 50)
+    // the seed is the one checkpoint holding every directed edge (2 × 122);
+    // cold (124) and hot (120) split it, the labels hold 124 nodes
+    val held = sc.getPersistentRDDs.collect { case (id, rdd) if id > floor => id -> rdd.count() }
+    assert(!held.values.exists(_ == 2L * jp.count()),
+      s"the seed edge checkpoint is still persisted: rdd id -> rows $held")
+    val labels = guarded.select("doc_id", "component", "component_size")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(labels == (0L to 120L).map(d => (d, 0L, 121L)).toSet ++
+      Seq(500L, 501L, 502L).map(d => (d, 500L, 3L)))
+  }
+
   test("degenerate graphs keep their schema and labelling under the guard") {
     val empty = spark.emptyDataFrame
       .select(lit(0L).as("doc_a"), lit(0L).as("doc_b")).limit(0)
