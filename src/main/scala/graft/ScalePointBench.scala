@@ -514,7 +514,7 @@ object ScalePointBench {
       val docs0 = Tables.documents(spark, dst)
         .select(col("doc_id"), col("text")).localCheckpoint()
       val boot = Harness.timed(spark, "span_refresh")(
-        graft.operators.IndexMaintenance.bootstrapSpans(spark, root, docs0))
+        graft.operators.IndexMaintenance.refreshSpans(spark, root, docs0, "bootstrap"))
       val refreshes = (1 to 3).map { i =>
         // fresh doc ids; salted text so batch grams don't all collide
         val batch = docs0.orderBy(col("doc_id")).limit(500)
@@ -574,7 +574,7 @@ object ScalePointBench {
       // they generated must retract from the maintained extraction
       val root = s"$dst/span_grams_boiler"
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-      graft.operators.IndexMaintenance.bootstrapSpans(spark, root, base)
+      graft.operators.IndexMaintenance.refreshSpans(spark, root, base, "bootstrap")
       val batch = spark.range(1, 2)
         .select((col("id") + lit(2000000000L)).as("doc_id"),
           lit(phrase + " graftfiller1 graftfiller2 graftfiller3").as("text"))

@@ -64,7 +64,6 @@ object Dedup {
        |    SELECT doc_id, toks[i] || ' ' || toks[i+1] AS gram
        |    FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks FROM $rel) d,
        |         unnest(generate_series(1, len(toks) - 1)) t(i)))""".stripMargin
-  private val shinglesCte = shinglesCteOver("documents")
 
   /** Universal-hash family over a single md5-derived base hash:
     * h_j(x) = (g(x) * (2j+1) + j*K) mod P — ONE md5 per shingle, 16

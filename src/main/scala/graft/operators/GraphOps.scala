@@ -228,11 +228,10 @@ object GraphOps {
     * the base relation every refresh) — and the recompute is ∝ nodes
     * with a genuinely contested list: in the duplication regime,
     * same-coordinate groups and boundary nodes, not band occupancy.
-    * Passing `lists = None` (no committed table yet) falls back to
-    * full band reach.
+    * `lists` is the maintained (u, v, diff) relation.
     */
   private[graft] def touchedByBatch(base: DataFrame, batch: DataFrame,
-      lists: Option[DataFrame]): DataFrame = {
+      lists: DataFrame): DataFrame = {
     val a = base.select(col("key"), col("price").as("pu"))
       .withColumn("band", explode(array((-1 to 1).map(d =>
         floor(col("pu") / KnnTol).cast("long") + d): _*)))
@@ -242,16 +241,12 @@ object GraphOps {
       .filter(abs(col("pu") - col("pv")) <= KnnTol)
       .groupBy(col("key"))
       .agg(min(round(abs(col("pu") - col("pv")), 6)).as("best_new"))
-    lists match {
-      case None => reach.select(col("key"))
-      case Some(l) =>
-        val worst = l.groupBy(col("u").as("key"))
-          .agg(max(col("diff")).as("worst"), count(lit(1)).as("deg"))
-        reach.join(worst, Seq("key"), "left")
-          .filter(col("worst").isNull || col("deg") < KnnK ||
-            col("best_new") <= col("worst"))
-          .select(col("key"))
-    }
+    val worst = lists.groupBy(col("u").as("key"))
+      .agg(max(col("diff")).as("worst"), count(lit(1)).as("deg"))
+    reach.join(worst, Seq("key"), "left")
+      .filter(col("worst").isNull || col("deg") < KnnK ||
+        col("best_new") <= col("worst"))
+      .select(col("key"))
   }
 
   /** Mutual-kNN edges over any per-node adjacency list relation: an

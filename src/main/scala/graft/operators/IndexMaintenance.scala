@@ -21,6 +21,17 @@ import org.apache.spark.sql.functions._
   *  - component labels recompute over the MAINTAINED pair table (the
   *    cheap step — the expensive text-side work is incremental).
   *
+  * Bootstrap rule: for an INSERT-ONLY family (BM25 postings, span
+  * grams, DCT fingerprints) a refresh of an empty index IS the build —
+  * its row tables are pure inserts, its df sub-tables commit through
+  * [[IdempotentMergeSink.mergeAdditive]] (whose first commit is a base
+  * of the batch's sums), and its pairs are batch-vs-all against an
+  * empty base — so those families have no separate bootstrap body
+  * (`bootstrapBm25` is a one-line alias). The near-dup pair and kNN
+  * families keep their own bootstraps: their full builds are different
+  * algorithms from their refreshes, and their refreshes throw on an
+  * empty index rather than commit a partial one.
+  *
   * At 100 TB this is the operating mode: the pair table and signature
   * index live as tables, each ingest batch pays work ∝ batch size ×
   * touched buckets, and policy queries ([[Dedup.dedupKeepBestServed]]
@@ -32,6 +43,34 @@ object IndexMaintenance {
     pairs.withColumn("pair_key",
       concat_ws(":", col("doc_a"), col("doc_b")))
 
+  /** The committed relation at `root` projected to `cols`, or a
+    * descriptive error naming `what` when the table has no commit.
+    */
+  private def committed(spark: SparkSession, root: String, what: String,
+      cols: String*): DataFrame =
+    IdempotentMergeSink.read(spark, root).map(_.select(cols.map(col): _*))
+      .getOrElse(throw new IllegalStateException(s"no committed $what table at $root"))
+
+  /** A refresh that merges only what a batch CHANGES needs the prior
+    * build: on an empty root it would commit a partial index (pairs
+    * without the base-base ones, lists only for the nodes the batch
+    * reaches). Throws before any commit.
+    */
+  private def requireBuilt(root: String, refresh: String, build: String): Unit =
+    if (IdempotentMergeSink.version(root) == 0)
+      throw new IllegalStateException(
+        s"$refresh at $root: no committed index to refresh — run $build first")
+
+  /** Independent sub-table merges committed to DISJOINT roots, run as
+    * concurrent jobs ([[IdempotentMergeSink.inParallel]], the §2.6
+    * overlap): one merge's driver-side planning rides another's
+    * execution. Each sub-table commit is exactly-once under the shared
+    * batch id, so a failure between them resumes where it left off on
+    * retry. True when any sub-table applied the batch.
+    */
+  private def commitAll(merges: (() => Boolean)*): Boolean =
+    IdempotentMergeSink.inParallel(merges).reduce(_ | _)
+
   /** Build the pair table from the base corpus (first commit). */
   def bootstrap(spark: SparkSession, root: String, baseDocs: DataFrame,
       batchId: String = "bootstrap"): Boolean =
@@ -41,19 +80,20 @@ object IndexMaintenance {
       keyed(Dedup.ngramJaccardOf(baseDocs, widen = false)), "pair_key", batchId)
 
   /** Merge one ingest batch's new pairs into the table under
-    * `batchId`; false = already applied (the retry no-op).
+    * `batchId`; false = already applied (the retry no-op). Throws on
+    * a root with no commit (see [[requireBuilt]]).
     */
   def refresh(spark: SparkSession, root: String, baseDocs: DataFrame,
-      batchDocs: DataFrame, batchId: String): Boolean =
+      batchDocs: DataFrame, batchId: String): Boolean = {
+    requireBuilt(root, "refresh", "bootstrap")
     IdempotentMergeSink.merge(spark, root,
       keyed(Dedup.ngramJaccardNewPairs(baseDocs, batchDocs, widen = false)),
       "pair_key", batchId)
+  }
 
   /** The maintained pair relation (doc_a, doc_b, n_inter, jaccard). */
   def pairs(spark: SparkSession, root: String): DataFrame =
-    IdempotentMergeSink.read(spark, root)
-      .map(_.select("doc_a", "doc_b", "n_inter", "jaccard"))
-      .getOrElse(throw new IllegalStateException(s"no committed pair table at $root"))
+    committed(spark, root, "pair", "doc_a", "doc_b", "n_inter", "jaccard")
 
   /** Time-travel read of the pair relation as of version `v` — the
     * upsert-chain counterpart of [[bm25DfAt]]: the state folds the
@@ -98,14 +138,15 @@ object IndexMaintenance {
   /** Merge one node batch into the list table under `batchId`: new
     * lists for every touched node, deletes for their evicted rows.
     * `baseNodes` is the corpus BEFORE the batch; batch keys must be
-    * new. False = already applied (the retry no-op).
+    * new. False = already applied (the retry no-op). Throws on a root
+    * with no commit (see [[requireBuilt]]).
     */
   def refreshKnn(spark: SparkSession, root: String, baseNodes: DataFrame,
       batchNodes: DataFrame, batchId: String): Boolean = {
-    val maintained = IdempotentMergeSink.read(spark, root)
+    requireBuilt(root, "refreshKnn", "bootstrapKnn")
+    val maintained = committed(spark, root, "knn list", "u", "v", "diff")
     val touched = baseNodes
-      .join(GraphOps.touchedByBatch(baseNodes, batchNodes,
-        maintained.map(_.select(col("u"), col("v"), col("diff")))),
+      .join(GraphOps.touchedByBatch(baseNodes, batchNodes, maintained),
         Seq("key"), "left_semi")
       .unionByName(batchNodes)
       // materialize the (small) touched set: its derivation embeds the
@@ -116,11 +157,9 @@ object IndexMaintenance {
     val fresh = GraphOps.knnListsOf(touched, baseNodes.unionByName(batchNodes))
       .localCheckpoint() // feeds both the upserts and the evicted anti-join
     val evicted = maintained
-      .map(_.select(col("u"), col("v"), col("diff"))
-        .join(touched.select(col("key").as("u")), Seq("u"), "left_semi")
-        .join(fresh, Seq("u", "v"), "left_anti")
-        .withColumn("op", lit("D")))
-      .getOrElse(fresh.limit(0).withColumn("op", lit("D")))
+      .join(touched.select(col("key").as("u")), Seq("u"), "left_semi")
+      .join(fresh, Seq("u", "v"), "left_anti")
+      .withColumn("op", lit("D"))
     IdempotentMergeSink.merge(spark, root,
       listKeyed(fresh.withColumn("op", lit("I")).unionByName(evicted)),
       "list_key", batchId)
@@ -128,9 +167,7 @@ object IndexMaintenance {
 
   /** The maintained per-node adjacency lists (u, v). */
   def knnLists(spark: SparkSession, root: String): DataFrame =
-    IdempotentMergeSink.read(spark, root)
-      .map(_.select("u", "v"))
-      .getOrElse(throw new IllegalStateException(s"no committed knn list table at $root"))
+    committed(spark, root, "knn list", "u", "v")
 
   /** Mutual-kNN edges over the maintained lists — the same join as the
     * inline build ([[GraphOps.mutualEdgesOf]]), recomputed over a
@@ -157,7 +194,8 @@ object IndexMaintenance {
   // (the r10 read-modify-write upsert could: it baked the read version
   // into absolute df rows outside the commit loop). Each sub-table
   // commit is exactly-once under the shared batchId, so a crash
-  // between the three merges resumes where it left off. ---
+  // between the three merges resumes where it left off. A refresh of
+  // an empty root is the build. ---
 
   private def tfRoot(root: String) = s"$root/tf"
   private def dfRoot(root: String) = s"$root/df"
@@ -169,50 +207,28 @@ object IndexMaintenance {
     */
   private[operators] def bm25DfRoot(root: String): String = dfRoot(root)
 
-  /** Build the three posting tables from the base corpus. The three
-    * sub-table merges all read the one checkpointed tf relation and
-    * commit to DISJOINT roots — they run as concurrent jobs
-    * ([[IdempotentMergeSink.inParallel]], the §2.6 overlap), so one
-    * merge's driver-side planning rides another's execution instead of
-    * serializing 3 plan+job rounds per maintenance call.
+  /** Build the three posting tables from the base corpus: a refresh
+    * of the empty index (kept as a name because callers build with it).
     */
   def bootstrapBm25(spark: SparkSession, root: String, baseDocs: DataFrame,
-      batchId: String = "bootstrap"): Boolean = {
-    val tf = AnnSearch.bm25Tf(baseDocs).localCheckpoint() // feeds 3 merges
-    IdempotentMergeSink.inParallel(Seq(
-      () => IdempotentMergeSink.merge(spark, tfRoot(root),
-        tf.withColumn("tf_key", concat_ws(":", col("doc_id"), col("term"))),
-        "tf_key", batchId),
-      () => IdempotentMergeSink.merge(spark, dfRoot(root),
-        tf.groupBy(col("term")).agg(count(lit(1)).as("df")), "term", batchId),
-      () => IdempotentMergeSink.merge(spark, dlRoot(root),
-        tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")), "doc_id", batchId)))
-      .reduce(_ | _)
-  }
+      batchId: String = "bootstrap"): Boolean = refreshBm25(spark, root, baseDocs, batchId)
 
   /** Merge one ingest batch of NEW docs into the posting tables:
-    * insert its tf and dl rows, add its per-term df increments.
+    * insert its tf and dl rows, add its per-term df increments (on an
+    * empty root, the first commit of each is the base).
     * False = every sub-table had already applied the batch.
     */
   def refreshBm25(spark: SparkSession, root: String, batchDocs: DataFrame,
       batchId: String): Boolean = {
-    val btf = AnnSearch.bm25Tf(batchDocs).localCheckpoint()
-    // additive term counts as INCREMENTS: mergeAdditive rebases the
-    // deltas inside its commit loop, so a concurrent maintainer's
-    // df commit between our read and our rename cannot be overwritten
-    // with stale absolutes — no maintainer lease needed
-    if (IdempotentMergeSink.version(dfRoot(root)) == 0)
-      throw new IllegalStateException(s"refreshBm25 before bootstrap at $root")
-    // disjoint sub-table roots → concurrent jobs (see bootstrapBm25)
-    IdempotentMergeSink.inParallel(Seq(
+    val btf = AnnSearch.bm25Tf(batchDocs).localCheckpoint() // feeds 3 merges
+    commitAll(
       () => IdempotentMergeSink.merge(spark, tfRoot(root),
         btf.withColumn("tf_key", concat_ws(":", col("doc_id"), col("term"))),
         "tf_key", batchId),
       () => IdempotentMergeSink.mergeAdditive(spark, dfRoot(root),
         btf.groupBy(col("term")).agg(count(lit(1)).as("df")), "term", batchId),
       () => IdempotentMergeSink.merge(spark, dlRoot(root),
-        btf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")), "doc_id", batchId)))
-      .reduce(_ | _)
+        btf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")), "doc_id", batchId))
   }
 
   /** Time-travel read of the maintained per-term document-frequency
@@ -226,36 +242,20 @@ object IndexMaintenance {
   /** The maintained (tf, df, dl) posting relations — drop-in for
     * [[AnnSearch.bm25LexRanked]]'s inputs.
     */
-  def bm25(spark: SparkSession, root: String): (DataFrame, DataFrame, DataFrame) = {
-    def rel(r: String, cols: Seq[String]) = IdempotentMergeSink.read(spark, r)
-      .map(_.select(cols.map(col): _*))
-      .getOrElse(throw new IllegalStateException(s"no committed posting table at $r"))
-    (rel(tfRoot(root), Seq("doc_id", "term", "tf")),
-      rel(dfRoot(root), Seq("term", "df")),
-      rel(dlRoot(root), Seq("doc_id", "dl")))
-  }
+  def bm25(spark: SparkSession, root: String): (DataFrame, DataFrame, DataFrame) =
+    (committed(spark, tfRoot(root), "posting", "doc_id", "term", "tf"),
+      committed(spark, dfRoot(root), "posting", "term", "df"),
+      committed(spark, dlRoot(root), "posting", "doc_id", "dl"))
 
   // --- DCT perceptual-hash maintenance (the phash_dct artifact's
   // trickle path). Fingerprints are per-row immutable map-side work →
   // a media batch is a pure insert; the pair table is ADDITIVE because
   // fingerprints never change — refresh merges only the batch-vs-all
-  // banded pairs ([[Multimodal.dctNewPairs]]), never old-vs-old. ---
+  // banded pairs ([[Multimodal.dctNewPairs]]), never old-vs-old. A
+  // refresh of an empty root is the build. ---
 
   private def fpRoot(root: String) = s"$root/fp"
   private def dctPairsRoot(root: String) = s"$root/pairs"
-
-  /** Build the fingerprint + pair tables from the base media. */
-  def bootstrapPhash(spark: SparkSession, root: String,
-      baseMedia: org.apache.spark.sql.Dataset[Multimodal.MediaRow],
-      batchId: String = "bootstrap"): Boolean = {
-    val fp = Multimodal.dctFingerprintsOf(baseMedia).localCheckpoint()
-    // disjoint sub-table roots → concurrent jobs (see bootstrapBm25)
-    IdempotentMergeSink.inParallel(Seq(
-      () => IdempotentMergeSink.merge(spark, fpRoot(root), fp, "doc_id", batchId),
-      () => IdempotentMergeSink.merge(spark, dctPairsRoot(root),
-        keyed(Multimodal.dctPairsOver(fp)), "pair_key", batchId)))
-      .reduce(_ | _)
-  }
 
   /** Merge one media batch: insert its fingerprints, add the pairs it
     * introduces. False = every sub-table had already applied the batch.
@@ -266,22 +266,20 @@ object IndexMaintenance {
     val bfp = Multimodal.dctFingerprintsOf(batchMedia).localCheckpoint()
     // baseFp resolves its version set NOW (committed() is eager), so
     // the fp merge landing first cannot change what the pair merge
-    // reads — the two commits are safely concurrent (see bootstrapBm25)
-    val baseFp = IdempotentMergeSink.read(spark, fpRoot(root))
-      .map(_.select("doc_id", "modality", "phash64"))
-      .getOrElse(throw new IllegalStateException(s"refreshPhash before bootstrap at $root"))
-    IdempotentMergeSink.inParallel(Seq(
+    // reads — the two commits are safely concurrent. With no fp commit
+    // the base is empty, and dctNewPairs(bfp, ∅) is dctPairsOver(bfp):
+    // both band with FineBands
+    val baseFp = IdempotentMergeSink.read(spark, fpRoot(root)).getOrElse(bfp.limit(0))
+      .select("doc_id", "modality", "phash64")
+    commitAll(
       () => IdempotentMergeSink.merge(spark, fpRoot(root), bfp, "doc_id", batchId),
       () => IdempotentMergeSink.merge(spark, dctPairsRoot(root),
-        keyed(Multimodal.dctNewPairs(bfp, baseFp)), "pair_key", batchId)))
-      .reduce(_ | _)
+        keyed(Multimodal.dctNewPairs(bfp, baseFp)), "pair_key", batchId))
   }
 
   /** The maintained perceptual pair relation. */
   def dctPairs(spark: SparkSession, root: String): DataFrame =
-    IdempotentMergeSink.read(spark, dctPairsRoot(root))
-      .map(_.select("modality", "doc_a", "doc_b", "hamming"))
-      .getOrElse(throw new IllegalStateException(s"no committed dct pair table at $root"))
+    committed(spark, dctPairsRoot(root), "dct pair", "modality", "doc_a", "doc_b", "hamming")
 
   // --- exact-span gram maintenance (the span_grams artifact's trickle
   // path). Positional grams are per-doc immutable map-side work → a
@@ -294,7 +292,8 @@ object IndexMaintenance {
   // fuse two islands on a diagonal), but the corpus-sized work (the
   // tokenize + explode scan) is what became incremental, and
   // eligibility comes free from the maintained df table instead of a
-  // corpus-wide distinct + aggregate. ---
+  // corpus-wide distinct + aggregate. A refresh of an empty root is
+  // the build. ---
 
   private def spanGramsRoot(root: String) = s"$root/grams"
   private def spanDfRoot(root: String) = s"$root/gdf"
@@ -306,50 +305,28 @@ object IndexMaintenance {
     grams.select(col("doc_id"), col("g")).distinct()
       .groupBy(col("g")).agg(count(lit(1)).as("gdf"))
 
-  /** Build the gram + df tables from the base corpus. */
-  def bootstrapSpans(spark: SparkSession, root: String, baseDocs: DataFrame,
-      batchId: String = "bootstrap"): Boolean = {
-    val g = TextAnalysis.spanGramsOver(baseDocs).localCheckpoint() // feeds 2 merges
-    // disjoint sub-table roots → concurrent jobs (see bootstrapBm25)
-    IdempotentMergeSink.inParallel(Seq(
-      () => IdempotentMergeSink.merge(spark, spanGramsRoot(root),
-        gramKeyed(g), "gram_key", batchId),
-      () => IdempotentMergeSink.merge(spark, spanDfRoot(root),
-        gramDfOf(g), "g", batchId)))
-      .reduce(_ | _)
-  }
-
   /** Merge one ingest batch of NEW docs: insert its positional grams,
-    * add its per-gram df increments. False = every sub-table had
+    * add its per-gram df increments — the same concurrent-maintainer
+    * convergence contract as the BM25 df. False = every sub-table had
     * already applied the batch.
     */
   def refreshSpans(spark: SparkSession, root: String, batchDocs: DataFrame,
       batchId: String): Boolean = {
-    val bg = TextAnalysis.spanGramsOver(batchDocs).localCheckpoint()
-    if (IdempotentMergeSink.version(spanDfRoot(root)) == 0)
-      throw new IllegalStateException(s"refreshSpans before bootstrap at $root")
-    // increments rebased inside the commit loop — same concurrent-
-    // maintainer convergence contract as the BM25 df; disjoint
-    // sub-table roots → concurrent jobs (see bootstrapBm25)
-    IdempotentMergeSink.inParallel(Seq(
+    val bg = TextAnalysis.spanGramsOver(batchDocs).localCheckpoint() // feeds 2 merges
+    commitAll(
       () => IdempotentMergeSink.merge(spark, spanGramsRoot(root),
         gramKeyed(bg), "gram_key", batchId),
       () => IdempotentMergeSink.mergeAdditive(spark, spanDfRoot(root),
-        gramDfOf(bg), "g", batchId)))
-      .reduce(_ | _)
+        gramDfOf(bg), "g", batchId))
   }
 
   /** The maintained positional-gram relation (doc_id, pos, g). */
   def spanGrams(spark: SparkSession, root: String): DataFrame =
-    IdempotentMergeSink.read(spark, spanGramsRoot(root))
-      .map(_.select("doc_id", "pos", "g"))
-      .getOrElse(throw new IllegalStateException(s"no committed gram table at $root"))
+    committed(spark, spanGramsRoot(root), "gram", "doc_id", "pos", "g")
 
   /** The maintained per-gram document-frequency relation (g, gdf). */
   def spanGramDf(spark: SparkSession, root: String): DataFrame =
-    IdempotentMergeSink.read(spark, spanDfRoot(root))
-      .map(_.select("g", "gdf"))
-      .getOrElse(throw new IllegalStateException(s"no committed gram df table at $root"))
+    committed(spark, spanDfRoot(root), "gram df", "g", "gdf")
 
   /** Maximal cross-document spans over the maintained relations —
     * equals [[TextAnalysis.dedupExactSpans]] over the combined corpus

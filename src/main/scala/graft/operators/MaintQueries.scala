@@ -230,7 +230,7 @@ object MaintQueries {
         .filter(hmod(col("doc_id"), 2) === 0)
       val base = media.filter(hmod(col("doc_id"), 4) === 2)
       val batch = media.filter(hmod(col("doc_id"), 4) === 0)
-      IndexMaintenance.bootstrapPhash(spark, root, base)
+      IndexMaintenance.refreshPhash(spark, root, base, "bootstrap")
       IndexMaintenance.refreshPhash(spark, root, batch, "b2")
       IndexMaintenance.dctPairs(spark, root).orderBy("doc_a", "doc_b")
     }
@@ -282,7 +282,7 @@ object MaintQueries {
         .localCheckpoint()
       val base = injected(baseRaw, capDocs)
       val batch = injected(batchRaw, batchDoc)
-      IndexMaintenance.bootstrapSpans(spark, root, base)
+      IndexMaintenance.refreshSpans(spark, root, base, "bootstrap")
       IndexMaintenance.refreshSpans(spark, root, batch, "b2")
       // non-vacuity: the batch really pushed the phrase grams across
       // the cap — the retraction the oracle's from-scratch build bakes

@@ -84,7 +84,7 @@ object SqlSurface {
   /** Okapi BM25 top-10, pure SQL text over the SERVED inverted-index
     * artifacts — the `bm25_tf` / `bm25_df` / `bm25_dl` posting
     * relations registered as views (the exact tables
-    * [[graft.streaming.IndexMaintenance]] keeps fresh), 1-row stats →
+    * [[graft.operators.IndexMaintenance]] keeps fresh), 1-row stats →
     * rarest-term query probe → integer-scaled scoring with k1/b in the
     * text. Same arithmetic order as [[TextAnalysis.textBm25Topk]],
     * whose oracle it shares. The r12 form tokenized `documents` inside

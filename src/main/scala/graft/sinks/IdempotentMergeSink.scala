@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import java.io.File
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 /** Idempotent keyed-MERGE table layout — the write-back contract the
   * reference's PUT loop implies (api-client.py: every batch re-PUTs
@@ -299,75 +299,113 @@ object IdempotentMergeSink {
     */
   def merge(spark: SparkSession, root: String, updates: DataFrame,
       key: String, batchId: String, maxAttempts: Int = 20,
-      deltaMaxRows: Long = DeltaMaxRows): Boolean = {
-    new File(root).mkdirs()
-    // the retry-after-success fast path stays STRUCTURAL: already
-    // applied → return before the updates plan is even evaluated (the
-    // loop below re-checks under the race)
-    if (committed(root).exists(_._2.contains(batchId))) return false
-    // within-batch latest-op-wins (mirror of the etl_cdc_apply window)
-    val cols = updates.columns
-    // the delta-vs-base row-count gate rides the checkpoint's
-    // materialization job as a CollectMetrics observation — one Spark
-    // job for materialize + count instead of two (the
-    // connectedComponents convergence-probe discipline)
-    val obs = new org.apache.spark.sql.Observation()
-    val ranked = (
-      if (cols.contains("seq")) {
+      deltaMaxRows: Long = DeltaMaxRows): Boolean =
+    commitBatch(spark, root, batchId, key, "upsert", maxAttempts, deltaMaxRows, "merge") {
+      // within-batch latest-op-wins (mirror of the etl_cdc_apply window)
+      if (updates.columns.contains("seq")) {
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col(key)).orderBy(col("seq").desc)
         updates.withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn", "seq")
       } else updates
-    // evaluate the updates plan EXACTLY ONCE: the anti-join key set,
-    // upserts, and deletes below all read these materialized rows, so a
-    // non-deterministic input cannot commit an inconsistent combination
-    // of removals and upserts within one version — and a lost-race
-    // retry re-merges the very same rows
-    ).observe(obs, count(lit(1)).as("n")).localCheckpoint()
-    val (upserts, deletes) =
-      if (ranked.columns.contains("op"))
-        (ranked.filter(col("op") =!= "D").drop("op"),
-          ranked.filter(col("op") === "D").select(col(key)))
-      else (ranked, ranked.limit(0).select(col(key)))
+    } { (ranked, files) =>
+      val (upserts, deletes) =
+        if (ranked.columns.contains("op"))
+          (ranked.filter(col("op") =!= "D").drop("op"),
+            ranked.filter(col("op") === "D").select(col(key)))
+        else (ranked, ranked.limit(0).select(col(key)))
+      Stage(
+        // first commit: the filtered batch IS the base
+        tmp => writeTo(upserts.join(deletes, Seq(key), "left_anti").coalesce(files), tmp),
+        (state, tmp) => writeTo(state
+          .join(ranked.select(col(key)), Seq(key), "left_anti")
+          .unionByName(upserts)
+          .join(deletes, Seq(key), "left_anti"), tmp),
+        // the two writes read the same checkpointed batch and target
+        // disjoint dirs — run them as concurrent jobs (§2.6) so one
+        // write's tail overlaps the other's planning
+        tmp => inParallel(Seq(
+          () => writeTo(ranked.select(col(key)).coalesce(files), tmp.resolve("removes")),
+          () => writeTo(upserts.coalesce(files), tmp.resolve("upserts")))))
+    }
+
+  /** ADDITIVE merge: every non-`key` column of `increments` is a
+    * numeric delta summed INTO the existing row (missing keys insert,
+    * existing keys accumulate). This is the concurrent-safe form of
+    * read-modify-write accumulation: a plain upsert computed as
+    * `current + inc` OUTSIDE the commit loop bakes the read version
+    * into the written rows, so a maintainer that loses the rename CAS
+    * to a DIFFERENT batch would re-commit stale absolutes and silently
+    * drop the winner's increments. Here the rebase happens INSIDE each
+    * attempt — the increments (materialized once) are summed against
+    * whatever state won — so the committed table always equals
+    * "Σ increments of all applied batches" regardless of interleaving,
+    * and concurrent maintainers need no lease. Batch-id dedup gives
+    * each batch's deltas exactly-once, same as [[merge]]. The first
+    * commit on an empty root is a base holding the batch's sums, so
+    * an additive table needs no separate build.
+    */
+  def mergeAdditive(spark: SparkSession, root: String, increments: DataFrame,
+      key: String, batchId: String, maxAttempts: Int = 20,
+      deltaMaxRows: Long = DeltaMaxRows): Boolean =
+    commitBatch(spark, root, batchId, key, "additive", maxAttempts, deltaMaxRows,
+        "mergeAdditive")(increments) { (inc, files) =>
+      // post-agg rows ≤ batch rows: the observed count bounds the file
+      // sizing from above
+      Stage(
+        tmp => writeTo(sumByKey(inc, key).coalesce(files), tmp),
+        (state, tmp) => writeTo(sumByKey(state.unionByName(inc), key), tmp),
+        tmp => writeTo(sumByKey(inc, key).coalesce(files), tmp.resolve("increments")))
+    }
+
+  /** How one batch's commit stages its content into the staging dir:
+    * the FIRST commit's base, a COMPACTING base over the current
+    * state, or a DELTA's change-set directories.
+    */
+  private final case class Stage(first: Path => Unit,
+      compacting: (DataFrame, Path) => Unit, delta: Path => Unit)
+
+  private def writeTo(df: DataFrame, dir: Path): Unit =
+    df.write.mode(SaveMode.Overwrite).parquet(dir.toString)
+
+  /** The commit body both merge flavors share. The already-applied
+    * fast path stays STRUCTURAL: return before the batch plan is even
+    * evaluated (the loop re-checks under the race). Otherwise the
+    * batch is evaluated EXACTLY ONCE — every stage writer reads these
+    * materialized rows, so a non-deterministic input cannot commit an
+    * inconsistent combination of removals and upserts within one
+    * version, and a lost-race retry re-merges the very same rows. The
+    * delta-vs-base row-count gate rides the checkpoint's
+    * materialization job as a CollectMetrics observation — one Spark
+    * job for materialize + count instead of two. Every writer sizes
+    * its file count from the observed rows (§6 output sizing): a
+    * contract-scale commit is one file, a production one grows files
+    * with rows — never one per upstream split. Each attempt then
+    * stages a base for the first commit, a compacting base when the
+    * delta chain is due (or the batch is too big to broadcast as a
+    * delta), and the batch's change set, tagged `deltaKind`, otherwise.
+    */
+  private def commitBatch(spark: SparkSession, root: String, batchId: String,
+      key: String, deltaKind: String, maxAttempts: Int, deltaMaxRows: Long,
+      what: String)(batch: => DataFrame)(stage: (DataFrame, Int) => Stage): Boolean = {
+    new File(root).mkdirs()
+    if (committed(root).exists(_._2.contains(batchId))) return false
+    val obs = new org.apache.spark.sql.Observation()
+    val rows = batch.observe(obs, count(lit(1)).as("n")).localCheckpoint()
     val batchRows = obs.get("n").asInstanceOf[Long]
-    commitLoop(root, batchId, maxAttempts, "merge") { (cur, tmp) =>
-      cur match {
-        case None => // first commit: the filtered batch IS the base
-          // file count sized from the OBSERVED batch rows (§6 output
-          // sizing): a contract-scale base is one file, a production
-          // one grows files with rows — never one per upstream split
-          upserts.join(deletes, Seq(key), "left_anti")
-            .coalesce(filesFor(batchRows))
-            .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        case Some((v, _)) if deltaChainLen(root, v) + 1 >= CompactEvery
-            || batchRows > deltaMaxRows =>
-          // compacting commit: fold the chain + this batch into a base
-          // (also the path for a batch too big to broadcast as a delta)
-          stateAt(spark, root, v)
-            .join(ranked.select(col(key)), Seq(key), "left_anti")
-            .unionByName(upserts)
-            .join(deletes, Seq(key), "left_anti")
-            .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        case Some(_) => // delta commit: just this batch's change set.
-          // The two writes read the same checkpointed batch and target
-          // disjoint dirs — run them as concurrent jobs (§2.6) so one
-          // write's tail overlaps the other's planning; ≤ filesFor
-          // files each keeps every later fold's broadcast read to a
-          // handful of footers instead of one per upstream partition
-          val k = filesFor(batchRows)
-          inParallel(Seq(
-            () => ranked.select(col(key)).coalesce(k)
-              .write.mode(SaveMode.Overwrite).parquet(tmp.resolve("removes").toString),
-            () => upserts.coalesce(k)
-              .write.mode(SaveMode.Overwrite).parquet(tmp.resolve("upserts").toString)))
-          Files.write(tmp.resolve(DeltaTag),
-            s"upsert\n$key".getBytes(StandardCharsets.UTF_8))
-      }
+    val s = stage(rows, filesFor(batchRows))
+    commitLoop(root, batchId, maxAttempts, what) {
+      case (None, tmp) => s.first(tmp)
+      case (Some((v, _)), tmp) if deltaChainLen(root, v) + 1 >= CompactEvery
+          || batchRows > deltaMaxRows => s.compacting(stateAt(spark, root, v), tmp)
+      case (Some(_), tmp) =>
+        s.delta(tmp)
+        Files.write(tmp.resolve(DeltaTag),
+          s"$deltaKind\n$key".getBytes(StandardCharsets.UTF_8))
     }
   }
 
-  /** The optimistic-concurrency commit loop both merge flavors share:
+  /** The optimistic-concurrency commit loop every commit shares:
     * `stage(cur, tmp)` writes the commit's CONTENT (a full base or a
     * delta change set) into the staging dir FROM the currently-
     * committed version — re-invoked per attempt, so a lost-CAS retry
@@ -375,7 +413,7 @@ object IdempotentMergeSink {
     */
   private def commitLoop(root: String, batchId: String, maxAttempts: Int,
       what: String)(
-      stage: (Option[(Int, Seq[String])], java.nio.file.Path) => Unit): Boolean = {
+      stage: (Option[(Int, Seq[String])], Path) => Unit): Boolean = {
     var attempt = 0
     while (attempt < maxAttempts) {
       val cur = committed(root)
@@ -408,50 +446,6 @@ object IdempotentMergeSink {
       s"$what($root, batch=$batchId) lost the version race $maxAttempts times")
   }
 
-  /** ADDITIVE merge: every non-`key` column of `increments` is a
-    * numeric delta summed INTO the existing row (missing keys insert,
-    * existing keys accumulate). This is the concurrent-safe form of
-    * read-modify-write accumulation: a plain upsert computed as
-    * `current + inc` OUTSIDE the commit loop bakes the read version
-    * into the written rows, so a maintainer that loses the rename CAS
-    * to a DIFFERENT batch would re-commit stale absolutes and silently
-    * drop the winner's increments. Here the rebase happens INSIDE each
-    * attempt — the increments (materialized once) are summed against
-    * whatever state won — so the committed table always equals
-    * "Σ increments of all applied batches" regardless of interleaving,
-    * and concurrent maintainers need no lease. Batch-id dedup gives
-    * each batch's deltas exactly-once, same as [[merge]].
-    */
-  def mergeAdditive(spark: SparkSession, root: String, increments: DataFrame,
-      key: String, batchId: String, maxAttempts: Int = 20,
-      deltaMaxRows: Long = DeltaMaxRows): Boolean = {
-    new File(root).mkdirs()
-    if (committed(root).exists(_._2.contains(batchId))) return false
-    // one evaluation: a lost-race retry re-adds the very same deltas;
-    // the row-count gate rides the materialization job (see merge)
-    val obs = new org.apache.spark.sql.Observation()
-    val inc = increments.observe(obs, count(lit(1)).as("n")).localCheckpoint()
-    val batchRows = obs.get("n").asInstanceOf[Long]
-    commitLoop(root, batchId, maxAttempts, "mergeAdditive") { (cur, tmp) =>
-      cur match {
-        case None => // first commit: the batch's sums ARE the base
-          // post-agg rows ≤ batch rows: the observed count bounds the
-          // file sizing from above (same §6 discipline as merge)
-          sumByKey(inc, key).coalesce(filesFor(batchRows))
-            .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        case Some((v, _)) if deltaChainLen(root, v) + 1 >= CompactEvery
-            || batchRows > deltaMaxRows =>
-          sumByKey(stateAt(spark, root, v).unionByName(inc), key)
-            .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        case Some(_) => // delta commit: just this batch's per-key sums
-          sumByKey(inc, key).coalesce(filesFor(batchRows))
-            .write.mode(SaveMode.Overwrite).parquet(tmp.resolve("increments").toString)
-          Files.write(tmp.resolve(DeltaTag),
-            s"additive\n$key".getBytes(StandardCharsets.UTF_8))
-      }
-    }
-  }
-
   /** Rewrite the current state as a fresh BASE version through the
     * same commit CAS — the explicit compaction entry for a maintenance
     * schedule (on-write compaction already bounds chains at
@@ -470,8 +464,7 @@ object IdempotentMergeSink {
         commitLoop(root, s"_compact_v$v", maxAttempts, "compact") { (cur, tmp) =>
           val w = cur.map(_._1).getOrElse(
             throw new IllegalStateException(s"compact($root): table vanished"))
-          stateAt(spark, root, w)
-            .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+          writeTo(stateAt(spark, root, w), tmp)
         }
     }
 

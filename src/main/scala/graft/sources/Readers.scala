@@ -10,8 +10,7 @@ import org.apache.spark.sql.types._
   * schemas — at 100 TB, schema inference is a full extra pass over the
   * data, so it is never used here. Parquet follows the same rule:
   * [[graft.Tables.parquet]] hands Spark the schema it reads from one
-  * footer on the driver, so no parquet read runs an inference job
-  * (only `Compactor.readEvolved` merges footers, on purpose).
+  * footer on the driver, so no parquet read runs an inference job.
   * Malformed rows are captured in a `_corrupt` column instead of
   * failing the job (PERMISSIVE), matching the reference's row-level
   * error tolerance.

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.sinks.{EsBulkSink, IdempotentMergeSink}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
@@ -707,84 +707,77 @@ object StreamOps {
         org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
   }
 
+  /** The foreachBatch body every refresh stream shares: project each
+    * micro-batch to `cols` (checkpointed when `materialize`, so the
+    * refresh's several merges read one evaluation) and hand it to
+    * `step` with the micro-batch id. Spark re-runs a failed batch with
+    * the SAME id, so ids derived from it make any retry a structural
+    * no-op in the sink — the foreachBatch exactly-once recipe.
+    */
+  private def refreshStream(in: DataFrame, cols: Seq[String], materialize: Boolean = true)(
+      step: (SparkSession, DataFrame, Long) => Unit): StreamingQuery =
+    in.writeStream
+      .outputMode("append")
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        val b = batch.select(cols.map(col): _*)
+        step(batch.sparkSession, if (materialize) b.localCheckpoint() else b, id)
+      }
+      .start()
+
+  /** A refresh stream whose refresh probes the prior-ingested corpus:
+    * `base` plus every micro-batch already merged into `ingestedRoot`.
+    * That relation is read BEFORE this batch's ingested-table merge,
+    * so a crash between the refresh and that merge retries
+    * consistently (the refresh no-ops, the ingested merge applies).
+    */
+  private def priorRefreshStream(in: DataFrame, cols: Seq[String], key: String,
+      ingestedRoot: String, ingestedTag: String, base: DataFrame)(
+      refresh: (SparkSession, DataFrame, DataFrame, Long) => Boolean): StreamingQuery =
+    refreshStream(in, cols) { (spark, b, id) =>
+      val baseCols = base.select(cols.map(col): _*)
+      val prior = IdempotentMergeSink.read(spark, ingestedRoot)
+        .map(baseCols.unionByName(_)).getOrElse(baseCols)
+      refresh(spark, prior, b, id)
+      IdempotentMergeSink.merge(spark, ingestedRoot, b, key, s"$ingestedTag-$id")
+    }
+
   /** STREAMING INDEX MAINTENANCE — the continuous form of
     * [[graft.operators.IndexMaintenance]]: each micro-batch of
     * documents (doc_id, text) merges its new near-dup pairs into the
     * maintained pair table and itself into the ingested-docs table,
     * both through the idempotent sink with the micro-batch id as the
-    * idempotence key. Spark re-runs a failed batch with the SAME id,
-    * so the sink's batch-id dedup makes any retry a structural no-op —
-    * the canonical foreachBatch exactly-once recipe, here applied to
-    * index maintenance end to end. Ordering inside one batch: the
-    * prior-ingested relation is read BEFORE the docs merge, so a crash
-    * between the two merges retries consistently (pair merge no-ops,
-    * docs merge applies).
+    * idempotence key — exactly-once index maintenance end to end.
     */
   def pairRefreshStream(docs: DataFrame, pairsRoot: String,
       docsRoot: String, baseDocs: DataFrame): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.select(col("doc_id"), col("text")).localCheckpoint()
-        val prior = IdempotentMergeSink.read(spark, docsRoot)
-          .map(baseDocs.select("doc_id", "text").unionByName(_))
-          .getOrElse(baseDocs.select("doc_id", "text"))
-        graft.operators.IndexMaintenance.refresh(
-          spark, pairsRoot, prior, b, s"pairs-$id")
-        IdempotentMergeSink.merge(spark, docsRoot, b, "doc_id", s"docs-$id")
-        ()
-      }
-      .start()
+    priorRefreshStream(docs, Seq("doc_id", "text"), "doc_id", docsRoot, "docs", baseDocs) {
+      (spark, prior, b, id) =>
+        graft.operators.IndexMaintenance.refresh(spark, pairsRoot, prior, b, s"pairs-$id")
+    }
 
   /** Streaming BM25 postings maintenance — the continuous form of
     * [[graft.operators.IndexMaintenance.refreshBm25]]: each
     * micro-batch of NEW documents inserts its tf/dl rows and adds its
     * per-term df increments, each sub-table exactly-once under the
-    * micro-batch id (a Spark-retried batch re-runs with the SAME id →
-    * structural no-op; a crash between the three merges resumes).
+    * micro-batch id (a crash between the three merges resumes).
     */
   def bm25RefreshStream(docs: DataFrame, root: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.select(col("doc_id"), col("text")).localCheckpoint()
-        graft.operators.IndexMaintenance.refreshBm25(spark, root, b, s"bm25-$id")
-        ()
-      }
-      .start()
+    refreshStream(docs, Seq("doc_id", "text")) { (spark, b, id) =>
+      graft.operators.IndexMaintenance.refreshBm25(spark, root, b, s"bm25-$id")
+    }
 
   /** Streaming mutual-kNN graph maintenance — the continuous form of
     * [[graft.operators.IndexMaintenance.refreshKnn]]: each micro-batch
     * of (key, price) nodes refreshes the adjacency lists for exactly
-    * the touched node set against the prior-ingested corpus (read
-    * BEFORE the nodes merge, the [[pairRefreshStream]] ordering, so a
-    * crash between the two merges retries consistently).
+    * the touched node set against the prior-ingested corpus.
     */
   def knnRefreshStream(nodes: DataFrame, listsRoot: String,
       nodesRoot: String, baseNodes: DataFrame): StreamingQuery =
-    nodes.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.select(col("key"), col("price")).localCheckpoint()
-        val prior = IdempotentMergeSink.read(spark, nodesRoot)
-          .map(baseNodes.select("key", "price").unionByName(_))
-          .getOrElse(baseNodes.select("key", "price"))
-        graft.operators.IndexMaintenance.refreshKnn(
-          spark, listsRoot, prior, b, s"knn-$id")
-        IdempotentMergeSink.merge(spark, nodesRoot, b, "key", s"nodes-$id")
-        ()
-      }
-      .start()
+    priorRefreshStream(nodes, Seq("key", "price"), "key", nodesRoot, "nodes", baseNodes) {
+      (spark, prior, b, id) =>
+        graft.operators.IndexMaintenance.refreshKnn(spark, listsRoot, prior, b, s"knn-$id")
+    }
 
-  /** Streaming perceptual-fingerprint maintenance — the continuous
-    * form of [[graft.operators.IndexMaintenance.refreshPhash]]: each
-    * micro-batch of media rows (doc_id, payload, modality) appends its
-    * DCT fingerprints and the batch-vs-all pairs it introduces,
-    * exactly-once per micro-batch id.
-    */
   /** Streaming VERBATIM-COPY admission — the exact-substring twin of
     * [[nearDupAdmissionStream]], closing the admission family over the
     * newest index: each micro-batch of arriving documents computes its
@@ -820,26 +813,21 @@ object StreamOps {
     * the maintained relations on demand.
     */
   def spanRefreshStream(docs: DataFrame, root: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.select(col("doc_id"), col("text")).localCheckpoint()
-        graft.operators.IndexMaintenance.refreshSpans(spark, root, b, s"spans-$id")
-        ()
-      }
-      .start()
+    refreshStream(docs, Seq("doc_id", "text")) { (spark, b, id) =>
+      graft.operators.IndexMaintenance.refreshSpans(spark, root, b, s"spans-$id")
+    }
 
+  /** Streaming perceptual-fingerprint maintenance — the continuous
+    * form of [[graft.operators.IndexMaintenance.refreshPhash]]: each
+    * micro-batch of media rows (doc_id, payload, modality) appends its
+    * DCT fingerprints and the batch-vs-all pairs it introduces,
+    * exactly-once per micro-batch id.
+    */
   def phashRefreshStream(media: DataFrame, root: String): StreamingQuery =
-    media.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
+    refreshStream(media, Seq("doc_id", "payload", "modality"), materialize = false) {
+      (spark, b, id) =>
         import spark.implicits._
-        val b = batch.select(col("doc_id"), col("payload"), col("modality"))
-          .as[graft.operators.Multimodal.MediaRow]
-        graft.operators.IndexMaintenance.refreshPhash(spark, root, b, s"phash-$id")
-        ()
-      }
-      .start()
+        graft.operators.IndexMaintenance.refreshPhash(
+          spark, root, b.as[graft.operators.Multimodal.MediaRow], s"phash-$id")
+    }
 }

@@ -18,6 +18,42 @@ class IndexMaintenanceSpec extends SparkTestBase {
     d.getAbsolutePath
   }
 
+  /** Rows of `got` and `want` over `cols`, as sets; `want` must be
+    * non-empty so a comparison cannot pass vacuously.
+    */
+  private def assertSame(got: org.apache.spark.sql.DataFrame,
+      want: org.apache.spark.sql.DataFrame, cols: String*): Unit = {
+    val w = want.select(cols.map(col): _*).collect().toSet
+    assert(w.nonEmpty, s"empty from-scratch relation over ${cols.mkString(", ")}")
+    assert(got.select(cols.map(col): _*).collect().toSet == w,
+      s"maintained relation over ${cols.mkString(", ")} diverges from the from-scratch build")
+  }
+
+  /** The table at `root` has exactly one commit, and it is a base. */
+  private def assertOneBase(root: String): Unit = {
+    assert(IdempotentMergeSink.version(root) == 1, root)
+    assert(!Files.exists(java.nio.file.Paths.get(root, "v=1", "_GRAFT_DELTA")),
+      s"$root/v=1 is a delta, not a base")
+  }
+
+  private def wantBm25(docs: org.apache.spark.sql.DataFrame) = {
+    val tf = graft.operators.AnnSearch.bm25Tf(docs).localCheckpoint()
+    (tf, tf.groupBy(col("term")).agg(count(lit(1)).as("df")),
+      tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")))
+  }
+
+  private def wantGramDf(docs: org.apache.spark.sql.DataFrame) =
+    graft.operators.TextAnalysis.spanGramsOver(docs)
+      .select(col("doc_id"), col("g")).distinct()
+      .groupBy(col("g")).agg(count(lit(1)).as("gdf"))
+
+  private def race(a: => Boolean, b: => Boolean): Seq[Boolean] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    Await.result(Future.sequence(Seq(Future(a), Future(b))), 5.minutes)
+  }
+
   private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long, Double)] =
     df.select("doc_a", "doc_b", "n_inter", "jaccard").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
@@ -188,7 +224,7 @@ class IndexMaintenanceSpec extends SparkTestBase {
     val media = Multimodal.augmentedMedia(spark, sfDir)
     val base = media.filter(col("doc_id") % 3 =!= 0)
     val batch = media.filter(col("doc_id") % 3 === 0)
-    assert(IndexMaintenance.bootstrapPhash(spark, root, base))
+    assert(IndexMaintenance.refreshPhash(spark, root, base, "bootstrap"))
     assert(IndexMaintenance.refreshPhash(spark, root, batch, "b1"))
     def pairSet4(df: org.apache.spark.sql.DataFrame) =
       df.select("modality", "doc_a", "doc_b", "hamming").collect()
@@ -262,7 +298,7 @@ class IndexMaintenanceSpec extends SparkTestBase {
     val phRoot = freshRoot()
     val media = Multimodal.augmentedMedia(spark, sfDir)
     val mBase = media.filter(col("doc_id") % 3 =!= 0)
-    IndexMaintenance.bootstrapPhash(spark, phRoot, mBase)
+    IndexMaintenance.refreshPhash(spark, phRoot, mBase, "bootstrap")
     val phStream = MemoryStream[(Long, Array[Byte], String)]
     val phQ = graft.streaming.StreamOps.phashRefreshStream(
       phStream.toDF().toDF("doc_id", "payload", "modality"), phRoot)
@@ -291,7 +327,7 @@ class IndexMaintenanceSpec extends SparkTestBase {
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
     val base = docs.filter(col("doc_id") % 4 =!= 0)
     val batch = docs.filter(col("doc_id") % 4 === 0)
-    assert(IndexMaintenance.bootstrapSpans(spark, root, base))
+    assert(IndexMaintenance.refreshSpans(spark, root, base, "bootstrap"))
     assert(spanSet(IndexMaintenance.exactSpans(spark, root))
       == spanSet(TextAnalysis.exactSpansOver(base)))
     assert(IndexMaintenance.refreshSpans(spark, root, batch, "b1"))
@@ -312,7 +348,7 @@ class IndexMaintenanceSpec extends SparkTestBase {
     val base2 = (1L to 49L).map(i => (i, s"x$i $boiler y$i")).toDF("doc_id", "text")
     val batch2 = Seq((50L, s"x50 $boiler y50"), (51L, s"x51 $boiler y51"))
       .toDF("doc_id", "text")
-    assert(IndexMaintenance.bootstrapSpans(spark, root2, base2))
+    assert(IndexMaintenance.refreshSpans(spark, root2, base2, "bootstrap"))
     assert(IndexMaintenance.exactSpans(spark, root2).count() == 49L * 48 / 2)
     assert(IndexMaintenance.refreshSpans(spark, root2, batch2, "cap"))
     assert(IndexMaintenance.exactSpans(spark, root2).count() == 0,
@@ -330,7 +366,7 @@ class IndexMaintenanceSpec extends SparkTestBase {
     val root = freshRoot()
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
     val base = docs.filter(col("doc_id") % 4 > 1)
-    IndexMaintenance.bootstrapSpans(spark, root, base)
+    IndexMaintenance.refreshSpans(spark, root, base, "bootstrap")
     val st = MemoryStream[(Long, String)]
     val q = graft.streaming.StreamOps.spanRefreshStream(
       st.toDF().toDF("doc_id", "text"), root)
@@ -363,5 +399,96 @@ class IndexMaintenanceSpec extends SparkTestBase {
     assert(IndexMaintenance.refresh(spark, root, base.union(b1), b2, "b2"))
     assert(pairSet(IndexMaintenance.pairs(spark, root))
       == pairSet(Dedup.ngramJaccardOf(docs)))
+  }
+
+  test("pair and kNN refreshes of an empty index throw before any commit") {
+    import graft.operators.GraphOps
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+    val root = freshRoot()
+    val e = intercept[IllegalStateException](IndexMaintenance.refresh(spark, root,
+      docs.filter(col("doc_id") % 4 =!= 0), docs.filter(col("doc_id") % 4 === 0), "b1"))
+    assert(e.getMessage.contains("run bootstrap first"), e.getMessage)
+    assert(IdempotentMergeSink.version(root) == 0)
+
+    val nodes = GraphOps.partNodes(spark, sfDir)
+    val knnRoot = freshRoot()
+    val k = intercept[IllegalStateException](IndexMaintenance.refreshKnn(spark, knnRoot,
+      nodes.filter(col("key") % 5 =!= 0), nodes.filter(col("key") % 5 === 0), "b1"))
+    assert(k.getMessage.contains("run bootstrapKnn first"), k.getMessage)
+    assert(IdempotentMergeSink.version(knnRoot) == 0)
+  }
+
+  test("a refresh of an empty bm25, span or phash index is its from-scratch build, committed as bases") {
+    import graft.operators.{Multimodal, TextAnalysis}
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+
+    val bm = freshRoot()
+    assert(IndexMaintenance.refreshBm25(spark, bm, docs, "b0"))
+    Seq("tf", "df", "dl").foreach(t => assertOneBase(s"$bm/$t"))
+    val (tf, df, dl) = IndexMaintenance.bm25(spark, bm)
+    val (wantTf, wantDf, wantDl) = wantBm25(docs)
+    assertSame(tf, wantTf, "doc_id", "term", "tf")
+    assertSame(df, wantDf, "term", "df")
+    assertSame(dl, wantDl, "doc_id", "dl")
+
+    val sp = freshRoot()
+    assert(IndexMaintenance.refreshSpans(spark, sp, docs, "b0"))
+    Seq("grams", "gdf").foreach(t => assertOneBase(s"$sp/$t"))
+    assertSame(IndexMaintenance.spanGrams(spark, sp),
+      TextAnalysis.spanGramsOver(docs), "doc_id", "pos", "g")
+    assertSame(IndexMaintenance.spanGramDf(spark, sp), wantGramDf(docs), "g", "gdf")
+    assertSame(IndexMaintenance.exactSpans(spark, sp), TextAnalysis.exactSpansOver(docs),
+      "doc_a", "doc_b", "start_a", "start_b", "span_len")
+
+    val ph = freshRoot()
+    val media = Multimodal.augmentedMedia(spark, sfDir)
+    assert(IndexMaintenance.refreshPhash(spark, ph, media, "b0"))
+    Seq("fp", "pairs").foreach(t => assertOneBase(s"$ph/$t"))
+    val fp = Multimodal.dctFingerprintsOf(media).localCheckpoint()
+    assertSame(IdempotentMergeSink.read(spark, s"$ph/fp").get, fp,
+      "doc_id", "modality", "phash64")
+    assertSame(IndexMaintenance.dctPairs(spark, ph), Multimodal.dctPairsOver(fp),
+      "modality", "doc_a", "doc_b", "hamming")
+  }
+
+  test("two racing first batches of an empty bm25 or span index converge to the from-scratch df") {
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+    val b1 = docs.filter(col("doc_id") % 2 === 0)
+    val b2 = docs.filter(col("doc_id") % 2 === 1)
+
+    val bm = freshRoot()
+    assert(race(IndexMaintenance.refreshBm25(spark, bm, b1, "race-b1"),
+      IndexMaintenance.refreshBm25(spark, bm, b2, "race-b2")) == Seq(true, true))
+    val (tf, df, dl) = IndexMaintenance.bm25(spark, bm)
+    val (wantTf, wantDf, wantDl) = wantBm25(docs)
+    assertSame(df, wantDf, "term", "df")
+    assertSame(tf, wantTf, "doc_id", "term", "tf")
+    assertSame(dl, wantDl, "doc_id", "dl")
+
+    val sp = freshRoot()
+    assert(race(IndexMaintenance.refreshSpans(spark, sp, b1, "race-b1"),
+      IndexMaintenance.refreshSpans(spark, sp, b2, "race-b2")) == Seq(true, true))
+    assertSame(IndexMaintenance.spanGramDf(spark, sp), wantGramDf(docs), "g", "gdf")
+  }
+
+  test("a bm25 refresh whose dl commit fails keeps its sibling commits; the retry applies only dl") {
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+    val root = freshRoot()
+    // a plain file where the dl sub-table's root directory belongs
+    val obstacle = java.nio.file.Paths.get(root, "dl")
+    Files.write(obstacle, Array[Byte](1))
+    intercept[Exception](IndexMaintenance.refreshBm25(spark, root, docs, "b0"))
+    assert(IdempotentMergeSink.version(s"$root/tf") == 1)
+    assert(IdempotentMergeSink.version(s"$root/df") == 1)
+    assert(IdempotentMergeSink.version(s"$root/dl") == 0)
+
+    Files.delete(obstacle)
+    assert(IndexMaintenance.refreshBm25(spark, root, docs, "b0"))
+    Seq("tf", "df", "dl").foreach(t => assertOneBase(s"$root/$t"))
+    val (tf, df, dl) = IndexMaintenance.bm25(spark, root)
+    val (wantTf, wantDf, wantDl) = wantBm25(docs)
+    assertSame(tf, wantTf, "doc_id", "term", "tf")
+    assertSame(df, wantDf, "term", "df")
+    assertSame(dl, wantDl, "doc_id", "dl")
   }
 }

@@ -146,7 +146,8 @@ class PlanGuardSpec extends SparkTestBase {
     val rels = Seq(
       "ngramJaccardNewPairs" -> Dedup.ngramJaccardNewPairs(base, batch),
       "knnListsOf" -> GraphOps.knnListsOf(nBatch, nBase.unionByName(nBatch)),
-      "touchedByBatch" -> GraphOps.touchedByBatch(nBase, nBatch, None),
+      "touchedByBatch" -> GraphOps.touchedByBatch(nBase, nBatch,
+        GraphOps.knnListsSymmetric(nBase).localCheckpoint()),
       "spansFromGramsWithDf" ->
         TextAnalysis.spansFromGramsWithDf(grams, gdf),
       "dctNewPairs" -> Multimodal.dctNewPairs(batchFp, baseFp))

@@ -473,7 +473,7 @@ class StreamingSpec extends SparkTestBase {
     val corpus = ((100L, "alpha beta gamma delta epsilon zeta eta theta") +:
       (200L until 260L).map(i => (i, s"x$i $boiler y$i"))).toDF("doc_id", "text")
     val root = java.nio.file.Files.createTempDirectory("span_adm").toString
-    graft.operators.IndexMaintenance.bootstrapSpans(spark, root, corpus)
+    graft.operators.IndexMaintenance.refreshSpans(spark, root, corpus, "bootstrap")
     val grams = graft.operators.IndexMaintenance.spanGrams(spark, root)
     val gdf = graft.operators.IndexMaintenance.spanGramDf(spark, root)
     val stream = MemoryStream[(Long, String)]
