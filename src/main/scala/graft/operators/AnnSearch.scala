@@ -1891,6 +1891,32 @@ object AnnSearch {
        |WHERE rank <= $TopK ORDER BY q_id, rank""".stripMargin
 
 
+  /** `nv`: every embedding L2-normalized. */
+  private lazy val nvCte =
+    """nv AS (
+      |  SELECT vec_id, list_transform(embedding::DOUBLE[],
+      |    x -> x / sqrt(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[]))) AS v
+      |  FROM embeddings)""".stripMargin
+
+  /** [[nvCte]], `bits` and `codes` (each vector's 64-bit sign code as
+    * lo/hi halves), `q` (the every-50th query codes) and `scored` (the
+    * Hamming distance of each query to every other vector).
+    */
+  private lazy val bqScoredCtes =
+    s"""$nvCte,
+       |bits AS (SELECT vec_id, d.d - 1 AS d, v[d.d] > 0 AS b
+       |         FROM nv, generate_series(1, $Dims) d(d)),
+       |codes AS (
+       |  SELECT vec_id,
+       |    CAST(sum(CASE WHEN d < 32 AND b THEN (CAST(1 AS BIGINT) << d) ELSE 0 END) AS BIGINT) AS lo,
+       |    CAST(sum(CASE WHEN d >= 32 AND b THEN (CAST(1 AS BIGINT) << (d - 32)) ELSE 0 END) AS BIGINT) AS hi
+       |  FROM bits GROUP BY vec_id),
+       |q AS (SELECT vec_id AS q_id, lo AS qlo, hi AS qhi FROM codes WHERE vec_id % 50 = 0),
+       |scored AS (
+       |  SELECT q.q_id, c.vec_id,
+       |    CAST(bit_count(xor(c.lo, q.qlo)) + bit_count(xor(c.hi, q.qhi)) AS BIGINT) AS hamming
+       |  FROM codes c CROSS JOIN q WHERE c.vec_id <> q.q_id)""".stripMargin
+
   private val oraclesBase: Map[String, String] = Map(
     "ann_kmeans_train" -> kmeansSql,
     "ann_rrf_fusion" -> rrfFusionOracleOver(lshRankedCtes,
@@ -1960,22 +1986,7 @@ object AnnSearch {
     "ann_ivfpq_residual" -> ivfpqResidualSql,
     "ann_ivfpq_residual_served" -> ivfpqResidualSql,
     "ann_bq_topk" ->
-      s"""WITH nv AS (
-         |  SELECT vec_id, list_transform(embedding::DOUBLE[],
-         |    x -> x / sqrt(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[]))) AS v
-         |  FROM embeddings),
-         |bits AS (SELECT vec_id, d.d - 1 AS d, v[d.d] > 0 AS b
-         |         FROM nv, generate_series(1, $Dims) d(d)),
-         |codes AS (
-         |  SELECT vec_id,
-         |    CAST(sum(CASE WHEN d < 32 AND b THEN (CAST(1 AS BIGINT) << d) ELSE 0 END) AS BIGINT) AS lo,
-         |    CAST(sum(CASE WHEN d >= 32 AND b THEN (CAST(1 AS BIGINT) << (d - 32)) ELSE 0 END) AS BIGINT) AS hi
-         |  FROM bits GROUP BY vec_id),
-         |q AS (SELECT vec_id AS q_id, lo AS qlo, hi AS qhi FROM codes WHERE vec_id % 50 = 0),
-         |scored AS (
-         |  SELECT q.q_id, c.vec_id,
-         |    CAST(bit_count(xor(c.lo, q.qlo)) + bit_count(xor(c.hi, q.qhi)) AS BIGINT) AS hamming
-         |  FROM codes c CROSS JOIN q WHERE c.vec_id <> q.q_id),
+      s"""WITH $bqScoredCtes,
          |ranked AS (
          |  SELECT *, round(cos(hamming * pi() / $Dims), 6) AS est_cosine,
          |    row_number() OVER (PARTITION BY q_id ORDER BY hamming, vec_id) AS rank
@@ -1983,22 +1994,7 @@ object AnnSearch {
          |SELECT q_id, vec_id AS neighbor_id, hamming, est_cosine, rank FROM ranked
          |WHERE rank <= $TopK ORDER BY q_id, rank""".stripMargin,
     "ann_bq_rerank" ->
-      s"""WITH nv AS (
-         |  SELECT vec_id, list_transform(embedding::DOUBLE[],
-         |    x -> x / sqrt(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[]))) AS v
-         |  FROM embeddings),
-         |bits AS (SELECT vec_id, d.d - 1 AS d, v[d.d] > 0 AS b
-         |         FROM nv, generate_series(1, $Dims) d(d)),
-         |codes AS (
-         |  SELECT vec_id,
-         |    CAST(sum(CASE WHEN d < 32 AND b THEN (CAST(1 AS BIGINT) << d) ELSE 0 END) AS BIGINT) AS lo,
-         |    CAST(sum(CASE WHEN d >= 32 AND b THEN (CAST(1 AS BIGINT) << (d - 32)) ELSE 0 END) AS BIGINT) AS hi
-         |  FROM bits GROUP BY vec_id),
-         |q AS (SELECT vec_id AS q_id, lo AS qlo, hi AS qhi FROM codes WHERE vec_id % 50 = 0),
-         |scored AS (
-         |  SELECT q.q_id, c.vec_id,
-         |    CAST(bit_count(xor(c.lo, q.qlo)) + bit_count(xor(c.hi, q.qhi)) AS BIGINT) AS hamming
-         |  FROM codes c CROSS JOIN q WHERE c.vec_id <> q.q_id),
+      s"""WITH $bqScoredCtes,
          |shortlist AS (
          |  SELECT q_id, vec_id, hamming FROM (
          |    SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY hamming, vec_id) AS bq_rank
@@ -2018,10 +2014,7 @@ object AnnSearch {
          |SELECT q_id, vec_id AS neighbor_id, hamming, dist2, rank FROM reranked
          |WHERE rank <= $TopK ORDER BY q_id, rank""".stripMargin,
     "ann_sq8_topk" ->
-      s"""WITH nv AS (
-         |  SELECT vec_id, list_transform(embedding::DOUBLE[],
-         |    x -> x / sqrt(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[]))) AS v
-         |  FROM embeddings),
+      s"""WITH $nvCte,
          |ex AS (SELECT vec_id, d.d - 1 AS d, v[d.d] AS x
          |       FROM nv, generate_series(1, $Dims) d(d)),
          |mm AS (SELECT d, round(min(x), 6) AS lo, round(max(x), 6) AS hi

@@ -306,17 +306,21 @@ object CorpusOps {
   private[operators] val EmailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
   private[operators] val PhoneRe = "\\+?[0-9][0-9()\\- ]{8,14}[0-9]"
 
+  /** A document's text with an email and a phone number appended on
+    * every 7th doc id — the PII both scrubbing operators redact.
+    */
+  private[operators] val withPii: Column = when(col("doc_id") % 7 === 0,
+      concat(col("text"), lit(" contact user"), col("doc_id"),
+        lit("@example.com or +1 (555) 010-"), lpad((col("doc_id") % 10000).cast("string"), 4, "0")))
+    .otherwise(col("text"))
+
   /** PII scrubbing: emails/phones replaced with typed placeholders.
     * The driver corpus is clean text, so PII is INJECTED on a
     * deterministic subset first (same synthesis pattern as the ETL
     * null-gap operators) — the scrub then has real work to do and the
     * oracle checks both the redaction and the counts. Map-only pass.
     */
-  def corpusPiiScrub(spark: SparkSession, dir: String): DataFrame = {
-    val withPii = when(col("doc_id") % 7 === 0,
-        concat(col("text"), lit(" contact user"), col("doc_id"),
-          lit("@example.com or +1 (555) 010-"), lpad((col("doc_id") % 10000).cast("string"), 4, "0")))
-      .otherwise(col("text"))
+  def corpusPiiScrub(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .withColumn("raw", withPii)
       .select(
@@ -326,7 +330,6 @@ object CorpusOps {
         md5(regexp_replace(regexp_replace(col("raw"), EmailRe, "<EMAIL>"),
           PhoneRe, "<PHONE>")).as("scrubbed_hash"))
       .orderBy(col("doc_id"))
-  }
 
   /** Benchmark decontamination: flag documents sharing any word 5-gram
     * with the benchmark set (here: doc_id < 20 stands in for an eval
@@ -348,11 +351,20 @@ object CorpusOps {
 
   def corpusDecontaminate(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val bench = grams(docs.filter(col("doc_id") < 20), ContamN)
-      .select(col("gram")).distinct()
-    val contaminated = grams(docs.filter(col("doc_id") >= 20), ContamN)
-      .join(broadcast(bench), "gram")
-      .select(col("doc_id")).distinct()
+    flagContaminated(docs, grams(docs.filter(col("doc_id") >= 20), ContamN)
+      .join(broadcast(benchGrams(docs)), "gram"))
+  }
+
+  /** The distinct n-grams of the benchmark stand-in (doc_id < 20). */
+  private def benchGrams(docs: DataFrame): DataFrame =
+    grams(docs.filter(col("doc_id") < 20), ContamN).select(col("gram")).distinct()
+
+  /** Every corpus document (doc_id ≥ 20) with `is_contaminated` set
+    * when it has a row in `hits`, the (doc_id, gram) matches against
+    * the benchmark grams.
+    */
+  private def flagContaminated(docs: DataFrame, hits: DataFrame): DataFrame = {
+    val contaminated = hits.select(col("doc_id")).distinct()
       .withColumn("is_contaminated", lit(true))
     docs.filter(col("doc_id") >= 20)
       .join(contaminated, Seq("doc_id"), "left")
@@ -384,22 +396,13 @@ object CorpusOps {
     */
   def corpusDecontaminateBloom(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val bench = grams(docs.filter(col("doc_id") < 20), ContamN)
-      .select(col("gram")).distinct()
+    val bench = benchGrams(docs)
     val bloom = bench
       .agg(call_function("bloom_agg", xxhash64(col("gram")), lit(100000L)).as("bf"))
       .scalar()
     val candidates = grams(docs.filter(col("doc_id") >= 20), ContamN)
       .filter(call_function("bloom_contains", bloom, xxhash64(col("gram"))))
-    val contaminated = candidates.join(broadcast(bench), "gram")
-      .select(col("doc_id")).distinct()
-      .withColumn("is_contaminated", lit(true))
-    docs.filter(col("doc_id") >= 20)
-      .join(contaminated, Seq("doc_id"), "left")
-      .select(
-        col("doc_id"), col("source"),
-        coalesce(col("is_contaminated"), lit(false)).as("is_contaminated"))
-      .orderBy(col("doc_id"))
+    flagContaminated(docs, candidates.join(broadcast(bench), "gram"))
   }
 
   /** Fixed-size per-group sample through the NATIVE bounded aggregate
@@ -752,7 +755,8 @@ object CorpusOps {
 
   /** The linear term over z-scored feature columns x1..x4 + weight
     * columns w0..w4, and the rounded sigmoid — shared by training,
-    * batch scoring, and the streaming admission twin.
+    * batch scoring, and the streaming admission twin
+    * (`StreamOps.qualityAdmissionStream`).
     */
   private[graft] def zLin: Column =
     col("w0") + col("w1") * col("x1") + col("w2") * col("x2") +
@@ -774,8 +778,13 @@ object CorpusOps {
     qualityStats(spark, dir).crossJoin(w)
   }
 
-  private def qualityStats(spark: SparkSession, dir: String): DataFrame = {
-    val feats0 = qualityFeats0(spark, dir)
+  private def qualityStats(spark: SparkSession, dir: String): DataFrame =
+    statsOf(qualityFeats0(spark, dir))
+
+  /** The 1-row standardization model (mu1..sd4, 6 dp) of raw features
+    * x1..x4.
+    */
+  private def statsOf(feats0: DataFrame): DataFrame = {
     val statCols = (1 to 4).flatMap(j => Seq(
       round(avg(col(s"x$j")), 6).as(s"mu$j"),
       round(stddev_pop(col(s"x$j")), 6).as(s"sd$j")))
@@ -802,17 +811,10 @@ object CorpusOps {
     // GD stalls at the majority floor — the log-token-count scale
     // dwarfs the ratio features. Constant features (sd = 0) z-score
     // to 0 and drop out of the model instead of dividing by zero.
-    val statCols = (1 to 4).flatMap(j => Seq(
-      round(avg(col(s"x$j")), 6).as(s"mu$j"),
-      round(stddev_pop(col(s"x$j")), 6).as(s"sd$j")))
-    val stats = feats0.agg(statCols.head, statCols.tail: _*)
-    def zScore(j: Int): Column =
-      when(col(s"sd$j") > 0,
-        round((col(s"x$j") - col(s"mu$j")) / col(s"sd$j"), 6)).otherwise(0.0)
-    val feats = feats0.crossJoin(broadcast(thr)).crossJoin(broadcast(stats))
+    val feats = feats0.crossJoin(broadcast(thr)).crossJoin(broadcast(statsOf(feats0)))
       .select(col("doc_id"),
-        zScore(1).as("x1"), zScore(2).as("x2"),
-        zScore(3).as("x3"), zScore(4).as("x4"),
+        zScoreCol(1).as("x1"), zScoreCol(2).as("x2"),
+        zScoreCol(3).as("x3"), zScoreCol(4).as("x4"),
         when(col("qs") >= col("p25"), 1.0).otherwise(0.0).as("y"))
       .localCheckpoint() // read LrIters + 1 times; features computed once
     // t6 for feature j: the 1e6-scaled integer per-row gradient term
@@ -836,13 +838,9 @@ object CorpusOps {
           lit(wv(0)) + lit(wv(1)) * col("x1") + lit(wv(2)) * col("x2") +
             lit(wv(3)) * col("x3") + lit(wv(4)) * col("x4"), 6)))
       val xs = Seq(lit(1.0), col("x1"), col("x2"), col("x3"), col("x4"))
-      val row = scored.agg(
-        round(lit(wv(0)) + lit(LrEta) * sum(t6(xs(0))) / 1000000.0 / count(lit(1)), 6).as("w0"),
-        round(lit(wv(1)) + lit(LrEta) * sum(t6(xs(1))) / 1000000.0 / count(lit(1)), 6).as("w1"),
-        round(lit(wv(2)) + lit(LrEta) * sum(t6(xs(2))) / 1000000.0 / count(lit(1)), 6).as("w2"),
-        round(lit(wv(3)) + lit(LrEta) * sum(t6(xs(3))) / 1000000.0 / count(lit(1)), 6).as("w3"),
-        round(lit(wv(4)) + lit(LrEta) * sum(t6(xs(4))) / 1000000.0 / count(lit(1)), 6).as("w4"))
-        .head()
+      val ws = (0 to 4).map(j =>
+        round(lit(wv(j)) + lit(LrEta) * sum(t6(xs(j))) / 1000000.0 / count(lit(1)), 6).as(s"w$j"))
+      val row = scored.agg(ws.head, ws.tail: _*).head()
       // over an empty corpus the sums are null: keep the current weights
       wv = Array.tabulate(5)(j => if (row.isNullAt(j)) wv(j) else row.getDouble(j))
     }

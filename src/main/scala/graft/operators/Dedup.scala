@@ -1564,6 +1564,11 @@ object Dedup {
     "dedup_incremental_capped" -> (dedupIncrementalCapped _),
     "dedup_simhash_pairs_served" -> (dedupSimhashPairsServed _))
 
+  /** One (doc_id, bi, bk) row per band of every `sig` signature. */
+  private lazy val bandUnion: String = (0 until NumBands)
+    .map(b => s"SELECT doc_id, $b AS bi, band$b AS bk FROM sig")
+    .mkString(" UNION ALL ")
+
   /** Signatures + LSH candidate pairs as CTEs ending in `cpairs` —
     * shared by the estimate, exact-jaccard, and components oracles.
     */
@@ -1573,9 +1578,6 @@ object Dedup {
     // alone a cross-band md5-prefix collision would create an
     // oracle-only candidate pair (ADVICE r5; probability ~2^-64, but
     // the two sides should express the same relation, not nearly)
-    val bandUnion = (0 until NumBands)
-      .map(b => s"SELECT doc_id, $b AS bi, band$b AS bk FROM sig")
-      .mkString(" UNION ALL ")
     s"""${minhashCteOver(rel)},
        |cpairs AS (
        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1591,9 +1593,15 @@ object Dedup {
     */
   private[operators] lazy val componentsCtes: String =
     s"""$jaccardCtes,
-       |edges AS (
-       |  SELECT doc_a AS u, doc_b AS v FROM jpairs
-       |  UNION ALL SELECT doc_b, doc_a FROM jpairs),
+       |${componentsOver("jpairs")}""".stripMargin
+
+  /** The `edges`, `reach` and `comp` CTEs of the components over the
+    * (doc_a, doc_b) pair CTE `pairs`.
+    */
+  private def componentsOver(pairs: String): String =
+    s"""edges AS (
+       |  SELECT doc_a AS u, doc_b AS v FROM $pairs
+       |  UNION ALL SELECT doc_b, doc_a FROM $pairs),
        |reach(u, v) AS (
        |  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
        |  UNION
@@ -1604,6 +1612,19 @@ object Dedup {
     cpairsCtesOver("documents")
   }
 
+  /** `marked` (each band row with its bucket occupancy from `bocc`)
+    * and `dense` (the rows of over-cap buckets, ranked by doc id) CTEs
+    * of the capped pair builds.
+    */
+  private def markedDenseCtes: String =
+    s"""marked AS (
+       |  SELECT b.doc_id, b.bi, b.bk, o.c
+       |  FROM bands b JOIN bocc o ON b.bi = o.bi AND b.bk = o.bk),
+       |dense AS (
+       |  SELECT doc_id, bi, bk,
+       |    row_number() OVER (PARTITION BY bi, bk ORDER BY doc_id) AS r
+       |  FROM marked WHERE c > $BucketCliqueCap)""".stripMargin
+
   /** The CAPPED pair build as CTEs ending in `kpairs` — the oracle
     * replays BOTH levers of [[cappedPairsOf]] exactly: the same
     * bucket-minimum hub choice and the same (jaccard DESC, neighbor
@@ -1611,21 +1632,12 @@ object Dedup {
     * themselves, not just the surviving values.
     */
   private def cappedPairsCtesOver(rel: String): String = {
-    val bandUnion = (0 until NumBands)
-      .map(b => s"SELECT doc_id, $b AS bi, band$b AS bk FROM sig")
-      .mkString(" UNION ALL ")
     s"""${minhashCteOver(rel)},
        |bands AS ($bandUnion),
        |bocc AS (
        |  SELECT bi, bk, count(*) AS c
        |  FROM bands GROUP BY bi, bk),
-       |marked AS (
-       |  SELECT b.doc_id, b.bi, b.bk, o.c
-       |  FROM bands b JOIN bocc o ON b.bi = o.bi AND b.bk = o.bk),
-       |dense AS (
-       |  SELECT doc_id, bi, bk,
-       |    row_number() OVER (PARTITION BY bi, bk ORDER BY doc_id) AS r
-       |  FROM marked WHERE c > $BucketCliqueCap),
+       |$markedDenseCtes,
        |spairs AS (
        |  SELECT DISTINCT doc_a, doc_b FROM (
        |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1637,20 +1649,7 @@ object Dedup {
        |    FROM dense x JOIN dense y
        |      ON x.bi = y.bi AND x.bk = y.bk
        |      AND y.r > x.r AND y.r <= x.r + $BucketWindow) u),
-       |sizes AS (SELECT doc_id, count(*) AS n_grams FROM sh GROUP BY doc_id),
-       |inter AS (
-       |  SELECT p.doc_a, p.doc_b, count(*) AS n_inter
-       |  FROM spairs p
-       |  JOIN sh sa ON sa.doc_id = p.doc_a
-       |  JOIN sh sb ON sb.doc_id = p.doc_b AND sb.gram = sa.gram
-       |  GROUP BY p.doc_a, p.doc_b),
-       |vpairs AS (
-       |  SELECT doc_a, doc_b, n_inter,
-       |    round(n_inter * 1.0 / (za.n_grams + zb.n_grams - n_inter), 6) AS jaccard
-       |  FROM inter
-       |  JOIN sizes za ON za.doc_id = doc_a
-       |  JOIN sizes zb ON zb.doc_id = doc_b
-       |  WHERE round(n_inter * 1.0 / (za.n_grams + zb.n_grams - n_inter), 6) >= $JaccardThreshold),
+       |${jaccardVerified("spairs", "vpairs")},
        |keep AS (
        |  SELECT DISTINCT least(d, o) AS doc_a, greatest(d, o) AS doc_b
        |  FROM (
@@ -1669,14 +1668,7 @@ object Dedup {
     */
   private lazy val cappedComponentsCtes: String =
     s"""${cappedPairsCtesOver("documents")},
-       |edges AS (
-       |  SELECT doc_a AS u, doc_b AS v FROM kpairs
-       |  UNION ALL SELECT doc_b, doc_a FROM kpairs),
-       |reach(u, v) AS (
-       |  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
-       |  UNION
-       |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-       |comp AS (SELECT u AS doc_id, min(v) AS component FROM reach GROUP BY u)""".stripMargin
+       |${componentsOver("kpairs")}""".stripMargin
 
   /** The jaccard pair relation as reusable CTEs ending in `jpairs`
     * over an arbitrary (doc_id, text) relation — shared (via
@@ -1687,23 +1679,30 @@ object Dedup {
     */
   private[graft] def jaccardCtesOver(rel: String): String = {
     s"""${cpairsCtesOver(rel)},
-       |sizes AS (SELECT doc_id, count(*) AS n_grams FROM sh GROUP BY doc_id),
+       |${jaccardVerified("cpairs", "jpairs")}""".stripMargin
+  }
+
+  private val jaccardCtes: String = jaccardCtesOver("documents")
+
+  /** `sizes`, `inter` and `out` CTEs: the (doc_a, doc_b) candidate
+    * pairs of CTE `cand` whose exact shingle Jaccard (over `sh`)
+    * reaches [[JaccardThreshold]], with n_inter and jaccard.
+    */
+  private def jaccardVerified(cand: String, out: String): String =
+    s"""sizes AS (SELECT doc_id, count(*) AS n_grams FROM sh GROUP BY doc_id),
        |inter AS (
        |  SELECT p.doc_a, p.doc_b, count(*) AS n_inter
-       |  FROM cpairs p
+       |  FROM $cand p
        |  JOIN sh sa ON sa.doc_id = p.doc_a
        |  JOIN sh sb ON sb.doc_id = p.doc_b AND sb.gram = sa.gram
        |  GROUP BY p.doc_a, p.doc_b),
-       |jpairs AS (
+       |$out AS (
        |  SELECT doc_a, doc_b, n_inter,
        |    round(n_inter * 1.0 / (za.n_grams + zb.n_grams - n_inter), 6) AS jaccard
        |  FROM inter
        |  JOIN sizes za ON za.doc_id = doc_a
        |  JOIN sizes zb ON zb.doc_id = doc_b
        |  WHERE round(n_inter * 1.0 / (za.n_grams + zb.n_grams - n_inter), 6) >= $JaccardThreshold)""".stripMargin
-  }
-
-  private val jaccardCtes: String = jaccardCtesOver("documents")
 
   /** SimHash fingerprints as CTEs ending in `sim` — shared by the
     * fingerprint dump and the banded pair-search oracle. The 64-bit
@@ -1803,9 +1802,6 @@ object Dedup {
          |  >= $JaccardThreshold
          |ORDER BY doc_a, doc_b""".stripMargin,
     "dedup_incremental" -> {
-      val bandUnion = (0 until NumBands)
-        .map(b => s"SELECT doc_id, $b AS bi, band$b AS bk FROM sig")
-        .mkString(" UNION ALL ")
       s"""WITH $minhashCte,
          |bands AS ($bandUnion),
          |cand AS (
@@ -1813,34 +1809,7 @@ object Dedup {
          |  FROM bands n JOIN bands c ON n.bi = c.bi AND n.bk = c.bk
          |  WHERE n.doc_id % $NewMod = 0
          |    AND (c.doc_id % $NewMod <> 0 OR c.doc_id < n.doc_id)),
-         |sizes AS (SELECT doc_id, count(*) AS n_grams FROM sh GROUP BY doc_id),
-         |inter AS (
-         |  SELECT p.new_id, p.cand_id, count(*) AS n_inter
-         |  FROM cand p
-         |  JOIN sh sa ON sa.doc_id = p.new_id
-         |  JOIN sh sb ON sb.doc_id = p.cand_id AND sb.gram = sa.gram
-         |  GROUP BY 1, 2),
-         |jac AS (
-         |  SELECT i.new_id, i.cand_id,
-         |    round(n_inter * 1.0 / (za.n_grams + zb.n_grams - n_inter), 6)
-         |      AS jaccard
-         |  FROM inter i
-         |  JOIN sizes za ON za.doc_id = i.new_id
-         |  JOIN sizes zb ON zb.doc_id = i.cand_id
-         |  WHERE round(n_inter * 1.0 / (za.n_grams + zb.n_grams - n_inter), 6)
-         |    >= $JaccardThreshold),
-         |best AS (
-         |  SELECT new_id, cand_id AS match_id, jaccard AS match_jaccard,
-         |    row_number() OVER (PARTITION BY new_id
-         |      ORDER BY jaccard DESC, cand_id) AS rk
-         |  FROM jac)
-         |SELECT d.doc_id, b.match_id, b.match_jaccard,
-         |  CASE WHEN b.match_id IS NOT NULL THEN 'drop' ELSE 'admit' END
-         |    AS action
-         |FROM documents d
-         |LEFT JOIN (SELECT * FROM best WHERE rk = 1) b ON b.new_id = d.doc_id
-         |WHERE d.doc_id % $NewMod = 0
-         |ORDER BY d.doc_id""".stripMargin
+         |$incrementalVerdictsSql""".stripMargin
     },
     "dedup_containment" ->
       s"""WITH docs AS (
@@ -1871,39 +1840,9 @@ object Dedup {
          |  >= $ContainmentThreshold
          |ORDER BY doc_a, doc_b""".stripMargin,
     "dedup_keep_best" ->
-      s"""WITH RECURSIVE $jaccardCtes,
-         |edges AS (
-         |  SELECT doc_a AS u, doc_b AS v FROM jpairs
-         |  UNION ALL SELECT doc_b, doc_a FROM jpairs),
-         |reach(u, v) AS (
-         |  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-         |comp AS (SELECT u AS doc_id, min(v) AS component FROM reach GROUP BY u),
-         |scored AS (
-         |  SELECT doc_id, ${graft.operators.TextAnalysis.qualityScoreSql("text")} AS quality_score
-         |  FROM documents),
-         |ranked AS (
-         |  SELECT c.doc_id, c.component, s.quality_score,
-         |    row_number() OVER (PARTITION BY c.component
-         |      ORDER BY s.quality_score DESC, c.doc_id) AS rk
-         |  FROM comp c JOIN scored s USING (doc_id))
-         |SELECT s.doc_id,
-         |  coalesce(r.component, s.doc_id) AS component,
-         |  s.quality_score,
-         |  coalesce(r.rk = 1, TRUE) AS is_kept
-         |FROM scored s LEFT JOIN ranked r USING (doc_id)
-         |ORDER BY s.doc_id""".stripMargin,
+      keepBestOracle(componentsCtes),
     "dedup_cluster_stats" ->
-      s"""WITH RECURSIVE $jaccardCtes,
-         |edges AS (
-         |  SELECT doc_a AS u, doc_b AS v FROM jpairs
-         |  UNION ALL SELECT doc_b, doc_a FROM jpairs),
-         |reach(u, v) AS (
-         |  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-         |comp AS (SELECT u AS doc_id, min(v) AS component FROM reach GROUP BY u),
+      s"""WITH RECURSIVE $componentsCtes,
          |docstats AS (
          |  SELECT component, count(*) AS n_docs, max(doc_id) AS max_doc
          |  FROM comp GROUP BY 1),
@@ -1914,55 +1853,22 @@ object Dedup {
          |FROM docstats JOIN estats USING (component)
          |ORDER BY component""".stripMargin,
     "dedup_components" ->
-      s"""WITH RECURSIVE $componentsCtes
-         |SELECT doc_id, component,
-         |  count(*) OVER (PARTITION BY component) AS component_size
-         |FROM comp ORDER BY doc_id""".stripMargin,
+      componentsOracle(componentsCtes),
     // identical oracle on purpose: the star-contraction path must
     // reproduce min-label propagation's labelling exactly
     "dedup_components_star" ->
-      s"""WITH RECURSIVE $componentsCtes
-         |SELECT doc_id, component,
-         |  count(*) OVER (PARTITION BY component) AS component_size
-         |FROM comp ORDER BY doc_id""".stripMargin,
+      componentsOracle(componentsCtes),
     "dedup_pairs_capped" ->
       s"""WITH ${cappedPairsCtesOver("documents")}
          |SELECT doc_a, doc_b, n_inter, jaccard FROM kpairs
          |ORDER BY doc_a, doc_b""".stripMargin,
     "dedup_components_capped" ->
-      s"""WITH RECURSIVE $cappedComponentsCtes
-         |SELECT doc_id, component,
-         |  count(*) OVER (PARTITION BY component) AS component_size
-         |FROM comp ORDER BY doc_id""".stripMargin,
+      componentsOracle(cappedComponentsCtes),
     "dedup_keep_best_capped" ->
-      s"""WITH RECURSIVE $cappedComponentsCtes,
-         |scored AS (
-         |  SELECT doc_id, ${graft.operators.TextAnalysis.qualityScoreSql("text")} AS quality_score
-         |  FROM documents),
-         |ranked AS (
-         |  SELECT c.doc_id, c.component, s.quality_score,
-         |    row_number() OVER (PARTITION BY c.component
-         |      ORDER BY s.quality_score DESC, c.doc_id) AS rk
-         |  FROM comp c JOIN scored s USING (doc_id))
-         |SELECT s.doc_id,
-         |  coalesce(r.component, s.doc_id) AS component,
-         |  s.quality_score,
-         |  coalesce(r.rk = 1, TRUE) AS is_kept
-         |FROM scored s LEFT JOIN ranked r USING (doc_id)
-         |ORDER BY s.doc_id""".stripMargin,
+      keepBestOracle(cappedComponentsCtes),
     "dedup_simhash" -> simhashSql,
     "dedup_simhash_pairs" ->
-      s"""WITH $simhashCtes,
-         |bands AS (
-         |  SELECT doc_id, simhash, b.b AS band_idx,
-         |    (simhash >> ($SimhashBandBits * b.b)) & ${(1L << SimhashBandBits) - 1} AS band_bits
-         |  FROM sim, generate_series(0, ${SimhashBands - 1}) b(b)),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |    a.simhash AS fa, b.simhash AS fb
-         |  FROM bands a JOIN bands b
-         |    ON a.band_idx = b.band_idx AND a.band_bits = b.band_bits
-         |    AND a.doc_id < b.doc_id)
+      s"""WITH $simhashCandCtes
          |SELECT doc_a, doc_b, CAST(bit_count(xor(fa, fb)) AS BIGINT) AS hamming
          |FROM cand WHERE bit_count(xor(fa, fb)) <= $SimhashRadius
          |ORDER BY doc_a, doc_b""".stripMargin,
@@ -1970,17 +1876,7 @@ object Dedup {
       val rows = (0 to SimhashSensGrid).map { h =>
         s"($h, ${bandRecall6(64, 4, h)}, ${bandRecall6(64, 8, h)}, ${bandRecall6(64, 16, h)})"
       }.mkString(",\n  ")
-      s"""WITH $simhashCtes,
-         |bands AS (
-         |  SELECT doc_id, simhash, b.b AS band_idx,
-         |    (simhash >> ($SimhashBandBits * b.b)) & ${(1L << SimhashBandBits) - 1} AS band_bits
-         |  FROM sim, generate_series(0, ${SimhashBands - 1}) b(b)),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |    a.simhash AS fa, b.simhash AS fb
-         |  FROM bands a JOIN bands b
-         |    ON a.band_idx = b.band_idx AND a.band_bits = b.band_bits
-         |    AND a.doc_id < b.doc_id),
+      s"""WITH $simhashCandCtes,
          |obs AS (
          |  SELECT CAST(bit_count(xor(fa, fb)) AS BIGINT) AS hamming,
          |    count(*) AS n_pairs
@@ -2046,38 +1942,12 @@ object Dedup {
     "dedup_incremental_capped" -> cappedIncrementalOracle,
     "dedup_simhash_pairs_served" -> oraclesBase("dedup_simhash_pairs"))
 
-  /** The capped admission probe's own oracle — replays the occupancy
-    * gate, the rank window, and the old-or-earlier validity rule of
-    * [[dedupIncrementalCappedOver]] exactly, so the driver compare
-    * pins the cap itself, not just the surviving verdicts.
+  /** The admission verdict per new document from the `cand`
+    * (new_id, cand_id) CTE: its best Jaccard-verified match, `drop`
+    * when one exists, else `admit`.
     */
-  private lazy val cappedIncrementalOracle: String = {
-    val bandUnion = (0 until NumBands)
-      .map(b => s"SELECT doc_id, $b AS bi, band$b AS bk FROM sig")
-      .mkString(" UNION ALL ")
-    s"""WITH $minhashCte,
-       |bands AS ($bandUnion),
-       |bocc AS (SELECT bi, bk, count(*) AS c FROM bands GROUP BY bi, bk),
-       |marked AS (
-       |  SELECT b.doc_id, b.bi, b.bk, o.c
-       |  FROM bands b JOIN bocc o ON b.bi = o.bi AND b.bk = o.bk),
-       |dense AS (
-       |  SELECT doc_id, bi, bk,
-       |    row_number() OVER (PARTITION BY bi, bk ORDER BY doc_id) AS r
-       |  FROM marked WHERE c > $BucketCliqueCap),
-       |cand AS (
-       |  SELECT DISTINCT new_id, cand_id FROM (
-       |    SELECT n.doc_id AS new_id, c.doc_id AS cand_id
-       |    FROM marked n JOIN marked c ON n.bi = c.bi AND n.bk = c.bk
-       |    WHERE n.c <= $BucketCliqueCap AND n.doc_id % $NewMod = 0
-       |      AND (c.doc_id % $NewMod <> 0 OR c.doc_id < n.doc_id)
-       |    UNION ALL
-       |    SELECT x.doc_id AS new_id, y.doc_id AS cand_id
-       |    FROM dense x JOIN dense y ON x.bi = y.bi AND x.bk = y.bk
-       |    WHERE x.doc_id % $NewMod = 0
-       |      AND y.r <> x.r AND abs(y.r - x.r) <= $BucketWindow
-       |      AND (y.doc_id % $NewMod <> 0 OR y.doc_id < x.doc_id)) u),
-       |sizes AS (SELECT doc_id, count(*) AS n_grams FROM sh GROUP BY doc_id),
+  private lazy val incrementalVerdictsSql: String =
+    s"""sizes AS (SELECT doc_id, count(*) AS n_grams FROM sh GROUP BY doc_id),
        |inter AS (
        |  SELECT p.new_id, p.cand_id, count(*) AS n_inter
        |  FROM cand p
@@ -2105,5 +1975,72 @@ object Dedup {
        |LEFT JOIN (SELECT * FROM best WHERE rk = 1) b ON b.new_id = d.doc_id
        |WHERE d.doc_id % $NewMod = 0
        |ORDER BY d.doc_id""".stripMargin
+
+  /** The components oracle over `ctes`, which end in `comp`. */
+  private def componentsOracle(ctes: String): String =
+    s"""WITH RECURSIVE $ctes
+       |SELECT doc_id, component,
+       |  count(*) OVER (PARTITION BY component) AS component_size
+       |FROM comp ORDER BY doc_id""".stripMargin
+
+  /** The keep-best oracle over `ctes`, which end in `comp`: the best
+    * quality score per component is kept, unclustered docs always.
+    */
+  private def keepBestOracle(ctes: String): String =
+    s"""WITH RECURSIVE $ctes,
+       |scored AS (
+       |  SELECT doc_id, ${graft.operators.TextAnalysis.qualityScoreSql("text")} AS quality_score
+       |  FROM documents),
+       |ranked AS (
+       |  SELECT c.doc_id, c.component, s.quality_score,
+       |    row_number() OVER (PARTITION BY c.component
+       |      ORDER BY s.quality_score DESC, c.doc_id) AS rk
+       |  FROM comp c JOIN scored s USING (doc_id))
+       |SELECT s.doc_id,
+       |  coalesce(r.component, s.doc_id) AS component,
+       |  s.quality_score,
+       |  coalesce(r.rk = 1, TRUE) AS is_kept
+       |FROM scored s LEFT JOIN ranked r USING (doc_id)
+       |ORDER BY s.doc_id""".stripMargin
+
+  /** SimHash fingerprints ([[simhashCtes]]) plus `bands` and `cand`:
+    * the distinct same-band fingerprint pairs, doc_a < doc_b.
+    */
+  private lazy val simhashCandCtes: String =
+    s"""$simhashCtes,
+       |bands AS (
+       |  SELECT doc_id, simhash, b.b AS band_idx,
+       |    (simhash >> ($SimhashBandBits * b.b)) & ${(1L << SimhashBandBits) - 1} AS band_bits
+       |  FROM sim, generate_series(0, ${SimhashBands - 1}) b(b)),
+       |cand AS (
+       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
+       |    a.simhash AS fa, b.simhash AS fb
+       |  FROM bands a JOIN bands b
+       |    ON a.band_idx = b.band_idx AND a.band_bits = b.band_bits
+       |    AND a.doc_id < b.doc_id)""".stripMargin
+
+  /** The capped admission probe's own oracle — replays the occupancy
+    * gate, the rank window, and the old-or-earlier validity rule of
+    * [[dedupIncrementalCappedOver]] exactly, so the oracle compare
+    * pins the cap itself, not just the surviving verdicts.
+    */
+  private lazy val cappedIncrementalOracle: String = {
+    s"""WITH $minhashCte,
+       |bands AS ($bandUnion),
+       |bocc AS (SELECT bi, bk, count(*) AS c FROM bands GROUP BY bi, bk),
+       |$markedDenseCtes,
+       |cand AS (
+       |  SELECT DISTINCT new_id, cand_id FROM (
+       |    SELECT n.doc_id AS new_id, c.doc_id AS cand_id
+       |    FROM marked n JOIN marked c ON n.bi = c.bi AND n.bk = c.bk
+       |    WHERE n.c <= $BucketCliqueCap AND n.doc_id % $NewMod = 0
+       |      AND (c.doc_id % $NewMod <> 0 OR c.doc_id < n.doc_id)
+       |    UNION ALL
+       |    SELECT x.doc_id AS new_id, y.doc_id AS cand_id
+       |    FROM dense x JOIN dense y ON x.bi = y.bi AND x.bk = y.bk
+       |    WHERE x.doc_id % $NewMod = 0
+       |      AND y.r <> x.r AND abs(y.r - x.r) <= $BucketWindow
+       |      AND (y.doc_id % $NewMod <> 0 OR y.doc_id < x.doc_id)) u),
+       |$incrementalVerdictsSql""".stripMargin
   }
 }

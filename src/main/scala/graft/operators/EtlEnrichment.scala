@@ -308,54 +308,52 @@ object EtlEnrichment {
        |       THEN 'mapped' ELSE 'generated' END AS match_type
        |FROM part""".stripMargin
 
+  /** `obs` (min price per part and ship date), `flagged` (with the
+    * previous price) and `starts` (the dates a part's price changed)
+    * CTEs — the price versions both SCD2 oracles number.
+    */
+  private val priceStartsCtes =
+    """WITH obs AS (
+      |  SELECT l_partkey, l_shipdate AS obs_date, min(l_extendedprice) AS price
+      |  FROM lineitem GROUP BY 1, 2),
+      |flagged AS (
+      |  SELECT *, lag(price) OVER (PARTITION BY l_partkey ORDER BY obs_date)
+      |    AS prev_price
+      |  FROM obs),
+      |starts AS (
+      |  SELECT l_partkey, obs_date, price FROM flagged
+      |  WHERE prev_price IS NULL OR price <> prev_price)""".stripMargin
+
   val oracles: Map[String, String] = Map(
     "etl_temporal_join" ->
-      """WITH obs AS (
-        |  SELECT l_partkey, l_shipdate AS obs_date, min(l_extendedprice) AS price
-        |  FROM lineitem GROUP BY 1, 2),
-        |flagged AS (
-        |  SELECT *, lag(price) OVER (PARTITION BY l_partkey ORDER BY obs_date)
-        |    AS prev_price
-        |  FROM obs),
-        |starts AS (
-        |  SELECT l_partkey, obs_date, price FROM flagged
-        |  WHERE prev_price IS NULL OR price <> prev_price),
-        |versions AS (
-        |  SELECT l_partkey AS pk,
-        |    CAST(row_number() OVER w AS INT) AS version,
-        |    price, obs_date AS valid_from, lead(obs_date) OVER w AS valid_to
-        |  FROM starts
-        |  WINDOW w AS (PARTITION BY l_partkey ORDER BY obs_date))
-        |SELECT l.l_partkey, v.version, v.price,
-        |  count(*) AS n_lines,
-        |  min(l.l_shipdate) AS first_ship,
-        |  max(l.l_shipdate) AS last_ship
-        |FROM lineitem l
-        |JOIN versions v ON v.pk = l.l_partkey
-        |  AND l.l_shipdate >= v.valid_from
-        |  AND (v.valid_to IS NULL OR l.l_shipdate < v.valid_to)
-        |GROUP BY 1, 2, 3
-        |ORDER BY l_partkey, version""".stripMargin,
+      s"""$priceStartsCtes,
+         |versions AS (
+         |  SELECT l_partkey AS pk,
+         |    CAST(row_number() OVER w AS INT) AS version,
+         |    price, obs_date AS valid_from, lead(obs_date) OVER w AS valid_to
+         |  FROM starts
+         |  WINDOW w AS (PARTITION BY l_partkey ORDER BY obs_date))
+         |SELECT l.l_partkey, v.version, v.price,
+         |  count(*) AS n_lines,
+         |  min(l.l_shipdate) AS first_ship,
+         |  max(l.l_shipdate) AS last_ship
+         |FROM lineitem l
+         |JOIN versions v ON v.pk = l.l_partkey
+         |  AND l.l_shipdate >= v.valid_from
+         |  AND (v.valid_to IS NULL OR l.l_shipdate < v.valid_to)
+         |GROUP BY 1, 2, 3
+         |ORDER BY l_partkey, version""".stripMargin,
     "etl_scd2_history" ->
-      """WITH obs AS (
-        |  SELECT l_partkey, l_shipdate AS obs_date, min(l_extendedprice) AS price
-        |  FROM lineitem GROUP BY 1, 2),
-        |flagged AS (
-        |  SELECT *, lag(price) OVER (PARTITION BY l_partkey ORDER BY obs_date)
-        |    AS prev_price
-        |  FROM obs),
-        |starts AS (
-        |  SELECT l_partkey, obs_date, price FROM flagged
-        |  WHERE prev_price IS NULL OR price <> prev_price)
-        |SELECT l_partkey,
-        |  CAST(row_number() OVER w AS INT) AS version,
-        |  price,
-        |  obs_date AS valid_from,
-        |  lead(obs_date) OVER w AS valid_to,
-        |  (lead(obs_date) OVER w IS NULL) AS is_current
-        |FROM starts
-        |WINDOW w AS (PARTITION BY l_partkey ORDER BY obs_date)
-        |ORDER BY l_partkey, version""".stripMargin,
+      s"""$priceStartsCtes
+         |SELECT l_partkey,
+         |  CAST(row_number() OVER w AS INT) AS version,
+         |  price,
+         |  obs_date AS valid_from,
+         |  lead(obs_date) OVER w AS valid_to,
+         |  (lead(obs_date) OVER w IS NULL) AS is_current
+         |FROM starts
+         |WINDOW w AS (PARTITION BY l_partkey ORDER BY obs_date)
+         |ORDER BY l_partkey, version""".stripMargin,
     "etl_content_defaults" -> (contentDefaultsSql + "\nORDER BY p_partkey"),
     "etl_tax_slab" ->
       """SELECT l_orderkey, l_linenumber, (l_tax > 0.04) AS is_tax,

@@ -63,18 +63,27 @@ object EtlMatching {
       .orderBy(col("p_partkey"))
   }
 
+  /** A part's synthesized raw barcode (a backtick prefix or a dropped
+    * leading digit, by `p_size % 3`) and its normalization: non-digits
+    * stripped, 11- and 12-digit codes left-padded to 12, anything else
+    * null.
+    */
+  private def rawUpc: (Column, Column) = {
+    val base = digits12(col("p_partkey"))
+    val raw = when(col("p_size") % 3 === 0, concat(lit("`"), base))
+      .when(col("p_size") % 3 === 1, substring(base, 2, 11))
+      .otherwise(base)
+    val digits = regexp_replace(raw, "[^0-9]", "")
+    (raw, when(length(digits).between(11, 12), lpad(digits, 12, "0")))
+  }
+
   /** Stage 1a: barcode validation + normalization
     * (batch_processor.py:417-423; `BarcodeValidator` + `normalize_upc_code`).
     * Raw codes arrive with backtick junk / missing leading zero; we strip
     * non-digits, pad 11-digit codes to 12, then check-digit validate.
     */
   def upcValidate(spark: SparkSession, dir: String): DataFrame = {
-    val base = digits12(col("p_partkey"))
-    val raw = when(col("p_size") % 3 === 0, concat(lit("`"), base))
-      .when(col("p_size") % 3 === 1, substring(base, 2, 11))
-      .otherwise(base)
-    val digits = regexp_replace(raw, "[^0-9]", "")
-    val padded = when(length(digits).between(11, 12), lpad(digits, 12, "0"))
+    val (raw, padded) = rawUpc
     Tables.part(spark, dir)
       .select(
         col("p_partkey"),
@@ -137,12 +146,18 @@ object EtlMatching {
     */
   private val SimLenBand = 7 // band width > threshold ⇒ result-invisible
 
-  def similarityMatch(spark: SparkSession, dir: String): DataFrame = {
-    val threshold = 6
-    val masters = Tables.part(spark, dir)
+  /** The master catalog by name: PROMO parts, one (master_name,
+    * master_id = smallest key) row per distinct name.
+    */
+  private def promoMasters(spark: SparkSession, dir: String): DataFrame =
+    Tables.part(spark, dir)
       .filter(col("p_type") === "PROMO")
       .groupBy(col("p_name").as("master_name"))
       .agg(min(col("p_partkey")).as("master_id"))
+
+  def similarityMatch(spark: SparkSession, dir: String): DataFrame = {
+    val threshold = 6
+    val masters = promoMasters(spark, dir)
       .withColumn("block", substring(col("master_name"), 1, 1))
       .withColumn("lband", floor(length(col("master_name")) / SimLenBand))
     val candidates = Tables.part(spark, dir)
@@ -203,10 +218,7 @@ object EtlMatching {
     * vocabulary, not the feed size.
     */
   def accentFoldMatch(spark: SparkSession, dir: String): DataFrame = {
-    val masters = Tables.part(spark, dir)
-      .filter(col("p_type") === "PROMO")
-      .groupBy(col("p_name").as("master_name"))
-      .agg(min(col("p_partkey")).as("master_id"))
+    val masters = promoMasters(spark, dir)
       .withColumn("fold_key", foldAccents(col("master_name")))
     val incoming = Tables.part(spark, dir)
       .filter(col("p_type") =!= "PROMO")
@@ -251,12 +263,7 @@ object EtlMatching {
     * three keyed joins, a union.
     */
   def matchWaterfall(spark: SparkSession, dir: String): DataFrame = {
-    val base = digits12(col("p_partkey"))
-    val raw = when(col("p_size") % 3 === 0, concat(lit("`"), base))
-      .when(col("p_size") % 3 === 1, substring(base, 2, 11))
-      .otherwise(base)
-    val digits = regexp_replace(raw, "[^0-9]", "")
-    val padded = when(length(digits).between(11, 12), lpad(digits, 12, "0"))
+    val (_, padded) = rawUpc
     val incoming = Tables.part(spark, dir)
       .select(col("p_partkey"), col("p_name").as("product_name"),
         when(coalesce(call_function("upc_valid", padded), lit(false)), padded)

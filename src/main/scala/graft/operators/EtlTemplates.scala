@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,30 +16,38 @@ object EtlTemplates {
 
   private val MaxProducts = 30
 
+  /** Active products numbered within their category (`rn`, by name
+    * then key), with the category size (`total`) and the ≤30-product
+    * chunk each falls in (`chunk`) — the rows both template operators
+    * group. Inactive products are skipped.
+    */
+  private def chunkedActive(spark: SparkSession, dir: String): DataFrame = {
+    val active = Tables.part(spark, dir)
+      .filter(col("p_size") % 13 =!= 0)
+      .select(col("p_partkey"), col("p_name"), col("p_type").as("category"))
+    val w = Window.partitionBy(col("category")).orderBy(col("p_name"), col("p_partkey"))
+    active
+      .withColumn("rn", row_number().over(w))
+      .withColumn("total", count(lit(1)).over(Window.partitionBy(col("category"))))
+      .withColumn("chunk", floor((col("rn") - 1) / lit(MaxProducts.toDouble)).cast("long"))
+  }
+
+  /** `cat` when the category fits one template, else `cat N`. */
+  private val templateName: Column =
+    when(ceil(col("total") / lit(MaxProducts.toDouble)) === 1, col("category"))
+      .otherwise(concat(col("category"), lit(" "), (col("chunk") + 1).cast("string")))
+      .as("template_name")
+
   /** Category grouping + ≤30-product chunking + template naming
     * (templatecreation.py:157-207). One shuffle on the category key;
     * per-category windows (bounded group sizes by construction).
     */
-  def templateGroups(spark: SparkSession, dir: String): DataFrame = {
-    val active = Tables.part(spark, dir)
-      .filter(col("p_size") % 13 =!= 0) // inactive products are skipped
-      .select(col("p_partkey"), col("p_name"), col("p_type").as("category"))
-    val w = Window.partitionBy(col("category")).orderBy(col("p_name"), col("p_partkey"))
-    val chunked = active
-      .withColumn("rn", row_number().over(w))
-      .withColumn("total", count(lit(1)).over(Window.partitionBy(col("category"))))
-      .withColumn("chunk", floor((col("rn") - 1) / lit(MaxProducts.toDouble)).cast("long"))
-    chunked
+  def templateGroups(spark: SparkSession, dir: String): DataFrame =
+    chunkedActive(spark, dir)
       .groupBy(col("category"), col("chunk"), col("total"))
       .agg(count(lit(1)).as("product_count"))
-      .select(
-        col("category"),
-        when(ceil(col("total") / lit(MaxProducts.toDouble)) === 1, col("category"))
-          .otherwise(concat(col("category"), lit(" "), (col("chunk") + 1).cast("string")))
-          .as("template_name"),
-        col("product_count"))
+      .select(col("category"), templateName, col("product_count"))
       .orderBy(col("category"), col("template_name"))
-  }
 
   /** Header/body text generation (templatecreation.py:263-285):
     * dictionary lookup with `Explore Our {cat}!` fallback. The literal
@@ -79,32 +87,18 @@ object EtlTemplates {
     * `collect_list` — string-joined so the oracle compare is
     * representation-stable). Same chunking/naming as `templateGroups`.
     */
-  def templateSections(spark: SparkSession, dir: String): DataFrame = {
-    val active = Tables.part(spark, dir)
-      .filter(col("p_size") % 13 =!= 0)
-      .select(col("p_partkey"), col("p_name"), col("p_type").as("category"))
-    val w = Window.partitionBy(col("category")).orderBy(col("p_name"), col("p_partkey"))
-    val chunked = active
-      .withColumn("rn", row_number().over(w))
-      .withColumn("total", count(lit(1)).over(Window.partitionBy(col("category"))))
-      .withColumn("chunk", floor((col("rn") - 1) / lit(MaxProducts.toDouble)).cast("long"))
+  def templateSections(spark: SparkSession, dir: String): DataFrame =
+    chunkedActive(spark, dir)
       .withColumn("retailer_id", concat(lit("r-"), col("p_partkey")))
-    chunked
       .groupBy(col("category"), col("chunk"), col("total"))
       .agg(
         concat_ws(",", array_sort(collect_list(struct(col("rn"), col("retailer_id")))
           .cast("array<struct<rn:long,retailer_id:string>>")
         ).getField("retailer_id")).as("product_retailer_ids"),
         count(lit(1)).as("product_count"))
-      .select(
-        col("category"),
-        when(ceil(col("total") / lit(MaxProducts.toDouble)) === 1, col("category"))
-          .otherwise(concat(col("category"), lit(" "), (col("chunk") + 1).cast("string")))
-          .as("template_name"),
-        col("product_retailer_ids"),
+      .select(col("category"), templateName, col("product_retailer_ids"),
         col("product_count"))
       .orderBy(col("category"), col("template_name"))
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "etl_template_groups"   -> (templateGroups _),
@@ -112,22 +106,7 @@ object EtlTemplates {
     "etl_template_sections" -> (templateSections _))
 
   val oracles: Map[String, String] = Map(
-    "etl_template_groups" ->
-      s"""WITH active AS (
-         |  SELECT p_partkey, p_name, p_type AS category FROM part
-         |  WHERE p_size % 13 <> 0
-         |), chunked AS (
-         |  SELECT category,
-         |    row_number() OVER (PARTITION BY category ORDER BY p_name, p_partkey) AS rn,
-         |    count(*) OVER (PARTITION BY category) AS total
-         |  FROM active)
-         |SELECT category,
-         |  CASE WHEN ceil(total / $MaxProducts.0) = 1 THEN category
-         |       ELSE category || ' ' || CAST(CAST(floor((rn - 1) / $MaxProducts.0) AS BIGINT) + 1 AS VARCHAR) END AS template_name,
-         |  count(*) AS product_count
-         |FROM chunked
-         |GROUP BY category, CAST(floor((rn - 1) / $MaxProducts.0) AS BIGINT), total
-         |ORDER BY category, template_name""".stripMargin,
+    "etl_template_groups" -> templatesOracle("", ""),
     "etl_header_text" ->
       """WITH cats AS (
         |  SELECT DISTINCT p_type AS category FROM part
@@ -153,21 +132,26 @@ object EtlTemplates {
         |  'Check out our amazing selection of ' || lower(category) ||
         |    '. Order now for the best dining experience!' AS body_text
         |FROM cats ORDER BY category""".stripMargin,
-    "etl_template_sections" ->
-      s"""WITH active AS (
-         |  SELECT p_partkey, p_name, p_type AS category FROM part
-         |  WHERE p_size % 13 <> 0
-         |), chunked AS (
-         |  SELECT category, 'r-' || p_partkey AS retailer_id,
-         |    row_number() OVER (PARTITION BY category ORDER BY p_name, p_partkey) AS rn,
-         |    count(*) OVER (PARTITION BY category) AS total
-         |  FROM active)
-         |SELECT category,
-         |  CASE WHEN ceil(total / $MaxProducts.0) = 1 THEN category
-         |       ELSE category || ' ' || CAST(CAST(floor((rn - 1) / $MaxProducts.0) AS BIGINT) + 1 AS VARCHAR) END AS template_name,
-         |  string_agg(retailer_id, ',' ORDER BY rn) AS product_retailer_ids,
-         |  count(*) AS product_count
-         |FROM chunked
-         |GROUP BY category, CAST(floor((rn - 1) / $MaxProducts.0) AS BIGINT), total
-         |ORDER BY category, template_name""".stripMargin)
+    "etl_template_sections" -> templatesOracle(" 'r-' || p_partkey AS retailer_id,",
+      "  string_agg(retailer_id, ',' ORDER BY rn) AS product_retailer_ids,\n"))
+
+  /** The oracle of both template operators: `chunkCols` joins the
+    * chunked rows' select list, `aggCols` precedes the product count.
+    */
+  private def templatesOracle(chunkCols: String, aggCols: String): String =
+    s"""WITH active AS (
+       |  SELECT p_partkey, p_name, p_type AS category FROM part
+       |  WHERE p_size % 13 <> 0
+       |), chunked AS (
+       |  SELECT category,$chunkCols
+       |    row_number() OVER (PARTITION BY category ORDER BY p_name, p_partkey) AS rn,
+       |    count(*) OVER (PARTITION BY category) AS total
+       |  FROM active)
+       |SELECT category,
+       |  CASE WHEN ceil(total / $MaxProducts.0) = 1 THEN category
+       |       ELSE category || ' ' || CAST(CAST(floor((rn - 1) / $MaxProducts.0) AS BIGINT) + 1 AS VARCHAR) END AS template_name,
+       |${aggCols}  count(*) AS product_count
+       |FROM chunked
+       |GROUP BY category, CAST(floor((rn - 1) / $MaxProducts.0) AS BIGINT), total
+       |ORDER BY category, template_name""".stripMargin
 }

@@ -319,9 +319,7 @@ object GraphOps {
     */
   private[operators] def pagerankAdjacency(
       pairs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val jp = pairs.toDF("a", "b")
-    val edges = jp.select(col("a").as("src"), col("b").as("dst"))
-      .union(jp.select(col("b").as("src"), col("a").as("dst")))
+    val edges = symmetricEdges(pairs)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
     val weighted = edges.join(deg, "src").localCheckpoint()
     val nRel = deg.agg(count(lit(1)).as("n_nodes")).localCheckpoint()
@@ -367,14 +365,20 @@ object GraphOps {
   def graphLabelPropagation(spark: SparkSession, dir: String): DataFrame =
     labelPropagationOf(knnEdges(spark, dir))
 
+  /** Both directions (src, dst) of every edge of an (a, b) pair
+    * relation — the adjacency each iterative graph operator walks.
+    */
+  private def symmetricEdges(pairs: DataFrame): DataFrame = {
+    val jp = pairs.toDF("a", "b")
+    jp.select(col("a").as("src"), col("b").as("dst"))
+      .union(jp.select(col("b").as("src"), col("a").as("dst")))
+  }
+
   /** LPA over any (a, b) pair relation with a < b — exposed for specs
     * to drive planted community structures.
     */
   def labelPropagationOf(pairs: DataFrame): DataFrame = {
-    val jp = pairs.toDF("a", "b")
-    val edges = jp.select(col("a").as("src"), col("b").as("dst"))
-      .union(jp.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint()
+    val edges = symmetricEdges(pairs).localCheckpoint()
     var labels = edges.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
     for (_ <- 1 to Iters) {
@@ -534,10 +538,7 @@ object GraphOps {
     * specs (cliques survive whole; trees peel to nothing).
     */
   def kcoreOf(pairs: DataFrame): DataFrame = {
-    val jp = pairs.toDF("a", "b")
-    var edges = jp.select(col("a").as("src"), col("b").as("dst"))
-      .union(jp.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint()
+    var edges = symmetricEdges(pairs).localCheckpoint()
     for (_ <- 1 to KcoreRounds) {
       val keep = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= KcoreK)
@@ -589,10 +590,7 @@ object GraphOps {
     * for specs (hand-traced paths, unreached tails).
     */
   def bfsOf(pairs: DataFrame): DataFrame = {
-    val jp = pairs.toDF("a", "b")
-    val edges = jp.select(col("a").as("src"), col("b").as("dst"))
-      .union(jp.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint()
+    val edges = symmetricEdges(pairs).localCheckpoint()
     var dist = edges.select(col("src").as("node")).distinct()
       .filter(expr("node % 50 = 0"))
       .withColumn("dist", lit(0L))
@@ -627,10 +625,7 @@ object GraphOps {
     * specs (hand-computable wedges and squares).
     */
   def linkPredictionOf(pairs: DataFrame): DataFrame = {
-    val jp = pairs.toDF("a", "b")
-    val edges = jp.select(col("a").as("src"), col("b").as("dst"))
-      .union(jp.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint()
+    val edges = symmetricEdges(pairs).localCheckpoint()
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
     // wedges u—v—w with u < w, v's degree riding along for Adamic-Adar
     val left = edges.select(col("src").as("v"), col("dst").as("u"))
@@ -639,7 +634,7 @@ object GraphOps {
       .join(deg.select(col("src").as("v"), col("d").as("deg_v")), "v")
     // candidates are NON-edges: drop pairs already linked (canonical
     // a < b matches the u < w orientation)
-    val cand = wedges.join(jp,
+    val cand = wedges.join(pairs.toDF("a", "b"),
       col("u") === col("a") && col("w") === col("b"), "left_anti")
     val scored = cand
       .groupBy(col("u"), col("w"))

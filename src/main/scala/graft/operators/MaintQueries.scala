@@ -103,6 +103,29 @@ object MaintQueries {
       .deleteRecursively(new java.io.File(root))
   }
 
+  /** The three commits of a time-travel chain: `rel`'s rows whose
+    * hashed `key` falls in class {1, 2}, {3} and {0} mod 4.
+    */
+  private def thirds(rel: DataFrame, key: String): (DataFrame, DataFrame, DataFrame) = {
+    val m = hmod(col(key), 4)
+    (rel.filter(m.isin(1, 2)), rel.filter(m === 3), rel.filter(m === 0))
+  }
+
+  /** Compact `root` (its second commit must have written a delta),
+    * apply `third`, vacuum with keep = 2, and require that the vacuum
+    * really removed v=1 and v=2 — otherwise a vacuum-travel query
+    * degenerates into its plain time-travel twin.
+    */
+  private def compactThenVacuum(spark: SparkSession, root: String)(third: => Unit): Unit = {
+    require(graft.sinks.IdempotentMergeSink.compact(spark, root),
+      s"compact was a no-op — the second commit wrote no delta at $root")
+    third
+    graft.sinks.IdempotentMergeSink.vacuum(root, keep = 2)
+    require(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "v=1")) &&
+        !java.nio.file.Files.exists(java.nio.file.Paths.get(root, "v=2")),
+      s"vacuum(keep=2) left v=1/v=2 in place at $root")
+  }
+
   /** Fixed node count of the document-keyed working slices: the
     * md5-RANK-smallest doc ids (ORDER BY md5 LIMIT n — deterministic
     * on both engines). 1024 keeps the retained-version pair answers
@@ -174,9 +197,7 @@ object MaintQueries {
   def maintBm25DfTimeTravel(spark: SparkSession, dir: String): DataFrame =
     withRoot("bm25") { root =>
       val docs = Tables.documents(spark, dir).select("doc_id", "text")
-      val b1 = docs.filter(hmod(col("doc_id"), 4).isin(1, 2))
-      val b2 = docs.filter(hmod(col("doc_id"), 4) === 3)
-      val b3 = docs.filter(hmod(col("doc_id"), 4) === 0)
+      val (b1, b2, b3) = thirds(docs, "doc_id")
       IndexMaintenance.bootstrapBm25(spark, root, b1, "b1")
       IndexMaintenance.refreshBm25(spark, root, b2, "b2")
       IndexMaintenance.refreshBm25(spark, root, b3, "b3")
@@ -197,21 +218,11 @@ object MaintQueries {
   def maintBm25VacuumTravel(spark: SparkSession, dir: String): DataFrame =
     withRoot("bm25_vac") { root =>
       val docs = Tables.documents(spark, dir).select("doc_id", "text")
-      val b1 = docs.filter(hmod(col("doc_id"), 4).isin(1, 2))
-      val b2 = docs.filter(hmod(col("doc_id"), 4) === 3)
-      val b3 = docs.filter(hmod(col("doc_id"), 4) === 0)
+      val (b1, b2, b3) = thirds(docs, "doc_id")
       IndexMaintenance.bootstrapBm25(spark, root, b1, "b1")
       IndexMaintenance.refreshBm25(spark, root, b2, "b2")
       val dfRoot = IndexMaintenance.bm25DfRoot(root)
-      require(graft.sinks.IdempotentMergeSink.compact(spark, dfRoot),
-        "compact was a no-op — the b2 refresh did not commit a df delta")
-      IndexMaintenance.refreshBm25(spark, root, b3, "b3")
-      graft.sinks.IdempotentMergeSink.vacuum(dfRoot, keep = 2)
-      // the vacuum must have REMOVED the pre-compaction versions —
-      // otherwise this degenerates into maint_bm25_df_time_travel
-      require(!java.nio.file.Files.exists(java.nio.file.Paths.get(dfRoot, "v=1")) &&
-          !java.nio.file.Files.exists(java.nio.file.Paths.get(dfRoot, "v=2")),
-        s"vacuum(keep=2) left v=1/v=2 in place at $dfRoot")
+      compactThenVacuum(spark, dfRoot)(IndexMaintenance.refreshBm25(spark, root, b3, "b3"))
       IndexMaintenance.bm25DfAt(spark, root, 3).orderBy("term")
     }
 
@@ -329,9 +340,7 @@ object MaintQueries {
         .orderBy(md5(col("key").cast("string")))
         .limit(KnnSliceN)
         .localCheckpoint()
-      val b1 = slice.filter(hmod(col("key"), 4).isin(1, 2))
-      val b2 = slice.filter(hmod(col("key"), 4) === 3)
-      val b3 = slice.filter(hmod(col("key"), 4) === 0)
+      val (b1, b2, b3) = thirds(slice, "key")
       IndexMaintenance.bootstrapKnn(spark, root, b1)
       IndexMaintenance.refreshKnn(spark, root, b1, b2, "b2")
       IndexMaintenance.refreshKnn(spark, root, b1.unionByName(b2), b3, "b3")
@@ -351,9 +360,7 @@ object MaintQueries {
   def maintPairsTimeTravel(spark: SparkSession, dir: String): DataFrame =
     withRoot("pairs_tt") { root =>
       val docs = docSlice(spark, dir)
-      val b1 = docs.filter(hmod(col("doc_id"), 4).isin(1, 2))
-      val b2 = docs.filter(hmod(col("doc_id"), 4) === 3)
-      val b3 = docs.filter(hmod(col("doc_id"), 4) === 0)
+      val (b1, b2, b3) = thirds(docs, "doc_id")
       IndexMaintenance.bootstrap(spark, root, b1)
       IndexMaintenance.refresh(spark, root, b1, b2, "b2")
       IndexMaintenance.refresh(spark, root, b1.unionByName(b2), b3, "b3")
@@ -375,20 +382,11 @@ object MaintQueries {
   def maintPairsVacuumTravel(spark: SparkSession, dir: String): DataFrame =
     withRoot("pairs_vac") { root =>
       val docs = docSlice(spark, dir)
-      val b1 = docs.filter(hmod(col("doc_id"), 4).isin(1, 2))
-      val b2 = docs.filter(hmod(col("doc_id"), 4) === 3)
-      val b3 = docs.filter(hmod(col("doc_id"), 4) === 0)
+      val (b1, b2, b3) = thirds(docs, "doc_id")
       IndexMaintenance.bootstrap(spark, root, b1)
       IndexMaintenance.refresh(spark, root, b1, b2, "b2")
-      require(graft.sinks.IdempotentMergeSink.compact(spark, root),
-        "compact was a no-op — the v2 refresh did not commit a delta")
-      IndexMaintenance.refresh(spark, root, b1.unionByName(b2), b3, "b3")
-      graft.sinks.IdempotentMergeSink.vacuum(root, keep = 2)
-      // the vacuum must have REMOVED the pre-compaction versions —
-      // otherwise this query degenerates into maint_pairs_time_travel
-      require(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "v=1")) &&
-          !java.nio.file.Files.exists(java.nio.file.Paths.get(root, "v=2")),
-        s"vacuum(keep=2) left v=1/v=2 in place at $root")
+      compactThenVacuum(spark, root)(
+        IndexMaintenance.refresh(spark, root, b1.unionByName(b2), b3, "b3"))
       IndexMaintenance.pairsAt(spark, root, 3).orderBy("doc_a", "doc_b")
     }
 

@@ -140,7 +140,7 @@ object Multimodal {
     */
   def multimodalPhashPairs(spark: SparkSession, dir: String): DataFrame =
     dctPairsOver(dctFingerprints(spark, dir).localCheckpoint(),
-      nBands = 4, bandBits = 16, radius = DctRadiusCoarse)
+      CoarseBands, DctRadiusCoarse)
       .orderBy(col("doc_a"), col("doc_b"))
 
   /** The (doc_id, modality, payload_hex, payload_md5) projection the
@@ -480,21 +480,6 @@ object Multimodal {
     dctPairsOver(servedDctFingerprints(spark, dir))
       .orderBy(col("doc_a"), col("doc_b"))
 
-  /** Band keys of a fingerprint relation — the probe/index shape the
-    * batch pair search, the incremental refresh, and the coarse
-    * production variant all share. `nBands` bands of `bandBits` bits
-    * make the banded search lossless to radius nBands − 1 (pigeonhole).
-    */
-  private def dctBandsOf(fp: DataFrame, nBands: Int = DctBands,
-      bandBits: Int = 4): DataFrame =
-    fp.select(col("doc_id"), col("modality"), col("phash64"),
-      explode(array((0 until nBands).map(b => struct(
-        lit(b).as("band_idx"),
-        shiftright(col("phash64"), bandBits * b)
-          .bitwiseAND(lit((1L << bandBits) - 1)).as("band_bits"))): _*)).as("bb"))
-      .select(col("doc_id"), col("modality"), col("phash64"),
-        col("bb.band_idx"), col("bb.band_bits"))
-
   /** The EXACT search's banding, r12: 11 uneven bands (widths 5-6)
     * over the 64 bits — the minimum band count pigeonhole-lossless at
     * [[DctRadius]] = 10 (10 flips cannot touch all 11 bands), with the
@@ -511,9 +496,19 @@ object Multimodal {
     }
   }
 
-  private def dctFineBandsOf(fp: DataFrame): DataFrame =
+  /** 4 uniform 16-bit bands — the coarse production search's layout,
+    * lossless to radius [[DctRadiusCoarse]].
+    */
+  private val CoarseBands: Seq[(Int, Int, Int)] = (0 until 4).map(b => (b, 16 * b, 16))
+
+  /** Band keys of a fingerprint relation under a (band_idx, lo_bit,
+    * width) layout — the probe/index shape the batch pair search, the
+    * incremental refresh, and the capped search all share.
+    */
+  private def dctBandsOf(fp: DataFrame,
+      layout: Seq[(Int, Int, Int)] = FineBands): DataFrame =
     fp.select(col("doc_id"), col("modality"), col("phash64"),
-      explode(array(FineBands.map { case (i, lo, w) => struct(
+      explode(array(layout.map { case (i, lo, w) => struct(
         lit(i).as("band_idx"),
         shiftright(col("phash64"), lo)
           .bitwiseAND(lit((1L << w) - 1)).as("band_bits"))
@@ -521,25 +516,29 @@ object Multimodal {
       .select(col("doc_id"), col("modality"), col("phash64"),
         col("bb.band_idx"), col("bb.band_bits"))
 
-  /** nBands = 0 selects the exact search's [[FineBands]] scheme;
-    * explicit (nBands, bandBits) select a uniform banding (the coarse
-    * production form passes 4 × 16).
+  /** The banded pair search within each modality: pairs sharing a band
+    * key under `layout`, Hamming-verified to `radius`.
     */
-  private[graft] def dctPairsOver(fp: DataFrame, nBands: Int = 0,
-      bandBits: Int = 4, radius: Int = DctRadius): DataFrame = {
-    val bands = if (nBands == 0) dctFineBandsOf(fp)
-      else dctBandsOf(fp, nBands, bandBits)
-    bands.select(col("modality"), col("band_idx"), col("band_bits"),
+  private[graft] def dctPairsOver(fp: DataFrame,
+      layout: Seq[(Int, Int, Int)] = FineBands, radius: Int = DctRadius): DataFrame = {
+    val bands = dctBandsOf(fp, layout)
+    withinRadius(bands.select(col("modality"), col("band_idx"), col("band_bits"),
         col("doc_id").as("doc_a"), col("phash64").as("fa"))
       .join(bands.select(col("modality"), col("band_idx"), col("band_bits"),
         col("doc_id").as("doc_b"), col("phash64").as("fb")),
         Seq("modality", "band_idx", "band_bits"))
       .filter(col("doc_a") < col("doc_b"))
-      .select("modality", "doc_a", "doc_b", "fa", "fb").distinct()
+      .select("modality", "doc_a", "doc_b", "fa", "fb"), radius)
+  }
+
+  /** The distinct (modality, doc_a, doc_b, fa, fb) candidate pairs
+    * whose fingerprints lie within Hamming `radius`, with the distance.
+    */
+  private def withinRadius(cand: DataFrame, radius: Int): DataFrame =
+    cand.distinct()
       .withColumn("hamming", expr("bit_count(fa ^ fb)").cast("long"))
       .filter(col("hamming") <= radius)
       .select("modality", "doc_a", "doc_b", "hamming")
-  }
 
   /** The coarse-banded production operating point: 4 bands × 16 bits,
     * lossless to radius [[DctRadiusCoarse]]. The exact ≤10 search's
@@ -618,7 +617,7 @@ object Multimodal {
 
   def multimodalPhashDctPairsR3(spark: SparkSession, dir: String): DataFrame =
     dctPairsOver(servedDctFingerprints(spark, dir),
-      nBands = 4, bandBits = 16, radius = DctRadiusCoarse)
+      CoarseBands, DctRadiusCoarse)
       .orderBy(col("doc_a"), col("doc_b"))
 
   /** Bucket-occupancy threshold and sorted-window width of the CAPPED
@@ -668,9 +667,9 @@ object Multimodal {
     */
   private[graft] def cappedDctPairsOver(fp: DataFrame): DataFrame = {
     val bucketKeys = Seq("modality", "band_idx", "band_bits")
-    val occ = dctFineBandsOf(fp).groupBy(bucketKeys.map(col): _*)
+    val occ = dctBandsOf(fp).groupBy(bucketKeys.map(col): _*)
       .agg(count(lit(1)).as("occ"))
-    val marked = dctFineBandsOf(fp).join(occ, bucketKeys)
+    val marked = dctBandsOf(fp).join(occ, bucketKeys)
       .localCheckpoint(false) // clique + both window sides read it
     val small = marked.filter(col("occ") <= DctCliqueCap)
     val clique = small
@@ -703,11 +702,7 @@ object Multimodal {
         greatest(col("da"), col("db")).as("doc_b"),
         when(col("da") < col("db"), col("fra")).otherwise(col("frb")).as("fa"),
         when(col("da") < col("db"), col("frb")).otherwise(col("fra")).as("fb"))
-    clique.union(windowed)
-      .distinct()
-      .withColumn("hamming", expr("bit_count(fa ^ fb)").cast("long"))
-      .filter(col("hamming") <= DctRadius)
-      .select("modality", "doc_a", "doc_b", "hamming")
+    withinRadius(clique.union(windowed), DctRadius)
   }
 
   /** New perceptual pairs introduced by a fingerprint batch: batch
@@ -718,7 +713,7 @@ object Multimodal {
     * Work ∝ batch × touched band buckets.
     */
   private[graft] def dctNewPairs(batchFp: DataFrame, baseFp: DataFrame): DataFrame = {
-    val bands = dctFineBandsOf(baseFp.unionByName(batchFp))
+    val bands = dctBandsOf(baseFp.unionByName(batchFp))
       .join(batchFp.select(col("doc_id").as("nid")).distinct(),
         col("doc_id") === col("nid"), "left")
       .withColumn("is_new", col("nid").isNotNull)
@@ -726,7 +721,7 @@ object Multimodal {
     val newKeys = bands.filter(col("is_new"))
       .select(col("doc_id").as("new_id"), col("phash64").as("fn"),
         col("modality"), col("band_idx"), col("band_bits"))
-    newKeys
+    withinRadius(newKeys
       .join(bands.select(col("doc_id").as("cand_id"), col("phash64").as("fc"),
         col("modality"), col("band_idx"), col("band_bits"),
         col("is_new").as("cand_new")),
@@ -737,11 +732,7 @@ object Multimodal {
         least(col("new_id"), col("cand_id")).as("doc_a"),
         greatest(col("new_id"), col("cand_id")).as("doc_b"),
         when(col("new_id") < col("cand_id"), col("fn")).otherwise(col("fc")).as("fa"),
-        when(col("new_id") < col("cand_id"), col("fc")).otherwise(col("fn")).as("fb"))
-      .distinct()
-      .withColumn("hamming", expr("bit_count(fa ^ fb)").cast("long"))
-      .filter(col("hamming") <= DctRadius)
-      .select("modality", "doc_a", "doc_b", "hamming")
+        when(col("new_id") < col("cand_id"), col("fc")).otherwise(col("fn")).as("fb")), DctRadius)
   }
 
   /** Frame sampling for the video rows: up to `MaxFrames` evenly-spaced
@@ -952,19 +943,36 @@ object Multimodal {
   private[graft] def dctPairsOracleWhere(where: String): String =
     s"""WITH $dctCtes,
        |fps AS (SELECT * FROM ph64 WHERE $where),
-       |bands AS (
+       |${bandCandCtes("fps", DctBands, 4)}
+       |${pairsFromCand(DctRadius)}""".stripMargin
+
+  /** The coarse 4 × 16-bit banded pair oracle over every fingerprint. */
+  private lazy val coarsePairsOracle: String =
+    s"""WITH $dctCtes,
+       |${bandCandCtes("ph64", 4, 16)}
+       |${pairsFromCand(DctRadiusCoarse)}""".stripMargin
+
+  /** `bands` (uniform `bits`-wide bands 0 until `nBands` of `from`'s
+    * fingerprints) and `cand` (the distinct same-band pairs within a
+    * modality, doc_a < doc_b, with both fingerprints) CTEs.
+    */
+  private def bandCandCtes(from: String, nBands: Int, bits: Int): String =
+    s"""bands AS (
        |  SELECT doc_id, modality, phash64,
-       |    b.b AS band_idx, (phash64 >> (4 * b.b)) & 15 AS band_bits
-       |  FROM fps, generate_series(0, ${DctBands - 1}) b(b)),
+       |    b.b AS band_idx, (phash64 >> ($bits * b.b)) & ${(1L << bits) - 1} AS band_bits
+       |  FROM $from, generate_series(0, ${nBands - 1}) b(b)),
        |cand AS (
        |  SELECT DISTINCT a.modality, a.doc_id AS doc_a, b.doc_id AS doc_b,
        |    a.phash64 AS fa, b.phash64 AS fb
        |  FROM bands a JOIN bands b
        |    ON a.modality = b.modality AND a.band_idx = b.band_idx
-       |    AND a.band_bits = b.band_bits AND a.doc_id < b.doc_id)
-       |SELECT modality, doc_a, doc_b,
+       |    AND a.band_bits = b.band_bits AND a.doc_id < b.doc_id)""".stripMargin
+
+  /** The `cand` pairs within Hamming `radius`, ordered. */
+  private def pairsFromCand(radius: Int): String =
+    s"""SELECT modality, doc_a, doc_b,
        |  CAST(bit_count(xor(fa, fb)) AS BIGINT) AS hamming
-       |FROM cand WHERE bit_count(xor(fa, fb)) <= $DctRadius
+       |FROM cand WHERE bit_count(xor(fa, fb)) <= $radius
        |ORDER BY doc_a, doc_b""".stripMargin
 
   /** The capped fine search's own oracle — unlike the uncapped
@@ -1025,22 +1033,7 @@ object Multimodal {
     // persisted fingerprint table — same oracle (the established
     // served/indexed aliasing convention)
     "multimodal_phash_dct_pairs_served" -> dctPairsOracleWhere("TRUE"),
-    "multimodal_phash_dct_pairs_r3" ->
-      s"""WITH $dctCtes,
-         |bands AS (
-         |  SELECT doc_id, modality, phash64,
-         |    b.b AS band_idx, (phash64 >> (16 * b.b)) & 65535 AS band_bits
-         |  FROM ph64, generate_series(0, 3) b(b)),
-         |cand AS (
-         |  SELECT DISTINCT a.modality, a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |    a.phash64 AS fa, b.phash64 AS fb
-         |  FROM bands a JOIN bands b
-         |    ON a.modality = b.modality AND a.band_idx = b.band_idx
-         |    AND a.band_bits = b.band_bits AND a.doc_id < b.doc_id)
-         |SELECT modality, doc_a, doc_b,
-         |  CAST(bit_count(xor(fa, fb)) AS BIGINT) AS hamming
-         |FROM cand WHERE bit_count(xor(fa, fb)) <= 3
-         |ORDER BY doc_a, doc_b""".stripMargin,
+    "multimodal_phash_dct_pairs_r3" -> coarsePairsOracle,
     "multimodal_phash_dct" ->
       s"""WITH $dctCtes
          |SELECT doc_id, modality, phash64 FROM ph64
@@ -1064,16 +1057,7 @@ object Multimodal {
          |samp AS (
          |  SELECT p.* FROM ph64 p, smod
          |  WHERE CAST(('0x' || substr(md5(CAST(p.doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % smod.m = 0),
-         |bands AS (
-         |  SELECT doc_id, modality, phash64,
-         |    b.b AS band_idx, (phash64 >> (4 * b.b)) & 15 AS band_bits
-         |  FROM samp, generate_series(0, ${DctBands - 1}) b(b)),
-         |cand AS (
-         |  SELECT DISTINCT a.modality, a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |    a.phash64 AS fa, b.phash64 AS fb
-         |  FROM bands a JOIN bands b
-         |    ON a.modality = b.modality AND a.band_idx = b.band_idx
-         |    AND a.band_bits = b.band_bits AND a.doc_id < b.doc_id),
+         |${bandCandCtes("samp", DctBands, 4)},
          |obs AS (
          |  SELECT CAST(bit_count(xor(fa, fb)) AS BIGINT) AS hamming,
          |    count(*) AS n_pairs
@@ -1092,22 +1076,7 @@ object Multimodal {
     // the self-contained coarse-banded twin of _r3 — identical result
     // by construction (same fingerprints, same bands, same radius), so
     // it shares the r3 oracle recipe
-    "multimodal_phash_pairs" ->
-      s"""WITH $dctCtes,
-         |bands AS (
-         |  SELECT doc_id, modality, phash64,
-         |    b.b AS band_idx, (phash64 >> (16 * b.b)) & 65535 AS band_bits
-         |  FROM ph64, generate_series(0, 3) b(b)),
-         |cand AS (
-         |  SELECT DISTINCT a.modality, a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |    a.phash64 AS fa, b.phash64 AS fb
-         |  FROM bands a JOIN bands b
-         |    ON a.modality = b.modality AND a.band_idx = b.band_idx
-         |    AND a.band_bits = b.band_bits AND a.doc_id < b.doc_id)
-         |SELECT modality, doc_a, doc_b,
-         |  CAST(bit_count(xor(fa, fb)) AS BIGINT) AS hamming
-         |FROM cand WHERE bit_count(xor(fa, fb)) <= 3
-         |ORDER BY doc_a, doc_b""".stripMargin,
+    "multimodal_phash_pairs" -> coarsePairsOracle,
     "multimodal_shard_pack" ->
       """WITH meta AS (
         |  SELECT doc_id,

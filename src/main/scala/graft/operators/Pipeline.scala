@@ -147,12 +147,6 @@ object Pipeline {
     */
   def corpusCurate(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    // synthetic PII injection (deterministic subset) so the scrub is
-    // exercised — same synthesis as corpus_pii_scrub
-    val withPii = when(col("doc_id") % 7 === 0,
-        concat(col("text"), lit(" contact user"), col("doc_id"),
-          lit("@example.com or +1 (555) 010-"), lpad((col("doc_id") % 10000).cast("string"), 4, "0")))
-      .otherwise(col("text"))
     val nPii = size(regexp_extract_all(col("raw"), lit(CorpusOps.EmailRe), lit(0))) +
       size(regexp_extract_all(col("raw"), lit(CorpusOps.PhoneRe), lit(0)))
     val scrub = regexp_replace(regexp_replace(col("raw"), CorpusOps.EmailRe, "<EMAIL>"),
@@ -161,7 +155,8 @@ object Pipeline {
     val stopHits = size(filter(toks, x =>
       array_contains(typedLit(Seq("the", "a", "and", "of", "to", "in", "is", "it", "for", "on")), x)))
     val gated = docs
-      .withColumn("raw", withPii)
+      // synthetic PII on a deterministic subset, so the scrub has work
+      .withColumn("raw", CorpusOps.withPii)
       .withColumn("n_pii", nPii)
       .withColumn("clean", scrub)
       .withColumn("n_tokens", size(toks))
@@ -243,19 +238,9 @@ object Pipeline {
     * map-only once the cluster labelling exists; the labelling itself
     * is the bounded min-label fixpoint (one keyed shuffle per round).
     */
-  def corpusGroupSplit(spark: SparkSession, dir: String): DataFrame = {
-    val comp = Dedup.dedupComponents(spark, dir).select(col("doc_id"), col("component"))
-    val bucket = conv(substring(
-        md5(concat(lit("gsplit:"), col("group_key"))), 1, 8), 16, 10)
-      .cast("bigint") % 100
-    Tables.documents(spark, dir).select(col("doc_id"))
-      .join(comp, Seq("doc_id"), "left")
-      .withColumn("group_key", coalesce(col("component"), col("doc_id")))
-      .withColumn("bucket", bucket)
-      .withColumn("split", splitName(col("bucket")))
-      .select("doc_id", "group_key", "bucket", "split")
-      .orderBy("doc_id")
-  }
+  def corpusGroupSplit(spark: SparkSession, dir: String): DataFrame =
+    groupSplitOver(spark, dir,
+      Dedup.dedupComponents(spark, dir).select(col("doc_id"), col("component")))
 
   /** [[corpusGroupSplit]] served from the maintained label artifact
     * ([[Dedup.servedLabels]]): the split itself is map-only hashing —
@@ -263,8 +248,11 @@ object Pipeline {
     * broadcast-or-bucketed join plus hashing, the shape a training
     * pipeline re-runs on every split re-cut.
     */
-  def corpusGroupSplitServed(spark: SparkSession, dir: String): DataFrame = {
-    val comp = Dedup.servedLabels(spark, dir)
+  def corpusGroupSplitServed(spark: SparkSession, dir: String): DataFrame =
+    groupSplitOver(spark, dir, Dedup.servedLabels(spark, dir))
+
+  /** The group-aware split over a (doc_id, component) labelling. */
+  private def groupSplitOver(spark: SparkSession, dir: String, comp: DataFrame): DataFrame = {
     val bucket = conv(substring(
         md5(concat(lit("gsplit:"), col("group_key"))), 1, 8), 16, 10)
       .cast("bigint") % 100

@@ -46,25 +46,40 @@ object TextAnalysis {
     * compare the identical value.
     */
   private[operators] def qualityScore(text: Column): Column = {
+    val Seq(logTok, stop, punct, upper) = qualitySignals(text)
+    round(lit(1.0) / (lit(1.0) + exp(-(logTok * 0.3 + stop * 2.0
+      - punct * 3.0 - upper * 2.0))), 6)
+  }
+
+  /** The four unrounded quality signals of a text column: log token
+    * count, and the stopword, punctuation and uppercase ratios.
+    */
+  private def qualitySignals(text: Column): Seq[Column] = {
     val t = toks(text)
     val nTok = size(t).cast("double")
     val nChar = length(text).cast("double")
     val punct = nChar - length(regexp_replace(text, "[^A-Za-z0-9\\s]", "")).cast("double")
     val upper = nChar - length(regexp_replace(text, "[A-Z]", "")).cast("double")
-    val stop = size(filter(t, x => array_contains(typedLit(stopwords("en")), x))).cast("double")
-    round(lit(1.0) / (lit(1.0) + exp(-(log(nTok + 1) * 0.3 + stop / nTok * 2.0
-      - punct / nChar * 3.0 - upper / nChar * 2.0))), 6)
+    val stop = hits(t, "en").cast("double")
+    Seq(log(nTok + 1), stop / nTok, punct / nChar, upper / nChar)
   }
 
   /** DuckDB rendering of [[qualityScore]] (`e` is the text expression).
     * DuckDB `/` is float division even on integers, so no casts needed.
     */
   private[operators] def qualityScoreSql(e: String): String = {
+    val Seq(logTok, stop, punct, upper) = qualitySignalsSql(e)
+    s"round(1.0 / (1.0 + exp(-($logTok * 0.3 + $stop * 2.0 - $punct * 3.0 - $upper * 2.0))), 6)"
+  }
+
+  /** DuckDB rendering of [[qualitySignals]]. */
+  private def qualitySignalsSql(e: String): Seq[String] = {
     val t = toksSql(e)
-    s"round(1.0 / (1.0 + exp(-(ln(len($t) + 1) * 0.3" +
-      s" + ${hitsSql(t, "en")} / len($t) * 2.0" +
-      s" - (length($e) - length(regexp_replace($e, '[^A-Za-z0-9\\s]', '', 'g'))) / length($e) * 3.0" +
-      s" - (length($e) - length(regexp_replace($e, '[A-Z]', '', 'g'))) / length($e) * 2.0))), 6)"
+    Seq(
+      s"ln(len($t) + 1)",
+      s"${hitsSql(t, "en")} / len($t)",
+      s"(length($e) - length(regexp_replace($e, '[^A-Za-z0-9\\s]', '', 'g'))) / length($e)",
+      s"(length($e) - length(regexp_replace($e, '[A-Z]', '', 'g'))) / length($e)")
   }
 
   /** The cheap per-doc quality SIGNALS behind [[qualityScore]] (log
@@ -74,29 +89,12 @@ object TextAnalysis {
     * learns the gate decision FROM these instead of re-deriving the
     * hand-tuned score.
     */
-  private[graft] def qualityFeatures(text: Column): Seq[Column] = {
-    val t = toks(text)
-    val nTok = size(t).cast("double")
-    val nChar = length(text).cast("double")
-    val punct = nChar - length(regexp_replace(text, "[^A-Za-z0-9\\s]", "")).cast("double")
-    val upper = nChar - length(regexp_replace(text, "[A-Z]", "")).cast("double")
-    val stop = size(filter(t, x => array_contains(typedLit(stopwords("en")), x))).cast("double")
-    Seq(
-      round(log(nTok + 1), 6).as("x1"),
-      round(stop / nTok, 6).as("x2"),
-      round(punct / nChar, 6).as("x3"),
-      round(upper / nChar, 6).as("x4"))
-  }
+  private[graft] def qualityFeatures(text: Column): Seq[Column] =
+    qualitySignals(text).zipWithIndex.map { case (c, j) => round(c, 6).as(s"x${j + 1}") }
 
   /** DuckDB rendering of [[qualityFeatures]] (`e` is the text expr). */
-  private[operators] def qualityFeaturesSql(e: String): Seq[String] = {
-    val t = toksSql(e)
-    Seq(
-      s"round(ln(len($t) + 1), 6)",
-      s"round(${hitsSql(t, "en")} / len($t), 6)",
-      s"round((length($e) - length(regexp_replace($e, '[^A-Za-z0-9\\s]', '', 'g'))) / length($e), 6)",
-      s"round((length($e) - length(regexp_replace($e, '[A-Z]', '', 'g'))) / length($e), 6)")
-  }
+  private[operators] def qualityFeaturesSql(e: String): Seq[String] =
+    qualitySignalsSql(e).map(c => s"round($c, 6)")
 
   /** Token counting: whitespace tokens + BPE-ish regex pieces. */
   def textTokens(spark: SparkSession, dir: String): DataFrame =
@@ -143,15 +141,9 @@ object TextAnalysis {
     * stopword ratios, and a composite score in (0, 1).
     */
   def textQuality(spark: SparkSession, dir: String): DataFrame = {
-    val t = toks(col("text"))
-    val nTok = size(t).cast("double")
+    val nTok = size(toks(col("text"))).cast("double")
     val nChar = length(col("text")).cast("double")
-    val punct = nChar - length(regexp_replace(col("text"), "[^A-Za-z0-9\\s]", "")).cast("double")
-    val upper = nChar - length(regexp_replace(col("text"), "[A-Z]", "")).cast("double")
-    val stop = hits(t, "en").cast("double")
-    val punctRatio = round(punct / nChar, 6)
-    val upperRatio = round(upper / nChar, 6)
-    val stopRatio = round(stop / nTok, 6)
+    val Seq(_, stopRatio, punctRatio, upperRatio) = qualitySignals(col("text")).map(round(_, 6))
     val avgTokLen = round(length(regexp_replace(col("text"), "\\s", "")).cast("double") / nTok, 6)
     val score = qualityScore(col("text"))
     Tables.documents(spark, dir)
@@ -586,18 +578,6 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
-  /** Bigram-LM perplexity — the CCNet/Wikipedia-LM filter shape every
-    * corpus pipeline runs: score each document by the cross-entropy of
-    * its token stream under a language model (here a corpus-trained
-    * add-½-smoothed bigram model — a KenLM would broadcast its ARPA
-    * table; the scoring join topology is identical). The model
-    * relations (bigram counts, context totals derived FROM the bigram
-    * relation, successor-vocabulary size) are vocabulary-bounded; the
-    * token-pair relation shuffles once and is checkpointed (read for
-    * counts and for scoring). Per-pair -log₂p contributions are
-    * integer-scaled before the order-free per-doc sum (the BM25
-    * discipline), so only the final single-evaluation 2^H rounds.
-    */
   /** Per-document bigram-LM aggregate — doc_id, n_grams, s6 (the
     * 6-dp-integer-scaled negative-log-likelihood sum). Shared by
     * [[textPerplexity]] and the CCNet-style bucket assignment
@@ -605,15 +585,7 @@ object TextAnalysis {
     * score and the bucketing cannot drift.
     */
   private[operators] def perplexityAgg(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Tables.documents(spark, dir)
-      .select(col("doc_id"), toks(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(toks) - 1)," +
-          " i -> struct(element_at(toks, i) AS w1, element_at(toks, i + 1) AS w2))"))
-        .as("p"))
-      .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
-      .localCheckpoint() // model training + scoring read it
+    val pairs = bigramPairs(spark, dir)
     val bg = pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cbg"))
     val ctx = bg.groupBy(col("w1")).agg(sum(col("cbg")).as("cctx"))
     val vocab = pairs.agg(countDistinct(col("w2")).as("vs"))
@@ -628,14 +600,43 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_grams"), sum(col("nll6")).as("s6"))
   }
 
-  def textPerplexity(spark: SparkSession, dir: String): DataFrame = {
-    perplexityAgg(spark, dir)
-      .select(col("doc_id"), col("n_grams"),
+  /** Bigram-LM perplexity — the CCNet/Wikipedia-LM filter shape every
+    * corpus pipeline runs: score each document by the cross-entropy of
+    * its token stream under a language model (here a corpus-trained
+    * add-½-smoothed bigram model — a KenLM would broadcast its ARPA
+    * table; the scoring join topology is identical). The model
+    * relations (bigram counts, context totals derived FROM the bigram
+    * relation, successor-vocabulary size) are vocabulary-bounded; the
+    * token-pair relation shuffles once and is checkpointed (read for
+    * counts and for scoring). Per-pair -log₂p contributions are
+    * integer-scaled before the order-free per-doc sum (the BM25
+    * discipline), so only the final single-evaluation 2^H rounds.
+    */
+  def textPerplexity(spark: SparkSession, dir: String): DataFrame =
+    perplexityOf(perplexityAgg(spark, dir))
+
+  /** Every (doc_id, w1, w2) adjacent token pair of the documents with
+    * at least two tokens, checkpointed: model training and scoring
+    * both read it.
+    */
+  private def bigramPairs(spark: SparkSession, dir: String): DataFrame =
+    Tables.documents(spark, dir)
+      .select(col("doc_id"), toks(col("text")).as("toks"))
+      .filter(size(col("toks")) >= 2)
+      .select(col("doc_id"), explode(expr(
+        "transform(sequence(1, size(toks) - 1)," +
+          " i -> struct(element_at(toks, i) AS w1, element_at(toks, i + 1) AS w2))"))
+        .as("p"))
+      .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
+      .localCheckpoint()
+
+  /** Per-doc cross-entropy and perplexity from (doc_id, n_grams, s6). */
+  private def perplexityOf(agg: DataFrame): DataFrame =
+    agg.select(col("doc_id"), col("n_grams"),
         round(col("s6") / (col("n_grams") * lit(1000000.0)), 6).as("cross_entropy"),
         round(pow(lit(2.0), col("s6") / (col("n_grams") * lit(1000000.0))), 6)
           .as("perplexity"))
       .orderBy(col("doc_id"))
-  }
 
   /** Absolute discount for the Kneser-Ney LM — 3/4 (the Chen-Goodman
     * default neighborhood), an exact dyadic double.
@@ -651,15 +652,7 @@ object TextAnalysis {
     */
   private[graft] def knComponents(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val pairs = Tables.documents(spark, dir)
-      .select(col("doc_id"), toks(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(toks) - 1)," +
-          " i -> struct(element_at(toks, i) AS w1, element_at(toks, i + 1) AS w2))"))
-        .as("p"))
-      .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
-      .localCheckpoint() // model training + scoring read it
+    val pairs = bigramPairs(spark, dir)
     val bg = pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cbg"))
     val ctx = bg.groupBy(col("w1"))
       .agg(sum(col("cbg")).as("cctx"), count(lit(1)).as("n1plus"))
@@ -692,7 +685,7 @@ object TextAnalysis {
     */
   def textPerplexityKn(spark: SparkSession, dir: String): DataFrame = {
     val (pairs, bg, ctx, cont, tot) = knComponents(spark, dir)
-    pairs
+    perplexityOf(pairs
       .join(bg, Seq("w1", "w2"))
       .join(ctx, Seq("w1"))
       .join(cont, Seq("w2"))
@@ -700,12 +693,7 @@ object TextAnalysis {
       .withColumn("nll6",
         round(-log(2.0, knP(col("cbg"))) * 1000000, 0).cast("bigint"))
       .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_grams"), sum(col("nll6")).as("s6"))
-      .select(col("doc_id"), col("n_grams"),
-        round(col("s6") / (col("n_grams") * lit(1000000.0)), 6).as("cross_entropy"),
-        round(pow(lit(2.0), col("s6") / (col("n_grams") * lit(1000000.0))), 6)
-          .as("perplexity"))
-      .orderBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_grams"), sum(col("nll6")).as("s6")))
   }
 
   /** Corpus LEXICAL PROFILE — the Zipf diagnostics a pipeline reads
@@ -779,17 +767,9 @@ object TextAnalysis {
     * plant verbatim cross-doc spans.
     */
   private[graft] def repeatedSpansOver(docs: DataFrame): DataFrame = {
-    val grams = docs
-      .select(col("doc_id"), toks(col("text")).as("toks"))
-      .filter(size(col("toks")) >= SpanGram)
-      .select(col("doc_id"), explode(expr(
-        s"transform(sequence(1, size(toks) - ${SpanGram - 1})," +
-          s" i -> struct(i AS pos, array_join(slice(toks, i, $SpanGram), ' ') AS g))")).as("s"))
-      .select(col("doc_id"), col("s.pos"), col("s.g"))
-      .localCheckpoint() // df aggregation + join-back both read it
-    val df = grams.select(col("doc_id"), col("g")).distinct()
-      .groupBy(col("g")).agg(count(lit(1)).as("gdf"))
-    grams.join(df, "g")
+    // df aggregation + join-back both read it
+    val grams = spanGramsOver(docs).localCheckpoint()
+    grams.join(gramDfOf(grams), "g")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_spans"),
         sum(when(col("gdf") >= 2, 1L).otherwise(0L)).as("n_repeated"))
@@ -890,9 +870,12 @@ object TextAnalysis {
     * served forms, which derive eligibility from the grams themselves.
     */
   private def spansFromGrams(grams: DataFrame): DataFrame =
-    spansFromGramsWithDf(grams,
-      grams.select(col("doc_id"), col("g")).distinct()
-        .groupBy(col("g")).agg(count(lit(1)).as("gdf")))
+    spansFromGramsWithDf(grams, gramDfOf(grams))
+
+  /** Per-gram document frequency (g, gdf) of a (doc_id, pos, g) relation. */
+  private def gramDfOf(grams: DataFrame): DataFrame =
+    grams.select(col("doc_id"), col("g")).distinct()
+      .groupBy(col("g")).agg(count(lit(1)).as("gdf"))
 
   /** The extraction with per-gram document frequency supplied as its
     * own (g, gdf) relation — the maintenance tier's entry point: the
@@ -1113,8 +1096,7 @@ object TextAnalysis {
     * by construction (shares the base form's oracle).
     */
   def dedupSpanStripServed(spark: SparkSession, dir: String): DataFrame =
-    stripWithSpans(Tables.documents(spark, dir),
-      spansFromGrams(servedSpanGrams(spark, dir)))
+    stripWithSpans(Tables.documents(spark, dir), dedupExactSpansServed(spark, dir))
 
   /** The strip over any (doc_id, text) relation — exposed so the spec
     * can plant spans and check the surviving copy.
@@ -1315,17 +1297,37 @@ object TextAnalysis {
        |  round(n_docs / sum(n_docs) OVER (PARTITION BY lang_declared), 6) AS share_of_declared
        |FROM c ORDER BY lang_declared, lang_pred""".stripMargin
 
-  /** Bigram-LM per-document aggregate as CTEs ending in `agg`
-    * (doc_id, n_grams, s6) — the SQL twin of [[perplexityAgg]],
-    * shared by the perplexity dump and the CCNet-bucket oracle.
+  /** `pr` (every adjacent token pair per document) and `bg` (bigram
+    * counts) — the SQL twin of [[bigramPairs]].
     */
-  private[operators] val perplexityCtes: String =
+  private def bigramCtes: String =
     s"""pr AS (
        |  SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2
        |  FROM (SELECT doc_id, ${toksSql("text")} AS toks FROM documents) d,
        |       unnest(generate_series(1, len(toks) - 1)) t(i)
        |  WHERE len(toks) >= 2),
-       |bg AS (SELECT w1, w2, count(*) AS cbg FROM pr GROUP BY 1, 2),
+       |bg AS (SELECT w1, w2, count(*) AS cbg FROM pr GROUP BY 1, 2)""".stripMargin
+
+  /** `agg` (doc_id, n_grams, s6) over the per-pair `sc` (doc_id, nll6). */
+  private def nllAggCte: String =
+    """agg AS (
+      |  SELECT doc_id, count(*) AS n_grams, sum(nll6) AS s6
+      |  FROM sc GROUP BY 1)""".stripMargin
+
+  /** The SQL twin of [[perplexityOf]] over `ctes`, which end in `agg`. */
+  private def perplexityOracle(ctes: String): String =
+    s"""WITH $ctes
+       |SELECT doc_id, n_grams,
+       |  round(s6 / (n_grams * 1000000.0), 6) AS cross_entropy,
+       |  round(pow(2.0, s6 / (n_grams * 1000000.0)), 6) AS perplexity
+       |FROM agg ORDER BY doc_id""".stripMargin
+
+  /** Bigram-LM per-document aggregate as CTEs ending in `agg`
+    * (doc_id, n_grams, s6) — the SQL twin of [[perplexityAgg]],
+    * shared by the perplexity dump and the CCNet-bucket oracle.
+    */
+  private[operators] val perplexityCtes: String =
+    s"""$bigramCtes,
        |ctx AS (SELECT w1, sum(cbg) AS cctx FROM bg GROUP BY 1),
        |v AS (SELECT count(DISTINCT w2) AS vs FROM pr),
        |sc AS (
@@ -1333,20 +1335,13 @@ object TextAnalysis {
        |    CAST(round(-log2((cbg + 0.5) / (cctx + 0.5 * vs)) * 1000000, 0)
        |      AS BIGINT) AS nll6
        |  FROM pr p JOIN bg USING (w1, w2) JOIN ctx USING (w1) CROSS JOIN v),
-       |agg AS (
-       |  SELECT doc_id, count(*) AS n_grams, sum(nll6) AS s6
-       |  FROM sc GROUP BY 1)""".stripMargin
+       |$nllAggCte""".stripMargin
 
   /** Interpolated-KN scoring CTEs ending in `agg` — the oracle twin of
     * [[textPerplexityKn]], discount literal shared via [[KnD]].
     */
   private[operators] val knCtes: String =
-    s"""pr AS (
-       |  SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2
-       |  FROM (SELECT doc_id, ${toksSql("text")} AS toks FROM documents) d,
-       |       unnest(generate_series(1, len(toks) - 1)) t(i)
-       |  WHERE len(toks) >= 2),
-       |bg AS (SELECT w1, w2, count(*) AS cbg FROM pr GROUP BY 1, 2),
+    s"""$bigramCtes,
        |ctx AS (SELECT w1, sum(cbg) AS cctx, count(*) AS n1plus FROM bg GROUP BY 1),
        |cont AS (SELECT w2, count(*) AS ncont FROM bg GROUP BY 1),
        |tot AS (SELECT count(*) AS nbt FROM bg),
@@ -1357,9 +1352,7 @@ object TextAnalysis {
        |      AS BIGINT) AS nll6
        |  FROM pr p JOIN bg USING (w1, w2) JOIN ctx USING (w1)
        |  JOIN cont USING (w2) CROSS JOIN tot),
-       |agg AS (
-       |  SELECT doc_id, count(*) AS n_grams, sum(nll6) AS s6
-       |  FROM sc GROUP BY 1)""".stripMargin
+       |$nllAggCte""".stripMargin
 
   /** Winnowing selection as CTEs ending in `sel` — shared by the
     * fingerprint dump, the pair-search oracle, and the split-leakage
@@ -1447,30 +1440,23 @@ object TextAnalysis {
        |WHERE w <> ''
        |GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
-  /** The span CTE chain ending in `spans` (the maximal-span relation)
-    * over an arbitrary (doc_id, text) relation — shared (via
-    * [[exactSpansCtes]]) by the extraction and strip oracles, and
-    * directly by the maintenance-tier oracle, which builds it over a
-    * deterministic corpus subset CTE ([[MaintQueries]]).
+  /** The `grams` CTE: every `SpanGram`-token positional gram
+    * (doc_id, pos, g) of `rel`'s (doc_id, text) rows — the SQL twin of
+    * [[spanGramsOver]].
     */
-  private[graft] def exactSpansCtesOver(rel: String): String =
+  private def gramsCteOver(rel: String): String =
     s"""grams AS (
        |  SELECT doc_id, i.i AS pos,
        |    array_to_string(toks[i.i : i.i + ${SpanGram - 1}], ' ') AS g
        |  FROM (SELECT doc_id, ${toksSql("text")} AS toks FROM $rel) d,
        |       unnest(generate_series(1, len(toks) - ${SpanGram - 1})) i(i)
-       |  WHERE len(toks) >= $SpanGram),
-       |elig AS (
-       |  SELECT g FROM (
-       |    SELECT g, count(*) AS gdf
-       |    FROM (SELECT DISTINCT doc_id, g FROM grams) GROUP BY g)
-       |  WHERE gdf BETWEEN 2 AND $SpanDfCap),
-       |hits AS (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       |         a.pos AS pos_a, b.pos AS pos_b, a.pos - b.pos AS diag
-       |  FROM grams a JOIN elig e ON a.g = e.g JOIN grams b ON a.g = b.g
-       |  WHERE a.doc_id < b.doc_id),
-       |isl AS (
+       |  WHERE len(toks) >= $SpanGram)""".stripMargin
+
+  /** `isl` and `spans`: the gaps-and-islands merge of the `hits` CTE
+    * (doc_a, doc_b, pos_a, pos_b, diag) into maximal spans.
+    */
+  private def spansFromHitsCtes: String =
+    s"""isl AS (
        |  SELECT doc_a, doc_b, diag, pos_a, pos_b,
        |    pos_a - row_number() OVER (
        |      PARTITION BY doc_a, doc_b, diag ORDER BY pos_a) AS isl
@@ -1481,6 +1467,36 @@ object TextAnalysis {
        |    CAST(min(pos_b) AS BIGINT) AS start_b,
        |    CAST(max(pos_a) - min(pos_a) + $SpanGram AS BIGINT) AS span_len
        |  FROM isl GROUP BY doc_a, doc_b, diag, isl)""".stripMargin
+
+  /** `terms` (every non-empty token per document) and `tf` (term
+    * counts per document).
+    */
+  private def termTfCtes: String =
+    s"""terms AS (
+       |  SELECT * FROM (
+       |    SELECT doc_id, unnest(${toksSql("text")}) AS term FROM documents)
+       |  WHERE term <> ''),
+       |tf AS (SELECT doc_id, term, count(*) AS tf FROM terms GROUP BY 1, 2)""".stripMargin
+
+  /** The span CTE chain ending in `spans` (the maximal-span relation)
+    * over an arbitrary (doc_id, text) relation — shared (via
+    * [[exactSpansCtes]]) by the extraction and strip oracles, and
+    * directly by the maintenance-tier oracle, which builds it over a
+    * deterministic corpus subset CTE ([[MaintQueries]]).
+    */
+  private[graft] def exactSpansCtesOver(rel: String): String =
+    s"""${gramsCteOver(rel)},
+       |elig AS (
+       |  SELECT g FROM (
+       |    SELECT g, count(*) AS gdf
+       |    FROM (SELECT DISTINCT doc_id, g FROM grams) GROUP BY g)
+       |  WHERE gdf BETWEEN 2 AND $SpanDfCap),
+       |hits AS (
+       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+       |         a.pos AS pos_a, b.pos AS pos_b, a.pos - b.pos AS diag
+       |  FROM grams a JOIN elig e ON a.g = e.g JOIN grams b ON a.g = b.g
+       |  WHERE a.doc_id < b.doc_id),
+       |$spansFromHitsCtes""".stripMargin
 
   private val exactSpansCtes: String = exactSpansCtesOver("documents")
 
@@ -1498,12 +1514,7 @@ object TextAnalysis {
     * pins the cap, not just the surviving spans.
     */
   private lazy val cappedSpansOracle: String =
-    s"""WITH grams AS (
-       |  SELECT doc_id, i.i AS pos,
-       |    array_to_string(toks[i.i : i.i + ${SpanGram - 1}], ' ') AS g
-       |  FROM (SELECT doc_id, ${toksSql("text")} AS toks FROM documents) d,
-       |       unnest(generate_series(1, len(toks) - ${SpanGram - 1})) i(i)
-       |  WHERE len(toks) >= $SpanGram),
+    s"""WITH ${gramsCteOver("documents")},
        |docg AS (SELECT DISTINCT g, doc_id FROM grams),
        |gdfs AS (SELECT g, count(*) AS gdf FROM docg GROUP BY g),
        |ranked AS (
@@ -1521,17 +1532,7 @@ object TextAnalysis {
        |  FROM adm m
        |  JOIN grams a ON a.g = m.g AND a.doc_id = m.doc_a
        |  JOIN grams b ON b.g = m.g AND b.doc_id = m.doc_b),
-       |isl AS (
-       |  SELECT doc_a, doc_b, diag, pos_a, pos_b,
-       |    pos_a - row_number() OVER (
-       |      PARTITION BY doc_a, doc_b, diag ORDER BY pos_a) AS isl
-       |  FROM hits),
-       |spans AS (
-       |  SELECT doc_a, doc_b,
-       |    CAST(min(pos_a) AS BIGINT) AS start_a,
-       |    CAST(min(pos_b) AS BIGINT) AS start_b,
-       |    CAST(max(pos_a) - min(pos_a) + $SpanGram AS BIGINT) AS span_len
-       |  FROM isl GROUP BY doc_a, doc_b, diag, isl)
+       |$spansFromHitsCtes
        |SELECT doc_a, doc_b, start_a, start_b, span_len
        |FROM spans ORDER BY doc_a, doc_b, start_a, start_b""".stripMargin
 
@@ -1580,12 +1581,7 @@ object TextAnalysis {
          |    / (count(*) * sum(x6 * x6) - sum(x6) * sum(x6)), 6) AS zipf_slope
          |FROM ranked""".stripMargin,
     "text_repeated_spans" ->
-      s"""WITH grams AS (
-         |  SELECT doc_id, i.i AS pos,
-         |    array_to_string(toks[i.i : i.i + ${SpanGram - 1}], ' ') AS g
-         |  FROM (SELECT doc_id, ${toksSql("text")} AS toks FROM documents) d,
-         |       unnest(generate_series(1, len(toks) - ${SpanGram - 1})) i(i)
-         |  WHERE len(toks) >= $SpanGram),
+      s"""WITH ${gramsCteOver("documents")},
          |gdf AS (
          |  SELECT g, count(*) AS gdf FROM (SELECT DISTINCT doc_id, g FROM grams)
          |  GROUP BY g)
@@ -1604,12 +1600,7 @@ object TextAnalysis {
     // served twin: identical spans from the artifact, same oracle
     "dedup_span_strip_served" -> spanStripOracle,
     "dedup_span_admit" ->
-      s"""WITH grams AS (
-         |  SELECT doc_id, i.i AS pos,
-         |    array_to_string(toks[i.i : i.i + ${SpanGram - 1}], ' ') AS g
-         |  FROM (SELECT doc_id, ${toksSql("text")} AS toks FROM documents) d,
-         |       unnest(generate_series(1, len(toks) - ${SpanGram - 1})) i(i)
-         |  WHERE len(toks) >= $SpanGram),
+      s"""WITH ${gramsCteOver("documents")},
          |corpus AS (SELECT * FROM grams WHERE doc_id % $SpanAdmitMod <> 0),
          |cdf AS (
          |  SELECT g, count(DISTINCT doc_id) AS gdf FROM corpus GROUP BY g),
@@ -1632,17 +1623,9 @@ object TextAnalysis {
          |      WHERE doc_id % $SpanAdmitMod = 0) d
          |LEFT JOIN agg USING (doc_id) ORDER BY d.doc_id""".stripMargin,
     "text_perplexity" ->
-      s"""WITH $perplexityCtes
-         |SELECT doc_id, n_grams,
-         |  round(s6 / (n_grams * 1000000.0), 6) AS cross_entropy,
-         |  round(pow(2.0, s6 / (n_grams * 1000000.0)), 6) AS perplexity
-         |FROM agg ORDER BY doc_id""".stripMargin,
+      perplexityOracle(perplexityCtes),
     "text_perplexity_kn" ->
-      s"""WITH $knCtes
-         |SELECT doc_id, n_grams,
-         |  round(s6 / (n_grams * 1000000.0), 6) AS cross_entropy,
-         |  round(pow(2.0, s6 / (n_grams * 1000000.0)), 6) AS perplexity
-         |FROM agg ORDER BY doc_id""".stripMargin,
+      perplexityOracle(knCtes),
     "text_winnowing" ->
       s"""WITH $winnowCtes
         |SELECT DISTINCT doc_id,
@@ -1669,11 +1652,7 @@ object TextAnalysis {
          |  round(ln(n_tokens) - s / n_tokens, 6) AS entropy
          |FROM agg ORDER BY doc_id""".stripMargin,
     "text_tfidf_topk" ->
-      s"""WITH terms AS (
-         |  SELECT * FROM (
-         |    SELECT doc_id, unnest(${toksSql("text")}) AS term FROM documents)
-         |  WHERE term <> ''),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM terms GROUP BY 1, 2),
+      s"""WITH $termTfCtes,
          |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
          |n AS (SELECT count(*) AS n_docs FROM documents),
          |scored AS (
@@ -1687,11 +1666,7 @@ object TextAnalysis {
          |SELECT doc_id, rank, term, tf, tfidf FROM ranked
          |WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
     "text_bm25_topk" ->
-      s"""WITH terms AS (
-         |  SELECT * FROM (
-         |    SELECT doc_id, unnest(${toksSql("text")}) AS term FROM documents)
-         |  WHERE term <> ''),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM terms GROUP BY 1, 2),
+      s"""WITH $termTfCtes,
          |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
          |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
          |stats AS (

@@ -49,11 +49,17 @@ object ArtifactStore {
   private def visible(spark: SparkSession, dir: String, name: String): Boolean =
     built.get((dir, name)).exists(spark.catalog.tableExists)
 
-  /** Dataset path → a token stable within the JVM and safe in a table
-    * identifier.
+  /** Dataset path → a stable token safe in a table identifier: the
+    * path folded to `[a-z0-9_]` for readability, plus a hash of the
+    * EXACT path, since folding alone maps `/x/sf0.1`, `/x/sf0_1` and
+    * `/x/SF0.1` to one table.
     */
-  private def dirKey(dir: String): String =
-    dir.toLowerCase.replaceAll("[^a-z0-9]+", "_").replaceAll("^_+|_+$", "")
+  private def dirKey(dir: String): String = {
+    val hash = java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .take(4).map(b => f"${b & 0xff}%02x").mkString
+    dir.toLowerCase.replaceAll("[^a-z0-9]+", "_").replaceAll("^_+|_+$", "") + "_" + hash
+  }
 
   private[sources] def tableName(dir: String, name: String): String =
     s"graft_art_${dirKey(dir)}_$name"

@@ -5,15 +5,22 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
-/** Structured Streaming versions of the event-time operators in
-  * `graft.operators.Events` — the continuous form of the reference's
-  * Dagster sensor/trigger flow (`repository/repository.py` sensors →
-  * job runs), re-expressed as incremental Spark plans.
-  *
-  * Both transforms accept a streaming OR batch DataFrame/Dataset, so
-  * the batch oracles double as correctness references for the streaming
-  * path (see StreamingSpec, which cross-checks against
-  * `Events.eventsSessionize` semantics).
+/** Structured Streaming forms of graft's batch operators — the
+  * continuous form of the reference's Dagster sensor/trigger flow
+  * (`repository/repository.py` sensors → job runs). Four kinds:
+  *   - stateless and watermarked transforms (hourly counts and
+  *     sketches, click attribution, exact dedup, enrichment, session
+  *     windows, quality admission), which accept a streaming OR batch
+  *     DataFrame, so the batch oracles double as references;
+  *   - stateful `flatMapGroupsWithState` / `transformWithState`
+  *     operators (sessionizers, EMA, hourly top-N, CDC apply) over
+  *     typed Datasets, each pinned against its batch twin in
+  *     StreamingSpec;
+  *   - admission streams (near-dup, perceptual, verbatim span), which
+  *     probe a static index per micro-batch and hand each batch's
+  *     verdicts to a callback;
+  *   - sinks and refresh streams (ES bulk, incremental aggregate, and
+  *     the `IndexMaintenance` refreshes), exactly-once by batch id.
   */
 object StreamOps {
 
@@ -57,20 +64,8 @@ object StreamOps {
     * memory. (The streaming twin of `Events.eventsAsofJoin`'s
     * candidate-generation step.)
     */
-  def clickAttribution(clicks: DataFrame, purchases: DataFrame): DataFrame = {
-    val c = clicks.select(col("user_id").as("c_user"),
-        col("ts").as("click_ts"), col("event_id").as("click_id"))
-      .withWatermark("click_ts", "1 hour")
-    val p = purchases.select(col("user_id").as("p_user"),
-        col("ts").as("purchase_ts"), col("event_id").as("purchase_id"))
-      .withWatermark("purchase_ts", "1 hour")
-    p.join(c, expr(
-      """p_user = c_user
-        |AND click_ts <= purchase_ts
-        |AND click_ts >= purchase_ts - INTERVAL 30 MINUTES""".stripMargin))
-      .select(col("purchase_id"), col("p_user").as("user_id"),
-        col("purchase_ts"), col("click_id"), col("click_ts"))
-  }
+  def clickAttribution(clicks: DataFrame, purchases: DataFrame): DataFrame =
+    attribution(clicks, purchases, "inner")
 
   /** LEFT OUTER stream-stream attribution: same join window as
     * [[clickAttribution]], but purchases with NO qualifying click are
@@ -82,7 +77,14 @@ object StreamOps {
     * twin of a left join in the batch funnel: conversion AND
     * non-conversion rows from one query.)
     */
-  def clickAttributionOuter(clicks: DataFrame, purchases: DataFrame): DataFrame = {
+  def clickAttributionOuter(clicks: DataFrame, purchases: DataFrame): DataFrame =
+    attribution(clicks, purchases, "leftOuter")
+
+  /** Purchases `joinType`-joined to the same user's clicks of the 30
+    * minutes before, both sides watermarked at one hour.
+    */
+  private def attribution(clicks: DataFrame, purchases: DataFrame,
+      joinType: String): DataFrame = {
     val c = clicks.select(col("user_id").as("c_user"),
         col("ts").as("click_ts"), col("event_id").as("click_id"))
       .withWatermark("click_ts", "1 hour")
@@ -92,7 +94,7 @@ object StreamOps {
     p.join(c, expr(
       """p_user = c_user
         |AND click_ts <= purchase_ts
-        |AND click_ts >= purchase_ts - INTERVAL 30 MINUTES""".stripMargin), "leftOuter")
+        |AND click_ts >= purchase_ts - INTERVAL 30 MINUTES""".stripMargin), joinType)
       .select(col("purchase_id"), col("p_user").as("user_id"),
         col("purchase_ts"), col("click_id"), col("click_ts"))
   }
@@ -120,17 +122,13 @@ object StreamOps {
     */
   def qualityAdmissionStream(docs: DataFrame, model: DataFrame): DataFrame = {
     import graft.operators.{CorpusOps, TextAnalysis}
+    // the z-scored features, named x1..x4 as `CorpusOps.zLin` reads them
+    val zs = (1 to 4).map(j => CorpusOps.zScoreCol(j).as(s"x$j"))
     docs
       .select((col("doc_id") +: TextAnalysis.qualityFeatures(col("text"))): _*)
       .crossJoin(broadcast(model))
-      .select(col("doc_id"),
-        CorpusOps.zScoreCol(1).as("z1"), CorpusOps.zScoreCol(2).as("z2"),
-        CorpusOps.zScoreCol(3).as("z3"), CorpusOps.zScoreCol(4).as("z4"),
-        col("w0"), col("w1"), col("w2"), col("w3"), col("w4"))
-      .select(col("doc_id"),
-        CorpusOps.qualityP(round(
-          col("w0") + col("w1") * col("z1") + col("w2") * col("z2") +
-            col("w3") * col("z3") + col("w4") * col("z4"), 6)).as("p6"))
+      .select(col("doc_id") +: zs ++: (0 to 4).map(j => col(s"w$j")): _*)
+      .select(col("doc_id"), CorpusOps.qualityP(round(CorpusOps.zLin, 6)).as("p6"))
       .select(col("doc_id"), col("p6"),
         when(col("p6") >= 0.5, "admit").otherwise("reject").as("decision"))
   }
@@ -164,26 +162,38 @@ object StreamOps {
     */
   def nearDupAdmissionStream(docs: DataFrame, index: DataFrame,
       checkpoint: String)(onBatch: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
+    admissionStream(docs, Seq("doc_id", "text"), checkpoint, onBatch) { batch =>
+      candidateVerdicts(batch, graft.operators.Dedup.bandKeysOf(batch)
+        .join(index, Seq("band_idx", "bk"))
+        .filter(col("doc_id") =!= col("cand_id")))
+    }
+
+  /** The checkpointed foreachBatch body every admission stream shares:
+    * each micro-batch, projected to `cols`, goes through `verdicts` and
+    * the result to `onBatch`. A re-run batch reproduces its verdicts.
+    */
+  private def admissionStream(in: DataFrame, cols: Seq[String], checkpoint: String,
+      onBatch: DataFrame => Unit)(verdicts: DataFrame => DataFrame): StreamingQuery =
+    in.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val probes = graft.operators.Dedup.bandKeysOf(
-          batch.select(col("doc_id"), col("text")))
-        val hits = probes
-          .join(index, Seq("band_idx", "bk"))
-          .filter(col("doc_id") =!= col("cand_id"))
-          .select(col("doc_id"), col("cand_id")).distinct()
-        val verdicts = batch.select(col("doc_id")).distinct()
-          .join(hits.groupBy(col("doc_id"))
-            .agg(countDistinct(col("cand_id")).as("n_candidates")),
-            Seq("doc_id"), "left")
-          .withColumn("n_candidates", coalesce(col("n_candidates"), lit(0L)))
-          .withColumn("action",
-            when(col("n_candidates") > 0, "review").otherwise("admit"))
-        onBatch(verdicts)
+        onBatch(verdicts(batch.select(cols.map(col): _*)))
       }
       .start()
+
+  /** Per batch doc: its distinct candidate partners in `hits`
+    * (doc_id, cand_id), and `review` when it has any, else `admit`.
+    */
+  private def candidateVerdicts(batch: DataFrame, hits: DataFrame): DataFrame =
+    batch.select(col("doc_id")).distinct()
+      .join(hits.select(col("doc_id"), col("cand_id")).distinct()
+        .groupBy(col("doc_id"))
+        .agg(countDistinct(col("cand_id")).as("n_candidates")),
+        Seq("doc_id"), "left")
+      .withColumn("n_candidates", coalesce(col("n_candidates"), lit(0L)))
+      .withColumn("action",
+        when(col("n_candidates") > 0, "review").otherwise("admit"))
 
   /** Streaming PERCEPTUAL near-dup admission — the multimodal twin of
     * [[nearDupAdmissionStream]], closing the batch/streaming symmetry
@@ -203,30 +213,14 @@ object StreamOps {
     */
   def phashAdmissionStream(media: DataFrame, index: DataFrame,
       checkpoint: String)(onBatch: DataFrame => Unit): StreamingQuery =
-    media.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val probes = graft.operators.Multimodal.phashBandKeysOf(
-          batch.select(col("doc_id"), col("modality"),
-            col("payload_hex"), col("payload_md5")))
-        val hits = probes
-          .join(index, Seq("modality", "band_idx", "band_bits"))
-          .filter(col("doc_id") =!= col("cand_id"))
-          .withColumn("hamming",
-            expr("bit_count(phash ^ cand_phash)").cast("long"))
-          .filter(col("hamming") <= graft.operators.Multimodal.PhashRadius)
-          .select(col("doc_id"), col("cand_id")).distinct()
-        val verdicts = batch.select(col("doc_id")).distinct()
-          .join(hits.groupBy(col("doc_id"))
-            .agg(countDistinct(col("cand_id")).as("n_candidates")),
-            Seq("doc_id"), "left")
-          .withColumn("n_candidates", coalesce(col("n_candidates"), lit(0L)))
-          .withColumn("action",
-            when(col("n_candidates") > 0, "review").otherwise("admit"))
-        onBatch(verdicts)
-      }
-      .start()
+    admissionStream(media, Seq("doc_id", "modality", "payload_hex", "payload_md5"),
+        checkpoint, onBatch) { batch =>
+      candidateVerdicts(batch, graft.operators.Multimodal.phashBandKeysOf(batch)
+        .join(index, Seq("modality", "band_idx", "band_bits"))
+        .filter(col("doc_id") =!= col("cand_id"))
+        .withColumn("hamming", expr("bit_count(phash ^ cand_phash)").cast("long"))
+        .filter(col("hamming") <= graft.operators.Multimodal.PhashRadius))
+    }
 
   /** Streaming materialized view — the continuous twin of
     * `etl_incremental_agg`: each micro-batch is reduced to its (small)
@@ -796,14 +790,9 @@ object StreamOps {
   def spanAdmissionStream(docs: DataFrame, grams: DataFrame,
       gramDf: DataFrame, checkpoint: String)(
       onBatch: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        onBatch(graft.operators.TextAnalysis.spanAdmitVerdicts(
-          batch.select(col("doc_id"), col("text")), grams, gramDf))
-      }
-      .start()
+    admissionStream(docs, Seq("doc_id", "text"), checkpoint, onBatch) {
+      graft.operators.TextAnalysis.spanAdmitVerdicts(_, grams, gramDf)
+    }
 
   /** Streaming span-gram maintenance — the continuous form of
     * [[graft.operators.IndexMaintenance.refreshSpans]]: each

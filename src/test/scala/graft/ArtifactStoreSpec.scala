@@ -94,6 +94,33 @@ class ArtifactStoreSpec extends SparkTestBase {
       == rows(Dedup.dedupComponentsCapped(spark, sfDir)))
     assert(rows(Dedup.dedupKeepBestCappedServed(spark, sfDir))
       == rows(Dedup.dedupKeepBestCapped(spark, sfDir)))
+    // the group-aware split over the served label artifact
+    assert(rows(graft.operators.Pipeline.corpusGroupSplitServed(spark, sfDir))
+      == rows(graft.operators.Pipeline.corpusGroupSplit(spark, sfDir)))
+  }
+
+  test("datasets whose paths differ only in punctuation keep separate artifacts") {
+    import graft.operators.Dedup
+    // both paths fold to the same `[a-z0-9_]` token; the second holds
+    // the same documents under shifted ids, so its clusters differ
+    val base = java.nio.file.Files.createTempDirectory("graft_art_collide").toFile
+    val dirs = Seq("sf0.1", "sf0_1").map(n => new java.io.File(base, n).getPath)
+    try {
+      val docs = Tables.documents(spark, sfDir)
+      docs.coalesce(1).write.parquet(s"${dirs(0)}/documents.parquet")
+      docs.withColumn("doc_id", col("doc_id") + 100000L)
+        .coalesce(1).write.parquet(s"${dirs(1)}/documents.parquet")
+      // serve both before checking either: a shared table would hold
+      // only the second directory's build
+      dirs.foreach(d => Dedup.dedupComponentsServed(spark, d).count())
+      dirs.foreach { d =>
+        val own = rows(Dedup.dedupComponents(spark, d))
+        assert(own.nonEmpty, s"no clusters in $d")
+        assert(rows(Dedup.dedupComponentsServed(spark, d)) == own, s"served labels of $d")
+        assert(rows(graft.operators.Pipeline.corpusGroupSplitServed(spark, d))
+          == rows(graft.operators.Pipeline.corpusGroupSplit(spark, d)), s"group split of $d")
+      }
+    } finally graft.sinks.IdempotentMergeSink.deleteRecursively(base)
   }
 
   test("capped fusion artifacts respect their scan-depth and posting caps") {
