@@ -268,7 +268,7 @@ object IndexMaintenance {
     // the fp merge landing first cannot change what the pair merge
     // reads — the two commits are safely concurrent. With no fp commit
     // the base is empty, and dctNewPairs(bfp, ∅) is dctPairsOver(bfp):
-    // both band with FineBands
+    // both band with bandsFor(DctRadius)
     val baseFp = IdempotentMergeSink.read(spark, fpRoot(root)).getOrElse(bfp.limit(0))
       .select("doc_id", "modality", "phash64")
     commitAll(

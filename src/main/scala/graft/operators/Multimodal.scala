@@ -139,8 +139,7 @@ object Multimodal {
     * machinery exemplar over plantable payloads.
     */
   def multimodalPhashPairs(spark: SparkSession, dir: String): DataFrame =
-    dctPairsOver(dctFingerprints(spark, dir).localCheckpoint(),
-      CoarseBands, DctRadiusCoarse)
+    dctPairsOver(dctFingerprints(spark, dir).localCheckpoint(), DctRadiusCoarse)
       .orderBy(col("doc_a"), col("doc_b"))
 
   /** The (doc_id, modality, payload_hex, payload_md5) projection the
@@ -480,35 +479,32 @@ object Multimodal {
     dctPairsOver(servedDctFingerprints(spark, dir))
       .orderBy(col("doc_a"), col("doc_b"))
 
-  /** The EXACT search's banding, r12: 11 uneven bands (widths 5-6)
-    * over the 64 bits — the minimum band count pigeonhole-lossless at
-    * [[DctRadius]] = 10 (10 flips cannot touch all 11 bands), with the
-    * WIDEST buckets that count allows. Candidate mass per modality is
+  /** The banding lossless at Hamming `radius`, as (band_idx, lo_bit,
+    * width): `radius + 1` near-equal bands over the 64 bits — the
+    * minimum band count pigeonhole-lossless at `radius` (`radius`
+    * flips cannot touch every band), with the WIDEST buckets that
+    * count allows. At [[DctRadius]] = 10 (the exact search, r12) that
+    * is 11 uneven bands of width 5-6: candidate mass per modality is
     * Σ_bands occupancy² ∝ n²·Σ 2^−width = 0.20 n², versus the old
     * uniform 16×4's 16·n²/16 = n² — ~5× fewer candidates for the
     * identical result set (any lossless banding yields the same pairs,
-    * so the DuckDB oracle's uniform banding replays unchanged).
+    * so the DuckDB oracle's uniform banding replays unchanged). At
+    * [[DctRadiusCoarse]] = 3 it is the coarse search's 4 × 16 bits.
     */
-  private val FineBands: Seq[(Int, Int, Int)] = { // (band_idx, lo_bit, width)
-    val cuts = (0 to DctRadius + 1).map(b => 64 * b / (DctRadius + 1))
+  private def bandsFor(radius: Int): Seq[(Int, Int, Int)] = {
+    val cuts = (0 to radius + 1).map(b => 64 * b / (radius + 1))
     cuts.sliding(2).toSeq.zipWithIndex.map {
       case (Seq(lo, hi), i) => (i, lo, hi - lo)
     }
   }
 
-  /** 4 uniform 16-bit bands — the coarse production search's layout,
-    * lossless to radius [[DctRadiusCoarse]].
+  /** Band keys of a fingerprint relation under [[bandsFor]]`(radius)`
+    * — the probe/index shape the batch pair search, the incremental
+    * refresh, and the capped search all share.
     */
-  private val CoarseBands: Seq[(Int, Int, Int)] = (0 until 4).map(b => (b, 16 * b, 16))
-
-  /** Band keys of a fingerprint relation under a (band_idx, lo_bit,
-    * width) layout — the probe/index shape the batch pair search, the
-    * incremental refresh, and the capped search all share.
-    */
-  private def dctBandsOf(fp: DataFrame,
-      layout: Seq[(Int, Int, Int)] = FineBands): DataFrame =
+  private def dctBandsOf(fp: DataFrame, radius: Int): DataFrame =
     fp.select(col("doc_id"), col("modality"), col("phash64"),
-      explode(array(layout.map { case (i, lo, w) => struct(
+      explode(array(bandsFor(radius).map { case (i, lo, w) => struct(
         lit(i).as("band_idx"),
         shiftright(col("phash64"), lo)
           .bitwiseAND(lit((1L << w) - 1)).as("band_bits"))
@@ -517,11 +513,10 @@ object Multimodal {
         col("bb.band_idx"), col("bb.band_bits"))
 
   /** The banded pair search within each modality: pairs sharing a band
-    * key under `layout`, Hamming-verified to `radius`.
+    * key under [[bandsFor]]`(radius)`, Hamming-verified to `radius`.
     */
-  private[graft] def dctPairsOver(fp: DataFrame,
-      layout: Seq[(Int, Int, Int)] = FineBands, radius: Int = DctRadius): DataFrame = {
-    val bands = dctBandsOf(fp, layout)
+  private[graft] def dctPairsOver(fp: DataFrame, radius: Int = DctRadius): DataFrame = {
+    val bands = dctBandsOf(fp, radius)
     withinRadius(bands.select(col("modality"), col("band_idx"), col("band_bits"),
         col("doc_id").as("doc_a"), col("phash64").as("fa"))
       .join(bands.select(col("modality"), col("band_idx"), col("band_bits"),
@@ -542,8 +537,8 @@ object Multimodal {
 
   /** The coarse-banded production operating point: 4 bands × 16 bits,
     * lossless to radius [[DctRadiusCoarse]]. The exact ≤10 search's
-    * banding ([[FineBands]]: 11 uneven 5-6-bit bands since r12) is
-    * lossless at the full cut but its buckets are at most 2^6 wide —
+    * banding ([[bandsFor]] at radius 10: 11 uneven 5-6-bit bands
+    * since r12) is lossless at the full cut but its buckets are at most 2^6 wide —
     * occupancy grows ∝ n and candidates ∝ 0.2 n² (quadratic however
     * banded: 11 bands cannot be wider). 16-bit bands give 2^16
     * buckets per band: occupancy ∝ n/2^16, the same pigeonhole
@@ -556,8 +551,8 @@ object Multimodal {
   val DctRadiusCoarse = 3
   /** PERCEPTUAL Hamming sensitivity — [[Dedup.dedupSimhashSensitivity]]
     * with the DCT family's OBSERVED column: the exact search's banding
-    * ([[FineBands]]) is lossless at the full ≤10 cut, so its pair mass
-    * at h ∈ [0, 10] is the TRUE pair count per distance, and the
+    * ([[bandsFor]] at radius 10) is lossless at the full ≤10 cut, so
+    * its pair mass at h ∈ [0, 10] is the TRUE pair count per distance, and the
     * analytic columns price the
     * production operating points against real mass — rows with
     * p_b4x16 = 1.0 are exactly what the coarse `_r3` form catches
@@ -616,8 +611,7 @@ object Multimodal {
   }
 
   def multimodalPhashDctPairsR3(spark: SparkSession, dir: String): DataFrame =
-    dctPairsOver(servedDctFingerprints(spark, dir),
-      CoarseBands, DctRadiusCoarse)
+    dctPairsOver(servedDctFingerprints(spark, dir), DctRadiusCoarse)
       .orderBy(col("doc_a"), col("doc_b"))
 
   /** Bucket-occupancy threshold and sorted-window width of the CAPPED
@@ -642,7 +636,8 @@ object Multimodal {
     * movers to get one (fusion → `ann_rrf_fusion_capped`, pairs →
     * `dedup_pairs_capped`, admission → `dedup_incremental_capped`,
     * spans → `dedup_exact_spans_capped`): the fine search's expected
-    * candidate mass is ∝ n²/2^width (width 5-6 per [[FineBands]] band),
+    * candidate mass is ∝ n²/2^width (width 5-6 per band of
+    * [[bandsFor]] at radius 10),
     * and the r15 organic point measured the occupancy crossing — byte
     * exp 2.96 at ×10. The coarse `_r3` form is the per-segment
     * production tool at 2^16-wide buckets; THIS form keeps the full
@@ -655,7 +650,7 @@ object Multimodal {
     * DuckDB oracle replaying the engine's exact uneven banding, gate,
     * and window — the lossless "any banding" aliasing of the uncapped
     * oracles does NOT hold for a capped build, so the oracle carries
-    * the [[FineBands]] layout literally.
+    * the [[bandsFor]] layout at radius 10 literally.
     */
   def multimodalPhashDctPairsCapped(spark: SparkSession, dir: String): DataFrame =
     cappedDctPairsOver(servedDctFingerprints(spark, dir))
@@ -667,9 +662,9 @@ object Multimodal {
     */
   private[graft] def cappedDctPairsOver(fp: DataFrame): DataFrame = {
     val bucketKeys = Seq("modality", "band_idx", "band_bits")
-    val occ = dctBandsOf(fp).groupBy(bucketKeys.map(col): _*)
+    val occ = dctBandsOf(fp, DctRadius).groupBy(bucketKeys.map(col): _*)
       .agg(count(lit(1)).as("occ"))
-    val marked = dctBandsOf(fp).join(occ, bucketKeys)
+    val marked = dctBandsOf(fp, DctRadius).join(occ, bucketKeys)
       .localCheckpoint(false) // clique + both window sides read it
     val small = marked.filter(col("occ") <= DctCliqueCap)
     val clique = small
@@ -713,7 +708,7 @@ object Multimodal {
     * Work ∝ batch × touched band buckets.
     */
   private[graft] def dctNewPairs(batchFp: DataFrame, baseFp: DataFrame): DataFrame = {
-    val bands = dctBandsOf(baseFp.unionByName(batchFp))
+    val bands = dctBandsOf(baseFp.unionByName(batchFp), DctRadius)
       .join(batchFp.select(col("doc_id").as("nid")).distinct(),
         col("doc_id") === col("nid"), "left")
       .withColumn("is_new", col("nid").isNotNull)
@@ -979,12 +974,12 @@ object Multimodal {
     * oracles (where any lossless banding yields the same pairs, so one
     * uniform replay covers every engine banding), a CAPPED build's
     * answer depends on the exact banding, so this replays the engine's
-    * [[FineBands]] layout literally (the VALUES rows are generated
-    * from the same Scala sequence — zero drift surface), plus the
+    * [[bandsFor]] layout at radius 10 literally (the VALUES rows are
+    * generated from the same Scala sequence — zero drift surface), plus the
     * occupancy gate and the (phash64, doc_id)-sorted window.
     */
   private lazy val cappedDctPairsOracle: String = {
-    val bandRows = FineBands
+    val bandRows = bandsFor(DctRadius)
       .map { case (i, lo, w) => s"($i, $lo, $w)" }.mkString(", ")
     s"""WITH $dctCtes,
        |fb(band_idx, lo, w) AS (VALUES $bandRows),

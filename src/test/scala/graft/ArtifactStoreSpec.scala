@@ -120,7 +120,14 @@ class ArtifactStoreSpec extends SparkTestBase {
         assert(rows(graft.operators.Pipeline.corpusGroupSplitServed(spark, d))
           == rows(graft.operators.Pipeline.corpusGroupSplit(spark, d)), s"group split of $d")
       }
-    } finally graft.sinks.IdempotentMergeSink.deleteRecursively(base)
+    } finally {
+      // the artifact tables of both directories carry the base
+      // directory's name; drop them so no run leaves any behind
+      spark.catalog.listTables().collect().map(_.name)
+        .filter(_.contains(base.getName.toLowerCase))
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      graft.sinks.IdempotentMergeSink.deleteRecursively(base)
+    }
   }
 
   test("capped fusion artifacts respect their scan-depth and posting caps") {

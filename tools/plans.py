@@ -2,7 +2,7 @@
 """Diff two `graft.Explain` dumps after masking run-specific tokens.
 
 Usage:
-    python3 tools/plans.py OLD_LOG NEW_LOG [--data DIR] [--show]
+    python3 tools/plans.py OLD_LOG NEW_LOG
 
 Each LOG is the captured output of
     sbt "runMain graft.Explain"
@@ -16,14 +16,14 @@ two runs of the same code give identical text:
   - lambda and object addresses (`$$Lambda/0x...`, `@1a2b3c`);
   - temporary directories (`/tmp/...`, java.io.tmpdir roots);
   - the sbt checkout directory of each log (read from its
-    "set current project ... (in build file:<dir>)" line) and the
-    dataset directory DIR (default: read from the first
-    `InMemoryFileIndex [file:<dir>/<table>.parquet]` of each log);
+    "set current project ... (in build file:<dir>)" line) and its
+    dataset directory (read from the first
+    `InMemoryFileIndex [file:<dir>/<table>.parquet]` line);
   - the dataset token in artifact table names
     (`graft_art_<dataset token>[_<hash>]_<name>`).
 
 Prints, per query whose normalized plan differs, the number of changed
-lines (`--show` also prints the unified diff), then a final
+lines and the unified diff, then a final
 "<n> changed lines in <q> of <total> queries" line. Queries present in
 only one log count all their lines as changed.
 """
@@ -50,7 +50,7 @@ def dir_key(path):
     return re.sub(r"^_+|_+$", "", re.sub(r"[^a-z0-9]+", "_", path.lower()))
 
 
-def parse(path, data):
+def parse(path):
     with open(path, encoding="utf-8", errors="replace") as fh:
         raw = [l.rstrip("\n") for l in fh]
     lines = [l[len("[info] "):] if l.startswith("[info] ") else
@@ -61,12 +61,12 @@ def parse(path, data):
         if m:
             checkout = m.group(1)
             break
-    if data is None:
-        for l in lines:
-            m = l and re.search(r"InMemoryFileIndex \[file:(.*)/[^/]+\.parquet", l)
-            if m:
-                data = m.group(1)
-                break
+    data = None
+    for l in lines:
+        m = l and re.search(r"InMemoryFileIndex \[file:(.*)/[^/]+\.parquet", l)
+        if m:
+            data = m.group(1)
+            break
     subs = []
     if checkout:
         subs.append((re.compile(re.escape(checkout)), "<checkout>"))
@@ -94,16 +94,9 @@ def parse(path, data):
 
 
 def main(argv):
-    show = "--show" in argv
-    argv = [a for a in argv if a != "--show"]
-    data = None
-    if "--data" in argv:
-        i = argv.index("--data")
-        data = argv[i + 1].rstrip("/")
-        argv = argv[:i] + argv[i + 2:]
     if len(argv) != 2:
         sys.exit(__doc__)
-    old, new = parse(argv[0], data), parse(argv[1], data)
+    old, new = parse(argv[0]), parse(argv[1])
     total, changed_q = 0, 0
     for q in sorted(set(old) | set(new)):
         a, b = old.get(q, []), new.get(q, [])
@@ -113,8 +106,7 @@ def main(argv):
             changed_q += 1
             total += len(diff)
             print(f"{len(diff):6d} {q}")
-            if show:
-                print("\n".join(difflib.unified_diff(a, b, q, q, lineterm="")))
+            print("\n".join(difflib.unified_diff(a, b, q, q, lineterm="")))
     print(f"{total} changed lines in {changed_q} of {len(set(old) | set(new))} queries")
 
 
