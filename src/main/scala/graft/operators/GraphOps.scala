@@ -66,6 +66,8 @@ object GraphOps {
     * was a refactor trap: rebuilding the same relation twice silently
     * dropped every full build onto the asymmetric plan, a measured
     * 1.5× regression across all seven graph queries, caught in r10).
+    * The maintenance form is its own function over a (base, batch)
+    * pair, [[knnListDelta]], and rejects the same instance twice.
     *
     * This is the FULL-BUILD form over one node relation, and since
     * r11 it never enumerates node-level candidate pairs at all. The
@@ -154,99 +156,150 @@ object GraphOps {
       .select(col("u"), col("c.v").as("v"), col("c.diff").as("diff"))
   }
 
-  /** The MAINTENANCE form over a probe ≠ corpus pair: probe explodes
-    * ±1 price bands against the corpus's own band, which is what makes
-    * INCREMENTAL maintenance possible — a refresh recomputes lists
-    * only for the nodes a batch can touch
-    * ([[IndexMaintenance.refreshKnn]]). Since r11 the corpus side is
-    * coordinate-collapsed like the full build: corpus nodes group by
-    * exact price and only a group's K+1 smallest keys ride the band
-    * join (for any probe the group's members share one diff, ties
-    * break by smallest key, and excluding the probe itself drops at
-    * most ONE of them — so K of the K+1 always survive the rank).
-    * Candidates per probe node are #band-groups × (K+1), not band
-    * OCCUPANCY: work ∝ probe × distinct coordinates in reach, never
-    * probe × corpus, and duplication-regime corpus growth is free.
-    * Passing the same instance twice fails loudly: a full build must
-    * say [[knnListsSymmetric]].
+  /** The kNN list DELTA a batch of NEW nodes makes to the lists
+    * [[knnListsSymmetric]] builds over `base`: rows (u, v, diff, op),
+    * where op "I" adds (u, v) and "D" removes it. Applied to
+    * `knnListsSymmetric(base)` it gives `knnListsSymmetric(base ∪
+    * batch)` exactly — the maintenance form
+    * [[IndexMaintenance.refreshKnn]] commits unchanged. It never reads
+    * the maintained lists: the old list of a base node is recomputed
+    * beside its new one, from the same co-located candidates.
+    *
+    * A batch node can only enter the list of a node in its own band or
+    * a neighbour band (within `KnnTol`), so the work is the bands near
+    * the batch, not the corpus. The batch's band set is collected once
+    * (one job over the small side). Every base or batch node whose home
+    * band lies within 2 bands of a batch band is routed, in one shuffle
+    * sorted by (band, probe), as a CANDIDATE to each band within 1 of
+    * its home that is a probe band (within 1 of a batch band), and as
+    * a PROBE to its home band when that is a probe band — the ±1 band
+    * reach of the full build, so both see the same candidates. Each
+    * band is then solved locally by [[sweepBands]] (candidates sort
+    * first).
+    *
+    * Memory per band: two price → (K+1 smallest keys) maps (base nodes
+    * only, and all nodes) over the candidates of 3 bands, i.e.
+    * O(distinct prices in 3 bands × (K+1)) keys; probes stream. A
+    * probe's search walks outward from its own price, so it visits
+    * O(K) price groups, not the band.
     */
-  private[graft] def knnListsOf(probe: DataFrame, corpus: DataFrame): DataFrame = {
-    require(!(probe eq corpus),
-      "knnListsOf is the asymmetric maintenance form; a full build over " +
-        "one node relation must call knnListsSymmetric (1.5x faster plan)")
-    val a = probe.select(col("key").as("u"), col("price").as("pu"))
-      .withColumn("band", explode(array((-1 to 1).map(d =>
-        floor(col("pu") / KnnTol).cast("long") + d): _*)))
-    // corpus rows in bands no probe explodes can never join: prune them
-    // BEFORE the group aggregation, so the collapse costs ∝ occupancy
-    // of the probe's bands, not ∝ corpus — for a small refresh set the
-    // per-batch corpus-side work shrinks with the batch
-    val groups = corpus
-      .withColumn("band", floor(col("price") / KnnTol).cast("long"))
-      .join(broadcast(a.select(col("band")).distinct()), Seq("band"), "left_semi")
-      .groupBy(col("price").as("pv"))
-      .agg(call_function("bottom_k_by_key",
-        lpad(col("key").cast("string"), 20, "0"), col("key"), lit(KnnK + 1))
-        .as("low_keys"))
-    val b = groups.select(col("pv"), col("low_keys"),
-      floor(col("pv") / KnnTol).cast("long").as("band"))
-    topKLists(a.join(b, Seq("band"))
-      .filter(abs(col("pu") - col("pv")) <= KnnTol)
-      .select(col("u"), explode(col("low_keys")).as("v"),
-        round(abs(col("pu") - col("pv")), 6).as("diff"))
-      .filter(col("u") =!= col("v")))
+  private[graft] def knnListDelta(base: DataFrame, batch: DataFrame): DataFrame = {
+    require(!(base eq batch),
+      "knnListDelta needs a batch of NEW nodes; the same relation as base adds nothing")
+    val spark = batch.sparkSession
+    import spark.implicits._
+    val band = floor(col("price") / KnnTol).cast("long")
+    val batchBands = batch.select(band).as[Long]
+      .mapPartitions(_.toSet.iterator).collect().toSet
+    val probeBands = batchBands.flatMap(b => b - 1 to b + 1)
+    def nodes(df: DataFrame, fresh: Boolean) =
+      df.select(col("key").cast("long"), col("price").cast("double"),
+        band.as("home"), lit(fresh).as("fresh"))
+    val routed = nodes(base, fresh = false).unionByName(nodes(batch, fresh = true))
+      .filter(col("home").isin(batchBands.toSeq.flatMap(b => b - 2 to b + 2).distinct: _*))
+      .as[KnnNode].rdd
+      .flatMap { n =>
+        val probe = if (probeBands(n.home)) Seq((n.home, true) -> n) else Nil
+        (n.home - 1 to n.home + 1).filter(probeBands).map(q => (q, false) -> n) ++ probe
+      }
+    // the RDD shuffle runs inside the consumer's job: a DataFrame
+    // repartition's map stage would be a Spark job of its own (AQE)
+    val bands = new BandPartitioner(
+      math.max(1, math.min(probeBands.size, spark.sessionState.conf.numShufflePartitions)))
+    routed.repartitionAndSortWithinPartitions(bands).mapPartitions(sweepBands).toDS().toDF()
   }
 
-  /** Per-node top-K by (rounded diff, v) over exploded candidates —
-    * the maintenance form's rank, WindowGroupLimit-pruned before the
-    * rank (the full build selects through per-group stream heads and
-    * never ranks node-level candidates).
+  /** A node of the list-delta routing; `fresh` marks a batch node. */
+  private[graft] case class KnnNode(key: Long, price: Double, home: Long, fresh: Boolean)
+
+  /** Routes a (band, probe) key by its band alone, so a band's
+    * candidates and probes meet in one partition.
     */
-  private def topKLists(cand: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("u")).orderBy(col("diff"), col("v"))
-    cand.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= KnnK).select(col("u"), col("v"), col("diff"))
+  private final class BandPartitioner(val numPartitions: Int)
+      extends org.apache.spark.Partitioner {
+    def getPartition(key: Any): Int =
+      java.lang.Math.floorMod(key.asInstanceOf[(Long, Boolean)]._1, numPartitions.toLong).toInt
   }
 
-  /** Base-corpus node keys whose maintained top-K lists a batch of NEW
-    * nodes can CHANGE — the refresh's work set. Band reach (±tol of
-    * any batch node, batch side broadcast) is the safe outer bound,
-    * but in a dense or duplicated coordinate regime it approaches the
-    * ENTIRE corpus — measured at the sf0.5 scale point, a 1000-node
-    * batch put ~the whole 1M-node relation in reach and the "refresh"
-    * cost exactly a bootstrap (20.7 vs 20.4 s). The tight condition:
-    * since a batch only ADDS nodes, u's list changes only if some
-    * batch node ENTERS its top-K under the (diff, key) order, which
-    * requires min-batch-diff ≤ u's current WORST neighbor diff (the ≤
-    * keeps the equal-diff tiebreak cases as a safe superset), or an
-    * under-full/absent list (< K rows — including isolated nodes).
-    * The worst diffs come straight off the maintained lists — since
-    * r12 the list table PERSISTS each row's diff, so discovery is one
-    * scan + per-u max/count with NO price join-backs (the previous
-    * form shuffled the K·n list relation through two joins against
-    * the base relation every refresh) — and the recompute is ∝ nodes
-    * with a genuinely contested list: in the duplication regime,
-    * same-coordinate groups and boundary nodes, not band occupancy.
-    * `lists` is the maintained (u, v, diff) relation.
+  /** One [[knnListDelta]] row. */
+  private[graft] case class KnnListRow(u: Long, v: Long, diff: Double, op: String)
+
+  /** Solves each band of a partition sorted by (band, probe): the
+    * band's candidates build the two collapsed maps, then each probe
+    * takes its top-K from both. A batch probe emits its whole list as
+    * inserts; a base probe emits new \ old as inserts and old \ new as
+    * deletes, so an unchanged list emits nothing.
     */
-  private[graft] def touchedByBatch(base: DataFrame, batch: DataFrame,
-      lists: DataFrame): DataFrame = {
-    val a = base.select(col("key"), col("price").as("pu"))
-      .withColumn("band", explode(array((-1 to 1).map(d =>
-        floor(col("pu") / KnnTol).cast("long") + d): _*)))
-    val b = batch.select(col("price").as("pv"),
-      floor(col("pv") / KnnTol).cast("long").as("band"))
-    val reach = a.join(broadcast(b), Seq("band"))
-      .filter(abs(col("pu") - col("pv")) <= KnnTol)
-      .groupBy(col("key"))
-      .agg(min(round(abs(col("pu") - col("pv")), 6)).as("best_new"))
-    val worst = lists.groupBy(col("u").as("key"))
-      .agg(max(col("diff")).as("worst"), count(lit(1)).as("deg"))
-    reach.join(worst, Seq("key"), "left")
-      .filter(col("worst").isNull || col("deg") < KnnK ||
-        col("best_new") <= col("worst"))
-      .select(col("key"))
+  private def sweepBands(rows: Iterator[((Long, Boolean), KnnNode)]): Iterator[KnnListRow] = {
+    var band = 0L
+    var baseGroups: PriceGroups = null
+    var allGroups: PriceGroups = null
+    rows.flatMap { case ((q, probe), n) =>
+      if (allGroups == null || q != band) {
+        band = q; baseGroups = new PriceGroups; allGroups = new PriceGroups
+      }
+      if (!probe) {
+        allGroups.add(n.price, n.key)
+        if (!n.fresh) baseGroups.add(n.price, n.key)
+        Nil
+      } else {
+        val now = allGroups.topK(n.price, n.key)
+        def emit(l: Seq[(Double, Long)], op: String) =
+          l.map { case (d, v) => KnnListRow(n.key, v, d, op) }
+        if (n.fresh) emit(now, "I")
+        else {
+          val old = baseGroups.topK(n.price, n.key)
+          val (nowV, oldV) = (now.map(_._2).toSet, old.map(_._2).toSet)
+          emit(now.filterNot(c => oldV(c._2)), "I") ++ emit(old.filterNot(c => nowV(c._2)), "D")
+        }
+      }
+    }
+  }
+
+  /** Spark's `round(d, 6)` on a double: HALF_UP over the shortest
+    * decimal form (`BigDecimal.valueOf`), the list diff's rounding.
+    */
+  private def round6(d: Double): Double =
+    java.math.BigDecimal.valueOf(d).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** Candidates collapsed by exact price to the K+1 smallest keys —
+    * [[knnListsSymmetric]]'s collapse (a probe's top-K takes at most K
+    * members of a group, K+1 when the probe is one of them).
+    */
+  private final class PriceGroups {
+    private val byPrice = new java.util.TreeMap[java.lang.Double, Array[Long]]()
+
+    def add(price: Double, key: Long): Unit = {
+      val keys = byPrice.getOrDefault(price, Array.emptyLongArray)
+      if (keys.length <= KnnK || key < keys(KnnK))
+        byPrice.put(price, (keys :+ key).sorted.take(KnnK + 1))
+    }
+
+    /** The top-K of a probe (`self` at `p`) by (rounded diff, v), within
+      * `KnnTol`. Groups are visited outward from `p`; rounding keeps
+      * the visit order non-decreasing, so once K are held the walk
+      * stops at the first group whose rounded diff exceeds the last.
+      */
+    def topK(p: Double, self: Long): Seq[(Double, Long)] = {
+      import scala.jdk.CollectionConverters._
+      val below = byPrice.headMap(p, true).descendingMap().entrySet().iterator().asScala.buffered
+      val above = byPrice.tailMap(p, false).entrySet().iterator().asScala.buffered
+      def gap(side: BufferedIterator[java.util.Map.Entry[java.lang.Double, Array[Long]]]) =
+        if (side.hasNext) math.abs(p - side.head.getKey) else Double.MaxValue
+      val held = scala.collection.mutable.ArrayBuffer.empty[(Double, Long)]
+      var last = 0.0
+      var more = true
+      while (more) {
+        val side = if (gap(below) <= gap(above)) below else above
+        val d = gap(side)
+        more = d <= KnnTol && (held.size < KnnK || round6(d) <= last)
+        if (more) {
+          last = round6(d)
+          side.next().getValue.foreach(v => if (v != self) held += ((last, v)))
+        }
+      }
+      held.sortWith((a, b) => a._1 < b._1 || (a._1 == b._1 && a._2 < b._2)).take(KnnK).toSeq
+    }
   }
 
   /** Mutual-kNN edges over any per-node adjacency list relation: an

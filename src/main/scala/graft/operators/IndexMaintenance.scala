@@ -113,16 +113,16 @@ object IndexMaintenance {
       .select("doc_id", "component")
 
   // --- mutual-kNN graph maintenance (the knn_edges artifact's trickle
-  // path). The maintained relation is the per-node adjacency LIST, not
-  // the edge set: mutual-kNN edges are not additive (a new closer
-  // neighbor evicts an old one from a node's top-K), but the set of
-  // nodes a batch can touch IS bounded — batch nodes plus base nodes
-  // whose current top-K a batch node can actually ENTER
-  // ([[GraphOps.touchedByBatch]]: band reach tightened by each node's
-  // worst maintained neighbor diff). refreshKnn recomputes lists for
-  // exactly that set, deletes the evicted rows, and the cheap mutual
-  // join over the maintained lists reproduces the from-scratch edge
-  // set. ---
+  // path). The maintained relation is the per-node adjacency LIST
+  // (u, v, diff), not the edge set: mutual-kNN edges are not additive
+  // (a new closer neighbor evicts an old one from a node's top-K), but
+  // a batch node can only enter the lists of nodes within the band
+  // tolerance of it. refreshKnn commits the list DELTA of the batch
+  // ([[GraphOps.knnListDelta]]: one band shuffle, then each band
+  // recomputes its nodes' old and new lists side by side), so upserts
+  // and eviction deletes come from one relation and the merge's own
+  // materialization is the refresh's only one. The cheap mutual join
+  // over the maintained lists reproduces the from-scratch edge set. ---
 
   private def listKeyed(lists: DataFrame): DataFrame =
     lists.withColumn("list_key", concat_ws(":", col("u"), col("v")))
@@ -135,34 +135,20 @@ object IndexMaintenance {
     IdempotentMergeSink.merge(spark, root,
       listKeyed(GraphOps.knnListsSymmetric(baseNodes)), "list_key", batchId)
 
-  /** Merge one node batch into the list table under `batchId`: new
-    * lists for every touched node, deletes for their evicted rows.
-    * `baseNodes` is the corpus BEFORE the batch; batch keys must be
-    * new. False = already applied (the retry no-op). Throws on a root
-    * with no commit (see [[requireBuilt]]).
+  /** Merge one node batch into the list table under `batchId`: the
+    * inserts and eviction deletes of [[GraphOps.knnListDelta]],
+    * committed as they are. Precondition: `baseNodes` is the corpus
+    * the table holds (its bootstrap plus every batch applied since),
+    * because each base node's old list is recomputed from it rather
+    * than read from the table; batch keys must be new. False = already
+    * applied (the retry no-op). Throws on a root with no commit (see
+    * [[requireBuilt]]).
     */
   def refreshKnn(spark: SparkSession, root: String, baseNodes: DataFrame,
       batchNodes: DataFrame, batchId: String): Boolean = {
     requireBuilt(root, "refreshKnn", "bootstrapKnn")
-    val maintained = committed(spark, root, "knn list", "u", "v", "diff")
-    val touched = baseNodes
-      .join(GraphOps.touchedByBatch(baseNodes, batchNodes, maintained),
-        Seq("key"), "left_semi")
-      .unionByName(batchNodes)
-      // materialize the (small) touched set: its derivation embeds the
-      // full-table worst-diff aggregation, and both the fresh-list
-      // build and the evicted anti-join consume it — without the
-      // checkpoint that aggregation runs twice per refresh
-      .localCheckpoint()
-    val fresh = GraphOps.knnListsOf(touched, baseNodes.unionByName(batchNodes))
-      .localCheckpoint() // feeds both the upserts and the evicted anti-join
-    val evicted = maintained
-      .join(touched.select(col("key").as("u")), Seq("u"), "left_semi")
-      .join(fresh, Seq("u", "v"), "left_anti")
-      .withColumn("op", lit("D"))
     IdempotentMergeSink.merge(spark, root,
-      listKeyed(fresh.withColumn("op", lit("I")).unionByName(evicted)),
-      "list_key", batchId)
+      listKeyed(GraphOps.knnListDelta(baseNodes, batchNodes)), "list_key", batchId)
   }
 
   /** The maintained per-node adjacency lists (u, v). */

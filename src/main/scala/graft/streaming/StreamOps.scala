@@ -762,8 +762,8 @@ object StreamOps {
 
   /** Streaming mutual-kNN graph maintenance — the continuous form of
     * [[graft.operators.IndexMaintenance.refreshKnn]]: each micro-batch
-    * of (key, price) nodes refreshes the adjacency lists for exactly
-    * the touched node set against the prior-ingested corpus.
+    * of (key, price) nodes commits its list delta against the
+    * prior-ingested corpus, which is the corpus the table holds.
     */
   def knnRefreshStream(nodes: DataFrame, listsRoot: String,
       nodesRoot: String, baseNodes: DataFrame): StreamingQuery =

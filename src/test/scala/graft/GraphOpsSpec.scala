@@ -175,29 +175,33 @@ class GraphOpsSpec extends SparkTestBase {
     // strategy was picked by reference equality
     val n1 = GraphOps.partNodes(spark, sfDir)
     val n2 = GraphOps.partNodes(spark, sfDir)
-    val sym = GraphOps.knnListsSymmetric(n1)
-    val asym = GraphOps.knnListsOf(n1, n2)
-    assert(sym.exceptAll(asym).count() == 0)
-    assert(asym.exceptAll(sym).count() == 0)
-    // the full-build-by-accident call can no longer run on the wrong plan
-    intercept[IllegalArgumentException] { GraphOps.knnListsOf(n1, n1) }
+    // the maintenance form: the base build with the batch's list delta
+    // applied equals the full build over base ∪ batch
+    val base = n1.filter(col("key") % 5 =!= 0)
+    val delta = GraphOps.knnListDelta(base, n2.filter(col("key") % 5 === 0))
+    def lists(df: org.apache.spark.sql.DataFrame) =
+      df.select("u", "v", "diff").collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val ops = delta.select("u", "v", "diff", "op").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)) -> r.getString(3))
+    val deleted = ops.collect { case ((u, v, _), "D") => (u, v) }.toSet
+    val applied = lists(GraphOps.knnListsSymmetric(base))
+      .filterNot { case (u, v, _) => deleted((u, v)) }.toSet ++
+      ops.collect { case (row, "I") => row }
+    val want = lists(GraphOps.knnListsSymmetric(n1)).toSet
+    assert(deleted.nonEmpty && want.nonEmpty && applied == want)
+    // one relation passed as both base and batch fails loudly
+    intercept[IllegalArgumentException] { GraphOps.knnListDelta(n1, n1) }
     // and the seven graph queries' shared build takes the collapsed
     // path structurally: per-node selection reads the per-group
     // stream-head arrays (`cand_vs`), never a node-level candidate
     // rank (the collapse's group aggregate itself sits behind the
     // groups checkpoint, so the array attribute is the visible
-    // signature; the asymmetric maintenance form has no such array)
+    // signature; the maintenance form has no such array)
     def readsStreamHeads(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.optimizedPlan.toString.contains("cand_vs")
     assert(readsStreamHeads(GraphOps.knnListsSymmetric(n1)),
       "symmetric build lost its coordinate-collapse shape")
-    assert(!readsStreamHeads(asym))
-    // the maintenance form is collapsed on its CORPUS side since r11:
-    // probes join per-price group arrays (`low_keys`, K+1 smallest keys
-    // per group) instead of raw band occupants, so refresh candidates
-    // are ∝ distinct coordinates in band reach, never corpus occupancy
-    assert(asym.queryExecution.optimizedPlan.toString.contains("low_keys"),
-      "maintenance form lost its corpus-side coordinate collapse")
+    assert(!readsStreamHeads(delta))
   }
 
   test("group-head broadcast is gated on the distinct-coordinate count: degenerate inputs degrade to a shuffle join") {

@@ -162,6 +162,97 @@ class IndexMaintenanceSpec extends SparkTestBase {
     assert(pr.count() > 0)
   }
 
+  /** List rows (u, v, diff) of a relation. */
+  private def listSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+    df.select("u", "v", "diff").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  /** The maintained kNN list rows at `root`. */
+  private def knnListRows(root: String): Set[(Long, Long, Double)] =
+    listSet(IdempotentMergeSink.read(spark, root).get)
+
+  /** The from-scratch kNN list rows over `nodes`. */
+  private def wantKnnLists(nodes: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+    listSet(graft.operators.GraphOps.knnListsSymmetric(nodes))
+
+  test("knn list table equals the full build's (u, v, diff) after three refreshes, in four price regimes") {
+    import graft.operators.GraphOps
+    // the sf0.01 sibling of the test data: 2000 parts, dense bands
+    val parts = GraphOps.partNodes(spark, s"${new java.io.File(sfDir).getParent}/sf0.01")
+    val regimes = Seq(
+      "sf0.01 prices" -> col("price"),
+      "heavy duplication" -> (col("key") % 13) * 0.25,
+      "rounded duplicates" -> round(col("price")),
+      "near-distinct" -> (col("price") + col("key") * 1e-7))
+    regimes.foreach { case (name, price) =>
+      val nodes = parts.select(col("key"), price.cast("double").as("price")).localCheckpoint()
+      val slices = (col("key") % 8 < 5) +: (5 to 7).map(c => col("key") % 8 === c)
+      val parts4 = slices.map(nodes.filter)
+      val root = freshRoot()
+      assert(IndexMaintenance.bootstrapKnn(spark, root, parts4.head))
+      (1 to 3).foreach { i =>
+        assert(IndexMaintenance.refreshKnn(spark, root,
+          parts4.take(i).reduce(_ unionByName _), parts4(i), s"b$i"))
+      }
+      val want = wantKnnLists(nodes)
+      val got = knnListRows(root)
+      assert(want.nonEmpty && got == want,
+        s"$name: ${got.size} vs ${want.size} list rows; " +
+          s"missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
+    }
+  }
+
+  test("knn refresh edge cases: empty, unreachable and one-node batches; equal diffs keep the smaller key") {
+    import spark.implicits._
+    import graft.operators.GraphOps
+    val nodes = GraphOps.partNodes(spark, sfDir)
+    val base = nodes.filter(col("key") % 5 =!= 0).localCheckpoint()
+    val root = freshRoot()
+    assert(IndexMaintenance.bootstrapKnn(spark, root, base))
+    val built = knnListRows(root)
+    assert(built == wantKnnLists(base))
+    // an empty batch commits a version and changes no list
+    assert(IndexMaintenance.refreshKnn(spark, root, base, base.limit(0), "empty"))
+    assert(IdempotentMergeSink.version(root) == 2 && knnListRows(root) == built)
+    // a batch no base node is within reach of: it gets no list, and no
+    // base list changes
+    val far = Seq((900000001L, 1.0e6)).toDF("key", "price")
+    assert(IndexMaintenance.refreshKnn(spark, root, base, far, "far"))
+    assert(knnListRows(root) == built)
+    // a one-node batch
+    val corpus = base.unionByName(far)
+    val one = nodes.filter(col("key") === 5)
+    assert(IndexMaintenance.refreshKnn(spark, root, corpus, one, "one"))
+    assert(knnListRows(root) == wantKnnLists(corpus.unionByName(one)))
+
+    // node 1's four neighbours all sit at rounded diff 0.1; a batch
+    // node at the same rounded diff enters by its smaller key and
+    // evicts the largest one, while a larger key stays out
+    val tieBase = Seq((1L, 10.0), (20L, 10.1), (30L, 10.1), (40L, 10.1), (50L, 10.1))
+      .toDF("key", "price")
+    val tieBatch = Seq((25L, 9.9), (60L, 9.9)).toDF("key", "price")
+    val tieRoot = freshRoot()
+    assert(IndexMaintenance.bootstrapKnn(spark, tieRoot, tieBase))
+    assert(IndexMaintenance.refreshKnn(spark, tieRoot, tieBase, tieBatch, "tie"))
+    val tied = knnListRows(tieRoot)
+    assert(tied.filter(_._1 == 1L).map(_._2) == Set(20L, 25L, 30L, 40L), tied)
+    assert(tied == wantKnnLists(tieBase.unionByName(tieBatch)))
+  }
+
+  test("one kNN refresh on a built root launches at most 8 Spark jobs") {
+    import graft.operators.GraphOps
+    val nodes = GraphOps.partNodes(spark, sfDir)
+    val base = nodes.filter(col("key") % 5 =!= 0)
+    val root = freshRoot()
+    assert(IndexMaintenance.bootstrapKnn(spark, root, base))
+    var applied = false
+    val jobs = jobsLaunchedBy {
+      applied = IndexMaintenance.refreshKnn(spark, root, base,
+        nodes.filter(col("key") % 5 === 0), "b1")
+    }
+    assert(applied && jobs <= 8, s"one refreshKnn launched $jobs Spark jobs")
+  }
+
   test("bm25 postings maintenance: inserts + additive df equal from-scratch; scoring reads it") {
     import graft.operators.AnnSearch
     val root = freshRoot()

@@ -121,7 +121,7 @@ class PlanGuardSpec extends SparkTestBase {
   test("maintenance refresh relations pass the same plan guards") {
     // The maint_* queries' only plan pieces NOT already swept through
     // regular queries are the refresh-side builders (batch-vs-all
-    // candidates, touched-set derivation, maintained-relation
+    // candidates, the kNN list delta, maintained-relation
     // recomputation). Build each directly — no sink commits — and
     // apply both guards to its physical plan.
     import org.apache.spark.sql.functions._
@@ -145,9 +145,7 @@ class PlanGuardSpec extends SparkTestBase {
       media.filter(hmod(col("doc_id"), 4) === 0)).localCheckpoint()
     val rels = Seq(
       "ngramJaccardNewPairs" -> Dedup.ngramJaccardNewPairs(base, batch),
-      "knnListsOf" -> GraphOps.knnListsOf(nBatch, nBase.unionByName(nBatch)),
-      "touchedByBatch" -> GraphOps.touchedByBatch(nBase, nBatch,
-        GraphOps.knnListsSymmetric(nBase).localCheckpoint()),
+      "knnListDelta" -> GraphOps.knnListDelta(nBase, nBatch),
       "spansFromGramsWithDf" ->
         TextAnalysis.spansFromGramsWithDf(grams, gdf),
       "dctNewPairs" -> Multimodal.dctNewPairs(batchFp, baseFp))

@@ -2,10 +2,8 @@ package graft
 
 import java.io.File
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
 
 import graft.sinks.IdempotentMergeSink
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** No graft read launches a Spark job: a schema-less parquet read
   * would run a one-task job just to read a footer, and the sink's
@@ -16,37 +14,6 @@ class ReadJobsSpec extends SparkTestBase {
 
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toFile.getAbsolutePath
-
-  /** Jobs `body` launches, counted by a label only its thread carries.
-    * A fence job run after it marks the point where every earlier job
-    * start has reached the listener.
-    */
-  private def jobsLaunchedBy(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val label = s"read-under-test-${System.nanoTime()}"
-    val fence = s"$label-fence"
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    val prev = sc.getLocalProperty("spark.job.description")
-    try {
-      sc.setJobDescription(label)
-      body
-      sc.setJobDescription(fence)
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 10000000000L
-      while (!seen.contains(fence) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains(fence), "the fence job never reached the listener")
-      seen.toArray.count(_ == label)
-    } finally {
-      sc.setJobDescription(prev)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("no read launches a Spark job before its action") {
     val keyed = tmp("parquet-jobs-keyed-")

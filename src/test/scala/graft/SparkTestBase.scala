@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -7,6 +10,37 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite {
   val sfDir = "/root/testdata/sf0.001"
   lazy val spark: SparkSession = SparkTestBase.session
+
+  /** Jobs `body` launches, counted by a label only its thread carries.
+    * A fence job run after it marks the point where every earlier job
+    * start has reached the listener.
+    */
+  def jobsLaunchedBy(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val label = s"jobs-under-test-${System.nanoTime()}"
+    val fence = s"$label-fence"
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    val prev = sc.getLocalProperty("spark.job.description")
+    try {
+      sc.setJobDescription(label)
+      body
+      sc.setJobDescription(fence)
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!seen.contains(fence) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(fence), "the fence job never reached the listener")
+      seen.toArray.count(_ == label)
+    } finally {
+      sc.setJobDescription(prev)
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 object SparkTestBase {
