@@ -54,7 +54,7 @@ object ScalePointBench {
     "dedup_simhash_pairs", "multimodal_phash_pairs",
     "etl_temporal_join", "etl_scd2_history", "q_price_band_join",
     // r12: the K-capped production twin — output O(n·K), build on the
-    // coordinate collapse; must read flat-ish where the unbounded
+    // kNN band sweep; must read flat-ish where the unbounded
     // form's 50.8M-pair output is quadratic by contract
     "q_price_band_join_topk",
     // r11: the span extraction's gram self-join is the same

@@ -157,8 +157,8 @@ object CoreAnalytics {
     * plan) is quadratic; at sf0.5 the pair set is 50.8M rows and the
     * query is output-bound by design. Production callers that want
     * "nearby parts" should use [[priceBandJoinTopk]], the K-capped
-    * twin: same tolerance, O(n·K) output, built on the coordinate
-    * collapse so the work is sub-quadratic too.
+    * twin: same tolerance, O(n·K) output, built on the kNN band
+    * sweep so the work is sub-quadratic too.
     */
   def priceBandJoin(spark: SparkSession, dir: String): DataFrame =
     priceBandPairs(spark, dir)
@@ -190,15 +190,16 @@ object CoreAnalytics {
     * neighbor key). The unbounded pair set is the AUDIT form (the
     * pairs ARE the answer, so its output is quadratic by contract);
     * this is what a production pipeline should run — output O(n·K),
-    * and the build rides [[GraphOps.knnListsSymmetric]]'s coordinate
-    * collapse (group by exact price, only a group's K+1 smallest keys
-    * enter the band join), so the WORK is sub-quadratic in the
-    * duplication regime too. Directly oracle-checks the directed kNN
-    * lists the whole graph family builds on.
+    * and the build is [[GraphOps.knnLists]]'s band sweep (one shuffle
+    * co-locates each band's nodes; a node's search walks outward from
+    * its price over groups collapsed to their K+1 smallest keys), so
+    * the WORK is sub-quadratic in every price regime too. Directly
+    * oracle-checks the directed kNN lists the whole graph family
+    * builds on.
     */
   def priceBandJoinTopk(spark: SparkSession, dir: String): DataFrame = {
     val nodes = GraphOps.partNodes(spark, dir)
-    val lists = GraphOps.knnListsSymmetric(nodes)
+    val lists = GraphOps.knnLists(nodes)
     val priced = lists
       .join(nodes.select(col("key").as("u"), col("price").as("price_u")), "u")
       .join(nodes.select(col("key").as("v"), col("price").as("price_v")), "v")

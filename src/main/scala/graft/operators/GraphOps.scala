@@ -33,18 +33,17 @@ object GraphOps {
     * counting over it cost 23.9s at sf0.1 vs 0.5s at sf0.01 — a
     * Σ deg² blow-up, the classic unscalable graph shape). kNN-graph
     * construction is the standard fix AND a standard operator in its
-    * own right: banded candidates → per-node k nearest by
-    * WindowGroupLimit-pruned rank → an edge survives only if BOTH
+    * own right: per-node k nearest within the band tolerance
+    * ([[knnLists]]'s band sweep) → an edge survives only if BOTH
     * endpoints chose each other (mutual kNN), which caps degree at k
     * BY CONSTRUCTION at any corpus size. Σ deg² ≤ k²·n — triangle and
     * rank costs stay linear forever.
     */
   private[graft] def knnEdges(spark: SparkSession, dir: String): DataFrame = {
-    mutualEdgesOf(knnListsSymmetric(partNodes(spark, dir)))
+    mutualEdgesOf(knnLists(partNodes(spark, dir)))
       // materialize the graph once: consumers reference the edge
       // relation 3-5 times (wedge joins, degree counts) and would
-      // otherwise re-plan the whole band-join + rank + mutual-join
-      // chain per reference (26 exchanges for triangle counting)
+      // otherwise re-run the list build + mutual join per reference
       .localCheckpoint()
   }
 
@@ -61,121 +60,40 @@ object GraphOps {
     */
   private val KnnTol = 0.5
 
-  /** Per-node kNN adjacency lists — strategy is chosen at the
-    * SIGNATURE level, not by reference equality (`probe eq corpus`
-    * was a refactor trap: rebuilding the same relation twice silently
-    * dropped every full build onto the asymmetric plan, a measured
-    * 1.5× regression across all seven graph queries, caught in r10).
-    * The maintenance form is its own function over a (base, batch)
-    * pair, [[knnListDelta]], and rejects the same instance twice.
-    *
-    * This is the FULL-BUILD form over one node relation, and since
-    * r11 it never enumerates node-level candidate pairs at all. The
-    * banded node self-join this replaced was the fleet's one
-    * super-linear build: within a FIXED price range, per-band
-    * occupancy grows ∝ n, true within-tolerance pairs grow ∝ n², and
-    * at the sf0.5 scale point the rank consumed 50.8M candidate rows
-    * — 33 s of the 62.8 s artifact build, dominated not by the join
-    * but by pushing 100M exploded rows through the top-K machinery.
-    *
-    * The fix is coordinate collapse, the 1-D analogue of the banded
-    * fingerprint searches' bucket discipline:
-    *  1. GROUP nodes by exact price. Within a group every member is
-    *     an interchangeable candidate (identical diff to any probe),
-    *     and selection inside a group is by smallest key — so only a
-    *     group's K+1 smallest keys can ever be chosen (K picks plus
-    *     possibly the probe itself). One `bottom_k_by_key` aggregate,
-    *     shuffle ∝ n.
-    *  2. Build each group's merged candidate STREAM head: banded
-    *     group×group join (work ∝ g²/bands for g distinct prices,
-    *     NOT n²), explode the K+1 keys, keep the first K+1 of the
-    *     merged (diff, v) order per source group.
-    *  3. Every node takes its group's precomputed head minus itself
-    *     — excluding the probe drops at most one entry, so K of the
-    *     K+1 always survive. A broadcast join + array filter/slice:
-    *     pure map-side work, no per-node window, no candidate
-    *     explosion.
-    *
-    * Result-identical to the pair-join form (spec-pinned equal) and
-    * 25× faster at the sf0.5 scale point (33 → 1.3 s): growth by
-    * coordinate DUPLICATION (the fixed-domain regime the scale point
-    * models, and the regime 100 TB of catalog data lives in) now
-    * costs O(n); all-distinct coordinates degrade gracefully to the
-    * old g = n behaviour. The broadcast is of one row per distinct
-    * coordinate — the collapse only wins when that is small, which is
-    * exactly when the hint is safe — and the hint is GATED on the
-    * materialized group count ([[KnnBroadcastGroups]]): in an
-    * all-distinct regime the group heads are O(n) rows and a forced
-    * broadcast would be a driver OOM, so above the gate the final
-    * join degrades to a plain shuffle join (AQE may still broadcast
-    * at runtime if the actual size allows).
+  /** Per-node kNN adjacency lists (u, v, diff) over one node relation:
+    * each node's K nearest other nodes within `KnnTol`, ranked by
+    * (`round(|Δprice|, 6)`, v). The full build is the list delta of
+    * every node against an empty base ([[knnListDelta]]), whose rows
+    * are then all inserts: the build and the refresh are one algorithm
+    * (the incremental top-k framing of EDBT 2020, solved band by band
+    * as in REPOSE). A node with a null key or price has no list and
+    * appears in none.
     */
-  private[graft] def knnListsSymmetric(nodes: DataFrame): DataFrame =
-    knnListsSymmetricAt(nodes, KnnBroadcastGroups)
+  private[graft] def knnLists(nodes: DataFrame): DataFrame =
+    knnListDelta(nodes.limit(0), nodes).select("u", "v", "diff")
 
-  /** One row per distinct coordinate ≈ ~100 B (K+1 longs + a double):
-    * 100k groups ≈ 10 MB — the conventional broadcast comfort bound.
-    */
-  private val KnnBroadcastGroups = 100000L
-
-  /** [[knnListsSymmetric]] with an explicit broadcast gate — exposed
-    * so specs can force the degraded plan on a small relation.
-    */
-  private[graft] def knnListsSymmetricAt(nodes: DataFrame,
-      broadcastGroups: Long): DataFrame = {
-    // the broadcast gate's group count rides the checkpoint's own
-    // materialization job as a CollectMetrics observation — one Spark
-    // job instead of materialize + count (the connectedComponents
-    // convergence-probe discipline; saves a job per kNN build)
-    val gobs = new org.apache.spark.sql.Observation()
-    val groups = nodes.groupBy(col("price").as("gprice"))
-      .agg(call_function("bottom_k_by_key",
-        lpad(col("key").cast("string"), 20, "0"), col("key"), lit(KnnK + 1))
-        .as("low_keys"))
-      .observe(gobs, count(lit(1)).as("n"))
-      .localCheckpoint()
-    val nGroups = gobs.get("n").asInstanceOf[Long]
-    val src = groups.select(col("gprice").as("ps"))
-      .withColumn("band", explode(array((-1 to 1).map(d =>
-        floor(col("ps") / KnnTol).cast("long") + d): _*)))
-    val tgt = groups.select(col("gprice").as("pt"), col("low_keys"),
-      floor(col("gprice") / KnnTol).cast("long").as("band"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("ps")).orderBy(col("diff"), col("v"))
-    val gcand = src.join(tgt, Seq("band"))
-      .filter(abs(col("ps") - col("pt")) <= KnnTol)
-      .select(col("ps"), explode(col("low_keys")).as("v"),
-        round(abs(col("ps") - col("pt")), 6).as("diff"))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= KnnK + 1)
-      .groupBy(col("ps"))
-      .agg(expr("array_sort(collect_list(struct(diff, v)))").as("cand_vs"))
-    val head = if (nGroups <= broadcastGroups) broadcast(gcand) else gcand
-    nodes.join(head, col("price") === col("ps"))
-      .select(col("key").as("u"),
-        explode(expr(s"slice(filter(cand_vs, x -> x.v != key), 1, $KnnK)")).as("c"))
-      .select(col("u"), col("c.v").as("v"), col("c.diff").as("diff"))
-  }
-
-  /** The kNN list DELTA a batch of NEW nodes makes to the lists
-    * [[knnListsSymmetric]] builds over `base`: rows (u, v, diff, op),
-    * where op "I" adds (u, v) and "D" removes it. Applied to
-    * `knnListsSymmetric(base)` it gives `knnListsSymmetric(base ∪
-    * batch)` exactly — the maintenance form
-    * [[IndexMaintenance.refreshKnn]] commits unchanged. It never reads
-    * the maintained lists: the old list of a base node is recomputed
-    * beside its new one, from the same co-located candidates.
+  /** The kNN list DELTA a batch of NEW nodes makes to the lists of
+    * `base`: rows (u, v, diff, op), where op "I" adds (u, v) and "D"
+    * removes it. Applied to the lists of `base` it gives the lists of
+    * `base ∪ batch` exactly — the maintenance form
+    * [[IndexMaintenance.refreshKnn]] commits unchanged. Over an empty
+    * base every row is an insert: that is the full build, [[knnLists]].
+    * It never reads the maintained lists: the old list of a base node
+    * is recomputed beside its new one, from the same co-located
+    * candidates. Nodes with a null key or price are dropped at entry
+    * (they have no band), as the oracle's join predicate drops them.
     *
     * A batch node can only enter the list of a node in its own band or
     * a neighbour band (within `KnnTol`), so the work is the bands near
-    * the batch, not the corpus. The batch's band set is collected once
-    * (one job over the small side). Every base or batch node whose home
-    * band lies within 2 bands of a batch band is routed, in one shuffle
-    * sorted by (band, probe), as a CANDIDATE to each band within 1 of
-    * its home that is a probe band (within 1 of a batch band), and as
-    * a PROBE to its home band when that is a probe band — the ±1 band
-    * reach of the full build, so both see the same candidates. Each
-    * band is then solved locally by [[sweepBands]] (candidates sort
-    * first).
+    * the batch, not the corpus. The batch's band set is collected to
+    * the driver once (one job): at most (price range / `KnnTol`) + 1
+    * values, whatever the node count. Every base or batch node whose
+    * home band lies within 2 bands of a batch band is routed, in one
+    * shuffle sorted by (band, probe), as a CANDIDATE to each band
+    * within 1 of its home that is a probe band (within 1 of a batch
+    * band), and as a PROBE to its home band when that is a probe band:
+    * the ±1 band reach of the `KnnTol` predicate. Each band is then
+    * solved locally by [[sweepBands]] (candidates sort first).
     *
     * Memory per band: two price → (K+1 smallest keys) maps (base nodes
     * only, and all nodes) over the candidates of 3 bands, i.e.
@@ -189,13 +107,15 @@ object GraphOps {
     val spark = batch.sparkSession
     import spark.implicits._
     val band = floor(col("price") / KnnTol).cast("long")
-    val batchBands = batch.select(band).as[Long]
-      .mapPartitions(_.toSet.iterator).collect().toSet
-    val probeBands = batchBands.flatMap(b => b - 1 to b + 1)
     def nodes(df: DataFrame, fresh: Boolean) =
       df.select(col("key").cast("long"), col("price").cast("double"),
         band.as("home"), lit(fresh).as("fresh"))
-    val routed = nodes(base, fresh = false).unionByName(nodes(batch, fresh = true))
+        .filter(col("key").isNotNull && col("price").isNotNull)
+    val batchNodes = nodes(batch, fresh = true)
+    val batchBands = batchNodes.select("home").as[Long]
+      .mapPartitions(_.toSet.iterator).collect().toSet
+    val probeBands = batchBands.flatMap(b => b - 1 to b + 1)
+    val routed = nodes(base, fresh = false).unionByName(batchNodes)
       .filter(col("home").isin(batchBands.toSeq.flatMap(b => b - 2 to b + 2).distinct: _*))
       .as[KnnNode].rdd
       .flatMap { n =>
@@ -262,9 +182,11 @@ object GraphOps {
   private def round6(d: Double): Double =
     java.math.BigDecimal.valueOf(d).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
-  /** Candidates collapsed by exact price to the K+1 smallest keys —
-    * [[knnListsSymmetric]]'s collapse (a probe's top-K takes at most K
-    * members of a group, K+1 when the probe is one of them).
+  /** Candidates collapsed by exact price to the K+1 smallest keys:
+    * members of one price group are interchangeable candidates (same
+    * diff to any probe) chosen by smallest key, so a probe's top-K
+    * takes at most K members of a group, K+1 when the probe is one of
+    * them.
     */
   private final class PriceGroups {
     private val byPrice = new java.util.TreeMap[java.lang.Double, Array[Long]]()

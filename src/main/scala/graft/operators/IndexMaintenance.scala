@@ -21,16 +21,17 @@ import org.apache.spark.sql.functions._
   *  - component labels recompute over the MAINTAINED pair table (the
   *    cheap step — the expensive text-side work is incremental).
   *
-  * Bootstrap rule: for an INSERT-ONLY family (BM25 postings, span
-  * grams, DCT fingerprints) a refresh of an empty index IS the build —
+  * Bootstrap rule: a refresh of an empty index IS the build. For an
+  * INSERT-ONLY family (BM25 postings, span grams, DCT fingerprints)
   * its row tables are pure inserts, its df sub-tables commit through
   * [[IdempotentMergeSink.mergeAdditive]] (whose first commit is a base
   * of the batch's sums), and its pairs are batch-vs-all against an
-  * empty base — so those families have no separate bootstrap body
-  * (`bootstrapBm25` is a one-line alias). The near-dup pair and kNN
-  * families keep their own bootstraps: their full builds are different
-  * algorithms from their refreshes, and their refreshes throw on an
-  * empty index rather than commit a partial one.
+  * empty base; the kNN list delta against an empty base is all
+  * inserts. So those families have no separate build algorithm
+  * (`bootstrapBm25` refreshes an empty index, `bootstrapKnn` commits
+  * that all-insert delta). Only the near-dup pair family keeps its own
+  * bootstrap, a different algorithm from its refresh. The pair and kNN
+  * refreshes throw on an empty index rather than commit a partial one.
   *
   * At 100 TB this is the operating mode: the pair table and signature
   * index live as tables, each ingest batch pays work ∝ batch size ×
@@ -117,7 +118,8 @@ object IndexMaintenance {
   // (u, v, diff), not the edge set: mutual-kNN edges are not additive
   // (a new closer neighbor evicts an old one from a node's top-K), but
   // a batch node can only enter the lists of nodes within the band
-  // tolerance of it. refreshKnn commits the list DELTA of the batch
+  // tolerance of it. Both the bootstrap (over an empty base) and
+  // refreshKnn commit the list DELTA of a batch
   // ([[GraphOps.knnListDelta]]: one band shuffle, then each band
   // recomputes its nodes' old and new lists side by side), so upserts
   // and eviction deletes come from one relation and the merge's own
@@ -128,12 +130,15 @@ object IndexMaintenance {
     lists.withColumn("list_key", concat_ws(":", col("u"), col("v")))
 
   /** Build the kNN list table from the base (key, price) node
-    * relation (first commit).
+    * relation: the refresh of an empty index, whose delta is every
+    * base node's list as inserts ([[GraphOps.knnLists]]). The inserts
+    * commit without the op column, so the first commit has no delete
+    * anti-join to plan.
     */
   def bootstrapKnn(spark: SparkSession, root: String, baseNodes: DataFrame,
       batchId: String = "bootstrap"): Boolean =
     IdempotentMergeSink.merge(spark, root,
-      listKeyed(GraphOps.knnListsSymmetric(baseNodes)), "list_key", batchId)
+      listKeyed(GraphOps.knnLists(baseNodes)), "list_key", batchId)
 
   /** Merge one node batch into the list table under `batchId`: the
     * inserts and eviction deletes of [[GraphOps.knnListDelta]],

@@ -170,13 +170,12 @@ class GraphOpsSpec extends SparkTestBase {
   }
 
   test("knn list strategy is signature-level: symmetric == asymmetric set, same-instance misuse fails loudly") {
-    // two DISTINCT instances of the same relation — the exact shape
-    // that silently dropped r10 onto the slow asymmetric plan when
-    // strategy was picked by reference equality
+    // two DISTINCT instances of the same relation: the delta's
+    // same-instance guard must not fire on them
     val n1 = GraphOps.partNodes(spark, sfDir)
     val n2 = GraphOps.partNodes(spark, sfDir)
-    // the maintenance form: the base build with the batch's list delta
-    // applied equals the full build over base ∪ batch
+    // the maintenance form: the base lists with the batch's list delta
+    // applied equal the lists over base ∪ batch
     val base = n1.filter(col("key") % 5 =!= 0)
     val delta = GraphOps.knnListDelta(base, n2.filter(col("key") % 5 === 0))
     def lists(df: org.apache.spark.sql.DataFrame) =
@@ -184,54 +183,22 @@ class GraphOpsSpec extends SparkTestBase {
     val ops = delta.select("u", "v", "diff", "op").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)) -> r.getString(3))
     val deleted = ops.collect { case ((u, v, _), "D") => (u, v) }.toSet
-    val applied = lists(GraphOps.knnListsSymmetric(base))
+    val applied = lists(knnListsBrute(base))
       .filterNot { case (u, v, _) => deleted((u, v)) }.toSet ++
       ops.collect { case (row, "I") => row }
-    val want = lists(GraphOps.knnListsSymmetric(n1)).toSet
+    val want = lists(knnListsBrute(n1)).toSet
     assert(deleted.nonEmpty && want.nonEmpty && applied == want)
     // one relation passed as both base and batch fails loudly
     intercept[IllegalArgumentException] { GraphOps.knnListDelta(n1, n1) }
-    // and the seven graph queries' shared build takes the collapsed
-    // path structurally: per-node selection reads the per-group
-    // stream-head arrays (`cand_vs`), never a node-level candidate
-    // rank (the collapse's group aggregate itself sits behind the
-    // groups checkpoint, so the array attribute is the visible
-    // signature; the maintenance form has no such array)
-    def readsStreamHeads(df: org.apache.spark.sql.DataFrame): Boolean =
-      df.queryExecution.optimizedPlan.toString.contains("cand_vs")
-    assert(readsStreamHeads(GraphOps.knnListsSymmetric(n1)),
-      "symmetric build lost its coordinate-collapse shape")
-    assert(!readsStreamHeads(delta))
   }
 
-  test("group-head broadcast is gated on the distinct-coordinate count: degenerate inputs degrade to a shuffle join") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
-    def nBroadcasts(p: SparkPlan): Int = {
-      val self = p match { case _: BroadcastExchangeLike => 1; case _ => 0 }
-      self + p.children.map(nBroadcasts).sum + p.subqueries.map(nBroadcasts).sum
-    }
+  test("kNN full build over no nodes or one node has no rows and the (u, v, diff) schema") {
     val nodes = GraphOps.partNodes(spark, sfDir)
-    // isolate the HINT from Spark's size-based auto-broadcast (which
-    // would mask the fallback on a small test relation) and from AQE's
-    // runtime join re-selection; exchanges land in executedPlan
-    val savedBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val savedAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val hinted = GraphOps.knnListsSymmetricAt(nodes, broadcastGroups = Long.MaxValue)
-      val degraded = GraphOps.knnListsSymmetricAt(nodes, broadcastGroups = 0L)
-      assert(nBroadcasts(hinted.queryExecution.executedPlan) == 1,
-        "small distinct-coordinate regime must broadcast the group heads")
-      assert(nBroadcasts(degraded.queryExecution.executedPlan) == 0,
-        "above the gate the group-head join must degrade to a shuffle join")
-      // the gate changes the PLAN, never the answer
-      assert(hinted.exceptAll(degraded).count() == 0)
-      assert(degraded.exceptAll(hinted).count() == 0)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", savedBc)
-      spark.conf.set("spark.sql.adaptive.enabled", savedAqe)
+    Seq(nodes.limit(0), nodes.orderBy("key").limit(1)).foreach { in =>
+      val lists = GraphOps.knnLists(in)
+      assert(lists.schema.map(f => f.name -> f.dataType.simpleString)
+        == Seq("u" -> "bigint", "v" -> "bigint", "diff" -> "double"))
+      assert(lists.count() == 0)
     }
   }
 

@@ -137,10 +137,10 @@ class IndexMaintenanceSpec extends SparkTestBase {
     def edgeSet(df: org.apache.spark.sql.DataFrame) =
       df.select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(edgeSet(IndexMaintenance.knnEdges(spark, root))
-      == edgeSet(GraphOps.mutualEdgesOf(GraphOps.knnListsSymmetric(base))))
+      == edgeSet(GraphOps.mutualEdgesOf(knnListsBrute(base))))
 
     assert(IndexMaintenance.refreshKnn(spark, root, base, batch, "b1"))
-    val want = edgeSet(GraphOps.mutualEdgesOf(GraphOps.knnListsSymmetric(nodes)))
+    val want = edgeSet(GraphOps.mutualEdgesOf(knnListsBrute(nodes)))
     val got = edgeSet(IndexMaintenance.knnEdges(spark, root))
     assert(want.nonEmpty && got == want,
       s"maintained kNN edges diverge: ${got.size} vs ${want.size}; " +
@@ -149,7 +149,7 @@ class IndexMaintenanceSpec extends SparkTestBase {
     // eviction really happens: the refresh must be able to REMOVE list
     // rows (mutual-kNN is not additive), so some base-only edge or list
     // row must have disappeared or the test corpus proves nothing
-    val baseLists = GraphOps.knnListsSymmetric(base)
+    val baseLists = knnListsBrute(base)
     val evicted = baseLists
       .join(IndexMaintenance.knnLists(spark, root), Seq("u", "v"), "left_anti")
     assert(evicted.count() > 0, "batch evicted no list rows — vacuous refresh test")
@@ -171,9 +171,9 @@ class IndexMaintenanceSpec extends SparkTestBase {
   private def knnListRows(root: String): Set[(Long, Long, Double)] =
     listSet(IdempotentMergeSink.read(spark, root).get)
 
-  /** The from-scratch kNN list rows over `nodes`. */
+  /** The brute-force kNN list rows over `nodes`. */
   private def wantKnnLists(nodes: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
-    listSet(graft.operators.GraphOps.knnListsSymmetric(nodes))
+    listSet(knnListsBrute(nodes))
 
   test("knn list table equals the full build's (u, v, diff) after three refreshes, in four price regimes") {
     import graft.operators.GraphOps
@@ -251,6 +251,43 @@ class IndexMaintenanceSpec extends SparkTestBase {
         nodes.filter(col("key") % 5 === 0), "b1")
     }
     assert(applied && jobs <= 8, s"one refreshKnn launched $jobs Spark jobs")
+  }
+
+  test("one kNN bootstrap launches at most 4 Spark jobs") {
+    import graft.operators.GraphOps
+    val root = freshRoot()
+    var applied = false
+    val jobs = jobsLaunchedBy {
+      applied = IndexMaintenance.bootstrapKnn(spark, root, GraphOps.partNodes(spark, sfDir))
+    }
+    assert(applied && jobs <= 4, s"one bootstrapKnn launched $jobs Spark jobs")
+  }
+
+  test("knn bootstrap of an empty base commits version 1; a refresh after it equals brute force") {
+    import graft.operators.GraphOps
+    val nodes = GraphOps.partNodes(spark, sfDir)
+    val root = freshRoot()
+    assert(IndexMaintenance.bootstrapKnn(spark, root, nodes.limit(0)))
+    assert(IdempotentMergeSink.version(root) == 1 && knnListRows(root).isEmpty)
+    assert(IndexMaintenance.refreshKnn(spark, root, nodes.limit(0), nodes, "all"))
+    val want = wantKnnLists(nodes)
+    assert(want.nonEmpty && knnListRows(root) == want)
+  }
+
+  test("knn lists skip null-price nodes: a refresh and a full build equal brute force") {
+    import spark.implicits._
+    import graft.operators.GraphOps
+    val nodes = GraphOps.partNodes(spark, sfDir).localCheckpoint()
+    val nullPrice = Seq[(Long, Option[Double])]((900000001L, None)).toDF("key", "price")
+    val base = nodes.filter(col("key") % 5 =!= 0)
+    val batch = nodes.filter(col("key") % 5 === 0).unionByName(nullPrice)
+    val root = freshRoot()
+    assert(IndexMaintenance.bootstrapKnn(spark, root, base))
+    assert(IndexMaintenance.refreshKnn(spark, root, base, batch, "b1"))
+    val all = base.unionByName(batch)
+    val want = wantKnnLists(all)
+    assert(want.nonEmpty && knnListRows(root) == want)
+    assert(listSet(GraphOps.knnLists(all)) == want)
   }
 
   test("bm25 postings maintenance: inserts + additive df equal from-scratch; scoring reads it") {
@@ -381,7 +418,7 @@ class IndexMaintenanceSpec extends SparkTestBase {
     } finally knQ.stop()
     val gotEdges = IndexMaintenance.knnEdges(spark, listsRoot)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val wantEdges = GraphOps.mutualEdgesOf(GraphOps.knnListsSymmetric(nodes))
+    val wantEdges = GraphOps.mutualEdgesOf(knnListsBrute(nodes))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(wantEdges.nonEmpty && gotEdges == wantEdges)
 

@@ -53,8 +53,7 @@ class MaintQueriesSpec extends SparkTestBase {
       .filter(hmod(col("key"), 2) === 0)
     val got = MaintQueries.maintKnnRefresh(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val scratch = graft.operators.GraphOps.mutualEdgesOf(
-      graft.operators.GraphOps.knnListsSymmetric(nodes))
+    val scratch = graft.operators.GraphOps.mutualEdgesOf(knnListsBrute(nodes))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got.nonEmpty && got == scratch)
   }
@@ -128,11 +127,11 @@ class MaintQueriesSpec extends SparkTestBase {
     // eviction delete v2 failed to fold would leave a stale b1-era
     // neighbor pair the scratch build lacks
     val v2Nodes = slice.filter(hmod(col("key"), 4) =!= 0)
-    val expectV2 = GraphOps.mutualEdgesOf(GraphOps.knnListsSymmetric(v2Nodes))
+    val expectV2 = GraphOps.mutualEdgesOf(knnListsBrute(v2Nodes))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got.nonEmpty && got == expectV2,
       "time-travel edge set diverges from the from-scratch build over batches 1-2")
-    val expectV3 = GraphOps.mutualEdgesOf(GraphOps.knnListsSymmetric(slice))
+    val expectV3 = GraphOps.mutualEdgesOf(knnListsBrute(slice))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got != expectV3,
       "v2 read equals the full working-set edges — the later commit leaked")

@@ -255,9 +255,9 @@ class ShuffleBudgetSpec extends SparkTestBase {
     "q_rfm_segmentation"    -> 7,
     // artifact scan + output sort only
     "graph_knn_edges"       -> 1,
-    // r12: the K-capped twin — the collapse build sits behind its
-    // checkpoint; the visible plan is two price join-backs + the
-    // per-key rank + output sort
+    // r12: the K-capped twin — the list build's band shuffle runs
+    // inside its RDD, below the plan; the visible plan is two price
+    // join-backs + the per-key rank + output sort
     "q_price_band_join_topk" -> 4,
     // the *_indexed twins: probe-side plans over the edge-table scan —
     // same per-iteration shapes as the base forms minus the build

@@ -3,7 +3,9 @@ package graft
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session per suite; sf0.001 for speed. */
@@ -40,6 +42,23 @@ trait SparkTestBase extends AnyFunSuite {
       sc.setJobDescription(prev)
       sc.removeSparkListener(listener)
     }
+  }
+
+  /** The kNN lists (u, v, diff) of a (key, price) node relation by brute
+    * force, as the oracle defines them (`GraphOps.knnEdgesCteOver`):
+    * every pair within 0.5, in both directions, each u keeping its
+    * first K by (round(|Δ|, 6), v). An independent reference for the
+    * production build.
+    */
+  def knnListsBrute(nodes: DataFrame): DataFrame = {
+    val a = nodes.select(col("key").cast("long").as("u"), col("price").cast("double").as("pu"))
+    val b = nodes.select(col("key").cast("long").as("v"), col("price").cast("double").as("pv"))
+    val cand = a.join(b, col("u") < col("v") && abs(col("pu") - col("pv")) <= 0.5)
+      .select(col("u"), col("v"), round(abs(col("pu") - col("pv")), 6).as("diff"))
+    val sym = cand.unionByName(cand.select(col("v").as("u"), col("u").as("v"), col("diff")))
+    sym.withColumn("rn", row_number().over(Window.partitionBy("u").orderBy("diff", "v")))
+      .filter(col("rn") <= graft.operators.GraphOps.KnnK)
+      .select("u", "v", "diff")
   }
 }
 
