@@ -49,14 +49,19 @@ object Dedup {
     shinglesOf(Tables.documents(spark, dir))
 
   /** The same shingle explode over an arbitrary (doc_id, text) relation
-    * — shared with [[dedupContainment]]'s excerpt-augmented corpus.
+    * — shared with [[dedupContainment]]'s excerpt-augmented corpus. The
+    * `ids` columns are carried onto every shingle row. A document of
+    * fewer than two tokens has no bigram: its index sequence is null
+    * and it yields no rows, as the oracle's `generate_series(1, 0)`
+    * does. (A `size(toks) >= 2` filter would be pushed below the
+    * projection and split every text twice.)
     */
-  private def shinglesOf(docs: DataFrame): DataFrame =
+  private def shinglesOf(docs: DataFrame, ids: Seq[String] = Seq("doc_id")): DataFrame =
     docs
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("toks"))
-      .select(col("doc_id"), explode(expr(
-        "array_distinct(transform(sequence(1, size(toks) - 1)," +
-          " i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1))))")).as("gram"))
+      .select(ids.map(col) :+ split(trim(col("text")), "\\s+").as("toks"): _*)
+      .select(ids.map(col) :+ explode(expr(
+        "array_distinct(transform(CASE WHEN size(toks) > 1 THEN sequence(1, size(toks) - 1) END," +
+          " i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1))))")).as("gram"): _*)
 
   private def shinglesCteOver(rel: String) =
     s"""sh AS (
@@ -89,6 +94,8 @@ object Dedup {
     * corpus explode instead of two), and without the presentation sort.
     */
   private def minhashFromShingles(sh: DataFrame): DataFrame = {
+    // doc_id, plus the shingles' other carried columns (the probe tag)
+    val ids = sh.columns.filterNot(_ == "gram").map(col).toSeq
     val mins = (0 until NumHashes).map { j =>
       min(hj(col("g"), j)).as(s"m$j")
     }
@@ -97,10 +104,10 @@ object Dedup {
       substring(md5(concat_ws(",", parts: _*)), 1, 16).as(s"band$b")
     }
     sh
-      .select(col("doc_id"), h32(col("gram")).as("g"))
-      .groupBy(col("doc_id"))
+      .select(ids :+ h32(col("gram")).as("g"): _*)
+      .groupBy(ids: _*)
       .agg(mins.head, mins.tail: _*)
-      .select(col("doc_id") +: (0 until NumHashes).map(j => col(s"m$j")) ++: bands: _*)
+      .select(ids ++ (0 until NumHashes).map(j => col(s"m$j")) ++ bands: _*)
   }
 
   /** Banded signature keys (doc_id, band_idx, bk) over any (doc_id,
@@ -112,21 +119,56 @@ object Dedup {
     bandKeys(minhashFromShingles(shinglesOf(docs)))
 
   /** The band-key unpivot of a signature relation: its `band*` columns
-    * to (doc_id, band_idx, bk) rows, one per band.
+    * to (doc_id, band_idx, bk) rows, one per band, carrying the
+    * signature's other non-hash columns (the probe tag).
     */
   private def bandKeys(sig: DataFrame): DataFrame =
-    sig.select(col("doc_id"), posexplode(
-        array((0 until NumBands).map(b => col(s"band$b")): _*)).as(Seq("band_idx", "bk")))
+    sig.select(sig.columns.filterNot(_.matches("(m|band)\\d+")).map(col).toSeq :+ posexplode(
+        array((0 until NumBands).map(b => col(s"band$b")): _*)).as(Seq("band_idx", "bk")): _*)
 
-  /** Candidate pairs (doc_a < doc_b) of a band-key relation: ONE
-    * self-equi-join on the composite bucket key.
+  /** The minhash bucket of a band-key relation. */
+  private val BandBucket = Seq("band_idx", "bk")
+
+  /** The banded candidate probe — the one body behind every near-dup
+    * pair search (text bands here, DCT bands in [[Multimodal]]) and
+    * the admission probes. `keys` holds (doc_id, is_new, bucket
+    * columns…, carried columns…). Each batch key (`is_new`) meets every
+    * member of its bucket, with one equi-join on the bucket columns:
+    * old-vs-old pairs are never formed, and two batch docs pair once,
+    * the later one as the new side. Output: the bucket columns, the
+    * directed pair (new_id, cand_id), the pair normalized to
+    * doc_a < doc_b, and every other column `c` of both sides as `c_a`,
+    * `c_b`. Over all-new keys ([[allNew]]) it is the bucket self-join,
+    * and the normalization folds to plain columns. A batch must not
+    * repeat a base doc_id.
     */
-  private def bandSelfJoin(keys: DataFrame): DataFrame =
-    keys.select(col("doc_id").as("doc_a"), col("band_idx"), col("bk"))
-      .join(keys.select(col("doc_id").as("doc_b"), col("band_idx"), col("bk")),
-        Seq("band_idx", "bk"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
+  private[operators] def bandProbe(keys: DataFrame,
+      bucket: Seq[String] = BandBucket): DataFrame = {
+    val carried = keys.columns.filterNot(c => c == "doc_id" || bucket.contains(c)).toSeq
+    def side(s: String) = keys.select(bucket.map(col) ++
+      (col("doc_id").as(s"id_$s") +: carried.map(c => col(c).as(s"${c}_$s"))): _*)
+    // a batch candidate always has the smaller id
+    val candFirst = col("is_new_cand") || col("id_cand") < col("id_new")
+    side("new").filter(col("is_new_new")).join(side("cand"), bucket)
+      .filter(!col("is_new_cand") || col("id_cand") < col("id_new"))
+      .select(bucket.map(col) ++ Seq(col("id_new").as("new_id"), col("id_cand").as("cand_id")) ++
+        (("id" -> "doc") +: carried.map(c => c -> c)).flatMap { case (c, out) => Seq(
+          when(candFirst, col(s"${c}_cand")).otherwise(col(s"${c}_new")).as(s"${out}_a"),
+          when(candFirst, col(s"${c}_new")).otherwise(col(s"${c}_cand")).as(s"${out}_b"))
+        }: _*)
+  }
+
+  /** `keys` with every row a batch row: [[bandProbe]] over it is the
+    * full build's bucket self-join.
+    */
+  private[operators] def allNew(keys: DataFrame): DataFrame =
+    keys.withColumn("is_new", lit(true))
+
+  /** The base rows tagged `is_new = false` and the batch rows (same
+    * columns) tagged `true`, as one relation: the probe's input.
+    */
+  private[operators] def tagged(base: DataFrame, batch: DataFrame): DataFrame =
+    base.withColumn("is_new", lit(false)).union(batch.withColumn("is_new", lit(true)))
 
   /** Exact shingle-set verification counts of an (a, b) pair relation
     * over a (doc_id, gram) shingle relation: the intersection count
@@ -180,87 +222,57 @@ object Dedup {
     ngramJaccardOf(Tables.documents(spark, dir))
 
   /** The full banded-candidate + verified-Jaccard pair build over any
-    * (doc_id, text) relation — the corpus query above, and the
-    * from-scratch reference the incremental index refresh
-    * ([[IndexMaintenance]]) is spec-checked against.
+    * (doc_id, text) relation: [[ngramJaccardNewPairs]] over an empty
+    * base, sorted. The corpus query above and the served pair
+    * artifact run it.
     */
-  /** `widen = false` skips the parallelism floor and the candidate-set
-    * materialization: the index-maintenance contract queries run this
-    * over FIXED small slices (hundreds of docs), where both are pure
-    * per-job overhead (measured: maint_pairs_refresh 2.1 → 3.9 s with
-    * them on). Corpus-scale callers keep the default.
-    */
-  private[graft] def ngramJaccardOf(docs: DataFrame, widen: Boolean = true): DataFrame = {
-    // ONE corpus explode: the same materialized shingle relation feeds
-    // signature generation AND Jaccard verification (read 4× below).
-    // localCheckpoint (not cache) so the subtree isn't evaluated once
-    // per read AND the blocks are released by the context cleaner once
-    // the result is dropped — cache() entries live in the session
-    // CacheManager forever unless explicitly unpersisted, a slow leak
-    // across a long-lived session running many operators. On a real
-    // cluster prefer reliable checkpoint(): localCheckpoint blocks die
-    // with their executor.
-    // widened: the explode + minhash + both verify-join map sides all
-    // read this checkpoint — doc_id-hashed, so the signature groupBy
-    // and the doc_a verify join reuse the partitioning (Tables.widened)
-    val sh = shinglesOf(
-      if (widen) Tables.widened(docs, "doc_id") else docs).localCheckpoint()
-    // unpivot band keys to (doc_id, band_idx, bk): ONE self-equi-join on
-    // the composite bucket key (one shuffle) instead of a join per band.
-    // NOT clustered on (band_idx, bk): on a duplicate-heavy corpus the
-    // bucket key is exactly the skewed one — measured 4.16 s vs 3.10 s
-    // at 32 cores when the self-join was pinned to bucket-hash
-    // partitions (hot buckets serialize); the doc-hashed checkpoint +
-    // AQE's broadcast of the tiny other side spreads the fan-out evenly
-    val sigLong = bandKeys(minhashFromShingles(sh)).localCheckpoint()
-    // the candidate set is materialized so the verify join's build side
-    // is chosen from its EXACT size, not from the band-join fan-out
-    // estimate: with the estimate the planner broadcast the (larger)
-    // gram relation and probed the pairs side — a single coalesced
-    // partition carrying the whole ×grams fan-out (measured 2 × ~1.2 s
-    // single-task jobs per pair query). With the exact size the pairs
-    // relation is the build side and the probe runs over the gram
-    // checkpoint's partitions; at scale the exact size correctly
-    // forbids the broadcast and the join degrades to the shuffled form.
-    val pairs0 = bandSelfJoin(sigLong).distinct()
-    val pairs = if (widen) pairs0.localCheckpoint() else pairs0
-    verifiedPairs(pairs, sh).orderBy("doc_a", "doc_b")
-  }
+  private[graft] def ngramJaccardOf(docs: DataFrame): DataFrame =
+    ngramJaccardNewPairs(docs.limit(0), docs).orderBy("doc_a", "doc_b")
 
-  /** Only the NEW near-dup pairs an ingest batch introduces: candidates
-    * are the batch's band keys probing the combined signature relation
-    * (never old-vs-old — the [[dedupIncremental]] discipline), verified
-    * with the same exact Jaccard as [[ngramJaccardOf]] and normalized
-    * to doc_a < doc_b. Union with the pre-batch pair table ≡ the
-    * from-scratch build over the combined corpus (band keys are
-    * per-document, so the candidate relation is split-invariant) —
-    * the invariant IndexMaintenanceSpec pins. Work ∝ batch × touched
-    * buckets; the base corpus is read for shingles only where a
-    * candidate touches it.
+  /** Estimated input size (optimizer bytes of the tagged (doc_id, text)
+    * relation) from which the pair search widens: below it the
+    * parallelism floor and the candidate-set materialization are pure
+    * per-job overhead, above it they pay for themselves. Placed between
+    * the measured regimes at 4 cores: up to 113,664 B (500 docs; the
+    * 1,024-doc maintenance slices) narrow is faster, from 261,893 B
+    * (5,000 docs) wide is.
+    */
+  private val WideInputBytes = BigInt(170000)
+
+  /** Only the NEW near-dup pairs an ingest batch introduces: the
+    * batch's band keys probe the combined signature relation
+    * ([[bandProbe]] — never old-vs-old, the [[dedupIncremental]]
+    * discipline), verified with exact Jaccard, doc_a < doc_b. Union
+    * with the pre-batch pair table ≡ the from-scratch build over the
+    * combined corpus (band keys are per-document, so the candidate
+    * relation is split-invariant) — the invariant IndexMaintenanceSpec
+    * pins. Work ∝ batch × touched buckets plus the base's shingles.
     */
   private[graft] def ngramJaccardNewPairs(baseDocs: DataFrame,
-      batchDocs: DataFrame, widen: Boolean = true): DataFrame = {
-    val all = baseDocs.select("doc_id", "text")
-      .union(batchDocs.select("doc_id", "text"))
-    val sh = shinglesOf(
-      if (widen) Tables.widened(all, "doc_id") else all).localCheckpoint()
-    val sig = bandKeys(minhashFromShingles(sh))
-      .join(batchDocs.select(col("doc_id").as("nid")),
-        col("doc_id") === col("nid"), "left")
-      .withColumn("is_new", col("nid").isNotNull)
-      .drop("nid")
-      .localCheckpoint() // probe side + index side
-    val newKeys = sig.filter(col("is_new"))
-      .select(col("doc_id").as("new_id"), col("band_idx"), col("bk"))
-    val pairs = newKeys
-      .join(sig.select(col("doc_id").as("cand_id"), col("band_idx"),
-        col("bk"), col("is_new").as("cand_new")), Seq("band_idx", "bk"))
-      .filter(col("cand_id") =!= col("new_id"))
-      .filter(!col("cand_new") || col("cand_id") < col("new_id"))
-      .select(least(col("new_id"), col("cand_id")).as("doc_a"),
-        greatest(col("new_id"), col("cand_id")).as("doc_b"))
-      .distinct()
-    verifiedPairs(if (widen) pairs.localCheckpoint() else pairs, sh)
+      batchDocs: DataFrame): DataFrame = {
+    val docs = tagged(baseDocs.select("doc_id", "text"), batchDocs.select("doc_id", "text"))
+    val wide = docs.queryExecution.optimizedPlan.stats.sizeInBytes >= WideInputBytes
+    // ONE explode: the materialized shingles feed the signatures AND
+    // the verification joins. localCheckpoint, not cache: its blocks
+    // are released by the context cleaner once the result is dropped,
+    // where cache() entries stay in the CacheManager until unpersisted
+    // (on a cluster prefer reliable checkpoint(): these blocks die with
+    // their executor).
+    // Widened, the explode runs at full parallelism and the checkpoint
+    // is doc_id-hashed, so the signature groupBy and the doc_a verify
+    // join reuse its partitioning (Tables.widened)
+    val sh = shinglesOf(if (wide) Tables.widened(docs, "doc_id") else docs,
+      Seq("doc_id", "is_new")).localCheckpoint()
+    // NOT clustered on the bucket: on a duplicate-heavy corpus the
+    // bucket key is exactly the skewed one (measured 4.16 s vs 3.10 s
+    // at 32 cores when the join was pinned to bucket-hash partitions)
+    val keys = bandKeys(minhashFromShingles(sh)).localCheckpoint()
+    val pairs = bandProbe(keys).select("doc_a", "doc_b").distinct()
+    // a materialized candidate set gives the verify join its EXACT
+    // size: with the band-join fan-out estimate the planner broadcast
+    // the larger gram relation and probed the pairs from one coalesced
+    // partition (measured 2 × ~1.2 s single-task jobs per pair query)
+    verifiedPairs(if (wide) pairs.localCheckpoint() else pairs, sh)
   }
 
   /** Span width for the prefix-filter pass. Prefix filtering REQUIRES
@@ -343,7 +355,7 @@ object Dedup {
     */
   private def candMatchCounts(spark: SparkSession, dir: String): DataFrame = {
     val sig = minhashFromShingles(shingles(spark, dir)).localCheckpoint()
-    val pairs = bandSelfJoin(bandKeys(sig)).distinct()
+    val pairs = bandProbe(allNew(bandKeys(sig))).select("doc_a", "doc_b").distinct()
     val a = sig.select(col("doc_id").as("doc_a") +:
       (0 until NumHashes).map(j => col(s"m$j").as(s"a$j")): _*)
     val b = sig.select(col("doc_id").as("doc_b") +:
@@ -686,8 +698,8 @@ object Dedup {
     // banded signatures checkpointed like the Jaccard twin: the self-
     // join reads this relation twice
     val sigLong = bandKeys(minhashFromShingles(sh)).localCheckpoint()
-    val pairs = bandSelfJoin(sigLong).distinct()
-      .localCheckpoint() // exact-size build side for the verify join (see ngramJaccardOf)
+    val pairs = bandProbe(allNew(sigLong)).select("doc_a", "doc_b").distinct()
+      .localCheckpoint() // exact-size build side for the verify join (see ngramJaccardNewPairs)
     interSizes(pairs, sh, "doc_a", "doc_b")
       .withColumn("containment",
         round(col("n_inter") / least(col("na"), col("nb")), 6))
@@ -1144,7 +1156,7 @@ object Dedup {
     */
   private[graft] def cappedPairsOf(docs: DataFrame): DataFrame = {
     // one corpus explode feeding signatures AND verification, the
-    // ngramJaccardOf sharing discipline (widened: see there)
+    // ngramJaccardNewPairs sharing discipline (widened: see there)
     val sh = shinglesOf(Tables.widened(docs, "doc_id")).localCheckpoint()
     val sigLong = bandKeys(minhashFromShingles(sh))
       .localCheckpoint() // read twice: occupancy aggregation + member join
@@ -1154,7 +1166,8 @@ object Dedup {
     // successors in doc_id order) — a dense near-dup cluster
     // contributes O(occupancy · w) candidates, not O(occupancy²)
     val marked = occupancyMarked(sigLong) // clique + both window sides read it
-    val clique = bandSelfJoin(marked.filter(col("occ") <= BucketCliqueCap))
+    val clique = bandProbe(allNew(marked.filter(col("occ") <= BucketCliqueCap)))
+      .select("doc_a", "doc_b")
     val denseRanked = rankedDense(marked)
       .select(col("doc_id"), col("band_idx"), col("bk"), col("r"))
       .localCheckpoint(false) // both window self-join sides
@@ -1379,7 +1392,8 @@ object Dedup {
     */
   private[graft] def dedupIncrementalServedOver(sigTable: DataFrame,
       docs: DataFrame, isNew: Column): DataFrame = {
-    val candidates = bandProbe(sigTable.withColumn("is_new", isNew)).distinct()
+    val candidates = bandProbe(sigTable.withColumn("is_new", isNew))
+      .select("new_id", "cand_id").distinct()
       // LAZY checkpoint, unlike the base form's eager one: with the
       // signature index served from a table the candidate subtree is
       // cheap to plan, and the eager variant serializes the whole
@@ -1387,19 +1401,6 @@ object Dedup {
       .localCheckpoint(false)
     admissionVerdictOver(candidates, touchedShingles(candidates, docs), docs, isNew)
   }
-
-  /** The new-versus-candidate band probe over a (doc_id, band_idx, bk,
-    * is_new) key relation: each batch doc's keys against every member
-    * of its buckets, keeping admitted docs and EARLIER arrivals only —
-    * old-vs-old pairs are never formed → (new_id, cand_id).
-    */
-  private def bandProbe(sig: DataFrame): DataFrame =
-    sig.filter(col("is_new"))
-      .select(col("doc_id").as("new_id"), col("band_idx"), col("bk"))
-      .join(sig.select(col("doc_id").as("cand_id"), col("band_idx"),
-        col("bk"), col("is_new").as("cand_new")), Seq("band_idx", "bk"))
-      .filter(!col("cand_new") || col("cand_id") < col("new_id"))
-      .select("new_id", "cand_id")
 
   /** The shingles of ONLY the documents a candidate pair touches (new
     * docs + their candidates) — the served and capped probes verify
@@ -1470,6 +1471,7 @@ object Dedup {
       docs: DataFrame, isNew: Column): DataFrame = {
     val marked = occupancyMarked(sigTable.withColumn("is_new", isNew))
     val smallCand = bandProbe(marked.filter(col("occ") <= BucketCliqueCap))
+      .select("new_id", "cand_id")
     val denseRanked = rankedDense(marked)
       .select(col("doc_id"), col("band_idx"), col("bk"), col("r"),
         col("is_new"))
@@ -1529,7 +1531,8 @@ object Dedup {
     val sigLong = bandKeys(minhashFromShingles(sh))
       .withColumn("is_new", isNew)
       .localCheckpoint() // read twice: probe side + index side
-    admissionVerdictOver(bandProbe(sigLong).distinct(), sh, docs, isNew)
+    admissionVerdictOver(bandProbe(sigLong).select("new_id", "cand_id").distinct(),
+      sh, docs, isNew)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -26,11 +26,11 @@ import org.apache.spark.sql.functions._
   * its row tables are pure inserts, its df sub-tables commit through
   * [[IdempotentMergeSink.mergeAdditive]] (whose first commit is a base
   * of the batch's sums), and its pairs are batch-vs-all against an
-  * empty base; the kNN list delta against an empty base is all
-  * inserts. So those families have no separate build algorithm
-  * (`bootstrapBm25` refreshes an empty index, `bootstrapKnn` commits
-  * that all-insert delta). Only the near-dup pair family keeps its own
-  * bootstrap, a different algorithm from its refresh. The pair and kNN
+  * empty base; the near-dup pairs of a batch against an empty base
+  * are all its pairs, and the kNN list delta against an empty base is
+  * all inserts. So no family has a separate build algorithm
+  * (`bootstrapBm25` refreshes an empty index, `bootstrap` and
+  * `bootstrapKnn` commit the batch-vs-empty result). The pair and kNN
   * refreshes throw on an empty index rather than commit a partial one.
   *
   * At 100 TB this is the operating mode: the pair table and signature
@@ -72,13 +72,13 @@ object IndexMaintenance {
   private def commitAll(merges: (() => Boolean)*): Boolean =
     IdempotentMergeSink.inParallel(merges).reduce(_ | _)
 
-  /** Build the pair table from the base corpus (first commit). */
+  /** Build the pair table from the base corpus (first commit): the
+    * base's new pairs over an empty one, committed unsorted.
+    */
   def bootstrap(spark: SparkSession, root: String, baseDocs: DataFrame,
       batchId: String = "bootstrap"): Boolean =
-    // widen = false: the contract queries bootstrap fixed small slices,
-    // where the parallelism floor is per-job overhead (see ngramJaccardOf)
     IdempotentMergeSink.merge(spark, root,
-      keyed(Dedup.ngramJaccardOf(baseDocs, widen = false)), "pair_key", batchId)
+      keyed(Dedup.ngramJaccardNewPairs(baseDocs.limit(0), baseDocs)), "pair_key", batchId)
 
   /** Merge one ingest batch's new pairs into the table under
     * `batchId`; false = already applied (the retry no-op). Throws on
@@ -88,7 +88,7 @@ object IndexMaintenance {
       batchDocs: DataFrame, batchId: String): Boolean = {
     requireBuilt(root, "refresh", "bootstrap")
     IdempotentMergeSink.merge(spark, root,
-      keyed(Dedup.ngramJaccardNewPairs(baseDocs, batchDocs, widen = false)),
+      keyed(Dedup.ngramJaccardNewPairs(baseDocs, batchDocs)),
       "pair_key", batchId)
   }
 
@@ -258,8 +258,7 @@ object IndexMaintenance {
     // baseFp resolves its version set NOW (committed() is eager), so
     // the fp merge landing first cannot change what the pair merge
     // reads — the two commits are safely concurrent. With no fp commit
-    // the base is empty, and dctNewPairs(bfp, ∅) is dctPairsOver(bfp):
-    // both band with bandsFor(DctRadius)
+    // the base is empty, and dctNewPairs(bfp, ∅) is dctPairsOver(bfp)
     val baseFp = IdempotentMergeSink.read(spark, fpRoot(root)).getOrElse(bfp.limit(0))
       .select("doc_id", "modality", "phash64")
     commitAll(

@@ -359,13 +359,20 @@ object MaintQueries {
     */
   def maintPairsTimeTravel(spark: SparkSession, dir: String): DataFrame =
     withRoot("pairs_tt") { root =>
-      val docs = docSlice(spark, dir)
-      val (b1, b2, b3) = thirds(docs, "doc_id")
-      IndexMaintenance.bootstrap(spark, root, b1)
-      IndexMaintenance.refresh(spark, root, b1, b2, "b2")
-      IndexMaintenance.refresh(spark, root, b1.unionByName(b2), b3, "b3")
+      pairChain(spark, dir, root)()
       IndexMaintenance.pairsAt(spark, root, 2).orderBy("doc_a", "doc_b")
     }
+
+  /** The opening of both pair chains over the working slice's
+    * [[thirds]]: bootstrap batch 1 (v1), refresh with batch 2 (v2).
+    * Returns the batch-3 refresh, for the caller to commit.
+    */
+  private def pairChain(spark: SparkSession, dir: String, root: String): () => Boolean = {
+    val (b1, b2, b3) = thirds(docSlice(spark, dir), "doc_id")
+    IndexMaintenance.bootstrap(spark, root, b1)
+    IndexMaintenance.refresh(spark, root, b1, b2, "b2")
+    () => IndexMaintenance.refresh(spark, root, b1.unionByName(b2), b3, "b3")
+  }
 
   /** Retained-version time travel AFTER VACUUM — the retention
     * interaction the spec suite covers but the driver gate (until r14)
@@ -381,12 +388,8 @@ object MaintQueries {
     */
   def maintPairsVacuumTravel(spark: SparkSession, dir: String): DataFrame =
     withRoot("pairs_vac") { root =>
-      val docs = docSlice(spark, dir)
-      val (b1, b2, b3) = thirds(docs, "doc_id")
-      IndexMaintenance.bootstrap(spark, root, b1)
-      IndexMaintenance.refresh(spark, root, b1, b2, "b2")
-      compactThenVacuum(spark, root)(
-        IndexMaintenance.refresh(spark, root, b1.unionByName(b2), b3, "b3"))
+      val third = pairChain(spark, dir, root)
+      compactThenVacuum(spark, root)(third())
       IndexMaintenance.pairsAt(spark, root, 3).orderBy("doc_a", "doc_b")
     }
 

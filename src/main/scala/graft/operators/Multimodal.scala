@@ -512,25 +512,27 @@ object Multimodal {
       .select(col("doc_id"), col("modality"), col("phash64"),
         col("bb.band_idx"), col("bb.band_bits"))
 
-  /** The banded pair search within each modality: pairs sharing a band
-    * key under [[bandsFor]]`(radius)`, Hamming-verified to `radius`.
-    */
-  private[graft] def dctPairsOver(fp: DataFrame, radius: Int = DctRadius): DataFrame = {
-    val bands = dctBandsOf(fp, radius)
-    withinRadius(bands.select(col("modality"), col("band_idx"), col("band_bits"),
-        col("doc_id").as("doc_a"), col("phash64").as("fa"))
-      .join(bands.select(col("modality"), col("band_idx"), col("band_bits"),
-        col("doc_id").as("doc_b"), col("phash64").as("fb")),
-        Seq("modality", "band_idx", "band_bits"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("modality", "doc_a", "doc_b", "fa", "fb"), radius)
-  }
+  /** The DCT band bucket: pairs never cross a modality. */
+  private val DctBucket = Seq("modality", "band_idx", "band_bits")
 
-  /** The distinct (modality, doc_a, doc_b, fa, fb) candidate pairs
-    * whose fingerprints lie within Hamming `radius`, with the distance.
+  /** The banded pair search within each modality: pairs sharing a band
+    * key under [[bandsFor]]`(radius)`, Hamming-verified to `radius` —
+    * [[dctNewPairs]] over an empty base. The base is an empty local
+    * relation, not `fp.limit(0)`: the optimizer drops it before
+    * constant folding, so the probe folds to the plain self-join.
+    */
+  private[graft] def dctPairsOver(fp: DataFrame, radius: Int = DctRadius): DataFrame =
+    dctNewPairs(fp, fp.sparkSession.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), fp.schema), radius)
+
+  /** The distinct (modality, doc_a, doc_b, fa, fb) candidate pairs of a
+    * [[Dedup.bandProbe]] over (…, phash64) keys whose fingerprints lie
+    * within Hamming `radius`, with the distance.
     */
   private def withinRadius(cand: DataFrame, radius: Int): DataFrame =
-    cand.distinct()
+    cand.select(col("modality"), col("doc_a"), col("doc_b"),
+        col("phash64_a").as("fa"), col("phash64_b").as("fb"))
+      .distinct()
       .withColumn("hamming", expr("bit_count(fa ^ fb)").cast("long"))
       .filter(col("hamming") <= radius)
       .select("modality", "doc_a", "doc_b", "hamming")
@@ -661,24 +663,18 @@ object Multimodal {
     * scale bench.
     */
   private[graft] def cappedDctPairsOver(fp: DataFrame): DataFrame = {
-    val bucketKeys = Seq("modality", "band_idx", "band_bits")
-    val occ = dctBandsOf(fp, DctRadius).groupBy(bucketKeys.map(col): _*)
+    val occ = dctBandsOf(fp, DctRadius).groupBy(DctBucket.map(col): _*)
       .agg(count(lit(1)).as("occ"))
-    val marked = dctBandsOf(fp, DctRadius).join(occ, bucketKeys)
+    val marked = dctBandsOf(fp, DctRadius).join(occ, DctBucket)
       .localCheckpoint(false) // clique + both window sides read it
-    val small = marked.filter(col("occ") <= DctCliqueCap)
-    val clique = small
-      .select(col("modality"), col("band_idx"), col("band_bits"),
-        col("doc_id").as("doc_a"), col("phash64").as("fa"))
-      .join(small.select(col("modality"), col("band_idx"), col("band_bits"),
-        col("doc_id").as("doc_b"), col("phash64").as("fb")), bucketKeys)
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("modality"), col("doc_a"), col("doc_b"), col("fa"), col("fb"))
+    val clique = Dedup.bandProbe(
+        Dedup.allNew(marked.filter(col("occ") <= DctCliqueCap)), DctBucket)
+      .select("modality", "doc_a", "doc_b", "phash64_a", "phash64_b")
     // dense buckets: rank by (phash64, doc_id) — identical fingerprints
     // contiguous — and pair each member with its next w successors;
     // successor pairs need doc-id normalization because rank order is
     // NOT doc_id order
-    val wRank = Window.partitionBy(bucketKeys.map(col): _*)
+    val wRank = Window.partitionBy(DctBucket.map(col): _*)
       .orderBy(col("phash64"), col("doc_id"))
     val dense = marked.filter(col("occ") > DctCliqueCap)
       .withColumn("r", row_number().over(wRank))
@@ -690,45 +686,28 @@ object Multimodal {
         col("doc_id").as("da"), col("phash64").as("fra"), col("r").as("ra"))
       .join(dense.select(col("modality"), col("band_idx"), col("band_bits"),
         col("doc_id").as("db"), col("phash64").as("frb"), col("r").as("rb")),
-        bucketKeys)
+        DctBucket)
       .filter(col("rb") > col("ra") && col("rb") <= col("ra") + DctWindow)
       .select(col("modality"),
         least(col("da"), col("db")).as("doc_a"),
         greatest(col("da"), col("db")).as("doc_b"),
-        when(col("da") < col("db"), col("fra")).otherwise(col("frb")).as("fa"),
-        when(col("da") < col("db"), col("frb")).otherwise(col("fra")).as("fb"))
+        when(col("da") < col("db"), col("fra")).otherwise(col("frb")).as("phash64_a"),
+        when(col("da") < col("db"), col("frb")).otherwise(col("fra")).as("phash64_b"))
     withinRadius(clique.union(windowed), DctRadius)
   }
 
   /** New perceptual pairs introduced by a fingerprint batch: batch
-    * band keys against base ∪ batch — old-vs-old is never re-examined,
-    * and because fingerprints are per-row immutable the pair relation
-    * is additive, so maintained-pairs ∪ new-pairs equals the
-    * from-scratch build (the invariant IndexMaintenanceSpec pins).
-    * Work ∝ batch × touched band buckets.
+    * band keys against base ∪ batch ([[Dedup.bandProbe]] keyed
+    * (modality, band_idx, band_bits), carrying phash64) — old-vs-old
+    * is never re-examined, and because fingerprints are per-row
+    * immutable the pair relation is additive, so maintained-pairs ∪
+    * new-pairs equals the from-scratch build (the invariant
+    * IndexMaintenanceSpec pins). Work ∝ batch × touched band buckets.
     */
-  private[graft] def dctNewPairs(batchFp: DataFrame, baseFp: DataFrame): DataFrame = {
-    val bands = dctBandsOf(baseFp.unionByName(batchFp), DctRadius)
-      .join(batchFp.select(col("doc_id").as("nid")).distinct(),
-        col("doc_id") === col("nid"), "left")
-      .withColumn("is_new", col("nid").isNotNull)
-      .drop("nid")
-    val newKeys = bands.filter(col("is_new"))
-      .select(col("doc_id").as("new_id"), col("phash64").as("fn"),
-        col("modality"), col("band_idx"), col("band_bits"))
-    withinRadius(newKeys
-      .join(bands.select(col("doc_id").as("cand_id"), col("phash64").as("fc"),
-        col("modality"), col("band_idx"), col("band_bits"),
-        col("is_new").as("cand_new")),
-        Seq("modality", "band_idx", "band_bits"))
-      .filter(col("cand_id") =!= col("new_id"))
-      .filter(!col("cand_new") || col("cand_id") < col("new_id"))
-      .select(col("modality"),
-        least(col("new_id"), col("cand_id")).as("doc_a"),
-        greatest(col("new_id"), col("cand_id")).as("doc_b"),
-        when(col("new_id") < col("cand_id"), col("fn")).otherwise(col("fc")).as("fa"),
-        when(col("new_id") < col("cand_id"), col("fc")).otherwise(col("fn")).as("fb")), DctRadius)
-  }
+  private[graft] def dctNewPairs(batchFp: DataFrame, baseFp: DataFrame,
+      radius: Int = DctRadius): DataFrame =
+    withinRadius(Dedup.bandProbe(Dedup.tagged(dctBandsOf(baseFp, radius),
+      dctBandsOf(batchFp, radius)), DctBucket), radius)
 
   /** Frame sampling for the video rows: up to `MaxFrames` evenly-spaced
     * sample timestamps per clip, derived from the stub-decoded duration

@@ -66,10 +66,10 @@ class IndexMaintenanceSpec extends SparkTestBase {
 
     assert(IndexMaintenance.bootstrap(spark, root, base))
     assert(pairSet(IndexMaintenance.pairs(spark, root))
-      == pairSet(Dedup.ngramJaccardOf(base)))
+      == pairSet(nearDupPairsBrute(base)))
 
     assert(IndexMaintenance.refresh(spark, root, base, batch, "b1"))
-    val scratch = pairSet(Dedup.ngramJaccardOf(docs))
+    val scratch = pairSet(nearDupPairsBrute(docs))
     assert(scratch.nonEmpty)
     assert(pairSet(IndexMaintenance.pairs(spark, root)) == scratch,
       "maintained pair table diverges from the from-scratch build")
@@ -79,6 +79,66 @@ class IndexMaintenanceSpec extends SparkTestBase {
     assert(!IndexMaintenance.refresh(spark, root, base, batch, "b1"))
     assert(IdempotentMergeSink.version(root) == v)
     assert(pairSet(IndexMaintenance.pairs(spark, root)) == scratch)
+  }
+
+  test("one-token and empty documents: a full pair build and a refresh equal brute force") {
+    import spark.implicits._
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+    val odd = Seq((900001L, "word"), (900002L, "")).toDF("doc_id", "text")
+    val all = docs.unionByName(odd)
+    val want = pairSet(nearDupPairsBrute(all))
+    assert(want.nonEmpty && pairSet(Dedup.ngramJaccardOf(all)) == want)
+    val root = freshRoot()
+    assert(IndexMaintenance.bootstrap(spark, root, docs))
+    assert(IndexMaintenance.refresh(spark, root, docs, odd, "odd"))
+    assert(pairSet(IndexMaintenance.pairs(spark, root)) == want)
+  }
+
+  test("a pair build over no document or one document is empty, with the pair schema") {
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+    for ((what, d) <- Seq("no document" -> docs.limit(0), "one document" -> docs.limit(1))) {
+      val got = Dedup.ngramJaccardOf(d)
+      assert(got.schema.map(f => f.name -> f.dataType.sql) == Seq("doc_a" -> "BIGINT",
+        "doc_b" -> "BIGINT", "n_inter" -> "BIGINT", "jaccard" -> "DOUBLE"), what)
+      assert(got.collect().isEmpty, what)
+    }
+  }
+
+  test("pair bootstrap of an empty base commits version 1; a refresh after it equals brute force") {
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+    val root = freshRoot()
+    assert(IndexMaintenance.bootstrap(spark, root, docs.limit(0)))
+    assert(IdempotentMergeSink.version(root) == 1 &&
+      IndexMaintenance.pairs(spark, root).collect().isEmpty)
+    assert(IndexMaintenance.refresh(spark, root, docs.limit(0), docs, "all"))
+    val want = pairSet(nearDupPairsBrute(docs))
+    assert(want.nonEmpty && pairSet(IndexMaintenance.pairs(spark, root)) == want)
+  }
+
+  test("one pair refresh on a built root launches at most 14 Spark jobs") {
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+    val base = docs.filter(col("doc_id") % 4 =!= 0)
+    val root = freshRoot()
+    assert(IndexMaintenance.bootstrap(spark, root, base))
+    var applied = false
+    val jobs = jobsLaunchedBy {
+      applied = IndexMaintenance.refresh(spark, root, base,
+        docs.filter(col("doc_id") % 4 === 0), "b1")
+    }
+    assert(applied && jobs <= 14, s"one pair refresh launched $jobs Spark jobs")
+  }
+
+  test("one phash refresh on a built root launches at most 10 Spark jobs") {
+    val media = graft.operators.Multimodal.augmentedMedia(spark, sfDir)
+    val root = freshRoot()
+    assert(IndexMaintenance.refreshPhash(spark, root,
+      media.filter(col("doc_id") % 3 =!= 0), "bootstrap"))
+    var applied = false
+    val jobs = jobsLaunchedBy {
+      applied = IndexMaintenance.refreshPhash(spark, root,
+        media.filter(col("doc_id") % 3 === 0), "b1")
+    }
+    assert(applied && jobs <= 10, s"one phash refresh launched $jobs Spark jobs")
   }
 
   test("labels over the maintained table equal the from-scratch fixpoint") {
@@ -91,7 +151,7 @@ class IndexMaintenanceSpec extends SparkTestBase {
     val got = IndexMaintenance.labels(spark, root).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val want = Dedup.connectedComponents(
-        Dedup.ngramJaccardOf(docs).select("doc_a", "doc_b"))
+        nearDupPairsBrute(docs).select("doc_a", "doc_b"))
       .select("doc_id", "component").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(want.nonEmpty && got == want)
@@ -117,7 +177,7 @@ class IndexMaintenanceSpec extends SparkTestBase {
       stream.addData(b2.toSeq); q.processAllAvailable()
     } finally q.stop()
     assert(pairSet(IndexMaintenance.pairs(spark, pairsRoot))
-      == pairSet(Dedup.ngramJaccardOf(docs)),
+      == pairSet(nearDupPairsBrute(docs)),
       "streamed pair table diverges from the from-scratch build")
     // both micro-batches left their exactly-once record
     assert(IdempotentMergeSink.applied(pairsRoot, "pairs-0"))
@@ -357,16 +417,14 @@ class IndexMaintenanceSpec extends SparkTestBase {
     def pairSet4(df: org.apache.spark.sql.DataFrame) =
       df.select("modality", "doc_a", "doc_b", "hamming").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val want = pairSet4(
-      Multimodal.dctPairsOver(Multimodal.dctFingerprintsOf(media).localCheckpoint()))
+    val want = pairSet4(dctPairsBrute(Multimodal.dctFingerprintsOf(media).localCheckpoint()))
     val got = pairSet4(IndexMaintenance.dctPairs(spark, root))
     assert(want.nonEmpty && got == want,
       s"maintained dct pairs diverge: ${got.size} vs ${want.size}")
     // the batch introduced pairs (re-encode variants land in it), so
     // the refresh path is non-vacuous
     assert(pairSet4(IndexMaintenance.dctPairs(spark, root)).size
-      > pairSet4(Multimodal.dctPairsOver(
-        Multimodal.dctFingerprintsOf(base).localCheckpoint())).size)
+      > pairSet4(dctPairsBrute(Multimodal.dctFingerprintsOf(base).localCheckpoint())).size)
     // exactly-once
     assert(!IndexMaintenance.refreshPhash(spark, root, batch, "b1"))
   }
@@ -437,8 +495,7 @@ class IndexMaintenanceSpec extends SparkTestBase {
     } finally phQ.stop()
     val gotPairs = IndexMaintenance.dctPairs(spark, phRoot)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val wantPairs = Multimodal.dctPairsOver(
-        Multimodal.dctFingerprintsOf(media).localCheckpoint())
+    val wantPairs = dctPairsBrute(Multimodal.dctFingerprintsOf(media).localCheckpoint())
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(wantPairs.nonEmpty && gotPairs == wantPairs)
   }
@@ -526,7 +583,7 @@ class IndexMaintenanceSpec extends SparkTestBase {
     // the second batch probes base ∪ b1 — the already-ingested corpus
     assert(IndexMaintenance.refresh(spark, root, base.union(b1), b2, "b2"))
     assert(pairSet(IndexMaintenance.pairs(spark, root))
-      == pairSet(Dedup.ngramJaccardOf(docs)))
+      == pairSet(nearDupPairsBrute(docs)))
   }
 
   test("pair and kNN refreshes of an empty index throw before any commit") {
@@ -575,7 +632,7 @@ class IndexMaintenanceSpec extends SparkTestBase {
     val fp = Multimodal.dctFingerprintsOf(media).localCheckpoint()
     assertSame(IdempotentMergeSink.read(spark, s"$ph/fp").get, fp,
       "doc_id", "modality", "phash64")
-    assertSame(IndexMaintenance.dctPairs(spark, ph), Multimodal.dctPairsOver(fp),
+    assertSame(IndexMaintenance.dctPairs(spark, ph), dctPairsBrute(fp),
       "modality", "doc_a", "doc_b", "hamming")
   }
 

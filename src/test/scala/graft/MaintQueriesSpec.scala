@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{AnnSearch, Dedup, GraphOps, MaintQueries}
+import graft.operators.{AnnSearch, GraphOps, MaintQueries}
 import org.apache.spark.sql.functions._
 
 /** The maintenance-tier oracle queries: semantics the DuckDB parity
@@ -44,7 +44,7 @@ class MaintQueriesSpec extends SparkTestBase {
     val docs = docSlice()
     val got = MaintQueries.maintPairsRefresh(spark, sfDir)
       .collect().map(_.toSeq).toSet
-    val scratch = Dedup.ngramJaccardOf(docs).collect().map(_.toSeq).toSet
+    val scratch = nearDupPairsBrute(docs).collect().map(_.toSeq).toSet
     assert(got.nonEmpty && got == scratch)
   }
 
@@ -63,8 +63,7 @@ class MaintQueriesSpec extends SparkTestBase {
       .filter(hmod(col("doc_id"), 2) === 0)
     val got = MaintQueries.maintPhashRefresh(spark, sfDir)
       .collect().map(_.toSeq).toSet
-    val scratch = graft.operators.Multimodal
-      .dctPairsOver(graft.operators.Multimodal.dctFingerprintsOf(media))
+    val scratch = dctPairsBrute(graft.operators.Multimodal.dctFingerprintsOf(media))
       .select("modality", "doc_a", "doc_b", "hamming")
       .collect().map(_.toSeq).toSet
     assert(got.nonEmpty && got == scratch)
@@ -107,10 +106,10 @@ class MaintQueriesSpec extends SparkTestBase {
     val got = MaintQueries.maintPairsTimeTravel(spark, sfDir)
       .collect().map(_.toSeq).toSet
     val v2Docs = docs.filter(hmod(col("doc_id"), 4) =!= 0)
-    val expectV2 = Dedup.ngramJaccardOf(v2Docs).collect().map(_.toSeq).toSet
+    val expectV2 = nearDupPairsBrute(v2Docs).collect().map(_.toSeq).toSet
     assert(got.nonEmpty && got == expectV2,
       "time-travel state diverges from the from-scratch build over batches 1-2")
-    val expectV3 = Dedup.ngramJaccardOf(docs).collect().map(_.toSeq).toSet
+    val expectV3 = nearDupPairsBrute(docs).collect().map(_.toSeq).toSet
     assert(got != expectV3,
       "v2 read equals the full working-set pairs — the later commit leaked")
   }
@@ -176,7 +175,7 @@ class MaintQueriesSpec extends SparkTestBase {
     val got = MaintQueries.maintPairsVacuumTravel(spark, sfDir)
       .collect().map(_.toSeq).toSet
     val v2Docs = docs.filter(hmod(col("doc_id"), 4) =!= 0)
-    val expectV2 = Dedup.ngramJaccardOf(v2Docs).collect().map(_.toSeq).toSet
+    val expectV2 = nearDupPairsBrute(v2Docs).collect().map(_.toSeq).toSet
     assert(got.nonEmpty && got == expectV2,
       "post-vacuum read of the retained version diverges from the " +
         "from-scratch build over batches 1-2")

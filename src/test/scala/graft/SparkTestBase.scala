@@ -60,6 +60,45 @@ trait SparkTestBase extends AnyFunSuite {
       .filter(col("rn") <= graft.operators.GraphOps.KnnK)
       .select("u", "v", "diff")
   }
+
+  /** The near-dup pairs (doc_a, doc_b, n_inter, jaccard) of a
+    * (doc_id, text) relation from a cross join of its documents: a
+    * pair is a candidate when any of its 8 minhash band keys
+    * (`Dedup.bandKeysOf`) agree, and is kept when the exact Jaccard of
+    * the two distinct word-bigram sets reaches 0.5 (6-dp rounded). The
+    * bigram sets are built here, not by the production shingles.
+    */
+  def nearDupPairsBrute(docs: DataFrame): DataFrame = {
+    val grams = docs.select(col("doc_id"), split(trim(col("text")), "\\s+").as("t"))
+      .select(col("doc_id"), array_distinct(expr(
+        "zip_with(slice(t, 1, greatest(size(t) - 1, 0)), slice(t, 2, greatest(size(t) - 1, 0))," +
+          " (x, y) -> concat(x, ' ', y))")).as("g"))
+    val keys = graft.operators.Dedup.bandKeysOf(docs).groupBy("doc_id")
+      .agg(collect_set(struct(col("band_idx"), col("bk"))).as("k"))
+    val side = grams.join(keys, "doc_id")
+    side.select(col("doc_id").as("doc_a"), col("g").as("ga"), col("k").as("ka"))
+      .join(side.select(col("doc_id").as("doc_b"), col("g").as("gb"), col("k").as("kb")),
+        col("doc_a") < col("doc_b"))
+      .filter(size(array_intersect(col("ka"), col("kb"))) > 0)
+      .select(col("doc_a").cast("long").as("doc_a"), col("doc_b").cast("long").as("doc_b"),
+        size(array_intersect(col("ga"), col("gb"))).cast("long").as("n_inter"),
+        round(size(array_intersect(col("ga"), col("gb"))) /
+          size(array_union(col("ga"), col("gb"))), 6).as("jaccard"))
+      .filter(col("jaccard") >= 0.5)
+  }
+
+  /** Every same-modality pair (modality, doc_a, doc_b, hamming) of a
+    * (doc_id, modality, phash64) relation within Hamming `radius`, by
+    * brute force. Any lossless banding finds exactly these pairs.
+    */
+  def dctPairsBrute(fp: DataFrame, radius: Int = graft.operators.Multimodal.DctRadius): DataFrame =
+    fp.select(col("doc_id").as("doc_a"), col("modality"), col("phash64").as("fa"))
+      .join(fp.select(col("doc_id").as("doc_b"), col("modality"), col("phash64").as("fb")),
+        Seq("modality"))
+      .filter(col("doc_a") < col("doc_b"))
+      .select(col("modality"), col("doc_a"), col("doc_b"),
+        expr("bit_count(fa ^ fb)").cast("long").as("hamming"))
+      .filter(col("hamming") <= radius)
 }
 
 object SparkTestBase {
