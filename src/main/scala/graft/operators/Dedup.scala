@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -139,8 +139,10 @@ object Dedup {
     * directed pair (new_id, cand_id), the pair normalized to
     * doc_a < doc_b, and every other column `c` of both sides as `c_a`,
     * `c_b`. Over all-new keys ([[allNew]]) it is the bucket self-join,
-    * and the normalization folds to plain columns. A batch must not
-    * repeat a base doc_id.
+    * and the normalization folds to plain columns. A batch may repeat
+    * a base doc_id (a retried batch whose other sub-table already
+    * committed it): the base copy pairs with the other batch keys, never
+    * with its own batch copy.
     */
   private[operators] def bandProbe(keys: DataFrame,
       bucket: Seq[String] = BandBucket): DataFrame = {
@@ -150,7 +152,8 @@ object Dedup {
     // a batch candidate always has the smaller id
     val candFirst = col("is_new_cand") || col("id_cand") < col("id_new")
     side("new").filter(col("is_new_new")).join(side("cand"), bucket)
-      .filter(!col("is_new_cand") || col("id_cand") < col("id_new"))
+      .filter((!col("is_new_cand") && col("id_cand") =!= col("id_new")) ||
+        col("id_cand") < col("id_new"))
       .select(bucket.map(col) ++ Seq(col("id_new").as("new_id"), col("id_cand").as("cand_id")) ++
         (("id" -> "doc") +: carried.map(c => c -> c)).flatMap { case (c, out) => Seq(
           when(candFirst, col(s"${c}_cand")).otherwise(col(s"${c}_new")).as(s"${out}_a"),
@@ -229,15 +232,16 @@ object Dedup {
   private[graft] def ngramJaccardOf(docs: DataFrame): DataFrame =
     ngramJaccardNewPairs(docs.limit(0), docs).orderBy("doc_a", "doc_b")
 
-  /** Estimated input size (optimizer bytes of the tagged (doc_id, text)
-    * relation) from which the pair search widens: below it the
-    * parallelism floor and the candidate-set materialization are pure
-    * per-job overhead, above it they pay for themselves. Placed between
-    * the measured regimes at 4 cores: up to 113,664 B (500 docs; the
-    * 1,024-doc maintenance slices) narrow is faster, from 261,893 B
-    * (5,000 docs) wide is.
+  /** Shingle rows (observed on the eager shingle checkpoint) from which
+    * the pair search materializes its candidate set before verifying:
+    * the verify join then plans on the exact candidate size, where with
+    * the band-join fan-out estimate it broadcast the gram relation and
+    * probed the pairs from one coalesced partition. Below it the extra
+    * job is pure overhead. Placed between walls at 4 cores (full
+    * result, one JVM, alternating): 25,709 rows (500 docs) ran faster
+    * without it, 128,058 rows (2,500 docs) and more with it.
     */
-  private val WideInputBytes = BigInt(170000)
+  private[graft] val WideShingleRows = 80000L
 
   /** Only the NEW near-dup pairs an ingest batch introduces: the
     * batch's band keys probe the combined signature relation
@@ -247,32 +251,29 @@ object Dedup {
     * combined corpus (band keys are per-document, so the candidate
     * relation is split-invariant) — the invariant IndexMaintenanceSpec
     * pins. Work ∝ batch × touched buckets plus the base's shingles.
+    * The batch's doc_ids must not be in the base: a repeated document
+    * would count its shingles twice.
     */
   private[graft] def ngramJaccardNewPairs(baseDocs: DataFrame,
       batchDocs: DataFrame): DataFrame = {
     val docs = tagged(baseDocs.select("doc_id", "text"), batchDocs.select("doc_id", "text"))
-    val wide = docs.queryExecution.optimizedPlan.stats.sizeInBytes >= WideInputBytes
     // ONE explode: the materialized shingles feed the signatures AND
     // the verification joins. localCheckpoint, not cache: its blocks
     // are released by the context cleaner once the result is dropped,
     // where cache() entries stay in the CacheManager until unpersisted
     // (on a cluster prefer reliable checkpoint(): these blocks die with
-    // their executor).
-    // Widened, the explode runs at full parallelism and the checkpoint
-    // is doc_id-hashed, so the signature groupBy and the doc_a verify
-    // join reuse its partitioning (Tables.widened)
-    val sh = shinglesOf(if (wide) Tables.widened(docs, "doc_id") else docs,
-      Seq("doc_id", "is_new")).localCheckpoint()
+    // their executor). Its row count is observed on the way, without a
+    // job of its own
+    val shingleRows = Observation()
+    val sh = shinglesOf(docs, Seq("doc_id", "is_new"))
+      .observe(shingleRows, count(lit(1)).as("rows")).localCheckpoint()
     // NOT clustered on the bucket: on a duplicate-heavy corpus the
     // bucket key is exactly the skewed one (measured 4.16 s vs 3.10 s
     // at 32 cores when the join was pinned to bucket-hash partitions)
     val keys = bandKeys(minhashFromShingles(sh)).localCheckpoint()
     val pairs = bandProbe(keys).select("doc_a", "doc_b").distinct()
-    // a materialized candidate set gives the verify join its EXACT
-    // size: with the band-join fan-out estimate the planner broadcast
-    // the larger gram relation and probed the pairs from one coalesced
-    // partition (measured 2 × ~1.2 s single-task jobs per pair query)
-    verifiedPairs(if (wide) pairs.localCheckpoint() else pairs, sh)
+    val materialize = shingleRows.get("rows").asInstanceOf[Long] >= WideShingleRows
+    verifiedPairs(if (materialize) pairs.localCheckpoint() else pairs, sh)
   }
 
   /** Span width for the prefix-filter pass. Prefix filtering REQUIRES
@@ -699,7 +700,7 @@ object Dedup {
     // join reads this relation twice
     val sigLong = bandKeys(minhashFromShingles(sh)).localCheckpoint()
     val pairs = bandProbe(allNew(sigLong)).select("doc_a", "doc_b").distinct()
-      .localCheckpoint() // exact-size build side for the verify join (see ngramJaccardNewPairs)
+      .localCheckpoint() // the verify join plans on its exact size (see WideShingleRows)
     interSizes(pairs, sh, "doc_a", "doc_b")
       .withColumn("containment",
         round(col("n_inter") / least(col("na"), col("nb")), 6))
@@ -1156,7 +1157,7 @@ object Dedup {
     */
   private[graft] def cappedPairsOf(docs: DataFrame): DataFrame = {
     // one corpus explode feeding signatures AND verification, the
-    // ngramJaccardNewPairs sharing discipline (widened: see there)
+    // ngramJaccardNewPairs sharing discipline, widened (Tables.widened)
     val sh = shinglesOf(Tables.widened(docs, "doc_id")).localCheckpoint()
     val sigLong = bandKeys(minhashFromShingles(sh))
       .localCheckpoint() // read twice: occupancy aggregation + member join

@@ -359,19 +359,20 @@ object MaintQueries {
     */
   def maintPairsTimeTravel(spark: SparkSession, dir: String): DataFrame =
     withRoot("pairs_tt") { root =>
-      pairChain(spark, dir, root)()
+      pairChain(spark, dir, root)(third => third)
       IndexMaintenance.pairsAt(spark, root, 2).orderBy("doc_a", "doc_b")
     }
 
-  /** The opening of both pair chains over the working slice's
-    * [[thirds]]: bootstrap batch 1 (v1), refresh with batch 2 (v2).
-    * Returns the batch-3 refresh, for the caller to commit.
+  /** Both pair chains over the working slice's [[thirds]]: bootstrap
+    * batch 1 (v1), refresh with batch 2 (v2), then the batch-3 refresh
+    * run inside `third`.
     */
-  private def pairChain(spark: SparkSession, dir: String, root: String): () => Boolean = {
+  private def pairChain(spark: SparkSession, dir: String, root: String)(
+      third: (=> Unit) => Unit): Unit = {
     val (b1, b2, b3) = thirds(docSlice(spark, dir), "doc_id")
     IndexMaintenance.bootstrap(spark, root, b1)
     IndexMaintenance.refresh(spark, root, b1, b2, "b2")
-    () => IndexMaintenance.refresh(spark, root, b1.unionByName(b2), b3, "b3")
+    third(IndexMaintenance.refresh(spark, root, b1.unionByName(b2), b3, "b3"))
   }
 
   /** Retained-version time travel AFTER VACUUM — the retention
@@ -388,8 +389,7 @@ object MaintQueries {
     */
   def maintPairsVacuumTravel(spark: SparkSession, dir: String): DataFrame =
     withRoot("pairs_vac") { root =>
-      val third = pairChain(spark, dir, root)
-      compactThenVacuum(spark, root)(third())
+      pairChain(spark, dir, root)(compactThenVacuum(spark, root))
       IndexMaintenance.pairsAt(spark, root, 3).orderBy("doc_a", "doc_b")
     }
 

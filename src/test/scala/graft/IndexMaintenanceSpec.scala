@@ -115,6 +115,24 @@ class IndexMaintenanceSpec extends SparkTestBase {
     assert(want.nonEmpty && pairSet(IndexMaintenance.pairs(spark, root)) == want)
   }
 
+  test("a pair search over more shingle rows than WideShingleRows equals brute force") {
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+    val rows = bigramSets(docs).agg(sum(size(col("g")))).head.getLong(0)
+    val n = (Dedup.WideShingleRows / rows + 1).toInt
+    // n id-shifted copies of the corpus: each copy pairs with the others
+    def copies(ks: Range) = ks.map(k =>
+      docs.select((col("doc_id") + k * 1000000L).as("doc_id"), col("text"))).reduce(_ union _)
+    val all = copies(0 until n).localCheckpoint()
+    assert(bigramSets(all).agg(sum(size(col("g")))).head.getLong(0) >= Dedup.WideShingleRows)
+    val want = pairSet(nearDupPairsBrute(all))
+    assert(want.nonEmpty && pairSet(Dedup.ngramJaccardOf(all)) == want)
+    val root = freshRoot()
+    val base = copies(0 until n - 1)
+    assert(IndexMaintenance.bootstrap(spark, root, base))
+    assert(IndexMaintenance.refresh(spark, root, base, copies(n - 1 until n), "last"))
+    assert(pairSet(IndexMaintenance.pairs(spark, root)) == want)
+  }
+
   test("one pair refresh on a built root launches at most 14 Spark jobs") {
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
     val base = docs.filter(col("doc_id") % 4 =!= 0)
@@ -427,6 +445,23 @@ class IndexMaintenanceSpec extends SparkTestBase {
       > pairSet4(dctPairsBrute(Multimodal.dctFingerprintsOf(base).localCheckpoint())).size)
     // exactly-once
     assert(!IndexMaintenance.refreshPhash(spark, root, batch, "b1"))
+  }
+
+  test("a phash refresh retried after only its fingerprint commit landed adds no self-pair") {
+    import graft.operators.Multimodal
+    val root = freshRoot()
+    val media = Multimodal.augmentedMedia(spark, sfDir)
+    val batch = media.filter(col("doc_id") % 3 === 0)
+    assert(IndexMaintenance.refreshPhash(spark, root,
+      media.filter(col("doc_id") % 3 =!= 0), "bootstrap"))
+    // the fp sub-table applied b1, the pair sub-table did not
+    assert(IdempotentMergeSink.merge(spark, s"$root/fp",
+      Multimodal.dctFingerprintsOf(batch), "doc_id", "b1"))
+    assert(IndexMaintenance.refreshPhash(spark, root, batch, "b1"))
+    val got = IndexMaintenance.dctPairs(spark, root)
+    assert(got.filter(col("doc_a") === col("doc_b")).isEmpty, "self-pairs committed")
+    assertSame(got, dctPairsBrute(Multimodal.dctFingerprintsOf(media).localCheckpoint()),
+      "modality", "doc_a", "doc_b", "hamming")
   }
 
   test("streaming bm25/knn/phash refresh twins converge to the from-scratch builds") {

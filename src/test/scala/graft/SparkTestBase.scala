@@ -61,6 +61,15 @@ trait SparkTestBase extends AnyFunSuite {
       .select("u", "v", "diff")
   }
 
+  /** Each document's distinct word bigrams (doc_id, g), built without
+    * the production shingles.
+    */
+  def bigramSets(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), split(trim(col("text")), "\\s+").as("t"))
+      .select(col("doc_id"), array_distinct(expr(
+        "zip_with(slice(t, 1, greatest(size(t) - 1, 0)), slice(t, 2, greatest(size(t) - 1, 0))," +
+          " (x, y) -> concat(x, ' ', y))")).as("g"))
+
   /** The near-dup pairs (doc_a, doc_b, n_inter, jaccard) of a
     * (doc_id, text) relation from a cross join of its documents: a
     * pair is a candidate when any of its 8 minhash band keys
@@ -69,10 +78,7 @@ trait SparkTestBase extends AnyFunSuite {
     * bigram sets are built here, not by the production shingles.
     */
   def nearDupPairsBrute(docs: DataFrame): DataFrame = {
-    val grams = docs.select(col("doc_id"), split(trim(col("text")), "\\s+").as("t"))
-      .select(col("doc_id"), array_distinct(expr(
-        "zip_with(slice(t, 1, greatest(size(t) - 1, 0)), slice(t, 2, greatest(size(t) - 1, 0))," +
-          " (x, y) -> concat(x, ' ', y))")).as("g"))
+    val grams = bigramSets(docs)
     val keys = graft.operators.Dedup.bandKeysOf(docs).groupBy("doc_id")
       .agg(collect_set(struct(col("band_idx"), col("bk"))).as("k"))
     val side = grams.join(keys, "doc_id")
