@@ -1234,7 +1234,7 @@ object AnnSearch {
     // clustering (subset rule), so the agg needs no exchange of the
     // exploded tokens — strictly fewer shuffled bytes when it fires
     Tables.widened(docs, "doc_id")
-      .select(col("doc_id"), explode(split(lower(trim(col("text"))), "\\s+")).as("term"))
+      .select(col("doc_id"), explode(TextAnalysis.toks(col("text"))).as("term"))
       .filter(col("term") =!= "")
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
 

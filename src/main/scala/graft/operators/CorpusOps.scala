@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import TextAnalysis.{gram, toks, windows, words}
 
 /** Corpus curation operators — the selection/hygiene passes a
   * training-data pipeline runs between dedup and training: stratified
@@ -28,6 +29,9 @@ object CorpusOps {
     conv(substring(md5(c), 1, 8), 16, 10).cast("bigint")
   private def h32Sql(e: String): String =
     s"CAST(('0x' || substr(md5($e), 1, 8)) AS BIGINT)"
+
+  /** A document's whitespace word count. */
+  private def nWords: Column = size(words(col("text"))).cast("bigint")
 
   /** Per-language sampling rates out of 1000 — the mixture knob:
     * downsample the dominant language, keep the tail whole.
@@ -65,9 +69,8 @@ object CorpusOps {
   private val TokenBudget = 1000L
 
   def corpusTokenBudget(spark: SparkSession, dir: String): DataFrame = {
-    val nTok = size(split(trim(col("text")), "\\s+")).cast("bigint")
     val sized = Tables.documents(spark, dir)
-      .withColumn("n_tokens", nTok)
+      .withColumn("n_tokens", nWords)
       .select("doc_id", "source", "n_tokens") // prune text off the shuffle
     keyedCumsum(sized, key = "source",
         order = Seq(col("n_tokens").desc, col("doc_id")),
@@ -92,9 +95,8 @@ object CorpusOps {
     * bucket boundaries.
     */
   def corpusLengthBuckets(spark: SparkSession, dir: String): DataFrame = {
-    val nTok = size(split(trim(col("text")), "\\s+")).cast("bigint")
     Tables.documents(spark, dir)
-      .select(col("source"), nTok.as("n_tokens"))
+      .select(col("source"), nWords.as("n_tokens"))
       // ceil to the bin edge in integer math: ((n-1) div W + 1) * W —
       // `div`, not `/` (Spark's `/` on bigints is double division)
       .withColumn("bucket_len",
@@ -146,9 +148,8 @@ object CorpusOps {
     * first / last context, and offset inside its first context.
     */
   def corpusPackContexts(spark: SparkSession, dir: String): DataFrame = {
-    val nTok = size(split(trim(col("text")), "\\s+")).cast("bigint") + 1L // + EOD
     packStream(
-      Tables.documents(spark, dir).withColumn("n_tok", nTok)
+      Tables.documents(spark, dir).withColumn("n_tok", nWords + 1L) // + EOD
         .select("doc_id", "source", "n_tok"), // prune text off the shuffle
       partCol = "source", sizeCol = "n_tok", unit = CtxLen,
       outPrefix = "ctx", offCols = ("stream_off", "off_in_ctx"))
@@ -338,16 +339,12 @@ object CorpusOps {
     * through map-side, no corpus shuffle. Exactly the plan shape
     * n-gram decontamination has at 100 TB (benchmark suites are MBs).
     */
-  private val ContamN = 5
+  private[graft] val ContamN = 5
 
-  private[operators] def grams(df: DataFrame, n: Int): DataFrame =
-    df.select(col("doc_id"), split(trim(col("text")), "\\s+").as("toks"))
-      // guard: sequence(1, k) with k < 1 generates a DESCENDING range in
-      // Spark; documents shorter than n grams simply contribute none
-      .filter(size(col("toks")) >= n)
-      .select(col("doc_id"), explode(expr(
-        s"array_distinct(transform(sequence(1, size(toks) - ${n - 1})," +
-          s" i -> concat_ws(' ', slice(toks, i, $n))))")).as("gram"))
+  private[graft] def grams(df: DataFrame, n: Int): DataFrame =
+    df.select(col("doc_id"), words(col("text")).as("toks"))
+      .select(col("doc_id"),
+        explode(array_distinct(windows("toks", n)((_, ws) => gram(ws)))).as("gram"))
 
   def corpusDecontaminate(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
@@ -373,9 +370,6 @@ object CorpusOps {
         coalesce(col("is_contaminated"), lit(false)).as("is_contaminated"))
       .orderBy(col("doc_id"))
   }
-
-  /** Test hook: the shared n-gram relation at the decontamination N. */
-  private[graft] def gramsForTest(df: DataFrame): DataFrame = grams(df, ContamN)
 
   /** BLOOM-PREFILTERED decontamination — the 100 TB shape of
     * [[corpusDecontaminate]]. The exact version ships EVERY corpus
@@ -487,13 +481,10 @@ object CorpusOps {
     */
   def corpusModelQuality(spark: SparkSession, dir: String): DataFrame = {
     val feats = Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        split(lower(trim(col("text"))), "\\s+").as("toks"))
-      .select(col("doc_id"), explode(expr(
-        "array_distinct(concat(toks, CASE WHEN size(toks) >= 2 THEN " +
-          "transform(sequence(1, size(toks) - 1), " +
-          "i -> concat(element_at(toks, i), '_', element_at(toks, i + 1))) " +
-          "ELSE array() END))")).as("feat"))
+      .select(col("doc_id"), toks(col("text")).as("toks"))
+      .select(col("doc_id"), explode(array_distinct(concat(col("toks"), coalesce(
+        windows("toks", 2)((_, ws) => ws.mkString("concat(", ", '_', ", ")")),
+        array())))).as("feat"))
       .filter(col("feat") =!= "")
     feats
       .select(col("doc_id"), (h32(col("feat")) % 2001 - 1000).as("w"))
@@ -529,9 +520,8 @@ object CorpusOps {
     * aggregation at any corpus size.
     */
   def corpusEpochPlan(spark: SparkSession, dir: String): DataFrame = {
-    val nTok = size(split(trim(col("text")), "\\s+")).cast("bigint")
     val avail = Tables.documents(spark, dir)
-      .select(col("source"), nTok.as("n_tok"))
+      .select(col("source"), nWords.as("n_tok"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("avail_tokens"))
     val z = avail.agg(sum(pow(col("avail_tokens"), EpochAlpha)).as("z"))
@@ -569,10 +559,9 @@ object CorpusOps {
     * `PairCap` batch size.
     */
   def corpusPackPairs(spark: SparkSession, dir: String): DataFrame = {
-    val nTok = size(split(trim(col("text")), "\\s+")).cast("bigint")
     val ranked = keyedCumsum(
       Tables.documents(spark, dir)
-        .select(col("doc_id"), nTok.as("n_tok"))
+        .select(col("doc_id"), nWords.as("n_tok"))
         .withColumn("_g", lit(0)).withColumn("_one", lit(1L)),
       key = "_g", order = Seq(col("n_tok").desc, col("doc_id")),
       sizeCol = "_one", out = "pack_rank")
@@ -662,7 +651,7 @@ object CorpusOps {
   private[graft] def stripOver(docs: DataFrame): DataFrame = {
     val chunks = docs
       .select(col("doc_id"), col("source"),
-        split(trim(col("text")), "\\s+").as("ws"))
+        words(col("text")).as("ws"))
       .select(col("doc_id"), col("source"), posexplode(expr(
         s"""transform(sequence(0, CAST(ceil(size(ws) / $BoilerW.0) AS INT) - 1),
            |  i -> array_join(slice(ws, i * $BoilerW + 1, $BoilerW), ' '))""".stripMargin))

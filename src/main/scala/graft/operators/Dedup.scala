@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import TextAnalysis.{gram, windows, words}
 
 /** Corpus deduplication operators — the scale additions a training-data
   * pipeline needs on top of the reference's per-catalog dedup:
@@ -51,17 +52,13 @@ object Dedup {
   /** The same shingle explode over an arbitrary (doc_id, text) relation
     * — shared with [[dedupContainment]]'s excerpt-augmented corpus. The
     * `ids` columns are carried onto every shingle row. A document of
-    * fewer than two tokens has no bigram: its index sequence is null
-    * and it yields no rows, as the oracle's `generate_series(1, 0)`
-    * does. (A `size(toks) >= 2` filter would be pushed below the
-    * projection and split every text twice.)
+    * fewer than two tokens has no bigram and yields no rows.
     */
-  private def shinglesOf(docs: DataFrame, ids: Seq[String] = Seq("doc_id")): DataFrame =
+  private[graft] def shinglesOf(docs: DataFrame, ids: Seq[String] = Seq("doc_id")): DataFrame =
     docs
-      .select(ids.map(col) :+ split(trim(col("text")), "\\s+").as("toks"): _*)
-      .select(ids.map(col) :+ explode(expr(
-        "array_distinct(transform(CASE WHEN size(toks) > 1 THEN sequence(1, size(toks) - 1) END," +
-          " i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1))))")).as("gram"): _*)
+      .select(ids.map(col) :+ words(col("text")).as("toks"): _*)
+      .select(ids.map(col) :+
+        explode(array_distinct(windows("toks", 2)((_, ws) => gram(ws)))).as("gram"): _*)
 
   private def shinglesCteOver(rel: String) =
     s"""sh AS (
@@ -289,17 +286,6 @@ object Dedup {
     */
   private val PrefixShingleN = 5
 
-  /** 5-gram shingle relation for the prefix-filter pass (distinct per
-    * doc). Exposed for the spec's independent all-pairs recomputation.
-    */
-  private[graft] def prefixShingles(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("toks"))
-      .filter(size(col("toks")) >= PrefixShingleN)
-      .select(col("doc_id"), explode(expr(
-        s"array_distinct(transform(sequence(1, size(toks) - ${PrefixShingleN - 1})," +
-          s" i -> concat_ws(' ', slice(toks, i, $PrefixShingleN))))")).as("gram"))
-
   /** PREFIX-FILTERED exact Jaccard pairs — the AllPairs/PPJoin
     * candidate principle (Chaudhuri et al. SSJoin 2006; Xiao et al.
     * PPJoin 2008) as the LOSSLESS alternative to MinHash-LSH
@@ -316,7 +302,7 @@ object Dedup {
     * verification then mirrors [[dedupNgramJaccard]]'s confirm join.
     */
   def dedupPrefixFilter(spark: SparkSession, dir: String): DataFrame = {
-    val sh = prefixShingles(spark, dir).localCheckpoint()
+    val sh = CorpusOps.grams(Tables.documents(spark, dir), PrefixShingleN).localCheckpoint()
     val dfreq = sh.groupBy(col("gram")).agg(count(lit(1)).as("df"))
     val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("gram"))
     val perDoc = Window.partitionBy(col("doc_id"))
@@ -429,7 +415,7 @@ object Dedup {
 
   private def simhashFingerprints(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("tok"))
+      .select(col("doc_id"), explode(words(col("text"))).as("tok"))
       .groupBy(col("doc_id"))
       .agg(expr("simhash64(tok)").as("simhash"))
 
@@ -668,7 +654,7 @@ object Dedup {
   private def augmentedDocs(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     val excerpts = docs.filter(col("doc_id") % ExcerptMod === 0)
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("toks"))
+      .select(col("doc_id"), words(col("text")).as("toks"))
       .select(
         (col("doc_id") + ExcerptIdOffset).as("doc_id"),
         concat_ws(" ", expr(
@@ -814,7 +800,9 @@ object Dedup {
       }
     var first = true
     var iter = 0
-    while (!converged && iter < 32) {
+    // labels only fall, so an unchanged label sum means no label
+    // changed: the loop ends within diameter + 1 rounds
+    while (!converged) {
       // drop the seed's deg column once the loop rewrites labels; on
       // round 1 it is pruned by the optimizer, not materialized
       val nbrJoined = if (hubs == null)

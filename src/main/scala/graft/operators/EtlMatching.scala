@@ -49,19 +49,23 @@ object EtlMatching {
     s"(length($code) = 12 AND (3 * ($odd) + ($even) + ${d(12)}) % 10 = 0)"
   }
 
-  /** Stage 0 precheck: drop incoming products that already exist —
-    * a left-anti join on the article key (batch_processor.py:367-404).
-    * "Existing" = parts already seen in lineitem.
+  /** The distinct keys (`l_partkey`) of the products that already
+    * exist downstream: parts seen in lineitem — stage 0's anti-join
+    * side, shared with [[Pipeline.endToEnd]].
     */
-  def precheckAntijoin(spark: SparkSession, dir: String): DataFrame = {
-    val existing = Tables.lineitem(spark, dir)
+  private[operators] def existingParts(spark: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(spark, dir)
       .filter(col("l_shipdate") >= lit("2001-09-01").cast("timestamp"))
       .select(col("l_partkey")).distinct()
+
+  /** Stage 0 precheck: drop incoming products that already exist —
+    * a left-anti join on the article key (batch_processor.py:367-404).
+    */
+  def precheckAntijoin(spark: SparkSession, dir: String): DataFrame =
     Tables.part(spark, dir)
-      .join(existing, col("p_partkey") === col("l_partkey"), "left_anti")
+      .join(existingParts(spark, dir), col("p_partkey") === col("l_partkey"), "left_anti")
       .select("p_partkey", "p_name", "p_brand", "p_type")
       .orderBy(col("p_partkey"))
-  }
 
   /** A part's synthesized raw barcode (a backtick prefix or a dropped
     * leading digit, by `p_size % 3`) and its normalization: non-digits

@@ -28,10 +28,8 @@ object Pipeline {
     val deduped = cleaned.withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1).drop("rn")
     // stage 0 precheck: drop products that already exist downstream
-    val existing = Tables.lineitem(spark, dir)
-      .filter(col("l_shipdate") >= lit("2001-09-01").cast("timestamp"))
-      .select(col("l_partkey")).distinct()
-    val fresh = deduped.join(existing, col("p_partkey") === col("l_partkey"), "left_anti")
+    val fresh = deduped.join(EtlMatching.existingParts(spark, dir),
+      col("p_partkey") === col("l_partkey"), "left_anti")
     // stage 1: UPC validation; a valid barcode is an immediate master match
     val upcs = EtlMatching.upcValidate(spark, dir).select(col("p_partkey").as("uk"), col("upc"))
     val staged = fresh.join(upcs, col("p_partkey") === col("uk"), "left")
@@ -60,13 +58,10 @@ object Pipeline {
   def corpusPrep(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     // quality gate: token count + stopword signal (inline, no shuffle)
-    val toks = split(lower(trim(col("text"))), "\\s+")
-    val nTok = size(toks)
-    val stopHits = size(filter(toks, x =>
-      array_contains(typedLit(Seq("the", "a", "and", "of", "to", "in", "is", "it", "for", "on")), x)))
+    val toks = TextAnalysis.toks(col("text"))
     val gated = docs
-      .withColumn("n_tokens", nTok)
-      .withColumn("stop_hits", stopHits)
+      .withColumn("n_tokens", size(toks))
+      .withColumn("stop_hits", TextAnalysis.hits(toks, "en"))
       .filter(col("n_tokens") >= 20 && col("stop_hits") > 0)
     // dedup on normalized content, canonical = min doc_id
     val norm = regexp_replace(lower(trim(col("text"))), "\\s+", " ")
@@ -118,7 +113,7 @@ object Pipeline {
     * this is a single scan + a #groups-row shuffle.
     */
   def corpusReport(spark: SparkSession, dir: String): DataFrame = {
-    val toks = split(lower(trim(col("text"))), "\\s+")
+    val toks = TextAnalysis.toks(col("text"))
     Tables.documents(spark, dir)
       .select(
         col("lang"),
@@ -151,16 +146,14 @@ object Pipeline {
       size(regexp_extract_all(col("raw"), lit(CorpusOps.PhoneRe), lit(0)))
     val scrub = regexp_replace(regexp_replace(col("raw"), CorpusOps.EmailRe, "<EMAIL>"),
       CorpusOps.PhoneRe, "<PHONE>")
-    val toks = split(lower(trim(col("clean"))), "\\s+")
-    val stopHits = size(filter(toks, x =>
-      array_contains(typedLit(Seq("the", "a", "and", "of", "to", "in", "is", "it", "for", "on")), x)))
+    val toks = TextAnalysis.toks(col("clean"))
     val gated = docs
       // synthetic PII on a deterministic subset, so the scrub has work
       .withColumn("raw", CorpusOps.withPii)
       .withColumn("n_pii", nPii)
       .withColumn("clean", scrub)
       .withColumn("n_tokens", size(toks))
-      .withColumn("stop_hits", stopHits)
+      .withColumn("stop_hits", TextAnalysis.hits(toks, "en"))
       .filter(col("n_tokens") >= 20 && col("stop_hits") > 0)
     // the ONE corpus shuffle: dedup window on normalized content hash
     val w = Window.partitionBy(col("content_hash")).orderBy(col("doc_id"))

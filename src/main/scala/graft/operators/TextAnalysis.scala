@@ -19,9 +19,36 @@ import org.apache.spark.sql.functions._
   */
 object TextAnalysis {
 
-  /** Whitespace tokens, lowered. */
-  private def toks(c: Column): Column = split(lower(trim(c)), "\\s+")
+  /** Whitespace tokens, lowered — with [[words]], the one place text
+    * becomes words.
+    */
+  private[graft] def toks(c: Column): Column = split(lower(trim(c)), "\\s+")
   private def toksSql(e: String) = s"string_split_regex(lower(trim($e)), '\\s+')"
+
+  /** Whitespace words, case kept. */
+  private[graft] def words(c: Column): Column = split(trim(c), "\\s+")
+
+  /** Every `n`-word window of the token-array column `t`, in order: the
+    * window starting at word `i` (1-based) becomes `cell(i, ws)`, `ws`
+    * being its `n` words. `i`, `ws` and the cell are SQL text. The one
+    * window builder of the text families.
+    *
+    * A document of fewer than `n` words gets a NULL array, not an empty
+    * one: Spark's `sequence(1, k)` with k < 1 counts DOWN (`sequence(1,
+    * 0)` is [1, 0]), so the range itself is guarded. An explode of the
+    * null yields no rows, as the oracles' `generate_series(1, 0)` does,
+    * and a `concat` with it is null. Never guard with a `filter(size(t)
+    * >= n)` instead: Catalyst pushes that filter below the tokenizing
+    * projection, and every text is split twice.
+    */
+  private[graft] def windows(t: String, n: Int)(cell: (String, Seq[String]) => String): Column = {
+    val ws = (0 until n).map(j => if (j == 0) s"element_at($t, i)" else s"element_at($t, i + $j)")
+    expr(s"transform(CASE WHEN size($t) >= $n THEN sequence(1, size($t) - ${n - 1}) END," +
+      s" i -> ${cell("i", ws)})")
+  }
+
+  /** The ' '-joined gram cell of [[windows]]. */
+  private[graft] def gram(ws: Seq[String]): String = ws.mkString("concat_ws(' ', ", ", ", ")")
 
   /** BPE-ish pieces: alphanumeric runs or single non-space symbols. */
   private val BpePattern = "[A-Za-z0-9]+|[^A-Za-z0-9\\s]"
@@ -33,7 +60,8 @@ object TextAnalysis {
     "es" -> Seq("el", "la", "los", "y", "es", "un", "una", "no", "por", "como"))
   private val langOrder = Seq("en", "de", "fr", "es")
 
-  private def hits(t: Column, lang: String): Column =
+  /** The count of `lang` stopwords among the tokens `t`. */
+  private[operators] def hits(t: Column, lang: String): Column =
     size(filter(t, x => array_contains(typedLit(stopwords(lang)), x)))
   private def hitsSql(t: String, lang: String): String = {
     val lst = stopwords(lang).map(w => s"'$w'").mkString("[", ", ", "]")
@@ -233,21 +261,18 @@ object TextAnalysis {
     * ([[docChunks]]).
     */
   def textWinnowing(spark: SparkSession, dir: String): DataFrame =
-    winnowSelections(spark, dir).orderBy(col("doc_id"), col("fp_pos"))
+    winnowSelections(Tables.documents(spark, dir)).orderBy(col("doc_id"), col("fp_pos"))
 
-  /** The distinct (doc_id, fp_hash, fp_pos) selections without the
-    * presentation sort — shared with [[textWinnowPairs]].
+  /** The distinct (doc_id, fp_hash, fp_pos) selections of any (doc_id,
+    * text) relation, without the presentation sort — shared with
+    * [[textWinnowPairs]].
     */
-  private def winnowSelections(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def winnowSelections(docs: DataFrame): DataFrame = {
     val K = 3; val W = 4; val Shift = 1048576L // 2^20
-    val grams = Tables.documents(spark, dir)
+    val grams = docs
       .select(col("doc_id"), toks(col("text")).as("t"))
-      .filter(size(col("t")) >= K) // sequence(1, n<1) would run DESCENDING in Spark
       .select(col("doc_id"), (size(col("t")) - (K - 1)).as("n_grams"),
-        posexplode(expr(
-          s"transform(sequence(1, size(t) - ${K - 1}), i -> " +
-            "concat_ws(' ', element_at(t, i), element_at(t, i + 1), element_at(t, i + 2)))"))
-          .as(Seq("pos", "gram")))
+        posexplode(windows("t", K)((_, ws) => gram(ws))).as(Seq("pos", "gram")))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
       .rowsBetween(Window.currentRow, W - 1)
     grams
@@ -282,7 +307,7 @@ object TextAnalysis {
     */
   private[operators] def winnowPairs(spark: SparkSession, dir: String): DataFrame = {
     val MinShared = 3
-    val fp = winnowSelections(spark, dir)
+    val fp = winnowSelections(Tables.documents(spark, dir))
       .select(col("doc_id"), col("fp_hash")).distinct()
       .localCheckpoint() // referenced twice below; winnowing itself is 2 window passes
     fp.select(col("doc_id").as("doc_a"), col("fp_hash"))
@@ -300,7 +325,7 @@ object TextAnalysis {
     */
   def textNgramTopk(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .select(explode(split(lower(trim(col("text"))), "\\s+")).as("tok"))
+      .select(explode(toks(col("text"))).as("tok"))
       .select(col("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("tok"))
@@ -330,10 +355,7 @@ object TextAnalysis {
   def textBigramFamiliarity(spark: SparkSession, dir: String): DataFrame = {
     val grams = Tables.documents(spark, dir)
       .select(col("doc_id"), toks(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(toks) - 1)," +
-          " i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1)))")).as("gram"))
+      .select(col("doc_id"), explode(windows("toks", 2)((_, ws) => gram(ws))).as("gram"))
     val counts = grams.groupBy("gram").agg(count(lit(1)).as("c"))
     grams.join(counts, "gram")
       .groupBy(col("doc_id"))
@@ -355,18 +377,16 @@ object TextAnalysis {
   def textRepetition(spark: SparkSession, dir: String): DataFrame = {
     // ONE corpus scan: both n-gram orders ride a single tagged explode
     // (the naive per-order formulation re-scans and re-tokenizes the
-    // corpus once per order plus once for the lengths)
-    def gramArr(n: Int) = expr(
-      s"transform(sequence(1, size(toks) - ${n - 1}), i -> " +
-        (1 to n).map(j => s"element_at(toks, i + ${j - 1})")
-          .mkString("concat_ws(' ', ", ", ", ")") + ")")
+    // corpus once per order plus once for the lengths); a document of
+    // fewer than 3 tokens has no trigram, and its null trigram array
+    // nulls the concat, so it yields no rows
+    def gramArr(n: Int) = windows("toks", n)((_, ws) => gram(ws))
     // both orders share one exploded relation untagged — a bigram can
     // never collide with a trigram (different word counts), so the
     // order is recovered per DISTINCT gram after the first aggregation
     // (the small side), not carried through the explode (the big side)
     val tagged = Tables.documents(spark, dir)
       .select(col("doc_id"), toks(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 3)
       .select(col("doc_id"), size(col("toks")).as("n_tokens"),
         explode(concat(gramArr(2), gramArr(3))).as("gram"))
     val stats = tagged
@@ -585,7 +605,7 @@ object TextAnalysis {
     * score and the bucketing cannot drift.
     */
   private[operators] def perplexityAgg(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = bigramPairs(spark, dir)
+    val pairs = bigramPairs(Tables.documents(spark, dir)).localCheckpoint()
     val bg = pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cbg"))
     val ctx = bg.groupBy(col("w1")).agg(sum(col("cbg")).as("cctx"))
     val vocab = pairs.agg(countDistinct(col("w2")).as("vs"))
@@ -615,20 +635,16 @@ object TextAnalysis {
   def textPerplexity(spark: SparkSession, dir: String): DataFrame =
     perplexityOf(perplexityAgg(spark, dir))
 
-  /** Every (doc_id, w1, w2) adjacent token pair of the documents with
-    * at least two tokens, checkpointed: model training and scoring
+  /** Every (doc_id, w1, w2) adjacent token pair of any (doc_id, text)
+    * relation. Its callers checkpoint it: model training and scoring
     * both read it.
     */
-  private def bigramPairs(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
+  private[graft] def bigramPairs(docs: DataFrame): DataFrame =
+    docs
       .select(col("doc_id"), toks(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(toks) - 1)," +
-          " i -> struct(element_at(toks, i) AS w1, element_at(toks, i + 1) AS w2))"))
-        .as("p"))
+      .select(col("doc_id"), explode(windows("toks", 2)((_, ws) =>
+        s"struct(${ws(0)} AS w1, ${ws(1)} AS w2)")).as("p"))
       .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
-      .localCheckpoint()
 
   /** Per-doc cross-entropy and perplexity from (doc_id, n_grams, s6). */
   private def perplexityOf(agg: DataFrame): DataFrame =
@@ -652,7 +668,7 @@ object TextAnalysis {
     */
   private[graft] def knComponents(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val pairs = bigramPairs(spark, dir)
+    val pairs = bigramPairs(Tables.documents(spark, dir)).localCheckpoint()
     val bg = pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cbg"))
     val ctx = bg.groupBy(col("w1"))
       .agg(sum(col("cbg")).as("cctx"), count(lit(1)).as("n1plus"))
@@ -831,10 +847,8 @@ object TextAnalysis {
     */
   private[graft] def spanGramsOver(docs: DataFrame): DataFrame = docs
     .select(col("doc_id"), toks(col("text")).as("toks"))
-    .filter(size(col("toks")) >= SpanGram)
-    .select(col("doc_id"), explode(expr(
-      s"transform(sequence(1, size(toks) - ${SpanGram - 1})," +
-        s" i -> struct(i AS pos, array_join(slice(toks, i, $SpanGram), ' ') AS g))")).as("s"))
+    .select(col("doc_id"), explode(windows("toks", SpanGram)((i, ws) =>
+      s"struct($i AS pos, ${gram(ws)} AS g)")).as("s"))
     .select(col("doc_id"), col("s.pos"), col("s.g"))
 
   /** The positional grams SERVED from their write-once g-bucketed
@@ -1176,14 +1190,7 @@ object TextAnalysis {
       .localCheckpoint()
     var merges = Seq.empty[DataFrame]
     for (i <- 1 to rounds) {
-      val pairs = words
-        .select(col("n"), split(trim(col("seq")), " ").as("toks"))
-        .filter(size(col("toks")) >= 2)
-        .select(col("n"), explode(expr(
-          "transform(sequence(1, size(toks) - 1)," +
-            " i -> struct(element_at(toks, i) AS l, element_at(toks, i + 1) AS r))")).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("n")).as("pair_count"))
+      val pairs = bpePairs(words)
       // 1 row, read twice (merge table + rewrite): checkpoint so the
       // pair aggregation runs once per round
       val winner = pairs
@@ -1200,6 +1207,19 @@ object TextAnalysis {
     }
     (merges.reduce(_ union _).orderBy(col("merge_rank")), words)
   }
+
+  /** One merge round's weighted adjacent symbol pairs (l, r,
+    * pair_count) over a (n, seq) symbol-sequence relation. The symbols
+    * of a `seq` are single-space-delimited and hold no whitespace, so
+    * its words are its symbols.
+    */
+  private[graft] def bpePairs(syms: DataFrame): DataFrame =
+    syms
+      .select(col("n"), words(col("seq")).as("toks"))
+      .select(col("n"), explode(windows("toks", 2)((_, ws) =>
+        s"struct(${ws(0)} AS l, ${ws(1)} AS r)")).as("p"))
+      .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+      .agg(sum(col("n")).as("pair_count"))
 
   /** BPE ENCODING — the inference side of [[textBpeMerges]]: tokenize
     * every document with the trained merge table. Because BPE merges
@@ -1219,7 +1239,7 @@ object TextAnalysis {
         .filter(col("w") =!= "")
         .groupBy(col("w")).agg(count(lit(1)).as("n")),
       BpeMergeRounds)._2
-      .withColumn("n_sym", size(split(trim(col("seq")), " ")))
+      .withColumn("n_sym", size(words(col("seq"))))
       .select(col("w"), col("n_sym"))
     Tables.documents(spark, dir)
       .select(col("doc_id"), explode(toks(col("text"))).as("w"))

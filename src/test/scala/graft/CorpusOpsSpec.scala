@@ -255,8 +255,8 @@ class CorpusOpsSpec extends SparkTestBase {
     // and it prunes: candidates surviving the bloom are a strict subset
     // of the corpus gram stream (non-contaminated grams dominate)
     val docs = Tables.documents(spark, sfDir)
-    val corpusGrams = CorpusOps.gramsForTest(docs.filter(col("doc_id") >= 20))
-    val bench = CorpusOps.gramsForTest(docs.filter(col("doc_id") < 20))
+    val corpusGrams = CorpusOps.grams(docs.filter(col("doc_id") >= 20), CorpusOps.ContamN)
+    val bench = CorpusOps.grams(docs.filter(col("doc_id") < 20), CorpusOps.ContamN)
       .select(col("gram")).distinct()
     val bloomCol = bench
       .agg(call_function("bloom_agg", xxhash64(col("gram")), lit(100000L)).as("bf"))

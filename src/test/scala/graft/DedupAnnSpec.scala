@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{AnnSearch, Dedup}
+import graft.operators.{AnnSearch, CorpusOps, Dedup}
 import org.apache.spark.sql.functions._
 
 class DedupAnnSpec extends SparkTestBase {
@@ -64,7 +64,8 @@ class DedupAnnSpec extends SparkTestBase {
     assert(df.filter(col("jaccard") < 0.5).count() == 0)
     // LOSSLESS: the prefix-filtered result must equal the declarative
     // all-pairs definition computed independently (no candidate step)
-    val sh = Dedup.prefixShingles(spark, sfDir).localCheckpoint()
+    // the prefix filter's distinct word 5-grams
+    val sh = CorpusOps.grams(Tables.documents(spark, sfDir), 5).localCheckpoint()
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val allPairs = sh.select(col("doc_id").as("doc_a"), col("gram"))
       .join(sh.select(col("doc_id").as("doc_b"), col("gram")), "gram")
@@ -199,7 +200,8 @@ class DedupAnnSpec extends SparkTestBase {
     // long chain (diameter stress — the case star-contraction exists
     // for), clique, hub star, two components, reversed/duplicated edges
     val shapes = Seq(
-      (1L to 12L).sliding(2).map(s => (s(0), s(1))).toSeq,          // chain
+      // chain of diameter 39: more min-label rounds than a fixed cap of 32
+      (1L to 40L).sliding(2).map(s => (s(0), s(1))).toSeq,
       Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L)), // K4
       (2L to 9L).map(i => (i, 1L)),                                  // hub (reversed)
       Seq((1L, 2L), (2L, 3L), (10L, 11L), (11L, 12L), (2L, 1L)),     // 2 comps + dup
