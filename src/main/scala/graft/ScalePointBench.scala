@@ -1,7 +1,8 @@
 package graft
 
 import Harness.j
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.operators.TextAnalysis.words
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Third scale point for the expensive self-contained queries, their
@@ -82,6 +83,13 @@ object ScalePointBench {
     */
   private val SynthMarker = "_SYNTH_DONE_v2"
 
+  /** The `text` column with every word replaced by the first 8 hex
+    * digits of md5(word ++ salt): token counts and sizes stay, shared
+    * words match only under the same salt.
+    */
+  private def rehashed(salt: Column): Column =
+    concat_ws(" ", transform(words(col("text")), w => substring(md5(concat(w, salt)), 1, 8)))
+
   private def synthesize(spark: SparkSession, src: String, dst: String,
       replicas: Int): Unit = {
     val fs = new java.io.File(dst)
@@ -98,8 +106,7 @@ object ScalePointBench {
     (0 until replicas).map { i =>
       if (i == 0) docs
       else docs.withColumn("doc_id", col("doc_id") + lit(i * 100000L))
-        .withColumn("text", concat_ws(" ", expr(
-          s"transform(split(text, '\\\\s+'), w -> substr(md5(concat(w, '#$i')), 1, 8))")))
+        .withColumn("text", rehashed(lit(s"#$i")))
     }.reduce(_ unionByName _)
       .coalesce(4).write.mode("overwrite").parquet(s"$dst/documents.parquet")
     val emb = Tables.load(spark, src, "embeddings")
@@ -179,12 +186,11 @@ object ScalePointBench {
     * duplicate structure, same embeddings, real idf spread.
     */
   private def zipfRewrite(docs: DataFrame, vocab: Int): DataFrame =
-    docs.withColumn("text", expr(
-      s"""concat_ws(' ',
-          transform(sequence(1, greatest(1, size(split(text, '\\s+')))),
-            t -> concat('zw', CAST(CAST(pow($vocab,
-              pmod(hash(doc_id, t), 1048576) / 1048576.0D) AS BIGINT)
-              AS STRING))))"""))
+    docs.withColumn("text", concat_ws(" ", transform(
+        sequence(lit(1), greatest(lit(1), size(words(col("text"))))),
+        t => concat(lit("zw"), pow(lit(vocab),
+          pmod(hash(col("doc_id"), t), lit(1048576)) / 1048576.0)
+          .cast("bigint").cast("string")))))
       .withColumn("n_chars", length(col("text")).cast("long"))
 
   private[graft] def synthesizeOrganic(spark: SparkSession, src: String,
@@ -216,19 +222,17 @@ object ScalePointBench {
       // partner id (sparse keyspace) falls back to self-crossover
       val partner = pmod(col("a.doc_id") * lit(7919L) + lit(i * 104729L),
         lit(maxDoc + 1))
+      val wa = words(col("a.text"))
+      val wb = words(coalesce(col("btext"), col("a.text")))
       docs.as("a")
         .withColumn("p", partner)
         .join(docs.select(col("doc_id").as("bid"), col("text").as("btext")),
           col("p") === col("bid"), "left")
         .select(
           (col("a.doc_id") + lit(i * 100000L)).as("doc_id"),
-          concat_ws(" ",
-            expr("""concat(
-              slice(split(a.text, '\\s+'), 1,
-                cast(ceil(size(split(a.text, '\\s+')) / 2.0) as int)),
-              slice(split(coalesce(btext, a.text), '\\s+'),
-                cast(floor(size(split(coalesce(btext, a.text), '\\s+')) / 2.0) as int) + 1,
-                size(split(coalesce(btext, a.text), '\\s+'))))"""))
+          concat_ws(" ", concat(
+            slice(wa, lit(1), ceil(size(wa) / 2.0).cast("int")),
+            slice(wb, floor(size(wb) / 2.0).cast("int") + 1, size(wb))))
             .as("text"),
           col("a.lang").as("lang"),
           col("a.source").as("source"))
@@ -463,7 +467,7 @@ object ScalePointBench {
       // df/n at the big point (the flat corpus: ~31, ~0.8)
       val docs = Tables.load(spark, zipf._2, "documents")
       val df = docs
-        .select(col("doc_id"), explode(split(col("text"), "\\s+")).as("term"))
+        .select(col("doc_id"), explode(words(col("text"))).as("term"))
         .filter(col("term") =!= "").distinct()
         .groupBy("term").agg(count(lit(1)).as("df"))
         .localCheckpoint()
@@ -519,9 +523,7 @@ object ScalePointBench {
         // fresh doc ids; salted text so batch grams don't all collide
         val batch = docs0.orderBy(col("doc_id")).limit(500)
           .select((col("doc_id") + lit(i * 1000000000L)).as("doc_id"),
-            concat_ws(" ", expr(
-              s"transform(split(text, '\\\\s+'), w -> substr(md5(concat(w, '@$i')), 1, 8))"))
-              .as("text"))
+            rehashed(lit(s"@$i")).as("text"))
           .localCheckpoint()
         Harness.timed(spark, "span_refresh")(graft.operators.IndexMaintenance
           .refreshSpans(spark, root, batch, s"scale-batch-$i"))
@@ -778,9 +780,7 @@ object ScalePointBench {
       def replica(i: Int): DataFrame =
         if (i == 0) docs
         else docs.select((col("doc_id") + lit(i * 100000L)).as("doc_id"),
-          concat_ws(" ", expr(
-            s"transform(split(text, '\\\\s+'), w -> substr(md5(concat(w, '#$i#', CAST(doc_id AS STRING))), 1, 8))"))
-            .as("text"))
+          rehashed(concat(lit(s"#$i#"), col("doc_id").cast("string"))).as("text"))
       // warm the fixpoint-free but still JIT-heavy admission path once
       Harness.sink(Dedup.dedupIncrementalOver(docs.unionByName(batch), isNew))
       for (r <- Seq(1, 2, 4, 8)) {

@@ -164,6 +164,25 @@ object Dedup {
   private[operators] def allNew(keys: DataFrame): DataFrame =
     keys.withColumn("is_new", lit(true))
 
+  /** The sorted-window successor probe — the one body behind every
+    * capped family's DENSE buckets: the sorted-neighbourhood method
+    * (Hernández & Stolfo, SIGMOD 1995). One window pass over `keys`,
+    * partitioned by the `bucket` columns and ordered by `order`, gives
+    * each member row its bucket's occupancy `occ` and, as `next`, its
+    * next `w` members in that order (structs of the `carried` columns;
+    * fewer at the bucket's end). No join anywhere: a bucket of
+    * occupancy n costs n·w lead reads, never n².
+    */
+  private[graft] def successors(keys: DataFrame, bucket: Seq[String],
+      order: Seq[Column], w: Int, carried: Seq[String]): DataFrame = {
+    val byKey = Window.partitionBy(bucket.map(col): _*).orderBy(order: _*)
+    val member = struct(carried.map(col): _*)
+    keys
+      .withColumn("occ", count(lit(1)).over(
+        byKey.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+      .withColumn("next", array_compact(array((1 to w).map(i => lead(member, i).over(byKey)): _*)))
+  }
+
   /** The base rows tagged `is_new = false` and the batch rows (same
     * columns) tagged `true`, as one relation: the probe's input.
     */
@@ -1103,9 +1122,11 @@ object Dedup {
   /** Sorted-window width for DENSE buckets (> [[BucketCliqueCap]]
     * members): members are ranked by doc_id within the bucket and each
     * pairs with its next `BucketWindow` successors — the
-    * sorted-neighborhood method (Hernández & Stolfo, SIGMOD 1995)
-    * bounding candidate mass ∝ occupancy·w, never occupancy². Chosen
-    * over a bucket-minimum STAR by measurement on the organic ×10
+    * sorted-neighborhood method (Hernández & Stolfo, SIGMOD 1995),
+    * read off one window pass ([[successors]]), so the candidate
+    * step's WORK, not only its output, is ∝ occupancy·w, never
+    * occupancy². Chosen over a bucket-minimum STAR by measurement on
+    * the organic ×10
     * corpus (DuckDB lever sweep, PLANS.md r15): near the 0.5 Jaccard
     * threshold many hub-member pairs fail verification and the star
     * fragments clusters (merge recall 0.355); a window survives
@@ -1128,7 +1149,8 @@ object Dedup {
     *     bucket with ≤ 16 members emits its full clique (lossless at
     *     that occupancy, mass ≤ 16·occupancy/2); a DENSER bucket emits
     *     sorted-window edges ([[BucketWindow]] — each member pairs
-    *     with its w successors in doc_id order) — mass ∝ occupancy·w,
+    *     with its w successors in doc_id order, listed by one
+    *     [[successors]] window pass) — work and mass ∝ occupancy·w,
     *     never occupancy². For EXACT-duplicate buckets every window
     *     edge verifies at Jaccard 1.0, so the window path spans the
     *     same component as the clique and exact-dup clustering is
@@ -1147,29 +1169,20 @@ object Dedup {
     // one corpus explode feeding signatures AND verification, the
     // ngramJaccardNewPairs sharing discipline, widened (Tables.widened)
     val sh = shinglesOf(Tables.widened(docs, "doc_id")).localCheckpoint()
-    val sigLong = bandKeys(minhashFromShingles(sh))
-      .localCheckpoint() // read twice: occupancy aggregation + member join
     // lever 1 — occupancy-gated candidates: small buckets emit the
     // full clique (lossless ≤ BucketCliqueCap); dense buckets emit
-    // sorted-window edges (each member × its next BucketWindow
-    // successors in doc_id order) — a dense near-dup cluster
-    // contributes O(occupancy · w) candidates, not O(occupancy²)
-    val marked = occupancyMarked(sigLong) // clique + both window sides read it
+    // each member × its next BucketWindow successors in doc_id order
+    val marked = successors(bandKeys(minhashFromShingles(sh)), BandBucket,
+        Seq(col("doc_id")), BucketWindow, Seq("doc_id"))
+      .localCheckpoint(false) // both clique sides + the successor side
     val clique = bandProbe(allNew(marked.filter(col("occ") <= BucketCliqueCap)))
       .select("doc_a", "doc_b")
-    val denseRanked = rankedDense(marked)
-      .select(col("doc_id"), col("band_idx"), col("bk"), col("r"))
-      .localCheckpoint(false) // both window self-join sides
-    val windowed = denseRanked
-      .select(col("doc_id").as("doc_a"), col("band_idx"), col("bk"), col("r").as("ra"))
-      .join(denseRanked.select(col("doc_id").as("doc_b"), col("band_idx"),
-        col("bk"), col("r").as("rb")), Seq("band_idx", "bk"))
-      .filter(col("rb") > col("ra") && col("rb") <= col("ra") + BucketWindow)
-      .select(col("doc_a"), col("doc_b"))
+    val windowed = marked.filter(col("occ") > BucketCliqueCap)
+      .select(col("doc_id").as("doc_a"), explode(col("next.doc_id")).as("doc_b"))
     val pairs = clique.union(windowed).distinct()
     // (no pairs checkpoint here: measured SLOWER for the capped chain —
     // 3.2 → 5.4 s at 32 cores — its candidate build already sits behind
-    // three checkpoints and the extra serial materialization costs more
+    // checkpoints and the extra serial materialization costs more
     // than the verify join's build-side switch buys)
     val vpairs = verifiedPairs(pairs, sh)
       .localCheckpoint() // read three times: both cap directions + the final join
@@ -1186,27 +1199,6 @@ object Dedup {
     vpairs.join(keep, Seq("doc_a", "doc_b"))
   }
 
-  /** A band-key relation with each bucket's occupancy `occ` attached,
-    * lazily materialized: the clique side and the dense ranking of the
-    * capped forms both read it.
-    */
-  private def occupancyMarked(keys: DataFrame): DataFrame = {
-    val occ = keys.groupBy(col("band_idx"), col("bk"))
-      .agg(count(lit(1)).as("occ"))
-    keys.join(occ, Seq("band_idx", "bk")).localCheckpoint(false)
-  }
-
-  /** The DENSE buckets (> [[BucketCliqueCap]] members) of an
-    * [[occupancyMarked]] relation, members ranked `r` by doc_id within
-    * their bucket — the sorted-window input of both capped forms.
-    */
-  private def rankedDense(marked: DataFrame): DataFrame = {
-    val wRank = Window.partitionBy(col("band_idx"), col("bk"))
-      .orderBy(col("doc_id"))
-    marked.filter(col("occ") > BucketCliqueCap)
-      .withColumn("r", row_number().over(wRank))
-  }
-
   /** The capped pair relation over the corpus — `dedup_ngram_jaccard`'s
     * bounded production twin (see [[cappedPairsOf]]).
     */
@@ -1220,10 +1212,10 @@ object Dedup {
     * STAR-CONTRACTION engine path, not min-label propagation: the
     * window candidates form long paths through dense buckets
     * (diameter ∝ occupancy/w), and min-label needs O(diameter) rounds
-    * — past its 32-round cap a huge cluster would silently mislabel,
-    * while star-contraction converges in O(log n) rounds regardless
-    * of diameter. The labelling is the capped graph's own fixpoint:
-    * merge recall vs the uncapped components is a measured trade
+    * on such a path, one shuffle each, while star-contraction
+    * converges in O(log n) rounds regardless of diameter. The
+    * labelling is the capped graph's own fixpoint: merge recall vs
+    * the uncapped components is a measured trade
     * (DedupCappedSpec), not an equivalence claim.
     */
   def dedupComponentsCapped(spark: SparkSession, dir: String): DataFrame =
@@ -1436,9 +1428,9 @@ object Dedup {
     * exp 1.57 at the organic ×10 point — the same occupancy disease
     * the capped pair tier gates). A band bucket with ≤
     * [[BucketCliqueCap]] members keeps the full probe (lossless
-    * there); a DENSER bucket is ranked by doc_id and each new doc only
+    * there); a DENSER bucket is sorted by doc_id and each new doc only
     * probes members within [[BucketWindow]] ranks of its own position
-    * (via a rank-target explode + equi-join — ≤ 2·w candidate rows per
+    * (read off the [[successors]] window — ≤ 2·w candidate rows per
     * new member per band by construction, no occupancy² enumeration
     * anywhere in the plan). Verification and the verdict are the
     * shared exact tail, so a capped verdict carries true Jaccard
@@ -1458,27 +1450,19 @@ object Dedup {
     */
   private[graft] def dedupIncrementalCappedOver(sigTable: DataFrame,
       docs: DataFrame, isNew: Column): DataFrame = {
-    val marked = occupancyMarked(sigTable.withColumn("is_new", isNew))
+    val marked = successors(sigTable.withColumn("is_new", isNew), BandBucket,
+        Seq(col("doc_id")), BucketWindow, Seq("doc_id", "is_new"))
+      .localCheckpoint(false) // both clique sides + the successor side
     val smallCand = bandProbe(marked.filter(col("occ") <= BucketCliqueCap))
       .select("new_id", "cand_id")
-    val denseRanked = rankedDense(marked)
-      .select(col("doc_id"), col("band_idx"), col("bk"), col("r"),
-        col("is_new"))
-      .localCheckpoint(false) // probe-target explode + member side
-    // rank-target explode: each new member lists the 2w ranks it may
-    // probe, then an EQUI-join on (bucket, rank) — candidate rows are
-    // bounded ∝ new members · 2w, never occupancy²
-    val targets = denseRanked.filter(col("is_new"))
-      .select(col("doc_id").as("new_id"), col("band_idx"), col("bk"),
-        explode(expr(
-          s"filter(sequence(r - $BucketWindow, r + $BucketWindow), t -> t != r)"))
-          .as("r"))
-    val denseCand = targets
-      .join(denseRanked.select(col("doc_id").as("cand_id"), col("band_idx"),
-        col("bk"), col("r"), col("is_new").as("cand_new")),
-        Seq("band_idx", "bk", "r"))
-      .filter(!col("cand_new") || col("cand_id") < col("new_id"))
-      .select("new_id", "cand_id")
+    // a successor pair with one new member probes (new, cand); two new
+    // members pair once, the larger id as the new side — together the
+    // ±BucketWindow rank rule of the oracle
+    val denseCand = marked.filter(col("occ") > BucketCliqueCap)
+      .select(col("doc_id"), col("is_new"), explode(col("next")).as("nxt"))
+      .filter(col("is_new") || col("nxt.is_new"))
+      .select(when(col("nxt.is_new"), col("nxt.doc_id")).otherwise(col("doc_id")).as("new_id"),
+        when(col("nxt.is_new"), col("doc_id")).otherwise(col("nxt.doc_id")).as("cand_id"))
     val candidates = smallCand.union(denseCand).distinct()
       .localCheckpoint(false)
     admissionVerdictOver(candidates, touchedShingles(candidates, docs), docs, isNew)

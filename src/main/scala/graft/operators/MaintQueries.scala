@@ -196,13 +196,21 @@ object MaintQueries {
     */
   def maintBm25DfTimeTravel(spark: SparkSession, dir: String): DataFrame =
     withRoot("bm25") { root =>
-      val docs = Tables.documents(spark, dir).select("doc_id", "text")
-      val (b1, b2, b3) = thirds(docs, "doc_id")
-      IndexMaintenance.bootstrapBm25(spark, root, b1, "b1")
-      IndexMaintenance.refreshBm25(spark, root, b2, "b2")
-      IndexMaintenance.refreshBm25(spark, root, b3, "b3")
+      bm25Chain(spark, dir, root)(third => third)
       IndexMaintenance.bm25DfAt(spark, root, 2).orderBy("term")
     }
+
+  /** Both BM25 df chains over the corpus's [[thirds]]: bootstrap batch
+    * 1 (v1), increment with batch 2 (v2), then the batch-3 increment
+    * run inside `third` — [[pairChain]]'s counterpart.
+    */
+  private def bm25Chain(spark: SparkSession, dir: String, root: String)(
+      third: (=> Unit) => Unit): Unit = {
+    val (b1, b2, b3) = thirds(Tables.documents(spark, dir).select("doc_id", "text"), "doc_id")
+    IndexMaintenance.bootstrapBm25(spark, root, b1, "b1")
+    IndexMaintenance.refreshBm25(spark, root, b2, "b2")
+    third(IndexMaintenance.refreshBm25(spark, root, b3, "b3"))
+  }
 
   /** Retained-version time travel after vacuum for the ADDITIVE delta
     * kind — [[maintPairsVacuumTravel]]'s counterpart on the BM25 df
@@ -217,12 +225,7 @@ object MaintQueries {
     */
   def maintBm25VacuumTravel(spark: SparkSession, dir: String): DataFrame =
     withRoot("bm25_vac") { root =>
-      val docs = Tables.documents(spark, dir).select("doc_id", "text")
-      val (b1, b2, b3) = thirds(docs, "doc_id")
-      IndexMaintenance.bootstrapBm25(spark, root, b1, "b1")
-      IndexMaintenance.refreshBm25(spark, root, b2, "b2")
-      val dfRoot = IndexMaintenance.bm25DfRoot(root)
-      compactThenVacuum(spark, dfRoot)(IndexMaintenance.refreshBm25(spark, root, b3, "b3"))
+      bm25Chain(spark, dir, root)(compactThenVacuum(spark, IndexMaintenance.bm25DfRoot(root)))
       IndexMaintenance.bm25DfAt(spark, root, 3).orderBy("term")
     }
 

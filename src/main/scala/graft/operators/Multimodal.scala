@@ -622,8 +622,10 @@ object Multimodal {
     * operating values): a fine-band bucket with ≤ `DctCliqueCap`
     * members emits its full clique (lossless there); a denser bucket
     * emits sorted-window edges, each member pairing with its next
-    * `DctWindow` successors in (phash64, doc_id) order. The sort key
-    * is the FINGERPRINT first, not the doc id: identical fingerprints
+    * `DctWindow` successors in (phash64, doc_id) order, read off one
+    * window pass ([[Dedup.successors]]) — the candidate step's WORK,
+    * not only its output, is ∝ occupancy·w. The sort key is the
+    * FINGERPRINT first, not the doc id: identical fingerprints
     * (the dominant mass in a re-encode-heavy corpus) become CONTIGUOUS
     * runs, so every exact-dup pair within w of each other in its run
     * is kept and near-identical fingerprints sort adjacent more often
@@ -663,36 +665,23 @@ object Multimodal {
     * scale bench.
     */
   private[graft] def cappedDctPairsOver(fp: DataFrame): DataFrame = {
-    val occ = dctBandsOf(fp, DctRadius).groupBy(DctBucket.map(col): _*)
-      .agg(count(lit(1)).as("occ"))
-    val marked = dctBandsOf(fp, DctRadius).join(occ, DctBucket)
-      .localCheckpoint(false) // clique + both window sides read it
+    // dense buckets sort by (phash64, doc_id) — identical fingerprints
+    // contiguous; successor pairs need doc-id normalization because
+    // that order is NOT doc_id order
+    val marked = Dedup.successors(dctBandsOf(fp, DctRadius), DctBucket,
+        Seq(col("phash64"), col("doc_id")), DctWindow, Seq("doc_id", "phash64"))
+      .localCheckpoint(false) // both clique sides + the successor side
     val clique = Dedup.bandProbe(
         Dedup.allNew(marked.filter(col("occ") <= DctCliqueCap)), DctBucket)
       .select("modality", "doc_a", "doc_b", "phash64_a", "phash64_b")
-    // dense buckets: rank by (phash64, doc_id) — identical fingerprints
-    // contiguous — and pair each member with its next w successors;
-    // successor pairs need doc-id normalization because rank order is
-    // NOT doc_id order
-    val wRank = Window.partitionBy(DctBucket.map(col): _*)
-      .orderBy(col("phash64"), col("doc_id"))
-    val dense = marked.filter(col("occ") > DctCliqueCap)
-      .withColumn("r", row_number().over(wRank))
-      .select(col("modality"), col("band_idx"), col("band_bits"),
-        col("doc_id"), col("phash64"), col("r"))
-      .localCheckpoint(false) // both window self-join sides
-    val windowed = dense
-      .select(col("modality"), col("band_idx"), col("band_bits"),
-        col("doc_id").as("da"), col("phash64").as("fra"), col("r").as("ra"))
-      .join(dense.select(col("modality"), col("band_idx"), col("band_bits"),
-        col("doc_id").as("db"), col("phash64").as("frb"), col("r").as("rb")),
-        DctBucket)
-      .filter(col("rb") > col("ra") && col("rb") <= col("ra") + DctWindow)
+    val windowed = marked.filter(col("occ") > DctCliqueCap)
+      .select(col("modality"), col("doc_id").as("da"), col("phash64").as("fra"),
+        explode(col("next")).as("nxt"))
       .select(col("modality"),
-        least(col("da"), col("db")).as("doc_a"),
-        greatest(col("da"), col("db")).as("doc_b"),
-        when(col("da") < col("db"), col("fra")).otherwise(col("frb")).as("phash64_a"),
-        when(col("da") < col("db"), col("frb")).otherwise(col("fra")).as("phash64_b"))
+        least(col("da"), col("nxt.doc_id")).as("doc_a"),
+        greatest(col("da"), col("nxt.doc_id")).as("doc_b"),
+        when(col("da") < col("nxt.doc_id"), col("fra")).otherwise(col("nxt.phash64")).as("phash64_a"),
+        when(col("da") < col("nxt.doc_id"), col("nxt.phash64")).otherwise(col("fra")).as("phash64_b"))
     withinRadius(clique.union(windowed), DctRadius)
   }
 

@@ -504,9 +504,6 @@ object TextAnalysis {
       .orderBy(col("doc_id"), col("rank"))
   }
 
-  /** Okapi BM25 parameters — the textbook defaults. */
-  private val Bm25K1 = 1.2
-  private val Bm25B = 0.75
   private val Bm25QueryTerms = 3
   private val Bm25TopK = 10
 
@@ -516,9 +513,11 @@ object TextAnalysis {
     * inverted-index ranking function. Query terms are selected FROM
     * the corpus deterministically (the `Bm25QueryTerms` rarest terms
     * by document frequency — rare terms are what real queries are made
-    * of); each matching document scores
-    * `Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl))` with
-    * `idf = ln(1 + (N−df+0.5)/(df+0.5))`.
+    * of); each matching document scores the sum of its
+    * [[AnnSearch.bm25Weights]] impact weights
+    * `idf(t) · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl))` with
+    * `idf = ln(1 + (N−df+0.5)/(df+0.5))`, k1 = 1.2, b = 0.75 (the
+    * textbook defaults) — the same weights the fusion's BM25 leg reads.
     *
     * Plan shape at 100 TB: one corpus shuffle builds the (doc, term)
     * tf relation; df and the 1-row (N, avgdl) stats are model-sized
@@ -537,35 +536,19 @@ object TextAnalysis {
     * drift for a value landing on a rounding boundary.
     */
   def textBm25Topk(spark: SparkSession, dir: String): DataFrame = {
-    val terms = Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(toks(col("text"))).as("term"))
-      .filter(col("term") =!= "")
     // the tf posting relation feeds df, dl, the (N, avgdl) stats, and
     // the scoring join — checkpoint so the corpus explode+aggregate
     // runs once (same shared-relation discipline as Dedup's shingles)
-    val tf = terms.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+    val tf = AnnSearch.bm25Tf(Tables.documents(spark, dir)).localCheckpoint()
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val stats = dl.agg(
-      count(lit(1)).as("n_docs"),
-      (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
-    val qterms = df.orderBy(col("df").asc, col("term")).limit(Bm25QueryTerms)
-    val contrib = tf
-      .join(broadcast(qterms), "term")
+    val qterms = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
+      .orderBy(col("df").asc, col("term")).limit(Bm25QueryTerms)
+    // the index's own impact weights; with df given for the query
+    // terms alone, only their postings are weighted
+    AnnSearch.bm25Weights(tf, broadcast(qterms), dl)
       .join(dl, "doc_id")
-      .crossJoin(broadcast(stats))
-      .withColumn("idf",
-        log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)))
-      .withColumn("c",
-        col("idf") * (col("tf") * (Bm25K1 + 1)) /
-          (col("tf") + lit(Bm25K1) *
-            (lit(1.0) - Bm25B + lit(Bm25B) * col("dl") / col("avgdl"))))
-    contrib
       .groupBy(col("doc_id"), col("dl"))
-      .agg(
-        count(lit(1)).as("n_terms_hit"),
-        sum(round(col("c") * 1000000, 0).cast("bigint")).as("s6"))
+      .agg(count(lit(1)).as("n_terms_hit"), sum(col("w6")).as("s6"))
       .select(col("doc_id"), col("n_terms_hit"), col("dl"),
         round(col("s6") / 1000000.0, 6).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
@@ -989,28 +972,22 @@ object TextAnalysis {
     * occurrences) as a counted invariant, not just a comment.
     */
   private[graft] def cappedSpanHitsOf(grams: DataFrame): DataFrame = {
-    // The whole candidate build is WINDOW arithmetic over one
-    // g-clustering: occupancy (count), eligibility (filter), and the
-    // w successors (lead) share the partitioning, and when `grams` is
-    // the g-bucketed artifact the distinct, both windows, AND both
-    // positional joins below are exchange-free on the artifact side —
+    // The whole candidate build is one WINDOW pass over the
+    // g-clustering (Dedup.successors): occupancy (count) and the w
+    // successors (lead) share it, eligibility filters on the count,
+    // and when `grams` is the g-bucketed artifact the distinct, the
+    // window, AND both positional joins below are exchange-free on
+    // the artifact side —
     // the only data that ever moves is the admitted hit relation
     // (≤ w · eligible occurrences, g projected away) into the island
     // merge. The v1 design (rank self-joins keyed by the gram STRING)
     // moved 1.23 GB at the organic ×10 point — MORE than the uncapped
     // 566 MB — because the ~50-byte gram key rode six exchanges;
     // this build moves ~60 MB there for the same answer.
-    val wCnt = Window.partitionBy(col("g"))
-    val wOrd = Window.partitionBy(col("g")).orderBy(col("doc_id"))
-    val ranked = grams.select(col("g"), col("doc_id")).distinct()
-      .withColumn("gdf", count(lit(1)).over(wCnt))
-      .filter(col("gdf") >= 2 && col("gdf") <= SpanDfCap)
-    val admitted = ranked
-      .withColumn("nbrs", array((1 to SpanWindow).map(i =>
-        lead(col("doc_id"), i).over(wOrd)): _*))
-      .select(col("g"), col("doc_id").as("doc_a"),
-        explode(col("nbrs")).as("doc_b"))
-      .filter(col("doc_b").isNotNull)
+    val admitted = Dedup.successors(grams.select(col("g"), col("doc_id")).distinct(),
+        Seq("g"), Seq(col("doc_id")), SpanWindow, Seq("doc_id"))
+      .filter(col("occ") <= SpanDfCap)
+      .select(col("g"), col("doc_id").as("doc_a"), explode(col("next.doc_id")).as("doc_b"))
     // positional joins on the GRAM KEY ALONE, with the doc match left
     // as a merge condition Catalyst cannot lift into the join keys
     // (doc_a - doc_id = 0): with keys (g, doc) Spark ≥ 3.3 requires
@@ -1696,8 +1673,8 @@ object TextAnalysis {
          |contrib AS (
          |  SELECT tf.doc_id, dl.dl,
          |    ln(1.0 + (s.n_docs - q.df + 0.5) / (q.df + 0.5))
-         |      * (tf.tf * ${Bm25K1 + 1}) /
-         |        (tf.tf + $Bm25K1 * (1.0 - $Bm25B + $Bm25B * dl.dl / s.avgdl)) AS c
+         |      * (tf.tf * 2.2) /
+         |        (tf.tf + 1.2 * (1.0 - 0.75 + 0.75 * dl.dl / s.avgdl)) AS c
          |  FROM tf JOIN q USING (term) JOIN dl USING (doc_id), stats s)
          |SELECT doc_id, count(*) AS n_terms_hit, dl,
          |  round(CAST(sum(CAST(round(c * 1000000, 0) AS BIGINT)) AS BIGINT)

@@ -39,34 +39,53 @@ class DedupCappedSpec extends SparkTestBase {
       "capped pairs contain rows absent from the uncapped verified relation")
   }
 
+  /** The sorted-window reference for one planted bucket of members
+    * 1..n: each member pairs with its next `w` — the pairs every dense
+    * capped family must emit for it, listed in plain Scala.
+    */
+  private def windowPairs(n: Long, w: Int): Set[(Long, Long)] =
+    (for (a <- 1L to n; b <- a + 1 to math.min(n, a + w)) yield (a, b)).toSet
+
   test("dense buckets fall back to window edges and exact-dup clusters stay whole") {
     import spark.implicits._
-    // 40 identical docs land in one band bucket per band (occupancy 40
-    // > BucketCliqueCap) — the sorted-window lever MUST fire; distinct
-    // fillers stay out of the cluster
-    val dense = (1L to 40L).map(i => (i, "alpha beta gamma delta epsilon zeta"))
-    val fillers = (101L to 120L).map(i =>
-      (i, s"filler$i uniq$i token$i other$i more$i"))
-    val docs = (dense ++ fillers).toDF("doc_id", "text")
-    val uncapped = Dedup.ngramJaccardOf(docs).localCheckpoint()
-    assert(uncapped.filter(col("doc_a") <= 40 && col("doc_b") <= 40).count() == 40L * 39 / 2,
-      "the uncapped build must enumerate the full 40-clique")
-    val capped = Dedup.cappedPairsOf(docs).localCheckpoint()
-    val denseCapped = capped.filter(col("doc_a") <= 40 && col("doc_b") <= 40)
-    // exact-dup bucket: every window edge verifies at Jaccard 1.0, and
-    // every (a, b) edge is ranked ≤ K by b (its predecessors are its
-    // smallest-id neighbors), so the capped relation is exactly the
-    // window graph: Σ min(n − i, w) edges — far below the 780-clique
     val w = Dedup.BucketWindow
-    val expected = (1 to 39).map(i => math.min(40 - i, w)).sum
-    assert(denseCapped.count() == expected,
-      s"window fallback should emit $expected edges, got ${denseCapped.count()}")
-    // the window path spans the same component as the clique: one
-    // cluster of 40 labelled by the minimum member (star-contraction,
-    // the engine path the capped queries run)
-    val comps = Dedup.connectedComponentsStar(capped.select("doc_a", "doc_b"))
-    assert(comps.filter(col("component") === 1).count() == 40,
-      "the exact-dup cluster fragmented under the window fallback")
+    // n identical docs land in one band bucket per band (occupancy n
+    // > BucketCliqueCap) — the sorted-window lever MUST fire; distinct
+    // fillers stay out of the cluster. 2,000 is a hot bucket: a rank
+    // self-join would enumerate its 2M member pairs
+    for (n <- Seq(40L, 2000L)) {
+      val dense = (1L to n).map(i => (i, "alpha beta gamma delta epsilon zeta"))
+      val fillers = (10001L to 10020L).map(i =>
+        (i, s"filler$i uniq$i token$i other$i more$i"))
+      val docs = (dense ++ fillers).toDF("doc_id", "text")
+      if (n == 40L) {
+        val uncapped = Dedup.ngramJaccardOf(docs).localCheckpoint()
+        assert(uncapped.filter(col("doc_a") <= n && col("doc_b") <= n).count() == n * (n - 1) / 2,
+          "the uncapped build must enumerate the full 40-clique")
+      }
+      val capped = Dedup.cappedPairsOf(docs).localCheckpoint()
+      // exact-dup bucket: every window edge verifies at Jaccard 1.0, and
+      // every (a, b) edge is ranked ≤ K by b (its predecessors are its
+      // smallest-id neighbors), so the capped relation is exactly the
+      // window graph — far below the n-clique
+      val denseCapped = capped.filter(col("doc_a") <= n && col("doc_b") <= n)
+        .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+      assert(denseCapped == windowPairs(n, w),
+        s"n=$n: window fallback should emit the ${windowPairs(n, w).size} window edges, " +
+          s"got ${denseCapped.size}")
+      // the window path spans the same component as the clique: one
+      // cluster of n labelled by the minimum member (star-contraction,
+      // the engine path the capped queries run)
+      val comps = Dedup.connectedComponentsStar(capped.select("doc_a", "doc_b"))
+      assert(comps.filter(col("component") === 1).count() == n,
+        s"n=$n: the exact-dup cluster fragmented under the window fallback")
+    }
+    // the successor window is one window pass: no join in its plan
+    val keys = (1L to 40L).map(i => (i, 7L)).toDF("doc_id", "bk")
+    val succ = Dedup.successors(keys, Seq("bk"), Seq(col("doc_id")), w, Seq("doc_id"))
+    val joins = succ.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }
+    assert(joins.isEmpty, s"successor window planned a join:\n${succ.queryExecution.optimizedPlan}")
   }
 
   test("the degree cap bounds the capped pair output to <= 2*K*n") {
@@ -108,26 +127,55 @@ class DedupCappedSpec extends SparkTestBase {
 
   test("capped admission probes dense buckets through the window and still drops exact dups") {
     import spark.implicits._
-    // 40 identical docs → every band bucket has occupancy 40 >
+    val w = Dedup.BucketWindow
+    val isNew = (id: Long) => id % 4 == 0
+    // the ±w rank rule in plain Scala, per bucket of identical docs
+    // (every candidate verifies at Jaccard 1.0, so the verdict is the
+    // smallest candidate id): a new doc at rank r probes ranks r ± w
+    // (the whole bucket at ≤ BucketCliqueCap members), keeping old
+    // members and new ones with a smaller id
+    def rankRule(ids: IndexedSeq[Long]): Map[Long, Option[Long]] = {
+      val reach = if (ids.size > Dedup.BucketCliqueCap) w else ids.size
+      ids.indices.filter(r => isNew(ids(r))).map { r =>
+        ids(r) -> ids.indices.filter(t => t != r && math.abs(t - r) <= reach).map(ids)
+          .filter(c => !isNew(c) || c < ids(r)).minOption
+      }.toMap
+    }
+    // n identical docs → every band bucket has occupancy n >
     // BucketCliqueCap, so the ADMISSION window lever must fire. Every
     // new doc (doc_id % 4 == 0) has an old doc within 8 ranks (3 of
-    // every 4 neighbors are old), so all 10 must still be dropped at
+    // every 4 neighbors are old), so all n/4 must still be dropped at
     // Jaccard 1.0 — the cap bounds probe width, not exact-dup recall.
-    val dense = (1L to 40L).map(i => (i, "alpha beta gamma delta epsilon zeta"))
-    val fillers = (101L to 120L).map(i =>
-      (i, s"filler$i uniq$i token$i other$i more$i"))
-    val docs = (dense ++ fillers).toDF("doc_id", "text")
-    val verdicts = Dedup.dedupIncrementalCappedOver(
-      Dedup.bandKeysOf(docs), docs, col("doc_id") % 4 === 0)
-      .localCheckpoint()
-    val denseNew = verdicts.filter(col("doc_id") <= 40)
-    assert(denseNew.count() == 10)
-    assert(denseNew.filter(col("action") === "drop" &&
-      col("match_jaccard") === 1.0).count() == 10,
-      "a new exact-dup in a dense bucket escaped the capped admission window")
-    // distinct fillers (small buckets, clique probe) must all be admitted
-    assert(verdicts.filter(col("doc_id") > 100)
-      .filter(col("action") =!= "admit").count() == 0)
+    // A second dense bucket holds ONLY new docs: its lowest id is
+    // admitted, every other member matches the smallest of its w
+    // predecessors.
+    for (n <- Seq(40L, 2000L)) {
+      val dense = (1L to n).map(i => (i, "alpha beta gamma delta epsilon zeta"))
+      val allNewIds = (20004L to 20080L by 4L)
+      val allNewDense = allNewIds.map(i => (i, "eta theta iota kappa lambda mu"))
+      val fillers = (10001L to 10020L).map(i =>
+        (i, s"filler$i uniq$i token$i other$i more$i"))
+      val docs = (dense ++ allNewDense ++ fillers).toDF("doc_id", "text")
+      val verdicts = Dedup.dedupIncrementalCappedOver(
+        Dedup.bandKeysOf(docs), docs, col("doc_id") % 4 === 0)
+        .localCheckpoint()
+      val denseNew = verdicts.filter(col("doc_id") <= n)
+      assert(denseNew.count() == n / 4)
+      assert(denseNew.filter(col("action") === "drop" &&
+        col("match_jaccard") === 1.0).count() == n / 4,
+        s"n=$n: a new exact-dup in a dense bucket escaped the capped admission window")
+      // distinct fillers (singleton buckets, clique probe) must all be admitted
+      assert(verdicts.filter(col("doc_id") > 10000 && col("doc_id") <= 10020)
+        .filter(col("action") =!= "admit").count() == 0)
+      // every verdict's match_id is the rank rule's
+      val expected = rankRule(1L to n) ++ rankRule(allNewIds) ++
+        fillers.map(_._1).filter(isNew).map(_ -> None)
+      val got = verdicts.select(col("doc_id"), col("match_id").cast("long"))
+        .as[(Long, Option[Long])].collect().toMap
+      assert(got == expected, s"n=$n: match_id differs from the ±w rank rule at " +
+        (got.keySet ++ expected.keySet).filter(k => got.get(k) != expected.get(k)).toSeq.sorted.take(10))
+      assert(got(allNewIds.head).isEmpty && allNewIds.tail.forall(got(_).isDefined))
+    }
   }
 
   test("capped admission drop-recall vs the uncapped probe on the organic corpus") {
@@ -213,29 +261,32 @@ class DedupCappedSpec extends SparkTestBase {
   test("capped phash pairs: dense identical-fingerprint runs stay windowed, subset holds") {
     import graft.operators.Multimodal
     import spark.implicits._
-    // 40 identical fingerprints → every fine band's bucket has
-    // occupancy ≥ 40 > DctCliqueCap, so the sorted-window lever MUST
+    val w = Multimodal.DctWindow
+    // n identical fingerprints → every fine band's bucket has
+    // occupancy ≥ n > DctCliqueCap, so the sorted-window lever MUST
     // fire; sorted by (phash64, doc_id) the run is contiguous, so the
     // within-run pairs are exactly each member × its next w run
     // successors. Fillers are spread 64-bit values (pairwise hamming
     // ~32) — they collide into some buckets but never pass radius 10.
-    val run = (1L to 40L).map(i => (i, "image", 0L))
-    val fillers = (101L to 120L).map(i =>
-      (i, "image", i * 2862933555777941757L + 3037000493L))
-    val fp = (run ++ fillers).toDF("doc_id", "modality", "phash64")
-    val capped = Multimodal.cappedDctPairsOver(fp).localCheckpoint()
-    val uncapped = Multimodal.dctPairsOver(fp).localCheckpoint()
-    assert(capped.exceptAll(uncapped).count() == 0,
-      "capped phash pairs contain rows absent from the uncapped fine search")
-    val w = Multimodal.DctWindow
-    val runCapped = capped.filter(col("doc_a") <= 40 && col("doc_b") <= 40)
-    val expected = (1 to 39).map(i => math.min(40 - i, w)).sum
-    assert(runCapped.count() == expected,
-      s"window fallback should emit $expected run pairs, got ${runCapped.count()}")
-    assert(uncapped.filter(col("doc_a") <= 40 && col("doc_b") <= 40).count() == 40L * 39 / 2,
-      "the uncapped fine search must enumerate the full 40-clique")
-    // every emitted pair carries its exact hamming (0 within the run)
-    assert(runCapped.filter(col("hamming") =!= 0).count() == 0)
+    for (n <- Seq(40L, 2000L)) {
+      val run = (1L to n).map(i => (i, "image", 0L))
+      val fillers = (10001L to 10020L).map(i =>
+        (i, "image", i * 2862933555777941757L + 3037000493L))
+      val fp = (run ++ fillers).toDF("doc_id", "modality", "phash64")
+      val capped = Multimodal.cappedDctPairsOver(fp).localCheckpoint()
+      val runCapped = capped.filter(col("doc_a") <= n && col("doc_b") <= n)
+      assert(runCapped.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet ==
+        windowPairs(n, w), s"n=$n: window fallback should emit the run's window pairs")
+      // every emitted pair carries its exact hamming (0 within the run)
+      assert(runCapped.filter(col("hamming") =!= 0).count() == 0)
+      if (n == 40L) {
+        val uncapped = Multimodal.dctPairsOver(fp).localCheckpoint()
+        assert(capped.exceptAll(uncapped).count() == 0,
+          "capped phash pairs contain rows absent from the uncapped fine search")
+        assert(uncapped.filter(col("doc_a") <= n && col("doc_b") <= n).count() == n * (n - 1) / 2,
+          "the uncapped fine search must enumerate the full 40-clique")
+      }
+    }
   }
 
   test("capped phash pair recall vs uncapped on the organic corpus") {
